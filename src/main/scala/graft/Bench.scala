@@ -41,8 +41,9 @@ object Bench {
     *   - the r17-touched operators (sim_kmeans, dedup_semantic,
     *     evt_concurrency, sim_knn_ivf),
     *   - the r18-touched operators (rel_date_funcs, rel_map_funcs,
-    *     rel_unpivot, dedup_containment, dedup_quality_report,
-    *     cdc_apply_replica).
+    *     rel_unpivot, dedup_containment, dedup_quality_report).
+    * cdc_apply_replica, also touched in r18, is not in the headline:
+    * its r18 change measured as a plan no-op (OPTIMIZATION_r18 §6).
     */
   val headline: Seq[String] = Seq(
     "rel_q1_agg", "rel_join_shuffle", "rel_join_broadcast", "rel_window",
@@ -107,23 +108,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val benchAll = sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE coalesce cached plans: a persisted partial frame
-      // otherwise freezes the full shuffle width and every tiny
-      // downstream job launches a stage of mostly-empty tasks
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // runtime row-level filtering for big SMJs (a 100 TB lever; ~free here)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     // warm-up: touch every table
     Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
@@ -172,7 +159,7 @@ object Bench {
     // cpus/4, r8 verdict item 3: a capture at load 7.05 on 32 cpus
     // passed the old gate yet showed 389 % spreads).
     def awaitQuietWindow(maxWaitSec: Int): Unit =
-      HostLoad.awaitQuiet(math.max(2.0, cpus.toDouble / 8.0), maxWaitSec)
+      HostLoad.awaitQuiet(math.max(2.0, cpus / 8.0), maxWaitSec)
 
     // materialize through the noop sink: unlike count(), Catalyst cannot
     // eliminate the final ORDER BY under an aggregate, so the bench pays
@@ -206,8 +193,9 @@ object Bench {
       // sub-second queries in the full sweep while the SAME queries
       // read 5-30% in a 10-query pass on the same idle box. A forced
       // GC before t0 bills each query its own cost, not its
-      // predecessors' garbage; the headline 10-query bench doesn't
-      // need it (and keeps its wall-clock tight).
+      // predecessors' garbage. The 19-query headline pass skips it
+      // to keep its wall-clock tight (its spread without the settle
+      // was last checked at 10 queries).
       if (benchAll) { System.gc(); Thread.sleep(100) }
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -35,21 +35,7 @@ object Explain {
     val name = args.headOption.getOrElse("rel_q1_agg")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE coalesce cached plans: a persisted partial frame
-      // otherwise freezes the full shuffle width and every tiny
-      // downstream job launches a stage of mostly-empty tasks
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // ad-hoc session confs (comma-separated k=v), e.g. the operator
     // timing hooks: SPARK_GRAFT_CONF=spark.graft.graph.timing=true
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(',').foreach { kv =>

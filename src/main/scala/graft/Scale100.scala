@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 100× heavy-family scale smoke (round-14, VERDICT r13 item 1): the
@@ -54,46 +53,19 @@ object Scale100 {
     val outPath = args.headOption.getOrElse("SCALE100_r14.json")
     val injectInto = args.drop(1).headOption
     HostLoad.awaitQuiet(threshold = 8.0, maxWaitSec = 180, tag = "scale100")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32, partitions = 64)
     spark.conf.set("spark.graft.dedup.derivationCache", "true")
     val dir = "/tmp/graft_scale100"
     val sf = "/root/testdata/sf0.1"
 
-    // ---- build the 100x tables (shared with LshRecallProfile) ----
+    // ---- build the 100x tables ----
     val (nEvents, nDocs, nVecs) =
       ScaleHarness.build100xTables(spark, sf, dir)
     println(s"[scale] built 100x: $nEvents events, $nDocs docs, $nVecs vectors")
 
-    val opSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val opRows = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    def timeOp(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      try {
-        val keep = queries.DedupQueries.memoOwnedRddIds(spark)
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => keep(id) }
-          .values.foreach(_.unpersist(blocking = true))
-        val t0 = System.nanoTime()
-        val d = df
-        d.write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val rows = d.count()
-        opSecs(label) = math.round(sec * 1000) / 1000.0
-        opRows(label) = rows
-        println(f"[scale] $label: $sec%.1f s ($rows rows)")
-      } catch {
-        case e: Throwable =>
-          failed += label
-          System.err.println(s"[scale] $label FAILED: ${e.getMessage}")
-      }
-    }
+    import ScaleHarness.{bucketsTouched, jnum}
+    val timer = new ScaleHarness.OpTimer(spark)
+    import timer.{failed, opRows, opSecs, timeOp}
 
     // ---- LSH family at 100x (derivation accounted once) ----
     timeOp("lsh_derivation")(
@@ -295,11 +267,7 @@ object Scale100 {
       graft.streaming.StreamingIvfIndex.materializer(
         spark, ivfRoot, IvfShards)(batch, e.toLong)
       val sec = (System.nanoTime() - t0) / 1e9
-      val touched = {
-        val p = new org.apache.hadoop.fs.Path(s"$ivfRoot/state/state-$e")
-        if (!hfs.exists(p)) 0
-        else hfs.listStatus(p).count(_.getPath.getName.startsWith("__bucket="))
-      }
+      val touched = bucketsTouched(spark, s"$ivfRoot/state/state-$e")
       if (e > 0) ivfTouchedMax = math.max(ivfTouchedMax, touched)
       ivfEpochs += s"""{"epoch":$e,"sec":${math.round(sec * 1000) / 1000.0},"shards_touched":$touched}"""
       println(f"[scale] 100x ivf-index epoch $e: $sec%.1f s, " +
@@ -456,10 +424,7 @@ object Scale100 {
       s"bound ${poolPeakSumMb}MB)")
 
     // ---- artifact ----
-    def jnum(m: Iterable[(String, Double)]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val rowsJson = opRows.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val rowsJson = jnum(opRows)
     val total = opSecs.values.sum
     val json =
       s"""{"metric":"scale_smoke_100x","value":${math.round(total * 100) / 100.0},"unit":"sec","scale":"100x-sf0.1","built":{"events":$nEvents,"documents":$nDocs,"embeddings":$nVecs},"op_sec":${jnum(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 300× IVM-chain scale probe (r15 verdict item 6): the next notch for
@@ -34,14 +33,7 @@ object Scale300 {
     val outPath = args.headOption.getOrElse("SCALE300_r16.json")
     val injectInto = args.drop(1).headOption
     HostLoad.awaitQuiet(threshold = 8.0, maxWaitSec = 180, tag = "scale300")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32, partitions = 64)
     val dir = "/tmp/graft_scale300"
     val sf = "/root/testdata/sf0.1"
 

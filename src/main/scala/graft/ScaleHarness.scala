@@ -56,6 +56,56 @@ private[graft] object ScaleHarness {
   def dirRows(spark: SparkSession, p: String): Long =
     try spark.read.parquet(p).count() catch { case _: Throwable => 0L }
 
+  /** `__bucket=` directories under `p` (0 when `p` does not exist). */
+  def bucketsTouched(spark: SparkSession, p: String): Int = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    val hfs = hadoopFs(spark)
+    if (!hfs.exists(path)) 0
+    else hfs.listStatus(path).count(_.getPath.getName.startsWith("__bucket="))
+  }
+
+  /** A flat JSON object of `m`'s entries, values as Scala prints them. */
+  def jnum(m: Iterable[(String, Any)]): String =
+    m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** The smokes' per-op ledger: `timeOp` times one op through the noop
+    * sink and records its seconds and rows, or its label in `failed`.
+    */
+  final class OpTimer(spark: SparkSession) {
+    val opSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val opRows = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val failed = scala.collection.mutable.ListBuffer.empty[String]
+
+    def timeOp(label: String)(df: => DataFrame): Unit = {
+      try {
+        // drop cached blocks left by earlier ops (fixed-point loops
+        // localCheckpoint per iteration): accumulated storage-memory
+        // pressure made late iterative ops swing 2x between captures.
+        // Blocking, so the removal work itself finishes BEFORE t0
+        // instead of bleeding into the timed window. The session
+        // derivation cache's own blocks are EXEMPT — destroying them
+        // would silently re-time the shared derivation inside whichever
+        // family op runs next.
+        val keep = graft.queries.DedupQueries.memoOwnedRddIds(spark)
+        spark.sparkContext.getPersistentRDDs
+          .filterNot { case (id, _) => keep(id) }
+          .values.foreach(_.unpersist(blocking = true))
+        val t0 = System.nanoTime()
+        val d = df
+        d.write.format("noop").mode("overwrite").save()
+        val sec = (System.nanoTime() - t0) / 1e9
+        val rows = d.count() // untimed cardinality pass
+        opSecs(label) = math.round(sec * 1000) / 1000.0
+        opRows(label) = rows
+        println(f"[scale] $label: $sec%.1f s ($rows rows)")
+      } catch {
+        case e: Throwable =>
+          failed += label
+          System.err.println(s"[scale] $label FAILED: ${e.getMessage}")
+      }
+    }
+  }
+
   // ----------------------------------------------- old-gen peak windows
   // The live-set proxy the smokes record. resetOldGenPeakWindow() lets a
   // phase (the rebucket migration) read ITS OWN peak — the overall
@@ -86,10 +136,9 @@ private[graft] object ScaleHarness {
     math.max(oldGenPeakFloorMb.get, oldGenPeakNowMb)
 
   // --------------------------------------------------- 100× corpus build
-  /** Build the 100× tables under `dir` from the sf fixtures — shared by
-    * the 100× smoke ([[Scale100]]) and the LSH recall profiler
-    * ([[LshRecallProfile]]), so the profiled corpus IS the gated one.
-    * Strata (see Scale100's scaladoc for the why): 10% salted
+  /** Build the 100× tables under `dir` from the sf fixtures for the
+    * 100× smoke ([[Scale100]]); LSH_RECALL_PROFILE_r15 profiled this
+    * same corpus. Strata (see Scale100's scaladoc for the why): 10% salted
     * singleton + near-dup variant (Jaccard truth), 10% cloned 30×
     * (under-cap LSH clone-recall truth), 80% cloned 120× (over-cap —
     * dropped from LSH pair scope by design, recovered by exact dedup).
@@ -285,11 +334,7 @@ private[graft] object ScaleHarness {
       val sec = (System.nanoTime() - t0) / 1e9
       val rows = dirRows(spark, s"$stateDir/view/state-$e")
       val bytes = dirBytes(spark, s"$stateDir/view/state-$e")
-      val touched = {
-        val p = new org.apache.hadoop.fs.Path(s"$stateDir/view/state-$e")
-        if (!hfs.exists(p)) 0
-        else hfs.listStatus(p).count(_.getPath.getName.startsWith("__bucket="))
-      }
+      val touched = bucketsTouched(spark, s"$stateDir/view/state-$e")
       epochs += s"""{"epoch":$e,"sec":${math.round(sec * 1000) / 1000.0},"view_rows_written":$rows,"view_bytes_written":$bytes,"view_buckets_touched":$touched}"""
       if (e == 1) steadyRows = rows
       println(f"[scale] join-view epoch $e: $sec%.1f s, $rows view rows / " +

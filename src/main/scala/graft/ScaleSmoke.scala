@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 30x scale smoke, bench-grade (round-3 verdict item 2): clones the
@@ -64,17 +63,7 @@ object ScaleSmoke {
     // after a sweep/test run times contention, not the operators (a
     // hot capture this round showed pagerank +77% on unchanged code)
     HostLoad.awaitQuiet(threshold = 8.0, maxWaitSec = 180, tag = "scale")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE coalesce cached plans: a persisted partial frame
-      // otherwise freezes the full shuffle width and every tiny
-      // downstream job launches a stage of mostly-empty tasks
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32, partitions = 64)
     // session derivation cache ON (the long-lived-session deployment
     // shape): the LSH signature/pair derivation — shared verbatim by
     // the whole dedup/graph family — is built ONCE, timed as its own
@@ -154,37 +143,9 @@ object ScaleSmoke {
       s"$nLines lineitems")
 
     // ---- CDC / event family first (events-table consumers) ----
-    val opSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val opRows = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    def timeOp(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      try {
-        // drop cached blocks left by earlier ops (fixed-point loops
-        // localCheckpoint per iteration): accumulated storage-memory
-        // pressure made late iterative ops swing 2x between captures.
-        // Blocking, so the removal work itself finishes BEFORE t0
-        // instead of bleeding into the timed window. The session
-        // derivation cache's own blocks are EXEMPT — destroying them
-        // would silently re-time the shared derivation inside whichever
-        // family op runs next.
-        val keep = queries.DedupQueries.memoOwnedRddIds(spark)
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => keep(id) }
-          .values.foreach(_.unpersist(blocking = true))
-        val t0 = System.nanoTime()
-        val d = df
-        d.write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val rows = d.count() // untimed cardinality pass
-        opSecs(label) = math.round(sec * 1000) / 1000.0
-        opRows(label) = rows
-        println(f"[scale] $label: $sec%.1f s ($rows rows)")
-      } catch {
-        case e: Throwable =>
-          failed += label
-          System.err.println(s"[scale] $label FAILED: ${e.getMessage}")
-      }
-    }
+    import ScaleHarness.{bucketsTouched, dirBytes, dirRows, jnum}
+    val timer = new ScaleHarness.OpTimer(spark)
+    import timer.{failed, opRows, opSecs, timeOp}
     timeOp("cdc_flagship")(queries.CdcQueries.flagship(spark, dir))
     timeOp("evt_sessionize")(SparkEntry.queries("evt_sessionize")(spark, dir))
     timeOp("cdc_scd2_history")(
@@ -296,13 +257,7 @@ object ScaleSmoke {
     //     per-epoch delta rows must sum to EXACTLY the corpus's
     //     distinct gram-pair count (appends partition the first-seen
     //     set — no epoch ever rewrites an already-indexed row).
-    val hfs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    def dirBytes(p: String): Long =
-      try hfs.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength
-      catch { case _: Throwable => 0L }
-    def dirRows(p: String): Long =
-      try spark.read.parquet(p).count() catch { case _: Throwable => 0L }
+    val hfs = ScaleHarness.hadoopFs(spark)
 
     val ScdBuckets = 64
     val scdDir = s"$dir/scd2_state"
@@ -329,13 +284,9 @@ object ScaleSmoke {
       graft.operators.ScdApply.materializer(spark, scdDir, ScdBuckets)(
         batch, e.toLong)
       val sec = (System.nanoTime() - t0) / 1e9
-      val touched = {
-        val p = new org.apache.hadoop.fs.Path(s"$scdDir/state-$e")
-        if (!hfs.exists(p)) 0
-        else hfs.listStatus(p).count(_.getPath.getName.startsWith("__bucket="))
-      }
-      val rows = dirRows(s"$scdDir/state-$e")
-      val bytes = dirBytes(s"$scdDir/state-$e")
+      val touched = bucketsTouched(spark, s"$scdDir/state-$e")
+      val rows = dirRows(spark, s"$scdDir/state-$e")
+      val bytes = dirBytes(spark, s"$scdDir/state-$e")
       scdEpochs += s"""{"epoch":$e,"sec":${math.round(sec * 1000) / 1000.0},"rows_written":$rows,"bytes_written":$bytes,"buckets_touched":$touched}"""
       println(f"[scale] scd2 epoch $e: $sec%.1f s, $rows rows / $bytes bytes" +
         f" written, $touched/$ScdBuckets buckets")
@@ -343,7 +294,7 @@ object ScaleSmoke {
     val scdHistoryRows = graft.operators.ScdApply.history(spark, scdDir).count()
     // steady-state epochs must write a small fraction of the history
     // (the touched buckets' slice) — gate at < 1/4
-    val scdSteadyRows = dirRows(s"$scdDir/state-3")
+    val scdSteadyRows = dirRows(spark, s"$scdDir/state-3")
     val scdPass = scdSteadyRows > 0 && scdSteadyRows < scdHistoryRows / 4
     println(s"[scale] scd2 steady-state epoch wrote $scdSteadyRows of " +
       s"$scdHistoryRows history rows pass=$scdPass")
@@ -375,15 +326,15 @@ object ScaleSmoke {
       graft.operators.CdcApply.materializerVersioned(
         spark, repDir, ScdBuckets)(batch, e.toLong)
       val sec = (System.nanoTime() - t0) / 1e9
-      val rows = dirRows(s"$repDir/state-$e")
-      val bytes = dirBytes(s"$repDir/state-$e")
+      val rows = dirRows(spark, s"$repDir/state-$e")
+      val bytes = dirBytes(spark, s"$repDir/state-$e")
       repEpochs += s"""{"epoch":$e,"sec":${math.round(sec * 1000) / 1000.0},"rows_written":$rows,"bytes_written":$bytes}"""
       println(f"[scale] replica epoch $e: $sec%.1f s, $rows rows / " +
         f"$bytes bytes written")
     }
     val repLive = graft.operators.CdcApply
       .replicaVersioned(spark, repDir).count()
-    val repSteadyRows = dirRows(s"$repDir/state-3")
+    val repSteadyRows = dirRows(spark, s"$repDir/state-3")
     val repPass = repSteadyRows > 0 && repSteadyRows < repLive / 4
     println(s"[scale] replica steady-state epoch wrote $repSteadyRows of " +
       s"$repLive live rows pass=$repPass")
@@ -425,13 +376,9 @@ object ScaleSmoke {
       graft.streaming.StreamingLshIndex.materializer(
         spark, lshDir, lshEvDir, LshShards)(batch, e.toLong)
       val sec = (System.nanoTime() - t0) / 1e9
-      val rows = dirRows(s"$lshDir/state-$e")
-      val bytes = dirBytes(s"$lshDir/state-$e")
-      val touched = {
-        val p = new org.apache.hadoop.fs.Path(s"$lshDir/state-$e")
-        if (!hfs.exists(p)) 0
-        else hfs.listStatus(p).count(_.getPath.getName.startsWith("__bucket="))
-      }
+      val rows = dirRows(spark, s"$lshDir/state-$e")
+      val bytes = dirBytes(spark, s"$lshDir/state-$e")
+      val touched = bucketsTouched(spark, s"$lshDir/state-$e")
       lshEpochs += s"""{"epoch":$e,"sec":${math.round(sec * 1000) / 1000.0},"rows_written":$rows,"bytes_written":$bytes,"shards_touched":$touched}"""
       println(f"[scale] lsh-index epoch $e: $sec%.1f s, $rows rows / " +
         f"$bytes bytes, $touched/$LshShards shards")
@@ -440,7 +387,7 @@ object ScaleSmoke {
       .index(spark, lshDir).count()
     val lshEvents = graft.streaming.StreamingLshIndex
       .dupEvents(spark, lshDir, lshEvDir).count()
-    val lshSteadyRows = dirRows(s"$lshDir/state-3")
+    val lshSteadyRows = dirRows(spark, s"$lshDir/state-3")
     // The invariant: a steady epoch writes the TOUCHED shards' slice
     // of the index, never the whole index. 8 docs touch ≤ 32 band
     // buckets → ≤ 32 shards; with the dup-saturated corpus's small
@@ -449,11 +396,7 @@ object ScaleSmoke {
     // production, so the gate checks the slice proportion itself:
     // rows ≈ index × touched/shards (25 % slack for per-shard
     // imbalance), some shards untouched, and real dup events emitted.
-    val lshSteadyTouched = {
-      val p = new org.apache.hadoop.fs.Path(s"$lshDir/state-3")
-      if (!hfs.exists(p)) 0
-      else hfs.listStatus(p).count(_.getPath.getName.startsWith("__bucket="))
-    }
+    val lshSteadyTouched = bucketsTouched(spark, s"$lshDir/state-3")
     val lshSliceBound = lshIndexRows.toDouble *
       lshSteadyTouched / LshShards * 1.25
     val lshPass = lshSteadyRows > 0 && lshSteadyTouched < LshShards &&
@@ -488,12 +431,8 @@ object ScaleSmoke {
       graft.streaming.StreamingIvfIndex.materializer(
         spark, ivfRoot, IvfShards)(batch, e.toLong)
       val sec = (System.nanoTime() - t0) / 1e9
-      val rows = dirRows(s"$ivfRoot/state/state-$e")
-      val touched = {
-        val p = new org.apache.hadoop.fs.Path(s"$ivfRoot/state/state-$e")
-        if (!hfs.exists(p)) 0
-        else hfs.listStatus(p).count(_.getPath.getName.startsWith("__bucket="))
-      }
+      val rows = dirRows(spark, s"$ivfRoot/state/state-$e")
+      val touched = bucketsTouched(spark, s"$ivfRoot/state/state-$e")
       if (e > 0) ivfSteadyTouchedMax = math.max(ivfSteadyTouchedMax, touched)
       ivfEpochs += s"""{"epoch":$e,"sec":${math.round(sec * 1000) / 1000.0},"rows_written":$rows,"shards_touched":$touched}"""
       println(f"[scale] ivf-index epoch $e: $sec%.1f s, $rows rows, " +
@@ -674,7 +613,8 @@ object ScaleSmoke {
         graft.streaming.StreamingReservoir.uniformPriority(
           col("doc_id"), "scale_"), 16)(batch, e.toLong)
       val sec = (System.nanoTime() - t0) / 1e9
-      val gw = dirRows(s"$gkDir/state-$e"); val rw = dirRows(s"$rsDir/state-$e")
+      val gw = dirRows(spark, s"$gkDir/state-$e")
+      val rw = dirRows(spark, s"$rsDir/state-$e")
       kmvWrites += gw; resvWrites += rw
       sketchEpochs += s"""{"epoch":$e,"sec":${math.round(sec * 1000) / 1000.0},"kmv_rows_written":$gw,"reservoir_rows_written":$rw}"""
       println(f"[scale] sketch epoch $e: $sec%.1f s, $gw kmv rows / " +
@@ -740,10 +680,7 @@ object ScaleSmoke {
     }
 
     // ---- artifact ----
-    def jnum(m: Iterable[(String, Double)]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val rowsJson = opRows.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val rowsJson = jnum(opRows)
     val total = opSecs.values.sum
     val json =
       s"""{"metric":"scale_smoke_30x","value":${math.round(total * 100) / 100.0},"unit":"sec","scale":"30x-sf0.1","built":{"events":$nEvents,"documents":$nDocs,"embeddings":$nVecs},"op_sec":${jnum(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.ExactlyOnce
@@ -15,11 +14,7 @@ object StateReport {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       sys.error("usage: StateReport <stateDir>"))
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft state report")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
     val r = ExactlyOnce.stateReport(spark, dir).cache()
     r.show(10000, truncate = false)
     val summary = r.groupBy(col("kind"), col("live"))

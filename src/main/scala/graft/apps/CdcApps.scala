@@ -2,6 +2,7 @@ package graft.apps
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Sessions
 import graft.config.CdcParams
 import graft.operators.{CdcEnrichment, KafkaProjection}
 import graft.sources.KafkaCdcSource
@@ -94,13 +95,7 @@ object ReplayMongoCdcApplyLocal {
     params.requireFullDocumentForApply()
     val sfDir = args.sliding(2, 2).collectFirst {
       case Array("-sf_dir", v) => v }.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("Mongo copy-existing + change stream -> replica (local)")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
     implicit val s: SparkSession = spark
     import spark.implicits._
     import graft.operators.{CdcApply, CdcEnrichment}
@@ -192,13 +187,7 @@ object ReplayCdcExactlyOnceLocal {
     val params = CdcParams.fromArgs(args)
     val sfDir = args.sliding(2, 2).collectFirst {
       case Array("-sf_dir", v) => v }.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("CDC replay, exactly-once produce (local)")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_eo_demo").toString
     val p = params.copy(topic = "cdc_topic", topicPrefix = "flink_cdc_",
@@ -243,13 +232,7 @@ object ReplayCdcApplyLocal {
     }
     val sfDir = args.sliding(2, 2).collectFirst {
       case Array("-sf_dir", v) => v }.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("CDC replay -> versioned replica + schema census (local)")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
     import org.apache.spark.sql.functions._
     import graft.operators.CdcApply
     import graft.streaming.StreamingSchemaDrift
@@ -313,13 +296,7 @@ object ReplayCdcLocal {
     val params = CdcParams.fromArgs(args)
     val sfDir = args.sliding(2, 2).collectFirst {
       case Array("-sf_dir", v) => v }.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("CDC replay (local)")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
     val df = CdcPipeline.build(spark, sfDir,
       params.copy(topic = "cdc_topic", topicPrefix = "flink_cdc_",
         tablePk =

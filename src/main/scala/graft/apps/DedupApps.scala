@@ -1,7 +1,8 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Sessions
 
 /** Runnable demo of the durable standing near-dup index
   * ([[graft.streaming.StreamingLshIndex]]): a document stream folds
@@ -16,13 +17,7 @@ object StreamDedupIndexLocal {
   def main(args: Array[String]): Unit = {
     val sfDir = args.sliding(2, 2).collectFirst {
       case Array("-sf_dir", v) => v }.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("streaming durable LSH dedup index (local)")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
     import graft.streaming.StreamingLshIndex
     implicit val sc = spark.sqlContext
     import spark.implicits._

@@ -414,7 +414,9 @@ object ExactlyOnce {
 
   /** Per-advance phase timing behind `spark.graft.state.timing=true` —
     * the attribution instrument for the chained-materializer fixed
-    * cost (use `graft.IvmProfile` to drive it on a steady epoch).
+    * cost (drive it on one query with `SPARK_GRAFT_CONF=
+    * spark.graft.state.timing=true runMain graft.Explain <query> <dir>
+    * <reps>`).
     */
   private def phaseTimed[T](spark: SparkSession, tag: String)(f: => T): T =
     if (!spark.conf.getOption("spark.graft.state.timing").contains("true")) f

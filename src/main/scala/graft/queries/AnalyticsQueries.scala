@@ -63,7 +63,9 @@ object AnalyticsQueries {
     // exact-decimal sum of the same cast values, and the stack over
     // the 1-row aggregate keeps the wide→long reshape while the
     // Generate multiplies 1 row, not the corpus. Oracle unchanged —
-    // rows bit-identical.
+    // rows bit-identical. A global aggregate over an EMPTY lineitem
+    // still yields one (n = 0) row where the GROUP BY oracle yields
+    // none, so that row is dropped before the stack.
     "rel_unpivot" -> QueryDef(
       (s, dir) => {
         Tables.lineitem(s, dir)
@@ -72,6 +74,7 @@ object AnalyticsQueries {
             sum(dec2(col("l_extendedprice"))).cast("double").as("t_ep"),
             sum(dec2(col("l_discount"))).cast("double").as("t_disc"),
             sum(dec2(col("l_tax"))).cast("double").as("t_tax"))
+          .filter(col("n") > 0)
           .selectExpr("stack(4, " +
             "'quantity', n, t_qty, 'extendedprice', n, t_ep, " +
             "'discount', n, t_disc, 'tax', n, t_tax) AS (metric, n, total)")

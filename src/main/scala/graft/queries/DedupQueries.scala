@@ -162,7 +162,7 @@ object DedupQueries {
       build: => DataFrame): DataFrame =
     DerivationCache.memoized(s, dir, key)(build)
 
-  /** Profiler instrument ([[graft.LshRecallProfile]]): the exploded
+  /** Clone-set instrument of [[graft.Scale100]]'s recall gate: the exploded
     * (doc_id, band, sigh, fsig) band-bucket frame — `sigh` is the SAME
     * 63-bit (band id | band signature) bucket key [[minhashPairsFrom]]
     * shuffles on, `fsig` the full-signature hash (16/16 minhash

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Continuous near-duplicate detection over an unbounded document
   * stream — the online counterpart of the batch MinHash/LSH pipeline
@@ -96,50 +95,5 @@ object StreamingDedup {
             ids.filter(_ != owner).map(DupEvent(_, owner, band)).iterator
           }
       }
-  }
-
-  /** The same bucket-claim operator on Spark 4's `transformWithState`
-    * (StatefulProcessor) — the successor to flatMapGroupsWithState:
-    * typed named-state handles, declarative per-entry TTL (no manual
-    * timeout bookkeeping in the user function), timers, and multi-state
-    * composition. Requires the RocksDB state-store provider. Kept
-    * alongside [[nearDupEvents]] so the engine runs on both the classic
-    * and the current stateful API; StreamingDedupSpec proves the two
-    * emit identical events.
-    */
-  class BucketOwnerProcessor(bucketTtlMs: Option[Long])
-      extends StatefulProcessor[(Int, String), BandRow, DupEvent] {
-    @transient private var owner: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val ttl = bucketTtlMs
-        .map(ms => TTLConfig(java.time.Duration.ofMillis(ms)))
-        .getOrElse(TTLConfig.NONE)
-      owner = getHandle.getValueState[Long]("owner", Encoders.scalaLong, ttl)
-    }
-
-    override def handleInputRows(key: (Int, String), rows: Iterator[BandRow],
-        timerValues: TimerValues): Iterator[DupEvent] = {
-      val ids = rows.map(_.doc_id).toSeq.sorted
-      val own = if (owner.exists()) owner.get() else ids.head
-      // update on every batch: a fresh claim persists the owner, and a
-      // repeat visit renews the TTL (activity-refreshed expiry, the
-      // same semantics the fMGWS path gets from setTimeoutDuration)
-      owner.update(own)
-      ids.filter(_ != own).map(DupEvent(_, own, key._1)).iterator
-    }
-  }
-
-  /** [[nearDupEvents]] via [[BucketOwnerProcessor]]. */
-  def nearDupEventsTws(docs: DataFrame,
-      bucketTtlMs: Option[Long] = None): Dataset[DupEvent] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val timeMode =
-      if (bucketTtlMs.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    bandRows(docs).as[BandRow]
-      .groupByKey(r => (r.band, r.sig))
-      .transformWithState(new BucketOwnerProcessor(bucketTtlMs),
-        timeMode, OutputMode.Append())
   }
 }

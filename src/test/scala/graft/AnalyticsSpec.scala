@@ -18,6 +18,30 @@ class AnalyticsSpec extends SparkSpec {
     assert(stages("1_view") > 0)
   }
 
+  test("rel_unpivot: zero rows on an empty lineitem; sf0.001 rows match the GROUP BY shape") {
+    import org.apache.spark.sql.functions._
+    // the oracle's shape: unpivot every row first, then GROUP BY metric
+    def grouped(dir: String) = queries.Tables.lineitem(spark, dir)
+      .selectExpr("stack(4, " +
+        "'quantity', CAST(l_quantity AS DECIMAL(18,2)), " +
+        "'extendedprice', CAST(l_extendedprice AS DECIMAL(18,2)), " +
+        "'discount', CAST(l_discount AS DECIMAL(18,2)), " +
+        "'tax', CAST(l_tax AS DECIMAL(18,2))) AS (metric, value)")
+      .groupBy(col("metric"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).cast("double").as("total"))
+      .orderBy(col("metric"))
+    val rows = q("rel_unpivot").collect().toSeq
+    assert(rows.length == 4)
+    assert(rows == grouped(sf).collect().toSeq)
+
+    val empty = java.nio.file.Files.createTempDirectory("graft_empty_lineitem")
+    queries.Tables.lineitem(spark, sf).limit(0)
+      .write.parquet(s"$empty/lineitem.parquet")
+    assert(grouped(empty.toString).count() == 0)
+    val got = SparkEntry.queries("rel_unpivot")(spark, empty.toString).collect()
+    assert(got.isEmpty, got.mkString(","))
+  }
+
   test("evt_resample: dense spine — every (type, minute) cell exists exactly once") {
     val rows = q("evt_resample").collect()
     val types = rows.map(_.getString(0)).distinct

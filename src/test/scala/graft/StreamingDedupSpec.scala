@@ -56,85 +56,6 @@ class StreamingDedupSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState path emits the same events as flatMapGroupsWithState") {
-    implicit val sc = spark.sqlContext
-    // transformWithState requires the RocksDB state store
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[(Long, String)]
-      val events = StreamingDedup.nearDupEventsTws(
-        in.toDF().toDF("doc_id", "text"))
-      val q = events.writeStream.format("memory")
-        .queryName("dedup_events_tws").outputMode("append").start()
-      try {
-        in.addData((1L, textA), (3L, textB))
-        q.processAllAvailable()
-        assert(spark.table("dedup_events_tws").count() == 0)
-
-        in.addData((2L, textA)) // verbatim copy, one batch later
-        q.processAllAvailable()
-        val evs = spark.table("dedup_events_tws")
-          .as[StreamingDedup.DupEvent].collect()
-        // identical to the fMGWS path's first test: all 4 bands collide
-        // against the original claimant
-        assert(evs.length == 4, evs.mkString(","))
-        assert(evs.forall(e => e.doc_id == 2L && e.dup_of == 1L))
-        assert(evs.map(_.band).sorted.toSeq == Seq(0, 1, 2, 3))
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("transformWithState TTL: declarative state expiry re-admits cold buckets") {
-    implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[(Long, String)]
-      val events = StreamingDedup.nearDupEventsTws(
-        in.toDF().toDF("doc_id", "text"), bucketTtlMs = Some(2000L))
-      val q = events.writeStream.format("memory")
-        .queryName("dedup_events_tws_ttl").outputMode("append").start()
-      // poll, not processAllAvailable — a processing-time-mode stateful
-      // query may self-trigger batches and never signal "no new data"
-      def awaitCount(n: Long): Unit = {
-        val deadline = System.currentTimeMillis + 60000
-        while (spark.table("dedup_events_tws_ttl").count() < n) {
-          assert(System.currentTimeMillis < deadline,
-            s"timed out waiting for $n dup events")
-          Thread.sleep(100)
-        }
-      }
-      try {
-        in.addData((1L, textA), (2L, textA))
-        awaitCount(4)
-
-        // TTL is declarative: no timers to fire — the expired entry is
-        // simply absent when the key is next read after the TTL
-        Thread.sleep(4000)
-        in.addData((9L, textA), (10L, textA))
-        awaitCount(8)
-        val evs = spark.table("dedup_events_tws_ttl")
-          .as[StreamingDedup.DupEvent].collect().filter(_.doc_id >= 9L)
-        assert(evs.length == 4 &&
-          evs.forall(e => e.doc_id == 10L && e.dup_of == 9L),
-          s"expected doc 9 re-admitted as owner, got ${evs.mkString(",")}")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("bucket TTL: expired buckets re-admit, live buckets still collide") {
     implicit val sc = spark.sqlContext
     val in = MemoryStream[(Long, String)]
