@@ -174,7 +174,6 @@ object ReplayCdcExactlyOnceLocal {
     private val buf =
       scala.collection.mutable.ArrayBuffer.empty[(String, Int, String, Int)]
     override def beginTransaction(): Unit = buf.clear()
-    override def send(key: String, value: String): Unit = ()
     override def sendRecord(topic: String, partition: Int,
         key: Array[Byte], value: Array[Byte]): Unit =
       buf += ((topic, partition, new String(key, "UTF-8"), value.length))

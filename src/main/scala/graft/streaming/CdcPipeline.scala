@@ -75,17 +75,6 @@ object CdcPipeline {
       .outputMode("append")
       .start()
 
-  /** Delivery-guarantee dispatch (reference `-delivery_guarantee`,
-    * MySQLCDC2AWSMSK.scala:177-190): ONLY the literal `at_least_once`
-    * selects the native Kafka writer (its natural guarantee); anything
-    * else — including the default and typos — routes to foreachBatch
-    * with epoch fencing (graft.operators.ExactlyOnce), the
-    * two-phase-commit shape, matching the reference's polarity where
-    * EXACTLY_ONCE is the default and an unrecognized value never
-    * silently weakens the guarantee. The fenced body here writes each
-    * epoch to a fenced lake directory; with brokers available the same
-    * body wraps a transactional producer instead.
-    */
   /** The full exactly-once produce path, runnable WITHOUT kafka jars:
     * writeStream.foreachBatch → per-(epoch, partition) fenced
     * transactional produce of the real Kafka record shape (topic,
@@ -111,6 +100,17 @@ object CdcPipeline {
       .trigger(Trigger.ProcessingTime(s"${params.checkpointInterval} seconds"))
   }
 
+  /** Delivery-guarantee dispatch (reference `-delivery_guarantee`,
+    * MySQLCDC2AWSMSK.scala:177-190): ONLY the literal `at_least_once`
+    * selects the native Kafka writer (its natural guarantee); anything
+    * else — including the default and typos — routes to foreachBatch
+    * with epoch fencing (graft.operators.ExactlyOnce), the
+    * two-phase-commit shape, matching the reference's polarity where
+    * EXACTLY_ONCE is the default and an unrecognized value never
+    * silently weakens the guarantee. The fenced body here writes each
+    * epoch to a fenced lake directory; with brokers available the same
+    * body wraps a transactional producer instead.
+    */
   def sink(df: DataFrame, params: CdcParams): DataStreamWriter[Row] =
     if (params.deliveryGuarantee != "at_least_once") {
       val target = params.checkpointDir.stripSuffix("/") + "/out"

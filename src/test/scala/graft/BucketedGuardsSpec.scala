@@ -8,10 +8,9 @@ import graft.operators.ExactlyOnce
 
 /** The round-9 protocol guards: the `clusterByBucket` knob (the
   * cluster-scale path that skips the per-epoch bucket-clustering
-  * exchange) must not change any read-back state, and the two
-  * silent-data-loss windows on the pruned probe — a FLAT legacy
-  * component and a mismatched probe fan-out — must fail loudly
-  * instead of returning an empty/wrong slice.
+  * exchange) must not change any read-back state, and the
+  * silent-data-loss window on the pruned probe — a mismatched probe
+  * fan-out — must fail loudly instead of returning a wrong slice.
   */
 class BucketedGuardsSpec extends SparkSpec {
 
@@ -121,22 +120,11 @@ class BucketedGuardsSpec extends SparkSpec {
     val ap = Files.createTempDirectory("graft_rep_a").toString
     ExactlyOnce.appendDeltaBucketed(spark, ap, 0L, "k", Buckets)(
       Seq((1L, 1L)).toDF("k", "v"))
-    ExactlyOnce.appendDelta(spark, ap, 1L)(Seq((2L, 2L)).toDF("k", "v"))
+    // an all-empty delta commits a component with no __bucket= dirs
+    ExactlyOnce.appendDeltaBucketed(spark, ap, 1L, "k", Buckets)(emptyKV)
     val rep2 = ExactlyOnce.stateReport(spark, ap).collect()
     assert(rep2.exists(r => r.getString(1) == "delta" && r.getBoolean(6)))
     assert(rep2.exists(r => r.getString(1) == "flat"))
-  }
-
-  test("a pruned probe over a FLAT (appendDelta) component fails " +
-      "loudly instead of silently missing every standing key") {
-    import spark.implicits._
-    val d = Files.createTempDirectory("graft_flat").toString
-    ExactlyOnce.appendDelta(spark, d, 0L)(Seq(1L -> 10L).toDF("k", "v"))
-    val e = intercept[RuntimeException] {
-      ExactlyOnce.appendedStateBuckets(spark, d, Set(0, 1))(emptyKV)
-        .collect()
-    }
-    assert(e.getMessage.contains("FLAT"), e.getMessage)
   }
 
   test("the VERSIONED subset reads (currentStateBuckets / " +

@@ -45,14 +45,16 @@ object TxnRecorder {
 class RecordingProducer extends graft.operators.ExactlyOnce.TxnProducer {
   private val buffer = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
   override def beginTransaction(): Unit = buffer.clear()
-  override def send(key: String, value: String): Unit = {
+  override def sendRecord(topic: String, partition: Int,
+      key: Array[Byte], value: Array[Byte]): Unit = {
+    val k = new String(key, java.nio.charset.StandardCharsets.UTF_8)
     if (TxnRecorder.sent.incrementAndGet() > TxnRecorder.failAfter.get())
       throw new RuntimeException("simulated broker failure mid-transaction")
-    if (TxnRecorder.failOddKeys.get() && key.toLong % 2 == 1) {
+    if (TxnRecorder.failOddKeys.get() && k.toLong % 2 == 1) {
       Thread.sleep(500) // let the even partition commit first
       throw new RuntimeException("simulated failure in odd-key partition")
     }
-    buffer += ((key, value))
+    buffer += ((k, new String(value, java.nio.charset.StandardCharsets.UTF_8)))
   }
   override def commitTransaction(): Unit =
     buffer.foreach(TxnRecorder.committedRecords.add)
@@ -103,8 +105,6 @@ class KafkaRecordProducer extends graft.operators.ExactlyOnce.TxnProducer {
   private val buffer =
     scala.collection.mutable.ArrayBuffer.empty[(String, Int, String, String)]
   override def beginTransaction(): Unit = buffer.clear()
-  override def send(key: String, value: String): Unit =
-    throw new UnsupportedOperationException("records-only producer")
   override def sendRecord(topic: String, partition: Int,
       key: Array[Byte], value: Array[Byte]): Unit =
     buffer += ((topic, partition,
@@ -127,13 +127,14 @@ class DeliverySpec extends SparkSpec {
     TxnRecorder.reset()
 
     val batch = spark.range(0, 100).selectExpr(
-      "CAST(id AS STRING) AS key", "CAST(id * 2 AS STRING) AS value")
+      "'t' AS topic", "CAST(id AS STRING) AS key",
+      "CAST(id * 2 AS STRING) AS value")
       .coalesce(1) // one partition ⇒ one transaction per attempt
 
     // attempt 1 crashes mid-send: transaction aborted, NO epoch marker
     TxnRecorder.failAfter.set(10)
     intercept[Exception] {
-      ExactlyOnce.foreachBatchTransactional(
+      ExactlyOnce.foreachBatchTransactionalKafka(
         ledger, _ => new RecordingProducer)(batch, 5L)
     }
     assert(TxnRecorder.aborted.get() == 1)
@@ -142,13 +143,13 @@ class DeliverySpec extends SparkSpec {
 
     // replay (same batchId): marker absent ⇒ the epoch re-runs in full
     TxnRecorder.failAfter.set(Int.MaxValue)
-    ExactlyOnce.foreachBatchTransactional(
+    ExactlyOnce.foreachBatchTransactionalKafka(
       ledger, _ => new RecordingProducer)(batch, 5L)
     assert(TxnRecorder.committedRecords.size() == 100)
     assert(new java.io.File(s"$ledger/epoch-5").exists())
 
     // second replay: marker present ⇒ fenced no-op, nothing re-sent
-    ExactlyOnce.foreachBatchTransactional(
+    ExactlyOnce.foreachBatchTransactionalKafka(
       ledger, _ => new RecordingProducer)(batch, 5L)
     assert(TxnRecorder.committedRecords.size() == 100)
   }
@@ -162,11 +163,12 @@ class DeliverySpec extends SparkSpec {
     // two partitions split by key parity: evens commit, odds crash
     val batch = spark.range(0, 100)
       .repartitionByRange(2, col("id") % 2) // partition 0 = evens, 1 = odds
-      .selectExpr("CAST(id AS STRING) AS key", "CAST(id * 2 AS STRING) AS value")
+      .selectExpr("'t' AS topic", "CAST(id AS STRING) AS key",
+        "CAST(id * 2 AS STRING) AS value")
 
     TxnRecorder.failOddKeys.set(true)
     intercept[Exception] {
-      ExactlyOnce.foreachBatchTransactional(
+      ExactlyOnce.foreachBatchTransactionalKafka(
         ledger, _ => new RecordingProducer)(batch, 7L)
     }
     // partial epoch: the even partition committed and wrote its part
@@ -181,7 +183,7 @@ class DeliverySpec extends SparkSpec {
     // replay of the SAME epoch: the committed partition is fenced by its
     // part marker (no duplicate sends); only the aborted partition runs
     TxnRecorder.failOddKeys.set(false)
-    ExactlyOnce.foreachBatchTransactional(
+    ExactlyOnce.foreachBatchTransactionalKafka(
       ledger, _ => new RecordingProducer)(batch, 7L)
     val keys = TxnRecorder.committedRecords.toArray
       .map(_.asInstanceOf[(String, String)]._1.toLong).toSeq
@@ -190,7 +192,7 @@ class DeliverySpec extends SparkSpec {
     assert(new java.io.File(s"$ledger/epoch-7").exists())
 
     // whole-epoch replay after sealing: fast-path fenced no-op
-    ExactlyOnce.foreachBatchTransactional(
+    ExactlyOnce.foreachBatchTransactionalKafka(
       ledger, _ => new RecordingProducer)(batch, 7L)
     assert(TxnRecorder.committedRecords.size() == 100)
   }
@@ -203,7 +205,8 @@ class DeliverySpec extends SparkSpec {
     TxnRecorder.reset()
 
     val batch = spark.range(0, 100).selectExpr(
-      "CAST(id AS STRING) AS key", "CAST(id * 2 AS STRING) AS value")
+      "'t' AS topic", "CAST(id AS STRING) AS key",
+      "CAST(id * 2 AS STRING) AS value")
       .coalesce(1)
     // EPOCH-scoped transactional.id — `graft-txn-$batchId-$pid`, the
     // per-checkpoint rotation the real kafka-clients binding relies on
@@ -216,7 +219,7 @@ class DeliverySpec extends SparkSpec {
     // dies before its part marker lands (close() throws post-commit)
     TxnRecorder.crashAfterCommit.set(true)
     intercept[Exception] {
-      ExactlyOnce.foreachBatchTransactional(ledger, factory)(batch, 9L)
+      ExactlyOnce.foreachBatchTransactionalKafka(ledger, factory)(batch, 9L)
     }
     assert(TxnRecorder.committedRecords.size() == 100,
       "commit reached the broker before the crash")
@@ -228,7 +231,7 @@ class DeliverySpec extends SparkSpec {
     // recovery probe resumes the same transactional.id, learns the
     // prior transaction committed, writes only the missing marker.
     TxnRecorder.crashAfterCommit.set(false)
-    ExactlyOnce.foreachBatchTransactional(ledger, factory)(batch, 9L)
+    ExactlyOnce.foreachBatchTransactionalKafka(ledger, factory)(batch, 9L)
     val keys = TxnRecorder.committedRecords.toArray
       .map(_.asInstanceOf[(String, String)]._1.toLong).toSeq
     assert(keys.size == 100,
@@ -242,11 +245,11 @@ class DeliverySpec extends SparkSpec {
     TxnRecorder.reset()
     TxnRecorder.failAfter.set(10)
     intercept[Exception] {
-      ExactlyOnce.foreachBatchTransactional(ledger, factory)(batch, 10L)
+      ExactlyOnce.foreachBatchTransactionalKafka(ledger, factory)(batch, 10L)
     }
     assert(TxnRecorder.committedRecords.isEmpty, "aborted ⇒ invisible")
     TxnRecorder.failAfter.set(Int.MaxValue)
-    ExactlyOnce.foreachBatchTransactional(ledger, factory)(batch, 10L)
+    ExactlyOnce.foreachBatchTransactionalKafka(ledger, factory)(batch, 10L)
     assert(TxnRecorder.committedRecords.size() == 100)
   }
 
@@ -254,11 +257,15 @@ class DeliverySpec extends SparkSpec {
       "persistent broker state: epoch N+1 is not fenced by epoch N's commit") {
     import graft.operators.ExactlyOnce
     import org.apache.spark.TaskContext
-    val ledger = Files.createTempDirectory("graft_txn_ledger_xe").toString
+    // the ledger sits where a state dir's does, so the public fence
+    // probe can read it
+    val root = Files.createTempDirectory("graft_txn_ledger_xe").toString
+    val ledger = s"$root/_ledger"
     TxnRecorder.reset()
 
     val batch = spark.range(0, 100).selectExpr(
-      "CAST(id AS STRING) AS key", "CAST(id * 2 AS STRING) AS value")
+      "'t' AS topic", "CAST(id AS STRING) AS key",
+      "CAST(id * 2 AS STRING) AS value")
       .coalesce(1)
     val factory = (batchId: Long) => new RecoverableRecordingProducer(
       s"graft-txn-$batchId-${TaskContext.getPartitionId()}")
@@ -270,11 +277,11 @@ class DeliverySpec extends SparkSpec {
     // transaction committed", skip every send, and still write its
     // marker — silent loss of the entire epoch. Epoch-scoped ids make
     // the probe see only THIS epoch's (nonexistent) prior transaction.
-    ExactlyOnce.foreachBatchTransactional(ledger, factory)(batch, 20L)
+    ExactlyOnce.foreachBatchTransactionalKafka(ledger, factory)(batch, 20L)
     assert(TxnRecorder.committedRecords.size() == 100)
     assert(TxnRecorder.brokerCommitted.size() == 1, "broker state persists")
 
-    ExactlyOnce.foreachBatchTransactional(ledger, factory)(batch, 21L)
+    ExactlyOnce.foreachBatchTransactionalKafka(ledger, factory)(batch, 21L)
     val keys = TxnRecorder.committedRecords.toArray
       .map(_.asInstanceOf[(String, String)]._1.toLong).toSeq
     assert(keys.size == 200,
@@ -282,8 +289,10 @@ class DeliverySpec extends SparkSpec {
         "(100 = epoch 21 was silently fenced by epoch 20's broker state)")
     assert(keys.distinct.size == 100 && keys.groupBy(identity).forall(_._2.size == 2),
       "each record exactly once per epoch")
-    assert(new java.io.File(s"$ledger/epoch-20").exists())
-    assert(new java.io.File(s"$ledger/epoch-21").exists())
+    // both committed, through the fence: epoch 21's marker, and epoch
+    // 20's marker or the watermark it was folded into
+    assert(ExactlyOnce.isEpochCommitted(spark, root, 20L))
+    assert(ExactlyOnce.isEpochCommitted(spark, root, 21L))
   }
 
   test("E2E fenced produce: CdcPipeline → ExactlyOnce → recorded Kafka " +

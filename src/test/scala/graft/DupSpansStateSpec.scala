@@ -15,6 +15,11 @@ import graft.streaming.StreamingDupSpans
   */
 class DupSpansStateSpec extends SparkSpec {
 
+  /** One fenced delta epoch of the per-bucket LSM (4 buckets on `gh1`). */
+  private def commitDelta(stateDir: String, batchId: Long)(
+      delta: => org.apache.spark.sql.DataFrame): Boolean =
+    ExactlyOnce.appendDeltaBucketed(spark, stateDir, batchId, "gh1", 4)(delta)
+
   test("durable materializer matches batch txt_dup_spans_prefix " +
       "bit-for-bit, compacting mid-stream") {
     val batchTruth = SparkEntry.queries("txt_dup_spans_prefix")(spark, sf)
@@ -111,9 +116,9 @@ class DupSpansStateSpec extends SparkSpec {
     import spark.implicits._
     val stateDir = Files.createTempDirectory("graft_compact_crash").toString
     val empty = StreamingDupSpans.emptyIndex(spark)
-    ExactlyOnce.appendDelta(spark, stateDir, 0L)(
+    commitDelta(stateDir, 0L)(
       Seq((1L, 1L, 1L)).toDF("gh1", "gh2", "dmin"))
-    ExactlyOnce.appendDelta(spark, stateDir, 1L)(
+    commitDelta(stateDir, 1L)(
       Seq((2L, 2L, 2L)).toDF("gh1", "gh2", "dmin"))
 
     // crash BETWEEN base write and compact marker: the orphan base is
@@ -140,7 +145,7 @@ class DupSpansStateSpec extends SparkSpec {
     assert(ExactlyOnce.appendedState(spark, stateDir)(empty).count() == 2)
 
     // a delta committed AFTER the base keeps appending on top of it
-    ExactlyOnce.appendDelta(spark, stateDir, 2L)(
+    commitDelta(stateDir, 2L)(
       Seq((3L, 3L, 3L)).toDF("gh1", "gh2", "dmin"))
     assert(ExactlyOnce.appendedState(spark, stateDir)(empty).count() == 3)
 
@@ -165,7 +170,7 @@ class DupSpansStateSpec extends SparkSpec {
     import spark.implicits._
     val stateDir = Files.createTempDirectory("graft_fold").toString
     val empty = StreamingDupSpans.emptyIndex(spark)
-    (0L to 3L).foreach(e => ExactlyOnce.appendDelta(spark, stateDir, e)(
+    (0L to 3L).foreach(e => commitDelta(stateDir, e)(
       Seq((e, e, e)).toDF("gh1", "gh2", "dmin")))
     assert(ExactlyOnce.compactAppended(spark, stateDir)(empty) == Some(3L))
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -177,11 +182,11 @@ class DupSpansStateSpec extends SparkSpec {
       s"subsumed epoch markers not folded: $ledger")
     assert(ledger.exists(_.startsWith("hwm-")), s"no high watermark: $ledger")
     // a replay of any folded epoch is still fenced — by the watermark
-    assert(!ExactlyOnce.appendDelta(spark, stateDir, 2L)(
+    assert(!commitDelta(stateDir, 2L)(
       Seq((99L, 99L, 99L)).toDF("gh1", "gh2", "dmin")))
     assert(ExactlyOnce.appendedState(spark, stateDir)(empty).count() == 4)
     // and new epochs continue on top of the folded ledger
-    assert(ExactlyOnce.appendDelta(spark, stateDir, 4L)(
+    assert(commitDelta(stateDir, 4L)(
       Seq((40L, 40L, 40L)).toDF("gh1", "gh2", "dmin")))
     assert(ExactlyOnce.appendedState(spark, stateDir)(empty).count() == 5)
   }
@@ -190,7 +195,7 @@ class DupSpansStateSpec extends SparkSpec {
     import spark.implicits._
     val stateDir = Files.createTempDirectory("graft_append_crash").toString
     val empty = StreamingDupSpans.emptyIndex(spark)
-    assert(ExactlyOnce.appendDelta(spark, stateDir, 0L)(
+    assert(commitDelta(stateDir, 0L)(
       Seq((1L, 2L, 3L)).toDF("gh1", "gh2", "dmin")))
     assert(ExactlyOnce.appendedState(spark, stateDir)(empty).count() == 1)
 
@@ -200,14 +205,14 @@ class DupSpansStateSpec extends SparkSpec {
     assert(ExactlyOnce.appendedState(spark, stateDir)(empty).count() == 1)
 
     // the replay overwrites the orphan and commits it
-    assert(ExactlyOnce.appendDelta(spark, stateDir, 1L)(
+    assert(commitDelta(stateDir, 1L)(
       Seq((4L, 5L, 7L)).toDF("gh1", "gh2", "dmin")))
     val rows = ExactlyOnce.appendedState(spark, stateDir)(empty)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
     assert(rows == Seq((1L, 2L, 3L), (4L, 5L, 7L)))
 
     // re-delivery of a committed epoch is fenced
-    assert(!ExactlyOnce.appendDelta(spark, stateDir, 1L)(
+    assert(!commitDelta(stateDir, 1L)(
       Seq((9L, 9L, 9L)).toDF("gh1", "gh2", "dmin")))
     assert(ExactlyOnce.appendedState(spark, stateDir)(empty).count() == 2)
   }
