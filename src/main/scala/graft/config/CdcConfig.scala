@@ -12,21 +12,32 @@ import scala.util.matching.Regex
   *     semantics — pattern `a=b` matches inside `aa=bb`)
   *   - `column_max_length` is a `"col1=10|col2=20"` list; a value is
   *     truncated to `substring(0, max)` only when `length >= max`.
+  *
+  * Both lists are parsed once, when [[TablePkConfig.parse]] builds the
+  * rule, not per record. A malformed `column_max_length` item fails the
+  * config with an `IllegalArgumentException` that names it: inside
+  * [[graft.operators.CdcEnrichment.enrichMySql]]'s per-record `try` it
+  * would silently drop every record of the table.
   */
 final case class TableRule(
     primaryKey: String,
     columnMaxLength: String) {
 
   /** PK column names, in declared order; empty when no PK configured. */
-  def pkColumns: Seq[String] =
+  val pkColumns: Seq[String] =
     if (primaryKey.isEmpty) Seq.empty else primaryKey.split(",").toSeq
 
   /** (column, maxLength) truncation rules in declared order. */
-  def truncations: Seq[(String, Int)] =
+  val truncations: Seq[(String, Int)] =
     if (columnMaxLength.isEmpty) Seq.empty
     else columnMaxLength.split("\\|").toSeq.map { item =>
-      val parts = item.split("=")
-      (parts(0), parts(1).toInt)
+      item.split("=", -1) match {
+        case Array(col, max) if col.nonEmpty && max.toIntOption.exists(_ >= 0) =>
+          (col, max.toInt)
+        case _ => throw new IllegalArgumentException(
+          s"column_max_length item '$item' in '$columnMaxLength' is not " +
+            "<column>=<non-negative length>")
+      }
     }
 }
 

@@ -17,6 +17,14 @@ class ConfigSpec extends AnyFunSuite {
     assert(cfg.rules("test_db=product").pkColumns == Seq("pid"))
   }
 
+  test("table_pk parse: a malformed column_max_length item fails the config, naming it") {
+    Seq("props", "props=abc").foreach { item =>
+      val e = intercept[IllegalArgumentException](TablePkConfig.parse(
+        s"""[{"db":"test_db","table":"events","primary_key":"event_id","column_max_length":"event_type=6|$item"}]"""))
+      assert(e.getMessage.contains(s"'$item'"), e.getMessage)
+    }
+  }
+
   test("resolve: longest pattern first, unanchored") {
     val cfg = TablePkConfig.parse(
       """[{"db":"test_db","table":"p.*","primary_key":"a"},
