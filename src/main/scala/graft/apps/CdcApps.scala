@@ -24,8 +24,9 @@ import graft.streaming.CdcPipeline
   * deployment pairs a Debezium/Kafka-Connect connector (producing the
   * same envelopes the reference's embedded connector emits) with this
   * consumer — source topic in, enriched/routed topics out. The
-  * `-position` modes select the consumer start offset; `initial` is the
-  * JDBC-snapshot-then-stream handoff (graft.sources.JdbcSnapshot).
+  * `-position` modes select the consumer start offset; `initial` reads
+  * the source topic from `earliest`, so the connector's own snapshot
+  * records come first. This app runs no JDBC snapshot of its own.
   */
 object MySQLCdcToKafka {
   def main(args: Array[String]): Unit = {

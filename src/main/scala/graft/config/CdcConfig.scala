@@ -170,7 +170,8 @@ final case class CdcParams(
     checkpointDir: String = "",
     checkpointInterval: Int = 60,
     // reference default (MySQLCDC2AWSMSK.scala:187): exactly_once unless
-    // the flag is the literal "at_least_once"
+    // the flag is the literal "at_least_once". Only CdcPipeline.sink reads
+    // it; the cluster apps do not yet honour it (they always use kafkaSink)
     deliveryGuarantee: String = "exactly_once",
     parallel: Int = 4,
     disableChaining: Boolean = false,
@@ -292,12 +293,15 @@ object CdcParams {
       replicaRetain = kv.getOrElse("replica_retain", "2").toInt,
       tombstoneHorizonMs = kv.get("tombstone_horizon_ms").map(_.toLong)
         .getOrElse(Long.MaxValue),
-      kafkaProperties = kv.get("kafka_properties").map { props =>
-        // "k=v,k=v" pass-through producer props (MySQLCDC2AWSMSK.scala:204-212)
-        props.split(",").toIndexedSeq.flatMap { p =>
-          p.split("=") match {
-            case Array(k, v) => Some(k -> v)
-            case _ => None
+      kafkaProperties = kv.get("kafka_properties").filter(_.nonEmpty).map {
+        // "k=v,k=v" pass-through producer props (MySQLCDC2AWSMSK.scala:204-212);
+        // split on the first '=' only: a value such as sasl.jaas.config
+        // holds '=' itself
+        _.split(",").toIndexedSeq.map { item =>
+          item.split("=", 2) match {
+            case Array(k, v) if k.nonEmpty => k -> v
+            case _ => throw new IllegalArgumentException(
+              s"kafka_properties item '$item' is not <key>=<value>")
           }
         }.toMap
       }.getOrElse(Map.empty))

@@ -2,7 +2,7 @@ package graft.operators
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.{TablePkConfig, TableRule}
@@ -170,9 +170,4 @@ object CdcEnrichment {
         map(lit(col), truncated)))
       .otherwise(image)
   }
-
-  /** Enriched records as a DataFrame (column form) — convenience for the
-    * sink projection.
-    */
-  def toDf(ds: Dataset[CdcKafkaRecord]): DataFrame = ds.toDF()
 }

@@ -17,8 +17,9 @@ import org.apache.spark.sql.types.StructType
   *
   *  1. **Idempotent downstream** (reference README.md:33 itself
   *     recommends at_least_once + dedup): every record carries
-  *     `partitionKey`; a keyed consumer (or [[upsertByKey]] for a lake
-  *     target) collapses duplicates. This is the default.
+  *     `partitionKey`; a keyed consumer collapses duplicates. On the
+  *     lake side that consumer is [[CdcApply]], whose last change per
+  *     key makes a replayed batch a no-op. This is the default.
   *  2. **Batch-id fencing** ([[foreachBatchExactlyOnce]]): `foreachBatch`
   *     exposes a stable `batchId` per epoch; a committed-epoch ledger
   *     makes the write idempotent — replayed batches are skipped. This
@@ -91,20 +92,6 @@ object ExactlyOnce {
       * id and can never fence this one.
       */
     def resumeAndCommit(): Boolean
-  }
-
-  /** Upsert-by-key into a parquet/delta-style target: latest record per
-    * `partitionKey` wins (ts tie-broken by value hash for determinism).
-    * Running it over data containing duplicates yields the same target
-    * state as running it over the deduplicated input — the idempotence
-    * that makes at-least-once delivery exactly-once downstream.
-    */
-  def upsertByKey(batch: DataFrame, keyCol: String, orderCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(keyCol))
-      .orderBy(col(orderCol).desc, xxhash64(col("value")).asc)
-    batch.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
   }
 
   /** Wrap a batch writer with an epoch ledger at `ledgerPath`. Replayed

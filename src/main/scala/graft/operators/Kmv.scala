@@ -5,15 +5,17 @@ import org.apache.spark.sql.functions._
 
 /** Shared math for the k-minimum-values distinct sketch — used by the
   * oracle-checked batch queries (`rel_kmv_distinct`, `rel_kmv_groups`)
-  * and the streaming sketch ([[graft.streaming.StreamingKmv]]), so the
-  * online estimate is BIT-EQUAL to the batch one on the same ids.
+  * and the durable per-group sketch
+  * ([[graft.streaming.StreamingGroupedKmv]]), so the standing estimate
+  * is BIT-EQUAL to the batch one on the same ids.
   *
   * Hash: universal family h(x) = (A·x + B) mod P with P = 2^61-1,
   * evaluated in decimal(38,0) so the 122-bit product is exact — the
   * same arithmetic DuckDB runs in HUGEINT, which is what makes the
   * sketch oracle-checkable (no engine-portable xxhash exists: Spark
   * Long multiplication wraps, DuckDB BIGINT multiplication raises).
-  * Estimator: D-hat = (k-1) · P / h_(k) — classic unbiased KMV.
+  * Estimator: D-hat = (k-1) · P / h_(k) — classic unbiased KMV,
+  * computed as a Column expression by each caller.
   */
 object Kmv {
   /** 2^61 - 1, Mersenne prime. */
@@ -25,17 +27,4 @@ object Kmv {
   def hashCol(c: Column, b: Long): Column =
     pmod(c.cast("decimal(38,0)") * lit(A) + lit(b),
       lit(P).cast("decimal(38,0)")).cast("long")
-
-  /** Same hash on the driver/executor side for typed streams. */
-  def hash(x: Long, b: Long): Long = {
-    val p = java.math.BigInteger.valueOf(P)
-    java.math.BigInteger.valueOf(x)
-      .multiply(java.math.BigInteger.valueOf(A))
-      .add(java.math.BigInteger.valueOf(b))
-      .mod(p).longValueExact()
-  }
-
-  /** KMV estimate from the k-th smallest hash (requires k ≥ 2). */
-  def estimate(k: Long, kthHash: Long): Double =
-    (k - 1).toDouble * P.toDouble / kthHash.toDouble
 }

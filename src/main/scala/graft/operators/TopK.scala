@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Bounded top-k as a typed `Aggregator` — the scale path for per-group
@@ -43,10 +43,4 @@ class TopKAggregator(k: Int)
 
   override def outputEncoder: Encoder[Seq[ScoredId]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[ScoredId]]()
-}
-
-object TopK {
-  /** Column form: `top_k(struct(id, score))` usable in groupBy().agg(). */
-  def topK(k: Int): Column =
-    new TopKAggregator(k).toColumn.name(s"top_$k")
 }

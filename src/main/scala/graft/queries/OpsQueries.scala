@@ -540,8 +540,7 @@ object OpsQueries {
     // frequency — two keyed aggregations (word counts collapse the
     // corpus to its vocabulary FIRST, so the pair explosion runs over
     // distinct words, not every token occurrence). Top-20 merge
-    // candidates; the iterative trainer around this aggregation is
-    // [[graft.operators.BpeTrainer]].
+    // candidates.
     "txt_bpe_pairs" -> QueryDef(
       (s, dir) => {
         val words = Tables.rebalance(Tables.documents(s, dir))

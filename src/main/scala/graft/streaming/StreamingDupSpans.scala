@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   *   4. fold the batch's first-seen rows into the index for the next
   *      epoch.
   *
-  * Under a doc_id-ordered feed (the StreamingPacker ordered-feed
-  * contract) the union of every epoch's spans equals the batch query
+  * Under a doc_id-ordered feed (each epoch's doc_ids above every
+  * earlier epoch's) the union of every epoch's spans equals the batch query
   * bit-for-bit — proven in StreamingOpsSpec. Out-of-order feeds get
   * as-of-ARRIVAL semantics instead (an early doc arriving late cannot
   * retroactively flag docs already emitted); both are prefix views,

@@ -14,7 +14,7 @@ import graft.operators.{ExactlyOnce, Kmv}
   * `(k-1)·P / h_(k)` and the portable universal hash are shared with
   * the batch query through [[Kmv]], so after ingesting the same rows
   * the standing sketch is BIT-EQUAL to the batch one — the parity the
-  * spec asserts, same contract as the global `StreamingKmv`.
+  * spec asserts.
   *
   * Why this shape scales:
   *

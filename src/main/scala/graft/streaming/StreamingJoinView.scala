@@ -214,23 +214,12 @@ object StreamingJoinView {
     * the fenced state advances AND releases the caches (the returned
     * increment stays valid afterwards; consumers re-derive it from
     * retained pre-epoch state versions).
-    */
-  def materializerSignedStaged(spark: SparkSession, root: String,
-      leftKeys: Seq[String], rightKeys: Seq[String],
-      leftSign: Option[String], rightSign: Option[String],
-      numBuckets: Int = DefaultBuckets, retain: Int = 2)(
-      leftBatch: DataFrame, rightBatch: DataFrame,
-      batchId: Long): (DataFrame, () => Unit) = {
-    val (inc, _, commit) = materializerSignedCascade(spark, root,
-      leftKeys, rightKeys, leftSign, rightSign, numBuckets, retain)(
-      leftBatch, rightBatch, batchId)
-    (inc, commit)
-  }
-
-  /** [[materializerSignedStaged]] with the two CASCADE handoffs that
-    * take the downstream stage's probe job off the chained pipeline's
-    * critical path (r10–r12 verdicts: the steady-epoch floor of every
-    * durable materialized view is this serial probe chain):
+    *
+    * Returns the increment, the downstream handoff (below) and the
+    * commit. The two CASCADE handoffs take the downstream stage's probe
+    * job off the chained pipeline's critical path (r10–r12 verdicts:
+    * the steady-epoch floor of every durable materialized view is this
+    * serial probe chain):
     *
     *   - `downstream = Some((keys, buckets))`: prepare runs ONE extra
     *     tiny aggregate over the increment — which also materializes

@@ -115,6 +115,25 @@ class ConfigSpec extends AnyFunSuite {
       Map("max.request.size" -> "1073741824", "linger.ms" -> "5"))
   }
 
+  test("kafka_properties: a value holding '=' (a JAAS config) is kept byte-for-byte") {
+    val jaas = "org.apache.kafka.common.security.scram.ScramLoginModule " +
+      "required username=\"u\" password=\"p=q\";"
+    val p = CdcParams.fromArgs(Array("-kafka_properties",
+      s"security.protocol=SASL_SSL,sasl.jaas.config=$jaas,linger.ms="))
+    assert(p.kafkaProperties == Map("security.protocol" -> "SASL_SSL",
+      "sasl.jaas.config" -> jaas, "linger.ms" -> ""))
+  }
+
+  test("kafka_properties: an item with no '=' or an empty key fails the config, naming it") {
+    Seq("linger.ms", "=5").foreach { item =>
+      val e = intercept[IllegalArgumentException](CdcParams.fromArgs(
+        Array("-kafka_properties", s"acks=all,$item")))
+      assert(e.getMessage.contains(s"'$item'"), e.getMessage)
+    }
+    assert(CdcParams.fromArgs(Array("-kafka_properties", "")).kafkaProperties
+      .isEmpty)
+  }
+
   test("mongo-app flags parse: copy_existing, collection_list, project_env") {
     val p = CdcParams.fromArgs(Array(
       "-copy_existing", "true", "-collection_list", "events.*",

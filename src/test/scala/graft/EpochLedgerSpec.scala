@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{DlqRouter, ExactlyOnce}
+import graft.operators.ExactlyOnce
 
 /** Executor-side state of the ledger specs (local mode = one JVM): a
   * broker's committed log, a producer census, and the torn-epoch fault.
@@ -75,8 +75,8 @@ class EpochLedgerSpec extends SparkSpec {
     spark.range(0, n, 1, parts).select(lit("t").as("topic"),
       col("id").cast("string").as("key"), lit(e).cast("string").as("value"))
 
-  test("the produce and DLQ ledgers stay at most 3 files over K epochs, " +
-      "and every replayed epoch is a no-op") {
+  test("the produce and foreachBatch ledgers stay at most 3 files over K " +
+      "epochs, and every replayed epoch is a no-op") {
     LedgerFaults.reset()
     val K = 8L
     val work = Files.createTempDirectory("graft_ledger_growth").toString
@@ -92,19 +92,18 @@ class EpochLedgerSpec extends SparkSpec {
     assert(LedgerFaults.committed.size == 24 * K, "a fenced epoch re-sent")
 
     import spark.implicits._
-    val (good, dlq, ledger) = (s"$work/good", s"$work/dlq", s"$work/dlq_ledger")
-    def payloads(e: Long) = Seq((e, s"""{"k": $e}"""), (e, """{"k": 1""")).toDF(
-      "id", "payload")
+    val (target, ledger) = (s"$work/target", s"$work/target_ledger")
+    def payloads(e: Long) = Seq((e, s"""{"k": $e}""")).toDF("id", "payload")
     (0L until K).foreach(e =>
-      DlqRouter.foreachBatchSplit(good, dlq, ledger)(payloads(e), e))
+      ExactlyOnce.foreachBatchExactlyOnce(target, ledger)(payloads(e), e))
     assert(ledgerFiles(ledger).size <= 3, ledgerFiles(ledger).sorted)
-    def ids(dir: String) = spark.read.parquet(dir).select("id").as[Long]
+    def ids = spark.read.parquet(target).select("id").as[Long]
       .collect().sorted.toSeq
-    val before = (ids(good), ids(dlq))
-    assert(before._1 == (0L until K))
+    val before = ids
+    assert(before == (0L until K))
     (0L until K).foreach(e =>
-      DlqRouter.foreachBatchSplit(good, dlq, ledger)(payloads(e + 100), e))
-    assert((ids(good), ids(dlq)) == before, "a replayed epoch rewrote output")
+      ExactlyOnce.foreachBatchExactlyOnce(target, ledger)(payloads(e + 100), e))
+    assert(ids == before, "a replayed epoch rewrote output")
   }
 
   test("executors write part markers through the session's Hadoop conf") {

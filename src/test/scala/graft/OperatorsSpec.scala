@@ -14,17 +14,6 @@ class OperatorsSpec extends SparkSpec {
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)
 
-  test("upsertByKey is idempotent under duplicated input") {
-    val clean = Seq(("k1", 1L, "a"), ("k2", 2L, "b"))
-      .toDF("partitionKey", "ts", "value")
-    val dup = clean.unionAll(clean).unionAll(
-      Seq(("k1", 0L, "stale")).toDF("partitionKey", "ts", "value"))
-    val out = ExactlyOnce.upsertByKey(dup, "partitionKey", "ts")
-      .orderBy("partitionKey")
-    assert(out.collect().map(r => (r.getString(0), r.getString(2))).toSeq ==
-      Seq(("k1", "a"), ("k2", "b")))
-  }
-
   test("writeFenced skips replayed epochs") {
     val ledger = Files.createTempDirectory("graft_ledger").toString
     var writes = 0

@@ -1,5 +1,9 @@
 package graft
 
+import scala.util.Try
+
+import org.apache.spark.sql.execution.QueryExecution
+
 /** Whole-surface plan audit: every declared query's physical plan is
   * screened for the two patterns that do not survive a 100× scale-up.
   *
@@ -48,6 +52,15 @@ class PlanSweepSpec extends SparkSpec {
     "rel_tpch_q22"        // crossJoin(broadcast(1-row average balance))
   )
 
+  /** Every declared query, by name, planned once per suite: each test
+    * reads its plan from the same QueryExecution. A query that fails to
+    * build keeps its failure.
+    */
+  private lazy val sweep: Seq[(String, Try[QueryExecution])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> Try(fn(spark, sf).queryExecution)
+    }
+
   test("every declared query ends in a global total order (the oracle " +
       "hash compares rows in returned order)") {
     import org.apache.spark.sql.catalyst.plans.logical._
@@ -66,10 +79,10 @@ class PlanSweepSpec extends SparkSpec {
       case p if p.maxRows.exists(_ <= 1) => true
       case _ => false
     }
-    val missing = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
+    val missing = sweep.flatMap {
+      case (name, qe) =>
         val ok =
-          try totalOrder(fn(spark, sf).queryExecution.optimizedPlan)
+          try totalOrder(qe.get.optimizedPlan)
           catch { case _: Throwable => false }
         if (ok) None else Some(name)
     }
@@ -80,9 +93,9 @@ class PlanSweepSpec extends SparkSpec {
   test("no declared query plans a CartesianProduct; BNLJ only where designed") {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     val sawBnlj = scala.collection.mutable.Set.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    sweep.foreach { case (name, qe) =>
       val plan =
-        try fn(spark, sf).queryExecution.executedPlan.toString
+        try qe.get.executedPlan.toString
         catch { case e: Throwable => s"PLANNING FAILED: $e" }
       if (plan.startsWith("PLANNING FAILED"))
         offenders += s"$name: $plan"
@@ -126,9 +139,9 @@ class PlanSweepSpec extends SparkSpec {
     // subtree from TreeNode.collect until execution
     def hasGlobalWindow(p: LogicalPlan): Boolean =
       p.collect { case w: LWindow if w.partitionSpec.isEmpty => w }.nonEmpty
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    sweep.foreach { case (name, qe) =>
       val global =
-        try hasGlobalWindow(fn(spark, sf).queryExecution.optimizedPlan)
+        try hasGlobalWindow(qe.get.optimizedPlan)
         catch { case _: Throwable => false }
       if (global) {
         sawGlobal += name

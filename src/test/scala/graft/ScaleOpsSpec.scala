@@ -2,34 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Salting
-
-/** Scale-pattern operators: salted joins/aggregations equivalence, and
-  * bucketed tables for co-located (shuffle-free) joins.
+/** Scale-pattern operators: bloom-filter probe pruning, and bucketed
+  * tables for co-located (shuffle-free) joins.
   */
 class ScaleOpsSpec extends SparkSpec {
-
-  test("salted join returns exactly the plain join's rows") {
-    val o = queries.Tables.orders(spark, sf)
-    val c = queries.Tables.customer(spark, sf)
-    val plain = o.join(c, o("o_custkey") === c("c_custkey"))
-      .select(col("o_orderkey"), col("c_name"))
-    val salted = Salting.saltedJoin(o, c,
-        o("o_custkey"), c("c_custkey"), o("o_orderkey"), n = 8)
-      .select(col("o_orderkey"), col("c_name"))
-    assert(salted.exceptAll(plain).count() == 0)
-    assert(plain.exceptAll(salted).count() == 0)
-  }
-
-  test("salted aggregation equals plain groupBy count") {
-    val o = queries.Tables.orders(spark, sf)
-    val plain = o.groupBy(col("o_custkey").as("__k"))
-      .agg(count(lit(1)).as("n"))
-    val salted = Salting.saltedCount(o, col("o_custkey"),
-      col("o_orderkey"), n = 8)
-    assert(salted.exceptAll(plain).count() == 0)
-    assert(plain.exceptAll(salted).count() == 0)
-  }
 
   test("bloom probe prunes the fact side below the exchange; result equals the plain join") {
     import graft.functions.BloomOps

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
 
 import java.sql.Timestamp
 
@@ -196,314 +195,6 @@ class StreamingOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming sharded Misra-Gries: state accumulates across " +
-      "micro-batches, merged sketch nominates every over-threshold item") {
-    import graft.streaming.StreamingHeavyHitters
-    val k = 10
-    val shards = 4
-    // deterministic skewed stream: 3 hot words + 2000 singletons,
-    // interleaved by a fixed permutation (no RNG — replay-stable)
-    val hot = Seq.fill(500)("alpha") ++ Seq.fill(300)("beta") ++
-      Seq.fill(200)("gamma")
-    val cold = (0 until 2000).map(i => s"w$i")
-    val all = (hot ++ cold).toVector
-    val stream = (all.indices).map(i => all((i * 2477) % all.size))
-    assert(stream.sorted == all.sorted) // 2477 coprime to 3000: permutation
-
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[String]
-    val q = StreamingHeavyHitters.sketch(in.toDS(), shards, k)
-      .writeStream.format("memory").queryName("shh_out")
-      .outputMode("update").start()
-    try {
-      stream.grouped(1000).foreach { chunk =>
-        in.addData(chunk: _*); q.processAllAvailable()
-      }
-      // latest summary per shard = the row with max n (n is monotone)
-      val rows = spark.table("shh_out")
-        .as[StreamingHeavyHitters.ShardSummary].collect()
-      val latest = rows.groupBy(_.shard).values.map(_.maxBy(_.n)).toSeq
-      assert(latest.forall(_.counts.size <= k), "shard state exceeded k")
-      assert(latest.map(_.n).sum == stream.size,
-        "every token ingested exactly once across shards")
-
-      val merged = StreamingHeavyHitters.mergeShards(latest, k)
-      val threshold = stream.size / (k + 1) // 3000/11 = 272
-      // alpha(500) and beta(300) exceed it; gamma(200) need not survive
-      assert(Seq("alpha", "beta").forall(merged.counts.contains),
-        s"over-threshold items missing from ${merged.counts.keySet}")
-      // counts are lower bounds with undercount <= n/(k+1)
-      val exact = Map("alpha" -> 500L, "beta" -> 300L)
-      exact.foreach { case (w, c) =>
-        val est = merged.counts(w)
-        assert(est <= c && c - est <= threshold,
-          s"$w: sketch=$est exact=$c threshold=$threshold")
-      }
-    } finally q.stop()
-  }
-
-  test("streaming KMV sketch is bit-equal to the batch rel_kmv_distinct " +
-      "estimate after replaying the same ids") {
-    import graft.streaming.StreamingKmv
-    // batch truth: the oracle-checked query over the fixture
-    val batch = SparkEntry.queries("rel_kmv_distinct")(spark, sf).head()
-    val (bK, bKth, bEst) = (batch.getAs[Long]("k"),
-      batch.getAs[Long]("kth_hash"), batch.getAs[Double]("est_distinct"))
-
-    val ids = graft.queries.Tables.lineitem(spark, sf)
-      .select(col("l_orderkey")).as[Long].collect().toSeq
-
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[Long]
-    val q = StreamingKmv.sketch(in.toDS(), shards = 4, k = 256,
-        hashSeed = 123456789L)
-      .writeStream.format("memory").queryName("skmv_out")
-      .outputMode("update").start()
-    try {
-      ids.grouped((ids.size + 2) / 3).foreach { chunk =>
-        in.addData(chunk: _*); q.processAllAvailable()
-      }
-      val latest = spark.table("skmv_out")
-        .as[StreamingKmv.ShardMins].collect()
-        .groupBy(_.shard).values.map(_.maxBy(_.n)).toSeq
-      assert(latest.map(_.n).sum == ids.size)
-      val (sK, sKth, sEst) = StreamingKmv.mergedEstimate(latest, 256)
-      // same hash family + same ids ⇒ the same k minima, bit-for-bit
-      assert(sK == bK, s"stream k=$sK batch k=$bK")
-      assert(sKth == bKth, s"stream kth=$sKth batch kth=$bKth")
-      assert(sEst == bEst, s"stream est=$sEst batch est=$bEst")
-    } finally q.stop()
-  }
-
-  test("KMV merged estimate: empty and under-filled sketches return exact " +
-      "counts instead of crashing or extrapolating") {
-    import graft.streaming.StreamingKmv
-    import graft.streaming.StreamingKmv.ShardMins
-    // nothing ingested: no NoSuchElementException on `last`
-    assert(StreamingKmv.mergedEstimate(Nil, 256) == ((0L, 0L, 0.0)))
-    assert(StreamingKmv.mergedEstimate(
-      Seq(ShardMins(0, Vector.empty, 0L)), 256) == ((0L, 0L, 0.0)))
-    // 3 distinct hashes < k: the sketch holds every hash, count is exact —
-    // and hash 0 among the minima must not produce an Infinity estimate
-    val s = Seq(ShardMins(0, Vector(0L, 5L), 2L), ShardMins(1, Vector(9L), 1L))
-    assert(StreamingKmv.mergedEstimate(s, 256) == ((3L, 9L, 3.0)))
-  }
-
-  test("KMV shard state survives a checkpoint restart: merged estimate " +
-      "still bit-equal to batch after resuming from the checkpoint") {
-    import java.nio.file.Files
-    import graft.streaming.StreamingKmv
-    import graft.streaming.StreamingKmv.ShardMins
-    val work = Files.createTempDirectory("graft_skmv").toString
-    val inDir = s"$work/in"; val ckpt = s"$work/ckpt"; val outDir = s"$work/out"
-    new java.io.File(inDir).mkdirs()
-
-    val batch = SparkEntry.queries("rel_kmv_distinct")(spark, sf).head()
-    val (bK, bKth) = (batch.getAs[Long]("k"), batch.getAs[Long]("kth_hash"))
-    val ids = graft.queries.Tables.lineitem(spark, sf)
-      .select(col("l_orderkey")).as[Long].collect().toSeq
-    val (half1, half2) = ids.splitAt(ids.size / 2)
-
-    // memory sinks can't recover; use foreachBatch into epoch dirs (the
-    // recoverable shape a real deployment uses)
-    def startQuery() = {
-      val in = spark.readStream.schema("id LONG")
-        .option("recursiveFileLookup", "true").parquet(inDir)
-        .select(col("id")).as[Long]
-      StreamingKmv.sketch(in, shards = 4, k = 256, hashSeed = 123456789L)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[ShardMins], id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/epoch=$id")
-        }
-        .start()
-    }
-
-    half1.toDF("id").write.mode("overwrite").parquet(s"$inDir/f1")
-    val q1 = startQuery()
-    try q1.processAllAvailable() finally q1.stop()
-
-    // fresh query from the same checkpoint: the shard minima from the
-    // first half must be RECOVERED, not rebuilt — otherwise the merged
-    // sketch would only reflect the second half and the kth hash drifts
-    half2.toDF("id").write.mode("overwrite").parquet(s"$inDir/f2")
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
-
-    val latest = spark.read.option("recursiveFileLookup", "true")
-      .parquet(outDir).select(col("shard"), col("mins"), col("n"))
-      .as[ShardMins].collect()
-      .groupBy(_.shard).values.map(_.maxBy(_.n)).toSeq
-    assert(latest.map(_.n).sum == ids.size,
-      "every id ingested exactly once across both runs")
-    val (sK, sKth, _) = StreamingKmv.mergedEstimate(latest, 256)
-    assert(sK == bK && sKth == bKth,
-      s"post-restart sketch (k=$sK, kth=$sKth) != batch (k=$bK, kth=$bKth)")
-  }
-
-  test("online sequence packing equals batch pack_sequences row-for-row " +
-      "on the ordered fixture replay") {
-    import graft.streaming.StreamingPacker
-    import graft.streaming.StreamingPacker.{DocIn, PackedDoc}
-    import graft.queries.CurationQueries.PackCtxLen
-    val batch = SparkEntry.queries("pack_sequences")(spark, sf)
-      .collect().map(_.toString).sorted.toSeq
-
-    // ordered dataloader feed: ascending doc_id across micro-batches
-    val docs = graft.queries.Tables.documents(spark, sf)
-      .select(col("lang"), col("doc_id"),
-        size(split(trim(col("text")), " ")).cast("long").as("n_tokens"))
-      .orderBy(col("doc_id"))
-      .as[DocIn].collect().toSeq
-
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[DocIn]
-    val q = StreamingPacker.pack(in.toDS(), PackCtxLen.toLong)
-      .writeStream.format("memory").queryName("pack_stream")
-      .outputMode("append").start()
-    try {
-      docs.grouped((docs.size + 2) / 3).foreach { chunk =>
-        in.addData(chunk: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("pack_stream").as[PackedDoc].collect()
-        .map(p => s"[${p.lang},${p.doc_id},${p.n_tokens},${p.bin},${p.bin_offset}]")
-        .sorted.toSeq
-      assert(streamed == batch,
-        s"stream packed ${streamed.size} docs, batch has ${batch.size}")
-    } finally q.stop()
-  }
-
-  test("streaming window dedup converges to batch evt_window_dedup under " +
-      "REVERSED arrival order (where dropDuplicates would diverge)") {
-    import graft.streaming.StreamingWindowDedup
-    import graft.streaming.StreamingWindowDedup.{EventRow, WindowFirst}
-    // batch truth: first event per (user, type, minute) by (ts, event_id)
-    val batch = SparkEntry.queries("evt_window_dedup")(spark, sf)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("minute"))
-      .collect().map(_.toString).sorted.toSeq
-
-    // replay in strictly DESCENDING event time: every window's chosen
-    // event arrives LAST — an arrival-order dedup would keep the
-    // latest event instead; keyed min-state must still converge
-    val rows = graft.queries.Tables.events(spark, sf)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        unix_timestamp(col("ts")).as("sec"))
-      .orderBy(col("sec").desc, col("event_id").desc)
-      .as[EventRow].collect().toSeq
-
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[EventRow]
-    val q = StreamingWindowDedup.firstPerWindow(in.toDS())
-      .writeStream.format("memory").queryName("wdedup_out")
-      .outputMode("update").start()
-    try {
-      rows.grouped((rows.size + 2) / 3).foreach { chunk =>
-        in.addData(chunk: _*); q.processAllAvailable()
-      }
-      // final state per key: the LAST update emitted for that key wins;
-      // the min is monotone, so it's the row with the smallest (sec,
-      // event_id) ever emitted for the key
-      val finals = spark.table("wdedup_out").as[WindowFirst].collect()
-        .groupBy(w => (w.user_id, w.event_type, w.minute)).values
-        .map(_.minBy(w => (w.sec, w.event_id))).toSeq
-      val streamed = finals
-        .map(w => s"[${w.event_id},${w.user_id},${w.event_type},${w.minute}]")
-        .sorted.toSeq
-      assert(streamed == batch,
-        s"stream chose ${streamed.size} windows, batch has ${batch.size}")
-    } finally q.stop()
-  }
-
-  test("streaming window dedup state EXPIRES once the watermark passes the " +
-      "window end, and a post-expiry late arrival cannot reopen the window") {
-    import graft.streaming.StreamingWindowDedup
-    import graft.streaming.StreamingWindowDedup.{EventRow, WindowFirst}
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[EventRow]
-    val q = StreamingWindowDedup.firstPerWindow(in.toDS(), latenessSec = 60L)
-      .writeStream.format("memory").queryName("wdedup_ttl")
-      .outputMode("update").start()
-    // (live state rows after the last batch, cumulative removed rows)
-    def stateRows: (Long, Long) = {
-      val ops = q.recentProgress.toSeq.flatMap(p =>
-        Option(p.stateOperators).toSeq.flatten)
-      (ops.lastOption.map(_.numRowsTotal).getOrElse(0L),
-        ops.map(_.numRowsRemoved).sum)
-    }
-    try {
-      // two minute-0 windows: (1, a, 0) and (2, b, 0)
-      in.addData(EventRow(1, 1, "a", 10), EventRow(2, 1, "a", 5),
-        EventRow(3, 2, "b", 20))
-      q.processAllAvailable()
-      assert(stateRows._1 == 2, s"expected 2 live windows, got $stateRows")
-      // push event time far past minute 0's end (60 s) + the 60 s
-      // lateness: watermark reaches 630-60 = 570 s ≫ 60 s, so both
-      // minute-0 timeouts fire in the following batches
-      in.addData(EventRow(9, 9, "z", 630)); q.processAllAvailable()
-      in.addData(EventRow(10, 9, "z", 660)); q.processAllAvailable()
-      in.addData(EventRow(12, 9, "z", 700)); q.processAllAvailable()
-      val (live, removed) = stateRows
-      assert(removed >= 2,
-        s"minute-0 state must have been dropped by the timeout, removed=$removed")
-      // still live: exactly the in-horizon windows (9,z,minute 10) and
-      // (9,z,minute 11) — watermark 640 s has not passed 660 s
-      assert(live == 2, s"expected only in-horizon windows live, got $live")
-      val minute0Before = spark.table("wdedup_ttl").as[WindowFirst]
-        .collect().count(_.minute == 0L)
-      // a late event for the EXPIRED minute-0 window: event time 15 s is
-      // far below the watermark, so the operator's late-row filter drops
-      // it — the window does not reopen with a divergent representative
-      in.addData(EventRow(11, 1, "a", 15)); q.processAllAvailable()
-      val minute0After = spark.table("wdedup_ttl").as[WindowFirst]
-        .collect().count(_.minute == 0L)
-      assert(minute0After == minute0Before,
-        "expired window must not re-open on late data")
-      assert(stateRows._1 == 2, "late row must not recreate expired state")
-    } finally q.stop()
-  }
-
-  test("streaming incremental decontaminate matches batch txt_decontaminate " +
-      "row-for-row after replaying the training split in micro-batches") {
-    import graft.streaming.StreamingDecontaminate
-    import graft.queries.QueryDef
-    // batch truth: per training doc, distinct grams shared with the eval split
-    val batchTruth = SparkEntry.queries("txt_decontaminate")(spark, sf)
-      .collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_shared_grams")))
-      .sorted.toSeq
-
-    // the standing benchmark index, built once and reused every epoch
-    val idx = StreamingDecontaminate.evalIndex(spark, sf).cache()
-    val train = graft.queries.Tables.documents(spark, sf)
-      .filter(QueryDef.uhash(concat(lit("doc_"), col("doc_id"))) % 20 =!= 1)
-      .select(col("doc_id"), col("lang"), col("text"))
-      .orderBy(col("doc_id"))
-      .as[(Long, String, String)].collect().toSeq
-
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[(Long, String, String)]
-    val acc = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val q = in.toDS().toDF("doc_id", "lang", "text")
-      .writeStream.outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        StreamingDecontaminate.contamination(b.toDF(), idx).collect()
-          .foreach(r => acc.add((r.getAs[Long]("doc_id"),
-            r.getAs[Long]("n_shared_grams"))))
-        ()
-      }.start()
-    try {
-      train.grouped((train.size + 2) / 3).foreach { chunk =>
-        in.addData(chunk: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-
-    val streamed = acc.toArray.map(_.asInstanceOf[(Long, Long)]).sorted.toSeq
-    assert(streamed == batchTruth,
-      s"stream scrubbed ${streamed.size} contaminated docs, " +
-        s"batch found ${batchTruth.size}")
-  }
-
   test("streaming incremental dup-spans matches batch txt_dup_spans_prefix " +
       "bit-for-bit after a doc_id-ordered micro-batch replay") {
     import graft.streaming.StreamingDupSpans
@@ -606,45 +297,6 @@ class StreamingOpsSpec extends SparkSpec {
         .groupBy(col("k")).agg(max(col("n")).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(last == Map("a" -> 3L, "b" -> 1L))
-    } finally q.stop()
-  }
-
-  test("DLQ split-writer: good path and quarantine, both epoch-fenced") {
-    import java.nio.file.Files
-    import graft.operators.DlqRouter
-    implicit val sc = spark.sqlContext
-    val work = Files.createTempDirectory("graft_dlq").toString
-    val (good, dlq, ledger) = (s"$work/good", s"$work/dlq", s"$work/ledger")
-
-    val in = MemoryStream[(Long, String)]
-    val q = in.toDF().toDF("id", "payload").writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch(DlqRouter.foreachBatchSplit(good, dlq, ledger) _)
-      .start()
-    try {
-      in.addData(
-        (1L, """{"k": 7}"""),          // ok
-        (2L, """{"k": 8"""),           // malformed (truncated)
-        (3L, """{"x": 9}"""),          // missing_key
-        (4L, """{"k": 10}"""))         // ok
-      q.processAllAvailable()
-
-      val goodRows = spark.read.parquet(good)
-        .collect().map(_.getLong(0)).sorted.toSeq
-      assert(goodRows == Seq(1L, 4L), goodRows.mkString(","))
-
-      val dlqRows = spark.read.parquet(dlq)
-        .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-      assert(dlqRows == Map(2L -> "malformed", 3L -> "missing_key"), dlqRows)
-
-      // the epoch is fenced: re-running the same batch body is a no-op
-      val batch0 = spark.read.parquet(good).sparkSession
-        .createDataFrame(Seq((9L, """{"k": 1}"""))).toDF("id", "payload")
-      DlqRouter.foreachBatchSplit(good, dlq, ledger)(batch0, 0L)
-      assert(spark.read.parquet(good)
-        .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 4L),
-        "replayed epoch 0 must be fenced")
     } finally q.stop()
   }
 
