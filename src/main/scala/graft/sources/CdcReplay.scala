@@ -140,13 +140,20 @@ object CdcReplay {
       Map("ignoreNullFields" -> "false")).as("value"))
 
   /** Batch replay: events parquet at `sfDir` → Debezium JSON lines.
-    * Rebalanced before the (CPU-heavy) envelope JSON construction —
-    * mirroring the reference's post-source `rebalance`
-    * (MySQLCDC2AWSMSK.scala:95).
+    * A scan planned into fewer than `defaultParallelism` partitions (a
+    * single-row-group file) is rebalanced before the (CPU-heavy)
+    * envelope JSON construction — mirroring the reference's post-source
+    * `rebalance` (MySQLCDC2AWSMSK.scala:95). A wider scan already keeps
+    * every core busy, so it goes straight on: there the round robin
+    * only costs a shuffle of the raw rows. The scan's plan has no
+    * exchange, so reading its partition count runs no job.
     */
-  def batch(spark: SparkSession, sfDir: String): DataFrame =
-    envelopeJson(envelope(graft.queries.Tables.rebalance(
-      graft.queries.Tables.events(spark, sfDir))))
+  def batch(spark: SparkSession, sfDir: String): DataFrame = {
+    val events = graft.queries.Tables.events(spark, sfDir)
+    val wide = events.queryExecution.toRdd.getNumPartitions >=
+      spark.sparkContext.defaultParallelism
+    envelopeJson(envelope(if (wide) events else graft.queries.Tables.rebalance(events)))
+  }
 
   /** events rows → Mongo change-stream envelope JSON (ns.db/ns.coll,
     * operationType, documentKey — reference MongoCDC2AWSMSK.scala:95-96),

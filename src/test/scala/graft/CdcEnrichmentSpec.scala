@@ -99,6 +99,21 @@ class CdcEnrichmentSpec extends SparkSpec {
     assert(out.length == 1)
   }
 
+  test("trailing content after the envelope drops the record") {
+    val cfg = """[{"db":"test_db","table":"product_01","primary_key":"pid"}]"""
+    val out = enrich(Seq(golden + " xyz ]", golden + """{"op":"d"}""", golden + " "), cfg)
+    // only the trailing whitespace, which is no token, is accepted
+    assert(out.length == 1)
+    assert(out.head.value == golden)
+  }
+
+  test("mongo: trailing content after the change event drops the record") {
+    val event =
+      """{"_id":"x","operationType":"insert","ns":{"db":"d","coll":"c"},"documentKey":"{\"_id\": 42}"}"""
+    val out = CdcEnrichment.enrichMongo(Seq(event, event + " xyz ]").toDS()).collect()
+    assert(out.map(_.value).toSeq == Seq(event))
+  }
+
   test("schema drift: unknown columns pass through untouched (schemaless, SURVEY §1.5)") {
     // a column added upstream mid-stream must survive enrichment — the
     // reference is schemaless (no registry, schema changes suppressed),
