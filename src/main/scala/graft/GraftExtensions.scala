@@ -19,14 +19,8 @@ import graft.functions.{ArrayDot, ClampedShingleHashes, JavaStringHash,
   * participates in whole-stage codegen like any built-in.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftFunctions.javaStringHashDescriptor)
-    e.injectFunction(GraftFunctions.wordGramHashesDescriptor)
-    e.injectFunction(GraftFunctions.arrayDotDescriptor)
-    e.injectFunction(GraftFunctions.clampedShingleHashesDescriptor)
-    e.injectFunction(GraftFunctions.minhashBandsDescriptor)
-    e.injectFunction(GraftFunctions.wordGramStringsDescriptor)
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.descriptors.foreach(e.injectFunction)
 }
 
 object GraftFunctions {
@@ -40,66 +34,40 @@ object GraftFunctions {
       s"$name must be an integer literal, got $other")
   }
 
-  private[graft] val javaStringHashDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("java_string_hash"),
-    new ExpressionInfo(classOf[JavaStringHash].getName, "java_string_hash"),
-    (children: Seq[Expression]) => JavaStringHash(children.head))
-
-  private[graft] val wordGramHashesDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("word_gram_hashes"),
-    new ExpressionInfo(classOf[WordGramHashes].getName, "word_gram_hashes"),
-    (children: Seq[Expression]) =>
-      WordGramHashes(children(0), children(1), children(2)))
-
-  private[graft] val arrayDotDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("array_dot"),
-    new ExpressionInfo(classOf[ArrayDot].getName, "array_dot"),
-    (children: Seq[Expression]) => ArrayDot(children(0), children(1)))
-
-  private[graft] val clampedShingleHashesDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("clamped_shingle_hashes"),
-    new ExpressionInfo(
-      classOf[ClampedShingleHashes].getName, "clamped_shingle_hashes"),
-    (children: Seq[Expression]) =>
-      ClampedShingleHashes(children(0), children(1)))
-
-  private[graft] val minhashBandsDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash_bands"),
-    new ExpressionInfo(classOf[MinHashBands].getName, "minhash_bands"),
-    (children: Seq[Expression]) => MinHashBands(children(0),
-      intLit(children(1), "numHashes"), intLit(children(2), "bandSize")))
-
-  private[graft] val wordGramStringsDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("word_gram_strings"),
-    new ExpressionInfo(classOf[WordGramStrings].getName, "word_gram_strings"),
-    (children: Seq[Expression]) =>
-      WordGramStrings(children(0), children(1), children(2)))
+  /** Every graft SQL function, the one list both registration paths
+    * iterate.
+    */
+  private[graft] val descriptors: Seq[(FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression)] = Seq(
+    (FunctionIdentifier("java_string_hash"),
+      new ExpressionInfo(classOf[JavaStringHash].getName, "java_string_hash"),
+      (children: Seq[Expression]) => JavaStringHash(children.head)),
+    (FunctionIdentifier("word_gram_hashes"),
+      new ExpressionInfo(classOf[WordGramHashes].getName, "word_gram_hashes"),
+      (children: Seq[Expression]) =>
+        WordGramHashes(children(0), children(1), children(2))),
+    (FunctionIdentifier("array_dot"),
+      new ExpressionInfo(classOf[ArrayDot].getName, "array_dot"),
+      (children: Seq[Expression]) => ArrayDot(children(0), children(1))),
+    (FunctionIdentifier("clamped_shingle_hashes"),
+      new ExpressionInfo(
+        classOf[ClampedShingleHashes].getName, "clamped_shingle_hashes"),
+      (children: Seq[Expression]) =>
+        ClampedShingleHashes(children(0), children(1))),
+    (FunctionIdentifier("minhash_bands"),
+      new ExpressionInfo(classOf[MinHashBands].getName, "minhash_bands"),
+      (children: Seq[Expression]) => MinHashBands(children(0),
+        intLit(children(1), "numHashes"), intLit(children(2), "bandSize"))),
+    (FunctionIdentifier("word_gram_strings"),
+      new ExpressionInfo(classOf[WordGramStrings].getName, "word_gram_strings"),
+      (children: Seq[Expression]) =>
+        WordGramStrings(children(0), children(1), children(2))))
 
   /** Register graft functions on a live session. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "java_string_hash", exprs => JavaStringHash(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "word_gram_hashes",
-      exprs => WordGramHashes(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "array_dot", exprs => ArrayDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "clamped_shingle_hashes",
-      exprs => ClampedShingleHashes(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_bands",
-      exprs => MinHashBands(exprs(0), intLit(exprs(1), "numHashes"),
-        intLit(exprs(2), "bandSize")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "word_gram_strings",
-      exprs => WordGramStrings(exprs(0), exprs(1), exprs(2)), "built-in")
+    descriptors.foreach { case (id, info, builder) =>
+      reg.registerFunction(id, info, builder)
+    }
   }
 }

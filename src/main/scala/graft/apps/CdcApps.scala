@@ -222,9 +222,9 @@ object ReplayCdcExactlyOnceLocal {
 object ReplayCdcApplyLocal {
   def main(args: Array[String]): Unit = {
     // apply-side knobs flow from the CLI (verdict r7 item 6): the demo
-    // defaults retain to 4 so replicaAsOf time travel is exercised at
-    // depth > 2 — a deployment sets its own horizon/retention without
-    // touching code
+    // defaults retain to 4 so replicaVersionedAsOf time travel is
+    // exercised at depth > 2 — a deployment sets its own
+    // horizon/retention without touching code
     val params = CdcParams.fromArgs(args) match {
       case p if !args.map(_.stripPrefix("-")).contains("replica_retain") =>
         p.copy(replicaRetain = 4)
@@ -284,7 +284,7 @@ object ReplayCdcApplyLocal {
       .foreach { e =>
         val n = CdcApply.replicaVersionedAsOf(spark, replicaDir, e,
           params.replicaRetain).count()
-        println(s"[apply-demo] replicaAsOf epoch=$e live_keys=$n")
+        println(s"[apply-demo] replicaVersionedAsOf epoch=$e live_keys=$n")
       }
     StreamingSchemaDrift.census(spark, censusDir).show(false)
     spark.stop()

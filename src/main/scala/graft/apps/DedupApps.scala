@@ -9,9 +9,10 @@ import graft.Sessions
   * into a hash-sharded parquet LSH index under the bucketed epoch
   * ledger, then a SECOND stream — the "next day's job" — reopens the
   * same state directory and keeps ingesting, proving the index
-  * outlives the stream that built it (the property the in-memory
-  * state-store twin cannot offer). Prints index size, per-epoch
-  * duplicate events, and the cross-job dup hits at the end.
+  * outlives the stream that built it (the property a Spark state-store
+  * operator, which dies with its checkpoint, cannot offer). Prints
+  * index size, per-epoch duplicate events, and the cross-job dup hits
+  * at the end.
   */
 object StreamDedupIndexLocal {
   def main(args: Array[String]): Unit = {

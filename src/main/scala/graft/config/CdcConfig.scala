@@ -170,8 +170,9 @@ final case class CdcParams(
     checkpointDir: String = "",
     checkpointInterval: Int = 60,
     // reference default (MySQLCDC2AWSMSK.scala:187): exactly_once unless
-    // the flag is the literal "at_least_once". Only CdcPipeline.sink reads
-    // it; the cluster apps do not yet honour it (they always use kafkaSink)
+    // the flag is the literal "at_least_once". No main code reads it yet:
+    // the cluster apps always use kafkaSink until a transactional
+    // KafkaProducer routes them through CdcPipeline.transactionalSink
     deliveryGuarantee: String = "exactly_once",
     parallel: Int = 4,
     disableChaining: Boolean = false,
@@ -197,7 +198,7 @@ final case class CdcParams(
     // set them without code:
     //   replica_buckets       hash buckets of the persisted replica
     //   replica_retain        versions kept per bucket (>= 2; depth of
-    //                         replicaAsOf time travel)
+    //                         replicaVersionedAsOf time travel)
     //   tombstone_horizon_ms  lazy delete-tombstone GC horizon
     //                         (event-time ms; unset = keep forever)
     replicaBuckets: Int = 16,

@@ -61,7 +61,7 @@ object CdcApply {
     * (drop / rename / invalidate — collection-level events with no
     * row image) FAILS LOUDLY rather than upserting garbage. The image
     * comes from `fullDocument` (post-image only — mongo never ships a
-    * before-image, which is why the lookup changelog exists); a
+    * before-image, so the apply keys on the last post-image); a
     * NON-delete change carrying no `fullDocument` (the change-stream
     * default for updates unless `fullDocument=updateLookup` is set)
     * also fails loudly — silently upserting a null image would corrupt
@@ -82,8 +82,8 @@ object CdcApply {
     * run injecting pseudo-order) and finally the raw envelope string
     * break remaining ties so two changes to one key in the same
     * millisecond can never pick a nondeterministic winner. Same
-    * output shape as [[lastChangePerKey]], so every downstream
-    * (applyChanges, lookup deltas) is envelope-agnostic.
+    * output shape as [[lastChangePerKey]], so [[applyChanges]] is
+    * envelope-agnostic.
     */
   def lastChangePerKeyMongo(batch: DataFrame): DataFrame = {
     val env = batch.withColumn("env",
@@ -205,11 +205,10 @@ object CdcApply {
         org.apache.spark.sql.types.StructField("deleted",
           org.apache.spark.sql.types.BooleanType, nullable = false)))
 
-  /** The empty replica frame (schema derived from `batch`'s shape). */
-  def emptyReplica(spark: SparkSession, batch: DataFrame): DataFrame =
+  /** The empty replica frame. */
+  def emptyReplica(spark: SparkSession): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      lastChangePerKey(batch.limit(0)).drop("op").schema)
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], replicaSchema)
 
   /** How many hash buckets the persisted replica is split across. Small
     * here (tests); a 100 TB replica would use thousands — per-epoch
@@ -230,73 +229,29 @@ object CdcApply {
     */
   def materializer(spark: SparkSession, stateDir: String,
       numBuckets: Int = DefaultBuckets, retain: Int = 2)(
-      batch: DataFrame, batchId: Long): Unit = {
-    ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, batch,
-      "partitionKey", numBuckets, retain)(
-      emptyReplica(spark, batch))(current => applyBatch(current, batch))
-    ()
-  }
-
-  /** [[materializer]] that ALSO produces a lookup changelog: before
-    * applying the batch it derives signed retraction deltas from the
-    * replica's pre-epoch state ([[CdcDeltas.lookupDeltas]] — the
-    * changelog producer for feeds with no before-images, e.g. the
-    * Mongo `fullDocument` shape), applies, then hands the deltas to
-    * `downstream` (a signed rollup / join-view materializer, which
-    * fences its own epoch). Crash anywhere and the replay derives the
-    * IDENTICAL deltas: the lookup reads strictly-pre-epoch bucket
-    * versions, which the retirement grace keeps alive exactly until
-    * the next epoch commits — the foreachBatch replay window.
-    */
-  def materializerWithChangelog(spark: SparkSession, stateDir: String,
-      numBuckets: Int = DefaultBuckets, retain: Int = 2)(
-      downstream: (DataFrame, Long) => Unit)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val deltas = CdcDeltas.lookupDeltas(spark, stateDir, batch, batchId,
-      numBuckets, retain)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // materialize the deltas BEFORE handing them on: the downstream
-      // signed materializer evaluates its input several times, and
-      // without the pin each evaluation would re-derive the
-      // last-change-per-key window and re-read the pre-epoch buckets
-      deltas.count()
-      materializer(spark, stateDir, numBuckets, retain)(batch, batchId)
-      downstream(deltas, batchId)
-    } finally deltas.unpersist()
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    advance(spark, stateDir, numBuckets, retain, batch, batchId)(
+      lastChangePerKey)
 
   /** [[materializer]] for MONGO change-stream batches (op from
     * `operationType`, image from `fullDocument`).
     */
   def materializerMongo(spark: SparkSession, stateDir: String,
       numBuckets: Int = DefaultBuckets, retain: Int = 2)(
-      batch: DataFrame, batchId: Long): Unit = {
-    ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, batch,
-      "partitionKey", numBuckets, retain)(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        lastChangePerKeyMongo(batch.limit(0)).drop("op").schema))(
-      current => applyChanges(current, lastChangePerKeyMongo(batch)))
-    ()
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    advance(spark, stateDir, numBuckets, retain, batch, batchId)(
+      lastChangePerKeyMongo)
 
-  /** [[materializerWithChangelog]] for MONGO feeds — the shape the
-    * lookup producer exists for (`fullDocument` only, never a
-    * before-image, reference `MongoCDC2AWSMSK.scala:95-96`).
+  /** The fenced bucketed apply both materializers run; `lastChange`
+    * reads the batch's envelope shape.
     */
-  def materializerWithChangelogMongo(spark: SparkSession,
-      stateDir: String, numBuckets: Int = DefaultBuckets,
-      retain: Int = 2)(downstream: (DataFrame, Long) => Unit)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val deltas = CdcDeltas.lookupDeltasMongo(spark, stateDir, batch,
-      batchId, numBuckets, retain)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      deltas.count() // pin — see materializerWithChangelog
-      materializerMongo(spark, stateDir, numBuckets, retain)(batch, batchId)
-      downstream(deltas, batchId)
-    } finally deltas.unpersist()
+  private def advance(spark: SparkSession, stateDir: String,
+      numBuckets: Int, retain: Int, batch: DataFrame, batchId: Long)(
+      lastChange: DataFrame => DataFrame): Unit = {
+    ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, batch,
+      "partitionKey", numBuckets, retain)(emptyReplica(spark))(
+      current => applyChanges(current, lastChange(batch)))
+    ()
   }
 
   /** Streaming materializer (out-of-order arm): same fenced bucketed
@@ -383,27 +338,16 @@ object CdcApply {
   def replica(spark: SparkSession, stateDir: String): DataFrame = {
     require(ExactlyOnce.hasCommittedState(spark, stateDir),
       s"no committed replica state under $stateDir")
-    ExactlyOnce.currentStateBucketed(spark, stateDir)(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], replicaSchema))
+    ExactlyOnce.currentStateBucketed(spark, stateDir)(emptyReplica(spark))
   }
 
-  /** TIME TRAVEL: the replica exactly as it stood when epoch `asOf`
-    * committed (a lake table's `VERSION AS OF` over the CDC apply —
-    * "what did the row set look like before yesterday's batch").
-    * Reachable depth is the `retain` the materializer ran with; pass
-    * the same value here (it disambiguates written-empty buckets from
-    * retired versions — see
+  /** TIME TRAVEL: the LIVE rows of a [[materializerVersioned]] state
+    * exactly as they stood when epoch `asOf` committed (a lake table's
+    * `VERSION AS OF` over the CDC apply), tombstones resolved then
+    * dropped. Reachable depth is the `retain` the materializer ran
+    * with; pass the same value here (it disambiguates written-empty
+    * buckets from retired versions — see
     * [[ExactlyOnce.currentStateBucketedAsOf]]).
-    */
-  def replicaAsOf(spark: SparkSession, stateDir: String, asOf: Long,
-      retain: Int = 2): DataFrame =
-    ExactlyOnce.currentStateBucketedAsOf(spark, stateDir, asOf, retain)(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], replicaSchema))
-
-  /** [[replicaAsOf]] for a [[materializerVersioned]] state: the LIVE
-    * rows as of `asOf` (tombstones resolved then dropped).
     */
   def replicaVersionedAsOf(spark: SparkSession, stateDir: String,
       asOf: Long, retain: Int = 2): DataFrame =

@@ -49,77 +49,4 @@ object CdcDeltas {
       .select(col("delta.image").as("image"),
         col("delta.sign").as("sign"), col("ts_ms"), col("pos"))
   }
-
-  /** LOOKUP changelog producer — retraction deltas for feeds that
-    * carry NO before-images (the MongoDB `fullDocument` shape,
-    * reference `MongoCDC2AWSMSK.scala:95-96`, where updates and
-    * deletes arrive without the pre-image): the retraction is derived
-    * by LOOKING UP the standing replica's pre-epoch row for each
-    * touched key — the mechanism lake engines call a lookup changelog
-    * producer. For each key's last change in the batch:
-    *
-    *   - replica held row R before this epoch → emit (−1, R);
-    *   - the change is not a delete → emit (+1, new after-image);
-    *
-    * so an update retracts what the REPLICA held (not what the
-    * envelope claims), a first insert emits only +1, and a delete of
-    * an absent key emits nothing. The lookup reads ONLY the buckets
-    * the batch touches ([[ExactlyOnce.stateBucketsBefore]]) and reads
-    * them AS OF strictly-before the epoch — identical on a torn-epoch
-    * replay whether or not the replica advance already committed,
-    * which is what lets the caller sequence lookup → apply → feed
-    * downstream without a cross-state transaction.
-    */
-  def lookupDeltas(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, batch: DataFrame, batchId: Long,
-      numBuckets: Int = CdcApply.DefaultBuckets,
-      retain: Int = 2): DataFrame =
-    lookupCore(spark, stateDir, CdcApply.lastChangePerKey(batch),
-      batchId, numBuckets, retain)
-
-  /** [[lookupDeltas]] for MONGO change-stream batches — the feed the
-    * lookup producer exists for (no before-images at all: see
-    * [[CdcApply.lastChangePerKeyMongo]]).
-    */
-  def lookupDeltasMongo(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, batch: DataFrame, batchId: Long,
-      numBuckets: Int = CdcApply.DefaultBuckets,
-      retain: Int = 2): DataFrame =
-    lookupCore(spark, stateDir, CdcApply.lastChangePerKeyMongo(batch),
-      batchId, numBuckets, retain)
-
-  /** Envelope-agnostic core: `changes` is any last-change-per-key
-    * frame in [[CdcApply.lastChangePerKey]]'s shape.
-    */
-  private def lookupCore(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, changesIn: DataFrame, batchId: Long,
-      numBuckets: Int, retain: Int): DataFrame = {
-    val changes = changesIn
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touched = changes
-        .select(ExactlyOnce.bucketOf("partitionKey", numBuckets).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
-      def emptyPre = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        changes.drop("op").schema)
-      val pre =
-        if (!ExactlyOnce.hasCommittedState(spark, stateDir) ||
-          touched.isEmpty) emptyPre
-        else ExactlyOnce.stateBucketsBefore(spark, stateDir, batchId,
-          touched, retain, expectedBuckets = Some(numBuckets))(emptyPre)
-      val retractions = pre.join(
-          changes.select(col("partitionKey")), Seq("partitionKey"))
-        .select(col("after").as("image"), lit(-1).as("sign"),
-          col("ts_ms"), col("pos"))
-      val insertions = changes.filter(col("op") =!= "d")
-        .select(col("after").as("image"), lit(1).as("sign"),
-          col("ts_ms"), col("pos"))
-      // lazy on purpose: the frame stays valid for the rest of the
-      // epoch (pre-epoch bucket versions survive until the NEXT epoch
-      // commits) — consume it within the epoch, like the join-view
-      // increment
-      retractions.unionByName(insertions)
-    } finally changes.unpersist()
-  }
 }

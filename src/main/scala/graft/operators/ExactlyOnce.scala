@@ -20,13 +20,11 @@ import org.apache.spark.sql.types.StructType
   *     `partitionKey`; a keyed consumer collapses duplicates. On the
   *     lake side that consumer is [[CdcApply]], whose last change per
   *     key makes a replayed batch a no-op. This is the default.
-  *  2. **Batch-id fencing** ([[foreachBatchExactlyOnce]]): `foreachBatch`
-  *     exposes a stable `batchId` per epoch; a committed-epoch ledger
-  *     makes the write idempotent — replayed batches are skipped. This
-  *     is exactly the two-phase-commit shape, with the ledger as the
-  *     commit marker.
-  *  3. **Transactional producer inside foreachBatch**
-  *     ([[foreachBatchTransactionalKafka]]): per-partition transactional
+  *  2. **Transactional producer inside foreachBatch**
+  *     ([[foreachBatchTransactionalKafka]]): `foreachBatch` exposes a
+  *     stable `batchId` per epoch, and a committed-epoch ledger makes
+  *     the write idempotent (the two-phase-commit shape, with the ledger
+  *     as the commit marker) around per-partition transactional
   *     producers behind the [[TxnProducer]] seam (the real deployment
   *     plugs in kafka-clients' `KafkaProducer` with
   *     `transactional.id = s"$group-$partitionId"`,
@@ -94,31 +92,17 @@ object ExactlyOnce {
     def resumeAndCommit(): Boolean
   }
 
-  /** Wrap a batch writer with an epoch ledger at `ledgerPath`. Replayed
-    * epochs are skipped — the micro-batch equivalent of Kafka's
-    * transaction commit marker — and sealing an epoch folds the markers
-    * below it, so the ledger stays O(1) files. Returns true when the
-    * batch was written, false when fenced.
-    */
-  def writeFenced(spark: SparkSession, ledgerPath: String, batchId: Long)(
-      write: () => Unit): Boolean = {
-    val ledger = Ledger.at(ledgerPath, spark.sparkContext.hadoopConfiguration)
-    // the marker lands AFTER the write
-    if (ledger.fenced(batchId)) false
-    else { write(); ledger.seal(batchId); true }
-  }
-
   private def stateFs(spark: SparkSession, dir: String) =
     FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
 
   /** The epoch ledger: the one place that decides how an epoch is
     * fenced, committed and folded, for every fenced writer and reader in
     * this object. A ledger is a directory of marker files — a state
-    * dir's `_ledger`, or the path a produce or lake writer is given.
+    * dir's `_ledger`, or the path the transactional produce is given.
     * Its vocabulary:
     *
-    *   - `epoch-N`: epoch N committed. Empty for the produce and lake
-    *     writers; a bucketed writer stores the epoch's touched-bucket
+    *   - `epoch-N`: epoch N committed. Empty for the produce; a
+    *     bucketed writer stores the epoch's touched-bucket
     *     list in it (the reader's bucket->epoch index);
     *   - `epoch-N.part-P`: partition P of epoch N committed its
     *     transaction (the transactional produce's per-partition fence);
@@ -227,8 +211,8 @@ object ExactlyOnce {
       }
     }
 
-    /** Commit epoch `batchId` of an unbucketed ledger (the produce and
-      * lake writers) and fold below it: its own part markers and any
+    /** Commit epoch `batchId` of an unbucketed ledger (the transactional
+      * produce) and fold below it: its own part markers and any
       * stale ones at or below it go, and the markers under it fold into
       * the `hwm`.
       */
@@ -1210,31 +1194,31 @@ object ExactlyOnce {
   def pinnedBucketCount(spark: SparkSession, stateDir: String): Option[Int] =
     Ledger.pinned(Ledger(spark, stateDir).names())
 
-  /** The live component dirs of an appended state up to epoch `upTo`,
-    * oldest first: the newest committed base (if any) + every
-    * committed, unretired delta after it — from one ledger listing.
+  /** The live component dirs of an appended state, oldest first: the
+    * newest committed base (if any) + every committed, unretired delta
+    * after it — from one ledger listing.
     */
-  private def appendedComponentDirs(spark: SparkSession, stateDir: String,
-      upTo: Long = Long.MaxValue): Seq[String] = {
+  private def appendedComponentDirs(spark: SparkSession,
+      stateDir: String): Seq[String] = {
     val fs = stateFs(spark, stateDir)
     val names = Ledger(spark, stateDir).names()
     val base = Ledger.compacts(names).maxOption
     (base.map(b => s"$stateDir/base-$b").toSeq ++
-      Ledger.epochs(names).filter(e => base.forall(_ < e) && e <= upTo)
+      Ledger.epochs(names).filter(e => base.forall(_ < e))
         .sorted.map(e => s"$stateDir/delta-$e"))
       .filter(d => fs.exists(new Path(d)))
   }
 
-  /** The union of the live components up to epoch `upTo` that hold
-    * data. A bucketed component whose epoch had an all-empty delta holds
-    * no partition dirs at all (only _SUCCESS) — committed, but nothing
-    * to read and no schema to infer: skip it. `empty` when nothing is
-    * left.
+  /** The standing appended state: newest committed base ∪ every
+    * committed delta after it, or `empty` before the first commit. A
+    * bucketed component whose epoch had an all-empty delta holds no
+    * partition dirs at all (only _SUCCESS) — committed, but nothing to
+    * read and no schema to infer: skip it.
     */
-  private def readAppended(spark: SparkSession, stateDir: String,
-      upTo: Long = Long.MaxValue)(empty: => DataFrame): DataFrame = {
+  def appendedState(spark: SparkSession, stateDir: String)(
+      empty: => DataFrame): DataFrame = {
     val fs = stateFs(spark, stateDir)
-    val parts = appendedComponentDirs(spark, stateDir, upTo).filter { d =>
+    val parts = appendedComponentDirs(spark, stateDir).filter { d =>
       fs.listStatus(new Path(d)).exists { s =>
         val n = s.getPath.getName
         n.startsWith("__bucket=") || n.startsWith("part-")
@@ -1243,46 +1227,9 @@ object ExactlyOnce {
     if (parts.isEmpty) empty else parts.reduce(_ unionByName _)
   }
 
-  /** The standing appended state: newest committed base ∪ every
-    * committed delta after it, or `empty` before the first commit.
-    */
-  def appendedState(spark: SparkSession, stateDir: String)(
-      empty: => DataFrame): DataFrame =
-    readAppended(spark, stateDir)(empty)
-
-  /** TIME TRAVEL over the append-only LSM: the standing state exactly
-    * as it stood when epoch `asOf` committed — the appended twin of
-    * [[currentStateBucketedAsOf]], so every durable graft state
-    * (replica, rollup, join view, LSH index, dup-spans gram index)
-    * answers "as of epoch N" the same way. Reconstruction = newest
-    * base at or below `asOf` plus every committed delta in between;
-    * depth is bounded by COMPACTION, not a retain count: compaction at
-    * epoch E folds all deltas ≤ E into `base-E` and retires them, so
-    * an `asOf` strictly below the newest base is no longer
-    * reconstructable and FAILS LOUDLY (compact less often — e.g. the
-    * dup-spans materializer's `compactEvery` — to keep deeper
-    * history). A committed delta whose directory is absent committed
-    * empty and contributes nothing.
-    */
-  def appendedStateAsOf(spark: SparkSession, stateDir: String,
-      asOf: Long)(empty: => DataFrame): DataFrame = {
-    val names = Ledger(spark, stateDir).names()
-    require(Ledger.fenced(names, asOf),
-      s"epoch $asOf never committed at $stateDir — as-of reads name a" +
-        " committed epoch")
-    Ledger.compacts(names).maxOption.filter(_ > asOf).foreach(b => sys.error(
-      s"appended state at $stateDir was compacted at epoch $b: every" +
-        s" delta at or below $b is folded into base-$b and retired," +
-        s" so the state as of epoch $asOf is no longer" +
-        " reconstructable — compact less often to keep deeper as-of" +
-        " history"))
-    readAppended(spark, stateDir, asOf)(empty)
-  }
-
-  /** The as-of-reachable committed epochs of an APPENDED state: the
-    * newest base (if any) and every committed delta after it — exactly
-    * the epochs [[appendedStateAsOf]] can reconstruct. Operational
-    * introspection (surfaced by `graft.StateReport`).
+  /** The committed epochs an APPENDED state's live components stand
+    * for: the newest base (if any) and every committed delta after it.
+    * Operational introspection (surfaced by `graft.StateReport`).
     */
   def appendedAsOfEpochs(spark: SparkSession, stateDir: String): Seq[Long] = {
     val names = Ledger(spark, stateDir).names()
@@ -1341,20 +1288,7 @@ object ExactlyOnce {
     }
   }
 
-  /** writeStream.foreachBatch body with fencing: idempotent parquet
-    * append target (each epoch writes its own subdirectory, so a
-    * replayed epoch is a no-op and a torn write is overwritten on
-    * replay — rename-based atomicity).
-    */
-  def foreachBatchExactlyOnce(targetDir: String, ledgerPath: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    writeFenced(spark, ledgerPath, batchId) { () =>
-      batch.write.mode("overwrite").parquet(s"$targetDir/epoch=$batchId")
-    }
-  }
-
-  /** Strategy 3: writeStream.foreachBatch body sending the full Kafka
+  /** Strategy 2: writeStream.foreachBatch body sending the full Kafka
     * writer shape (`key` binary, `value` binary, `topic` string,
     * optional `partition` int — exactly what [[KafkaProjection.project]]
     * emits) through per-partition transactional producers: each row

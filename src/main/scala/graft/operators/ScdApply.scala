@@ -93,79 +93,28 @@ object ScdApply {
     merged.unionByName(newRows)
   }
 
-  /** One OUT-OF-ORDER epoch: fold a batch of changes that may arrive
-    * in ANY order — a late change lands between existing versions, so
-    * the touched keys' histories are REBUILT (re-ranked over existing
-    * versions ∪ new changes), which is exact for every arrival order.
-    * Untouched keys pass through without recomputation, so the epoch
-    * cost is O(touched keys' history + batch), not O(history) — the
-    * late-data arm of the SCD2 MERGE (on a lake table: MERGE with a
-    * per-key delete+reinsert of the matched partitions). The ordered
-    * fast path ([[advance]]) stays preferable when the feed contract
-    * holds: it never rewrites settled version rows.
-    */
-  def advanceOutOfOrder(history: DataFrame, batch: DataFrame): DataFrame = {
-    val touchedKeys = batch.select(col("user_id")).distinct()
-    val untouched = history.join(touchedKeys, Seq("user_id"), "left_anti")
-    val touchedOld = history.join(touchedKeys, Seq("user_id"), "left_semi")
-      .select(col("user_id"), col("event_id"), col("valid_from").as("sec"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("sec"), col("event_id"))
-    val rebuilt = touchedOld
-      .unionByName(batch.select(col("user_id"), col("event_id"), col("sec")))
-      // re-delivery of an already-applied change (at-least-once) folds
-      // to the identical row set, so duplicate arrivals are no-ops
-      .dropDuplicates("user_id", "event_id", "sec")
-      .select(
-        col("user_id"), col("event_id"),
-        row_number().over(w).as("version"),
-        col("sec").as("valid_from"),
-        lead(col("sec"), 1).over(w).as("valid_to"),
-        lead(col("sec"), 1).over(w).isNull.as("is_current"))
-    untouched.unionByName(rebuilt)
-  }
-
   /** Hash-bucket fan-out of the persisted history (see
     * [[CdcApply.DefaultBuckets]] for the sizing story).
     */
   val DefaultBuckets = 16
 
-  private def run(spark: SparkSession, stateDir: String, numBuckets: Int,
-      step: (DataFrame, DataFrame) => DataFrame)(
-      batch: DataFrame, batchId: Long): Unit = {
-    ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, batch,
-      "user_id", numBuckets)(
-      emptyHistory(spark))(current => step(current, batch))
-    ()
-  }
-
-  /** Streaming materializer (ordered-feed arm): foreachBatch body
-    * maintaining the SCD2 history at `stateDir` via
-    * [[ExactlyOnce.advanceStateBucketed]] — the history is
-    * hash-bucketed on user_id and an epoch rewrites ONLY the buckets
-    * its batch touches, committed under one epoch-ledger marker
-    * (crash-safe, replays are no-ops; MERGE INTO with file pruning on a
-    * real table format). Expects enriched-events batches with (user_id,
-    * event_id, sec) honoring the ordered-feed contract of [[advance]];
-    * feeds that can deliver late use [[materializerOutOfOrder]]. Read
-    * the history with [[history]].
+  /** Streaming materializer: foreachBatch body maintaining the SCD2
+    * history at `stateDir` via [[ExactlyOnce.advanceStateBucketed]] —
+    * the history is hash-bucketed on user_id and an epoch rewrites
+    * ONLY the buckets its batch touches, committed under one
+    * epoch-ledger marker (crash-safe, replays are no-ops; MERGE INTO
+    * with file pruning on a real table format). Expects enriched-events batches with (user_id,
+    * event_id, sec) honoring the ordered-feed contract of [[advance]].
+    * Read the history with [[history]].
     */
   def materializer(spark: SparkSession, stateDir: String,
       numBuckets: Int = DefaultBuckets)(
-      batch: DataFrame, batchId: Long): Unit =
-    run(spark, stateDir, numBuckets, advance)(batch, batchId)
-
-  /** Streaming materializer (out-of-order arm): same fenced bucketed
-    * protocol, but each epoch folds through [[advanceOutOfOrder]] — the
-    * touched keys' histories are re-ranked over existing ∪ new changes,
-    * exact for ANY arrival order, and at-least-once re-deliveries fold
-    * to the identical row set. Per-epoch cost O(touched keys' history +
-    * batch) — late data rewrites the touched buckets, never the table.
-    */
-  def materializerOutOfOrder(spark: SparkSession, stateDir: String,
-      numBuckets: Int = DefaultBuckets)(
-      batch: DataFrame, batchId: Long): Unit =
-    run(spark, stateDir, numBuckets, advanceOutOfOrder)(batch, batchId)
+      batch: DataFrame, batchId: Long): Unit = {
+    ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, batch,
+      "user_id", numBuckets)(
+      emptyHistory(spark))(current => advance(current, batch))
+    ()
+  }
 
   /** The newest committed history state at `stateDir` (per bucket, the
     * newest committed epoch's version).

@@ -529,11 +529,10 @@ object CdcQueries {
     // PK-range chunks (default 8096, MySQLCDC2AWSMSK.scala:255-258) —
     // this query IS that plan for the events table: per chunk, its key
     // range and actual row count (the skew report for parallel snapshot
-    // readers; JdbcSnapshot.chunkPredicates generates the same ranges
-    // as WHERE clauses). The PK stats are a 1-row broadcast; chunk
-    // assignment is exact integer math at the scan; output is
-    // O(chunks). Mirrors JdbcSnapshot.numChunks: n = ceil(span/8096),
-    // step = max(span div n, 1), last chunk unbounded above.
+    // readers). The PK stats are a 1-row broadcast; chunk assignment is
+    // exact integer math at the scan; output is O(chunks). The chunk
+    // math: n = ceil(span/8096) chunks of step = max(span div n, 1)
+    // keys from the minimum key, the last chunk unbounded above.
     "cdc_snapshot_chunks" -> QueryDef(
       (s, dir) => {
         val ChunkSize = 8096L

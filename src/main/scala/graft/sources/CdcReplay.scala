@@ -172,8 +172,8 @@ object CdcReplay {
         .otherwise("insert")
     // the real change stream carries the post-image for inserts and
     // replaces (and for updates under updateLookup) but NEVER a
-    // before-image — which is exactly why the Mongo apply path needs
-    // the lookup changelog producer. Deletes carry no document.
+    // before-image, so the Mongo apply keys on the last post-image per
+    // key. Deletes carry no document.
     val fullDoc =
       if (!withFullDocument) lit(null).cast("string")
       else when(opType === "delete", lit(null).cast("string"))

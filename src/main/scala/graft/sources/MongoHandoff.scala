@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Mongo `copyExisting` initial load + change-stream handoff — the Mongo
   * flavor of [[SnapshotHandoff]] (reference MongoCDC2AWSMSK.scala:156-169:
@@ -30,16 +29,9 @@ object MongoHandoff {
     */
   def copyExisting(spark: SparkSession, sfDir: String,
       checkpointDir: String, withFullDocument: Boolean = false): Copy = {
-    val all = graft.queries.Tables.events(spark, sfDir)
-    val wm = SnapshotHandoff.PositionStore.load(spark, checkpointDir)
-      .getOrElse {
-        val fresh = all.agg(max(col("event_id"))).head().getLong(0)
-        SnapshotHandoff.PositionStore.save(spark, checkpointDir, fresh)
-        fresh
-      }
-    Copy(CdcReplay.mongoEnvelopeJson(
-      all.filter(col("event_id") <= wm), copyExisting = true,
-      withFullDocument = withFullDocument), wm)
+    val snap = SnapshotHandoff.snapshotDurable(spark, sfDir, checkpointDir)
+    Copy(CdcReplay.mongoEnvelopeJson(snap.data, copyExisting = true,
+      withFullDocument = withFullDocument), snap.watermark)
   }
 
   /** Phase 2: the change-stream tail beyond the persisted watermark.

@@ -10,15 +10,17 @@ import org.apache.spark.sql.functions._
   * across the phase switch.
   *
   * Spark decomposition:
-  *   1. batch snapshot (JdbcSnapshot / parquet) while recording the
+  *   1. batch snapshot (a chunked JDBC read / parquet) recording the
   *      high-watermark offset (here: max event_id; in production the
   *      binlog file/pos captured at snapshot start),
-  *   2. streaming phase reading ONLY records beyond the watermark.
+  *   2. streaming phase reading ONLY records beyond the watermark
+  *      (`CdcReplay.mongoStream`'s `afterId` over the file replay; Kafka
+  *      `startingOffsets` on a cluster).
   *
-  * The filter is pushed to the source (a pruned scan / Kafka
-  * startingOffsets), so the stream never rereads snapshot data, and
-  * records landing during the snapshot are picked up by the stream —
-  * no gap, no overlap, as [[graft.HandoffSpec]] proves.
+  * The filter is pushed to the source, so the stream never rereads
+  * snapshot data, and records landing during the snapshot are picked
+  * up by the stream — no gap, no overlap, as [[graft.HandoffSpec]]
+  * proves. [[MongoHandoff]] runs both phases for the Mongo feed.
   */
 object SnapshotHandoff {
 
@@ -98,38 +100,4 @@ object SnapshotHandoff {
         PositionStore.save(spark, checkpointDir, snap.watermark)
         snap
     }
-
-  /** Phase 2 with durable position: restore the fence persisted by
-    * [[snapshotDurable]]; fails fast when no position exists (nothing to
-    * resume — run the snapshot phase first).
-    */
-  def resume(spark: SparkSession, sfDir: String,
-      checkpointDir: String): DataFrame = {
-    val wm = PositionStore.load(spark, checkpointDir).getOrElse(
-      throw new IllegalStateException(
-        s"no persisted handoff position under $checkpointDir — " +
-          "run snapshotDurable first"))
-    incremental(spark, sfDir, wm)
-  }
-
-  /** Phase 2: the incremental stream, fenced to records AFTER the
-    * snapshot watermark. With a Kafka source the fence is
-    * `startingOffsets`/`startingTimestamp`; with the file replay it is
-    * a pushed-down filter.
-    */
-  def incremental(spark: SparkSession, sfDir: String, watermark: Long): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // $sfDir/events.parquet as a DIRECTORY of arriving files (a CDC
-    // landing zone); the fixture's single-file layout goes through
-    // CdcReplay.stream instead. Schema comes from a batch peek so both
-    // nanos-long and timestamp layouts work.
-    val path = s"$sfDir/events.parquet"
-    val batchSchema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(batchSchema).parquet(path)
-    val converted =
-      if (batchSchema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    converted.filter(col("event_id") > watermark)
-  }
 }

@@ -18,10 +18,13 @@ import graft.sources.CdcReplay
   *   - RocksDB state backend → `spark.sql.streaming.stateStore
   *     .providerClass=RocksDBStateStoreProvider` (emr/:59)
   *   - at-least-once (README.md:33 recommends it; Spark's Kafka sink is
-  *     at-least-once natively). Exactly-once to Kafka (the reference's
-  *     Flink default) has no Spark-native equivalent — downstream
-  *     idempotency keyed on `partitionKey` is the documented mitigation,
-  *     or `foreachBatch` with a transactional producer.
+  *     at-least-once natively) is [[kafkaSink]]. Exactly-once to Kafka
+  *     (the reference's Flink default) is [[transactionalSink]]:
+  *     `foreachBatch` with a fenced transactional producer. No main
+  *     code reads `-delivery_guarantee` yet: the cluster apps always
+  *     use [[kafkaSink]] until a transactional `KafkaProducer` can back
+  *     [[transactionalSink]] there (kafka-clients is not on the
+  *     classpath).
   *   - restart fixedDelay(3, 10 s) → Spark task retries + the streaming
   *     query restart policy of the hosting application.
   *
@@ -99,26 +102,4 @@ object CdcPipeline {
       .option("checkpointLocation", params.checkpointDir + "/ckpt")
       .trigger(Trigger.ProcessingTime(s"${params.checkpointInterval} seconds"))
   }
-
-  /** Delivery-guarantee dispatch (reference `-delivery_guarantee`,
-    * MySQLCDC2AWSMSK.scala:177-190): ONLY the literal `at_least_once`
-    * selects the native Kafka writer (its natural guarantee); anything
-    * else — including the default and typos — routes to foreachBatch
-    * with epoch fencing (graft.operators.ExactlyOnce), the
-    * two-phase-commit shape, matching the reference's polarity where
-    * EXACTLY_ONCE is the default and an unrecognized value never
-    * silently weakens the guarantee. The fenced body here writes each
-    * epoch to a fenced lake directory; with brokers available the same
-    * body wraps a transactional producer instead.
-    */
-  def sink(df: DataFrame, params: CdcParams): DataStreamWriter[Row] =
-    if (params.deliveryGuarantee != "at_least_once") {
-      val target = params.checkpointDir.stripSuffix("/") + "/out"
-      val ledger = params.checkpointDir.stripSuffix("/") + "/ledger"
-      df.writeStream
-        .foreachBatch(
-          graft.operators.ExactlyOnce.foreachBatchExactlyOnce(target, ledger) _)
-        .option("checkpointLocation", params.checkpointDir + "/ckpt")
-        .trigger(Trigger.ProcessingTime(s"${params.checkpointInterval} seconds"))
-    } else kafkaSink(df, params)
 }

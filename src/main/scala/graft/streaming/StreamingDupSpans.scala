@@ -40,8 +40,8 @@ import org.apache.spark.sql.functions._
   * the stream verifies against the 128-bit double hash — a false span
   * needs a full 128-bit collision. Exactly-once: each epoch is a pure
   * function of (index, batch), so batch-id fencing on the output +
-  * epoch-versioned index parquet (ExactlyOnce.writeFenced) replays
-  * idempotently.
+  * the ledger-fenced index LSM (ExactlyOnce.appendDeltaBucketed)
+  * replays idempotently.
   */
 object StreamingDupSpans {
 
@@ -131,7 +131,8 @@ object StreamingDupSpans {
     * periodically — compaction is a pure rewrite, never a merge, because
     * delta key sets are disjoint by construction.
     */
-  def advanceOrdered(index: DataFrame, batch: DataFrame): (DataFrame, DataFrame) =
+  private[graft] def advanceOrdered(index: DataFrame,
+      batch: DataFrame): (DataFrame, DataFrame) =
     minedFrom(gramRows(batch), index)
 
   /** The ordered-feed epoch core over ALREADY-exploded gram rows — the
@@ -188,21 +189,6 @@ object StreamingDupSpans {
       expectedBuckets = Some(numBuckets))(emptyIndex(spark))
       .select(col("gh1"), col("gh2"), col("dmin"))
   }
-
-  /** TIME TRAVEL: the standing gram index exactly as it stood when
-    * epoch `asOf` committed — "the dedup index as of epoch N" for
-    * reproducible historical reruns. The LSM reconstructs base +
-    * committed deltas up to `asOf`
-    * ([[graft.operators.ExactlyOnce.appendedStateAsOf]]); depth is
-    * bounded by compaction — an `asOf` below the newest base fails
-    * loudly (raise the materializer's `compactEvery` to keep deeper
-    * history).
-    */
-  def indexAsOf(spark: SparkSession, stateDir: String,
-      asOf: Long): DataFrame =
-    graft.operators.ExactlyOnce.appendedStateAsOf(spark, stateDir, asOf)(
-      emptyIndex(spark))
-      .select(col("gh1"), col("gh2"), col("dmin"))
 
   /** Durable ordered-feed materializer: foreachBatch body over a
     * standing gram index persisted as a PER-BUCKET LSM

@@ -458,33 +458,6 @@ object StreamingJoinView {
     }.drop("__jkey")
   }
 
-  /** TIME TRAVEL: the join view exactly as it stood when epoch `asOf`
-    * committed. Depth = the `retain` the materializer ran with; pass
-    * the same value (see [[ExactlyOnce.currentStateBucketedAsOf]]).
-    * Unlike [[view]] there is no empty-schema fallback: an epoch whose
-    * view had never matched reads as whatever buckets existed then —
-    * possibly none, in which case the side states' schemas still
-    * shape the frame via the same derivation.
-    */
-  def viewAsOf(spark: SparkSession, root: String, asOf: Long,
-      retain: Int = 2): DataFrame = {
-    def side(dir: String) = ExactlyOnce.currentStateBucketedAsOf(
-      spark, dir, asOf, retain)(
-      sys.error(s"join-view side state at $dir had committed only" +
-        s" empty epochs at epoch $asOf; no schema exists"))
-    ExactlyOnce.currentStateBucketedAsOf(spark, s"$root/view", asOf,
-      retain) {
-      val l = side(s"$root/left").drop("__m", "__e")
-      val r = side(s"$root/right").drop("__m", "__e", "__jkey")
-      val schema = org.apache.spark.sql.types.StructType(
-        l.schema.fields ++ r.schema.fields :+
-          org.apache.spark.sql.types.StructField("__m",
-            org.apache.spark.sql.types.LongType))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }.drop("__jkey")
-  }
-
   /** [[view]] exploded to plain bag-semantics rows (each row repeated
     * `__m` times) — insert-only convenience; errors if any
     * multiplicity is negative (a retraction still in flight has no

@@ -6,9 +6,8 @@ import org.apache.spark.sql.types._
 
 import graft.operators.ExactlyOnce
 
-/** DURABLE standing near-duplicate index — the lake-backed counterpart
-  * of [[StreamingDedup]] (whose bucket-owner state lives in the Spark
-  * state store and dies with the checkpoint). Here the LSH
+/** DURABLE standing near-duplicate index over
+  * [[StreamingDedup.bandRows]]' per-row signatures. The LSH
   * (band, signature) → first-claimant map is materialized as
   * hash-bucketed versioned parquet under
   * [[ExactlyOnce.advanceStateBucketed]]'s epoch-ledger protocol, so:
@@ -25,12 +24,10 @@ import graft.operators.ExactlyOnce
   *     before the marker, so a torn epoch's events are invisible to
   *     [[dupEvents]] and the replay overwrites them).
   *
-  * Semantics match [[StreamingDedup.nearDupEvents]] without TTL: the
-  * first claimant of a bucket (lowest doc_id within its claiming
-  * batch) owns it forever; every later arrival in that bucket emits a
-  * (doc_id, dup_of = owner, band) event per matching band. Doc-level
-  * verdicts distinct-aggregate downstream, exactly like the in-memory
-  * twin.
+  * Semantics: the first claimant of a bucket (lowest doc_id within its
+  * claiming batch) owns it forever; every later arrival in that bucket
+  * emits a (doc_id, dup_of = owner, band) event per matching band.
+  * Doc-level verdicts distinct-aggregate downstream.
   *
   * 100 TB design: index size is O(distinct band-buckets) ≈ O(corpus
   * bands), sharded `hash(bucket_key) % numBuckets` into per-bucket
@@ -76,11 +73,9 @@ object StreamingLshIndex {
       numBuckets: Int = DefaultBuckets, retain: Int = 2)(
       batch: DataFrame, batchId: Long): Unit = {
     val keys = bandKeys(batch)
-    // retain > 2 keeps deeper version history for [[indexAsOf]]
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, keys,
       "bucket_key", numBuckets, retain)(emptyIndex(spark)) { current =>
-      // one claimant per bucket this batch (lowest doc_id — the same
-      // within-batch determinism as the state-store twin)
+      // one claimant per bucket this batch (lowest doc_id)
       val claims = keys.groupBy(col("bucket_key"))
         .agg(min(col("doc_id")).as("claimant"))
       // owner after this epoch: the prior owner if the bucket exists,
@@ -116,19 +111,6 @@ object StreamingLshIndex {
       s"no committed index state under $stateDir")
     ExactlyOnce.currentStateBucketed(spark, stateDir)(emptyIndex(spark))
   }
-
-  /** TIME TRAVEL: the standing index exactly as it stood when epoch
-    * `asOf` committed — "the dedup index as of epoch N", the handle a
-    * curation pipeline needs to re-run a historical pass
-    * reproducibly. Depth = the materializer's `retain` (default 2);
-    * pass the same value (see
-    * [[graft.operators.ExactlyOnce.currentStateBucketedAsOf]] — every
-    * retained epoch reconstructs, retired ones fail loudly).
-    */
-  def indexAsOf(spark: SparkSession, stateDir: String, asOf: Long,
-      retain: Int = 2): DataFrame =
-    ExactlyOnce.currentStateBucketedAsOf(spark, stateDir, asOf, retain)(
-      emptyIndex(spark))
 
   private val EventsEpochRe = "^epoch=(\\d+)$".r
 

@@ -13,22 +13,12 @@ import graft.operators.ExactlyOnce
   * hashes). The priority is DETERMINISTIC (hash-derived), which is
   * what makes a distributed, restartable reservoir possible at all:
   *
-  *   - uniform arm ([[uniformPriority]]): priority = the engine's
-  *     portable unsigned string hash of the row id. Keeping the k
-  *     smallest priorities per stratum is top-k of a random
-  *     permutation — a uniform sample without replacement, and the
-  *     one the declared query `samp_reservoir_groups` oracle-checks
-  *     in DuckDB (integer priorities, engine-exact);
-  *   - weighted arm ([[weightedPriority]]): Efraimidis–Spirakis A-ES
-  *     keys — keep the k largest u^(1/w), here as the k smallest
-  *     −ln(u)/w (monotone-equivalent, one libm call, and the SAME
-  *     "keep k smallest" fold as the uniform arm). Inclusion
-  *     probability is proportional to weight, exactly the
-  *     temperature/quality-weighted subsampling a curation pipeline
-  *     runs. Engine-deterministic (the spec proves bit parity against
-  *     the batch computation); not oracle-portable — DuckDB's libm
-  *     may differ in the last ulp, so this arm is spec-gated, not
-  *     DuckDB-gated.
+  * [[uniformPriority]] is the engine's portable unsigned string hash of
+  * the row id. Keeping the k smallest priorities per stratum is top-k
+  * of a random permutation — a uniform sample without replacement, and
+  * the one the declared query `samp_reservoir_groups` oracle-checks in
+  * DuckDB (integer priorities, engine-exact). The materializer takes
+  * any deterministic priority column.
   *
   * Merge = per-stratum top-k of (current ∪ batch-partial), bounded 2k
   * rows per group; the batch partial itself keeps only k per stratum
@@ -52,17 +42,6 @@ object StreamingReservoir {
   def uniformPriority(idCol: Column, seed: String): Column =
     graft.queries.QueryDef.uhash(concat(lit(seed), idCol.cast("string")))
       .cast("double")
-
-  /** Efraimidis–Spirakis weighted priority: −ln(u)/w with
-    * u = (uhash+1)/2^32 ∈ (0,1] — keep-k-smallest ⇔ keep the k
-    * largest u^(1/w), i.e. inclusion probability ∝ `weight`.
-    * `weight` must be strictly positive.
-    */
-  def weightedPriority(idCol: Column, weight: Column,
-      seed: String): Column =
-    -log((graft.queries.QueryDef.uhash(
-      concat(lit(seed), idCol.cast("string"))) + lit(1L))
-      .cast("double") / lit(4294967296.0)) / weight.cast("double")
 
   private def emptyLike(spark: SparkSession, p: DataFrame): DataFrame =
     spark.createDataFrame(
@@ -97,7 +76,7 @@ object StreamingReservoir {
 
   /** foreachBatch body: fold one batch into the standing per-stratum
     * reservoir at `stateDir`. `priority` must be a deterministic pure
-    * function of the row (see the two arms above) — this is the
+    * function of the row (e.g. [[uniformPriority]]) — this is the
     * contract that makes replay, re-ingestion, and any epoch split
     * converge bit-identically.
     */

@@ -166,16 +166,4 @@ object StreamingRollup {
         "epochs; no groups exist yet"))
       .drop("__gkey")
   }
-
-  /** TIME TRAVEL: the rollup exactly as it stood when epoch `asOf`
-    * committed ("yesterday's aggregate without yesterday's rescan").
-    * Depth = the `retain` the materializer ran with; pass the same
-    * value (see [[ExactlyOnce.currentStateBucketedAsOf]]).
-    */
-  def rollupAsOf(spark: SparkSession, stateDir: String, asOf: Long,
-      retain: Int = 2): DataFrame =
-    ExactlyOnce.currentStateBucketedAsOf(spark, stateDir, asOf, retain)(
-      sys.error(s"rollup state at $stateDir had committed only empty " +
-        s"epochs at epoch $asOf; no groups existed yet"))
-      .drop("__gkey")
 }

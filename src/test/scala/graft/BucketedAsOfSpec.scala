@@ -124,8 +124,11 @@ class BucketedAsOfSpec extends SparkSpec {
     m(batch(Seq(envelope("u1", "u", 3), envelope("u3", "c", 4))), 1L)
     m(batch(Seq(envelope("u2", "d", 5))), 2L)
 
+    def replicaAsOf(e: Long) =
+      graft.operators.ExactlyOnce.currentStateBucketedAsOf(spark, dir, e,
+        retain)(graft.operators.CdcApply.emptyReplica(spark))
     def keysAsOf(e: Long) =
-      graft.operators.CdcApply.replicaAsOf(spark, dir, e, retain)
+      replicaAsOf(e)
         .select(col("partitionKey")).as[String].collect().toSet
     assert(keysAsOf(0L) == Set("u1", "u2"))
     assert(keysAsOf(1L) == Set("u1", "u2", "u3"))
@@ -133,7 +136,7 @@ class BucketedAsOfSpec extends SparkSpec {
     // the as-of view reproduces the UPDATE history too: u1's value as
     // of epoch 0 predates the epoch-1 update
     def u1ValueAsOf(e: Long) =
-      graft.operators.CdcApply.replicaAsOf(spark, dir, e, retain)
+      replicaAsOf(e)
         .filter(col("partitionKey") === "u1")
         .select(element_at(col("after"), "v")).as[String].head()
     assert(u1ValueAsOf(0L) == "v1")

@@ -28,6 +28,16 @@ class CdcApplySpec extends SparkSpec {
     assert(u == "1")
   }
 
+  test("the MySQL and Mongo last-change shapes, minus op, are the " +
+      "replica schema") {
+    import spark.implicits._
+    val none = Seq.empty[(String, String)].toDF("partitionKey", "value")
+    assert(CdcApply.lastChangePerKey(none).drop("op").schema ==
+      CdcApply.replicaSchema)
+    assert(CdcApply.lastChangePerKeyMongo(none).drop("op").schema ==
+      CdcApply.replicaSchema)
+  }
+
   test("replaying the same batch is idempotent") {
     val empty = CdcApply.lastChangePerKey(enrichedBatch.limit(0)).drop("op")
     val once = CdcApply.applyBatch(empty, enrichedBatch)

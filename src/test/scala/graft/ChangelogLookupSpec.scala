@@ -5,203 +5,50 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-import graft.operators.{CdcApply, CdcDeltas}
-import graft.streaming.StreamingRollup
+import graft.operators.CdcApply
 
-/** Lookup changelog producer: retraction streams derived for feeds
-  * with NO before-images by reading the replica's pre-epoch state —
-  * a downstream signed rollup tracks the replica exactly, through
-  * updates, deletes, re-inserts, and torn-epoch replays.
+/** The Mongo change-stream apply: [[CdcApply.materializerMongo]] folds
+  * `fullDocument` envelopes (no before-images) into the replica, and
+  * [[CdcApply.lastChangePerKeyMongo]] orders same-key changes
+  * deterministically and rejects envelopes it cannot apply.
   */
 class ChangelogLookupSpec extends SparkSpec {
 
-  private def envelope(k: String, op: String, ts: Long, et: String,
-      v: String): (String, String) =
-    k -> s"""{"op":"$op","after":${
-      if (op == "d") "null"
-      else s"""{"k":"$k","et":"$et","v":"$v"}"""
-    },"source":{"ts_ms":$ts,"pos":$ts}}"""
-
-  private def batch(rows: Seq[(String, String)]): DataFrame = {
-    import spark.implicits._
-    rows.toDF("partitionKey", "value")
-  }
-
-  private def feedRollup(rollupDir: String)(
-      deltas: DataFrame, id: Long): Unit =
-    StreamingRollup.materializerSigned(spark, rollupDir, Seq("et"),
-      Seq("v_sum" -> "v"), "sign")(
-      deltas.select(col("image").getItem("et").as("et"),
-        col("image").getItem("v").as("v"), col("sign")), id)
-
-  private def rollupState(rollupDir: String): Map[String, (Long, Double)] =
-    StreamingRollup.rollup(spark, rollupDir, Seq("et"))
-      .collect()
-      .map(r => r.getAs[String]("et") -> (r.getAs[Long]("n"),
-        BigDecimal(r.getAs[java.math.BigDecimal]("v_sum")).toDouble))
-      .toMap
-
-  /** The truth: aggregate the replica's CURRENT after-images. */
-  private def replicaTruth(replicaDir: String): Map[String, (Long, Double)] =
-    CdcApply.replica(spark, replicaDir)
-      .select(element_at(col("after"), "et").as("et"),
-        element_at(col("after"), "v").cast("decimal(18,2)").as("v"))
-      .groupBy(col("et"))
-      .agg(count(lit(1)).as("n"), sum(col("v")).cast("double").as("s"))
-      .collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2)))
-      .toMap
-
-  private val e0 = Seq(envelope("u1", "c", 1, "A", "1"),
-    envelope("u2", "c", 2, "A", "2"), envelope("u3", "c", 3, "B", "3"))
-  private val e1 = Seq(envelope("u1", "u", 4, "B", "5"),
-    envelope("u2", "d", 5, "", ""), envelope("u4", "c", 6, "A", "4"))
-  private val e2 = Seq(envelope("u3", "u", 7, "B", "7"),
-    envelope("u2", "c", 8, "A", "9"))
-
-  test("a no-before-image feed keeps a downstream signed rollup " +
-      "tracking the replica exactly through update/delete/re-insert") {
-    val replicaDir = Files.createTempDirectory("graft_cl_rep").toString
-    val rollupDir = Files.createTempDirectory("graft_cl_roll").toString
-    val m = CdcApply.materializerWithChangelog(spark, replicaDir)(
-      feedRollup(rollupDir)) _
-    Seq(e0, e1, e2).zipWithIndex.foreach { case (rows, e) =>
-      m(batch(rows), e.toLong)
-      assert(rollupState(rollupDir) == replicaTruth(replicaDir),
-        s"after epoch $e")
-    }
-    // concrete final check: u1→(B,5) u3→(B,7) u4→(A,4) u2→(A,9)
-    assert(rollupState(rollupDir) ==
-      Map("A" -> (2L, 13.0), "B" -> (2L, 12.0)))
-  }
-
-  test("delta shapes: first insert is bare +1, update is (-old,+new) " +
-      "from the REPLICA's row, delete of an absent key is empty") {
-    val replicaDir = Files.createTempDirectory("graft_cl_shape").toString
-    CdcApply.materializer(spark, replicaDir)(batch(e0), 0L)
-
-    def deltasFor(rows: Seq[(String, String)], id: Long) =
-      CdcDeltas.lookupDeltas(spark, replicaDir, batch(rows), id)
-        .select(element_at(col("image"), "k").as("k"),
-          element_at(col("image"), "v").as("v"), col("sign"))
-        .collect().map(r => (r.getString(0), r.getString(1),
-          r.getInt(2))).toSet
-
-    // update u1 (replica holds v=1): retract old, insert new
-    assert(deltasFor(Seq(envelope("u1", "u", 10, "B", "50")), 1L) ==
-      Set(("u1", "1", -1), ("u1", "50", 1)))
-    // first insert of a fresh key: only +1
-    assert(deltasFor(Seq(envelope("u9", "c", 11, "A", "6")), 1L) ==
-      Set(("u9", "6", 1)))
-    // delete of an absent key: nothing to retract, nothing inserted
-    assert(deltasFor(Seq(envelope("zz", "d", 12, "", "")), 1L).isEmpty)
-  }
-
-  test("mongo end-to-end: a real fullDocument feed (no before-images " +
-      "by construction) through the mongo changelog materializer") {
+  test("materializerMongo folds a copy-existing epoch plus a tail into " +
+      "the last change per key, and a replayed epoch is a no-op") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
-    val replicaDir = Files.createTempDirectory("graft_cl_mongo").toString
-    val rollupDir = Files.createTempDirectory("graft_cl_mongo_r").toString
-    val envs = graft.sources.CdcReplay.mongoEnvelopeJson(
-      queries.Tables.events(spark, sf), withFullDocument = true)
-    val enrichedRecs = graft.operators.CdcEnrichment
-      .enrichMongo(envs.as[String]).toDF()
-      .withColumn("__id",
-        regexp_extract(col("partitionKey"), "(\\d+)$", 1).cast("long"))
+    val replicaDir = Files.createTempDirectory("graft_mongo_apply").toString
+    val events = queries.Tables.events(spark, sf)
+    def enriched(envelopes: DataFrame): DataFrame =
+      graft.operators.CdcEnrichment.enrichMongo(envelopes.as[String]).toDF()
+    val copy = enriched(graft.sources.CdcReplay.mongoEnvelopeJson(
+      events.filter(col("event_id") < 600), copyExisting = true,
+      withFullDocument = true))
+    // the tail: the replay's later events plus a day-later change to
+    // every 7th copied key (updates, and deletes where event_id % 10 == 0)
+    val tail = enriched(graft.sources.CdcReplay.mongoEnvelopeJson(
+      events.filter(col("event_id") >= 600).unionByName(
+        events.filter(col("event_id") < 600 && col("event_id") % 7 === 0)
+          .withColumn("ts", col("ts") + expr("INTERVAL 1 DAY"))),
+      withFullDocument = true))
+    val m = CdcApply.materializerMongo(spark, replicaDir) _
+    m(copy, 0L)
+    m(tail, 1L)
 
-    def feedMongoRollup(deltas: DataFrame, id: Long): Unit =
-      StreamingRollup.materializerSigned(spark, rollupDir,
-        Seq("event_type"), Seq("v_sum" -> "v"), "sign")(
-        deltas.select(
-          element_at(col("image"), "event_type").as("event_type"),
-          element_at(col("image"), "value").as("v"), col("sign")), id)
+    def rows(df: DataFrame) =
+      df.select(col("partitionKey"), to_json(col("after")).as("after"),
+        col("ts_ms"), col("pos")).collect().toSet
+    val want = CdcApply.lastChangePerKeyMongo(copy.unionByName(tail))
+      .filter(col("op") =!= "d").drop("op")
+    val got = rows(CdcApply.replica(spark, replicaDir))
+    assert(got == rows(want))
+    // copied keys the tail deleted are gone, ones it updated survive
+    val keys = got.map(_.getString(0))
+    assert(!keys.exists(_.endsWith(".70")) && keys.exists(_.endsWith(".7")))
 
-    val m = CdcApply.materializerWithChangelogMongo(spark, replicaDir)(
-      feedMongoRollup) _
-    (0 until 3).foreach { e =>
-      m(enrichedRecs.filter(col("__id") % 3 === e).drop("__id"), e.toLong)
-    }
-
-    val got = StreamingRollup.rollup(spark, rollupDir, Seq("event_type"))
-      .select(col("event_type"), col("n"),
-        col("v_sum").cast("double").as("v"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    val want = CdcApply.replica(spark, replicaDir)
-      .select(element_at(col("after"), "event_type").as("et"),
-        element_at(col("after"), "value").cast("decimal(18,2)").as("v"))
-      .groupBy(col("et"))
-      .agg(count(lit(1)).as("n"), sum(col("v")).cast("double").as("v"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    assert(got == want)
-    assert(got.nonEmpty)
-    // and the replica is exactly the non-delete fixture rows (deletes
-    // target keys never inserted in this replay — they no-op)
-    val nonDelete = queries.Tables.events(spark, sf)
-      .filter(col("event_id") % 10 =!= 0).count()
-    assert(CdcApply.replica(spark, replicaDir).count() == nonDelete)
-  }
-
-  test("the mongo changelog materializer runs under a REAL readStream " +
-      "foreachBatch and converges to the same replica-tracking rollup") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    import spark.implicits._
-    val replicaDir = Files.createTempDirectory("graft_cl_ms").toString
-    val rollupDir = Files.createTempDirectory("graft_cl_ms_r").toString
-
-    def feedMongoRollup(deltas: DataFrame, id: Long): Unit =
-      StreamingRollup.materializerSigned(spark, rollupDir,
-        Seq("event_type"), Seq("v_sum" -> "v"), "sign")(
-        deltas.select(
-          element_at(col("image"), "event_type").as("event_type"),
-          element_at(col("image"), "value").as("v"), col("sign")), id)
-
-    val q = graft.sources.CdcReplay
-      .mongoStream(spark, sf, withFullDocument = true)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val enrichedRecs = graft.operators.CdcEnrichment
-          .enrichMongo(batch.select(col("value")).as[String]).toDF()
-        CdcApply.materializerWithChangelogMongo(spark, replicaDir)(
-          feedMongoRollup)(enrichedRecs, id)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-
-    val got = StreamingRollup.rollup(spark, rollupDir, Seq("event_type"))
-      .select(col("event_type"), col("n"),
-        col("v_sum").cast("double").as("v"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    val want = CdcApply.replica(spark, replicaDir)
-      .select(element_at(col("after"), "event_type").as("et"),
-        element_at(col("after"), "value").cast("decimal(18,2)").as("v"))
-      .groupBy(col("et"))
-      .agg(count(lit(1)).as("n"), sum(col("v")).cast("double").as("v"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    assert(got == want)
-    assert(got.nonEmpty)
-  }
-
-  test("torn epoch: replica advance committed, crash before the " +
-      "downstream consumed — the replay derives identical deltas") {
-    val replicaDir = Files.createTempDirectory("graft_cl_torn").toString
-    val rollupDir = Files.createTempDirectory("graft_cl_torn_r").toString
-    val m = CdcApply.materializerWithChangelog(spark, replicaDir)(
-      feedRollup(rollupDir)) _
-    m(batch(e0), 0L)
-    // crash window: epoch 1's replica advance commits, downstream never
-    // ran — then the whole epoch replays
-    CdcApply.materializer(spark, replicaDir)(batch(e1), 1L)
-    m(batch(e1), 1L)
-    assert(rollupState(rollupDir) == replicaTruth(replicaDir))
-    // and a FULL re-delivery of the epoch is a no-op everywhere
-    m(batch(e1), 1L)
-    assert(rollupState(rollupDir) == replicaTruth(replicaDir))
+    m(tail, 1L)
+    assert(rows(CdcApply.replica(spark, replicaDir)) == got)
   }
 
   // ---- mongo envelope hardening (round-7 ADVICE items 1 + 2) ----

@@ -176,27 +176,6 @@ class ConfigSpec extends AnyFunSuite {
     assert(both.brokerList == "ref:9092")
   }
 
-  test("chunked snapshot refuses key-less tables (points at readSingle)") {
-    val e = intercept[IllegalArgumentException] {
-      // the guard fires before the session is touched — no Spark needed
-      graft.sources.JdbcSnapshot.read(null, CdcParams(),
-        "test_db", "no_pk_table", pkCol = "", 0L, 100L)
-    }
-    assert(e.getMessage.contains("readSingle"))
-    assert(e.getMessage.contains("scan.incremental.snapshot.enabled=false"))
-  }
-
-  test("jdbc snapshot chunk math") {
-    import graft.sources.JdbcSnapshot._
-    assert(numChunks(1, 8096, 8096) == 1)
-    assert(numChunks(1, 8097, 8096) == 2)
-    assert(numChunks(0, 99999, 4000) == 25)
-    val preds = chunkPredicates("id", 0, 99, 50)
-    assert(preds.size == 2)
-    assert(preds.head == "id < 50")
-    assert(preds.last == "id >= 50")
-  }
-
   test("apply-side replica knobs parse and default sanely") {
     val p = graft.config.CdcParams.fromArgs(Array(
       "-replica_buckets", "256", "-replica_retain", "6",

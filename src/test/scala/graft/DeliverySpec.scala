@@ -336,22 +336,4 @@ class DeliverySpec extends SparkSpec {
       assert(enrichedVals(k) == v, s"value bytes differ for key $k")
     }
   }
-
-  test("exactly_once sink writes each epoch once into the fenced target") {
-    val ckpt = Files.createTempDirectory("graft_eo_sink").toString
-    val params = CdcParams(
-      topic = "cdc_topic", topicPrefix = "flink_cdc_",
-      deliveryGuarantee = "exactly_once",
-      checkpointDir = ckpt, checkpointInterval = 1,
-      tablePk = """[{"db":"test_db","table":"eve.*","primary_key":"event_id"}]""")
-    val df = CdcPipeline.build(spark, sf, params, numPartitions = 12)
-    val q = CdcPipeline.sink(df, params).start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.read.parquet(s"$ckpt/out")
-    assert(out.count() == 1000)
-    // ledger has one marker per committed epoch
-    val markers = new java.io.File(s"$ckpt/ledger").list()
-      .count(_.startsWith("epoch-"))
-    assert(markers >= 1)
-  }
 }

@@ -90,20 +90,6 @@ class EpochLedgerSpec extends SparkSpec {
       produce, _ => new LedgerProducer)(records(e, 24, 12), e))
     assert(LedgerFaults.producers.get() == made, "a fenced epoch made producers")
     assert(LedgerFaults.committed.size == 24 * K, "a fenced epoch re-sent")
-
-    import spark.implicits._
-    val (target, ledger) = (s"$work/target", s"$work/target_ledger")
-    def payloads(e: Long) = Seq((e, s"""{"k": $e}""")).toDF("id", "payload")
-    (0L until K).foreach(e =>
-      ExactlyOnce.foreachBatchExactlyOnce(target, ledger)(payloads(e), e))
-    assert(ledgerFiles(ledger).size <= 3, ledgerFiles(ledger).sorted)
-    def ids = spark.read.parquet(target).select("id").as[Long]
-      .collect().sorted.toSeq
-    val before = ids
-    assert(before == (0L until K))
-    (0L until K).foreach(e =>
-      ExactlyOnce.foreachBatchExactlyOnce(target, ledger)(payloads(e + 100), e))
-    assert(ids == before, "a replayed epoch rewrote output")
   }
 
   test("executors write part markers through the session's Hadoop conf") {
@@ -152,21 +138,11 @@ class EpochLedgerSpec extends SparkSpec {
 
   private def writers(): Seq[Writer] = {
     def dir(n: String) = Files.createTempDirectory(s"graft_ledger_$n").toString
-    val lake = dir("lake")
     val kafka = dir("kafka")
     val append = dir("append")
     val advance = dir("advance")
     val empty = rows(0L).limit(0)
     Seq(
-      Writer("writeFenced", lake,
-        (e, torn) => ExactlyOnce.writeFenced(spark, s"$lake/_ledger", e) { () =>
-          rows(e).write.mode("overwrite").parquet(s"$lake/out/epoch=$e")
-          if (torn) throw new RuntimeException("torn after the write")
-        },
-        // a lake reader takes the committed epochs' directories only
-        () => (0L to 9L).filter(ExactlyOnce.isEpochCommitted(spark, lake, _))
-          .flatMap(e => epochsOf(spark.read.parquet(s"$lake/out/epoch=$e")))
-          .sorted),
       Writer("foreachBatchTransactionalKafka", kafka,
         (e, _) => {
           val made = LedgerFaults.producers.get()

@@ -13,6 +13,11 @@ import graft.sources.SnapshotHandoff
   */
 class HandoffSpec extends SparkSpec {
 
+  /** The event ids of change-stream envelopes (`_id` = `evt_<id>`). */
+  private def ids(envelopes: org.apache.spark.sql.DataFrame) =
+    envelopes.select(regexp_extract(get_json_object(col("value"), "$._id"),
+      "^evt_(\\d+)$", 1).cast("long").as("event_id"))
+
   test("initial-position handoff: no gap, no overlap") {
     val work = Files.createTempDirectory("graft_handoff").toString
 
@@ -30,12 +35,13 @@ class HandoffSpec extends SparkSpec {
     all.filter(col("event_id") >= 600)
       .coalesce(1).write.mode("append").parquet(s"$work/events.parquet")
 
-    val stream = SnapshotHandoff.incremental(spark, work, snap.watermark)
+    val stream = graft.sources.CdcReplay.mongoStream(spark, work,
+      afterId = snap.watermark)
     val q = stream.writeStream.format("memory")
       .queryName("handoff_out").outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
 
-    val streamed = spark.table("handoff_out")
+    val streamed = ids(spark.table("handoff_out"))
     // stream fence: nothing at or below the watermark (no overlap)
     assert(streamed.filter(col("event_id") <= snap.watermark).count() == 0)
     // snapshot + stream = every event exactly once (no gap)
@@ -46,6 +52,7 @@ class HandoffSpec extends SparkSpec {
   }
 
   test("durable handoff: restart resumes from the persisted watermark") {
+    import graft.sources.MongoHandoff
     val work = Files.createTempDirectory("graft_handoff_d").toString
     val ckpt = Files.createTempDirectory("graft_handoff_ckpt").toString
 
@@ -54,33 +61,32 @@ class HandoffSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$work/events.parquet")
 
     // phase 1 persists the fence under the checkpoint dir
-    val snap = SnapshotHandoff.snapshotDurable(spark, work, ckpt)
-    assert(snap.watermark == 599L)
+    val copy = MongoHandoff.copyExisting(spark, work, ckpt)
+    assert(copy.watermark == 599L)
     assert(SnapshotHandoff.PositionStore.load(spark, ckpt).contains(599L))
 
     // more events land; the process "restarts": a durable re-run must
     // NOT move the fence even though the table's max id has grown
     all.filter(col("event_id") >= 600)
       .coalesce(1).write.mode("append").parquet(s"$work/events.parquet")
-    val snapAfterRestart = SnapshotHandoff.snapshotDurable(spark, work, ckpt)
-    assert(snapAfterRestart.watermark == 599L)
+    val copyAfterRestart = MongoHandoff.copyExisting(spark, work, ckpt)
+    assert(copyAfterRestart.watermark == 599L)
 
     // resume reads the persisted position, no in-memory state needed
-    val stream = SnapshotHandoff.resume(spark, work, ckpt)
+    val stream = MongoHandoff.changeStream(spark, work, ckpt)
     val q = stream.writeStream.format("memory")
       .queryName("handoff_resume_out").outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
 
-    val streamed = spark.table("handoff_resume_out")
+    val streamed = ids(spark.table("handoff_resume_out"))
     assert(streamed.filter(col("event_id") <= 599L).count() == 0)
-    val total = snapAfterRestart.data.select(col("event_id"))
-      .unionAll(streamed.select(col("event_id")))
+    val total = ids(copyAfterRestart.envelopes).unionAll(streamed)
     assert(total.count() == 1000)
     assert(total.distinct().count() == 1000)
 
     // resume without any persisted position fails fast
     intercept[IllegalStateException] {
-      SnapshotHandoff.resume(spark, work,
+      MongoHandoff.changeStream(spark, work,
         Files.createTempDirectory("graft_handoff_empty").toString)
     }
   }

@@ -2,38 +2,16 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 
-import graft.operators.{ExactlyOnce, ScoredId, TopKAggregator}
+import graft.operators.{ScoredId, TopKAggregator}
 
-/** Exactly-once machinery, the bounded top-k aggregator, SQL function
-  * registration, and approximate aggregates.
+/** The bounded top-k aggregator, SQL function registration, graph and
+  * approximate aggregates, and query-level operator checks.
   */
 class OperatorsSpec extends SparkSpec {
   import spark.implicits._
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)
-
-  test("writeFenced skips replayed epochs") {
-    val ledger = Files.createTempDirectory("graft_ledger").toString
-    var writes = 0
-    val w1 = ExactlyOnce.writeFenced(spark, ledger, 7L)(() => writes += 1)
-    val w2 = ExactlyOnce.writeFenced(spark, ledger, 7L)(() => writes += 1)
-    val w3 = ExactlyOnce.writeFenced(spark, ledger, 8L)(() => writes += 1)
-    assert(w1 && !w2 && w3)
-    assert(writes == 2)
-  }
-
-  test("foreachBatch exactly-once: replayed batch leaves target unchanged") {
-    val target = Files.createTempDirectory("graft_eo").toString
-    val ledger = s"$target/_ledger"
-    val batch = Seq(("k1", "v1"), ("k2", "v2")).toDF("partitionKey", "value")
-    ExactlyOnce.foreachBatchExactlyOnce(target, ledger)(batch, 0L)
-    ExactlyOnce.foreachBatchExactlyOnce(target, ledger)(batch, 0L) // replay
-    ExactlyOnce.foreachBatchExactlyOnce(target, ledger)(batch, 1L)
-    val n = spark.read.parquet(target).count()
-    assert(n == 4, s"expected 2 epochs x 2 rows, got $n")
-  }
 
   test("TopKAggregator: k-bounded, deterministic, matches window top-k") {
     val data = queries.Tables.orders(spark, sf)
@@ -61,6 +39,12 @@ class OperatorsSpec extends SparkSpec {
     val got = spark.sql(
       "SELECT java_string_hash('test_db.events.0') AS h").head().getInt(0)
     assert(got == "test_db.events.0".hashCode)
+    // every descriptor resolves in SQL to its own expression class
+    GraftFunctions.descriptors.foreach { case (id, info, _) =>
+      val described = spark.sql(s"DESCRIBE FUNCTION ${id.funcName}")
+        .collect().map(_.getString(0)).mkString("\n")
+      assert(described.contains(info.getClassName), described)
+    }
   }
 
   test("ConnectedComponents: chain graph converges in diameter+1 rounds, one job each") {
@@ -235,19 +219,30 @@ class OperatorsSpec extends SparkSpec {
     assert(rows.map(_.getAs[Long]("doc_id")).toSet === expected)
   }
 
-  test("cdc_snapshot_chunks matches JdbcSnapshot's chunk math, " +
+  test("cdc_snapshot_chunks matches the snapshot chunk math, " +
       "tiles the key span") {
+    // n = ceil(span / 8096) chunks of step = max(span div n, 1) keys
+    // from the minimum key; the last chunk is open above
+    def chunking(mn: Long, mx: Long): (Long, Long) = {
+      val span = mx - mn + 1
+      val n = (span + 8095) / 8096
+      (n, math.max(span / n, 1L))
+    }
+    assert(chunking(1, 8096) == (1L, 8096L))
+    assert(chunking(1, 8097) == (2L, 4048L))
+    assert(chunking(0, 99999) == (13L, 7692L))
     val rows = SparkEntry.queries("cdc_snapshot_chunks")(spark, sf)
       .collect()
-    val e = queries.Tables.events(spark, sf)
-      .agg(min(col("event_id")), max(col("event_id")), count(lit(1)))
-      .head()
-    val (mn, mx, total) = (e.getLong(0), e.getLong(1), e.getLong(2))
-    assert(rows.length ===
-      graft.sources.JdbcSnapshot.numChunks(mn, mx, 8096))
-    assert(rows.map(_.getAs[Long]("n_rows")).sum === total)
-    assert(rows.map(_.getAs[Long]("chunk_id")).toSeq ===
-      (0L until rows.length).toSeq)
+    val ids = queries.Tables.events(spark, sf)
+      .select(col("event_id")).as[Long].collect()
+    val (n, step) = chunking(ids.min, ids.max)
+    val want = ids.groupBy(id => math.min(n - 1, (id - ids.min) / step))
+      .toSeq.sortBy(_._1).map { case (c, in) =>
+        (c, in.length.toLong, in.min, in.max) }
+    assert(rows.map(r => (r.getAs[Long]("chunk_id"),
+      r.getAs[Long]("n_rows"), r.getAs[Long]("lo_key"),
+      r.getAs[Long]("hi_key"))).toSeq == want)
+    assert(rows.length == n)
     // chunk key ranges are disjoint and ordered
     rows.sliding(2).foreach {
       case Array(a, b) =>

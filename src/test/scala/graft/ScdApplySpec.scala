@@ -62,33 +62,6 @@ class ScdApplySpec extends SparkSpec {
     assert(rows(ScdApply.history(spark, stateDir)) == truth)
   }
 
-  test("out-of-order epochs converge to the batch truth under a shuffled " +
-      "replay, and re-delivered changes are no-ops") {
-    val truth = rows(SparkEntry.queries("cdc_scd2_history")(spark, sf))
-    import spark.implicits._
-    // deterministic NON-chronological permutation: order by a hash of
-    // the change id, so early and late changes interleave across epochs
-    val changes = queries.Tables.events(spark, sf)
-      .withColumn("sec", unix_timestamp(col("ts")))
-      .select(col("user_id"), col("event_id"), col("sec"))
-      .orderBy(xxhash64(col("event_id")))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-
-    var history = graft.operators.ScdApply.emptyHistory(spark)
-    changes.grouped((changes.size + 3) / 4).foreach { chunk =>
-      val b = chunk.toDF("user_id", "event_id", "sec")
-      history = graft.operators.ScdApply
-        .advanceOutOfOrder(history, b).localCheckpoint()
-    }
-    assert(rows(history) == truth)
-
-    // at-least-once: re-delivering an already-applied chunk is a no-op
-    val replayed = graft.operators.ScdApply.advanceOutOfOrder(history,
-      changes.take(100).toDF("user_id", "event_id", "sec"))
-    assert(rows(replayed) == truth)
-  }
-
   test("a crash between state write and marker commit never loses the " +
       "previously committed history") {
     import spark.implicits._
@@ -304,32 +277,6 @@ class ScdApplySpec extends SparkSpec {
     assert(rows(ScdApply.history(spark, stateDir)) == Seq(
       (7L, 100L, 1, 10L, Some(20L), false),
       (7L, 101L, 2, 20L, None, true)))
-  }
-
-  test("out-of-order STREAMING materializer converges to the batch truth " +
-      "under a shuffled replay") {
-    val truth = rows(SparkEntry.queries("cdc_scd2_history")(spark, sf))
-    import spark.implicits._
-    val changes = queries.Tables.events(spark, sf)
-      .withColumn("sec", unix_timestamp(col("ts")))
-      .select(col("user_id"), col("event_id"), col("sec"))
-      .orderBy(xxhash64(col("event_id")))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-
-    val stateDir = Files.createTempDirectory("graft_scd2_ooo").toString
-    implicit val sc = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val q = in.toDS().toDF("user_id", "event_id", "sec")
-      .writeStream
-      .foreachBatch(ScdApply.materializerOutOfOrder(spark, stateDir) _)
-      .start()
-    try {
-      changes.grouped((changes.size + 3) / 4).foreach { chunk =>
-        in.addData(chunk: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    assert(rows(ScdApply.history(spark, stateDir)) == truth)
   }
 
   test("junk ledger entries (partition fencing markers, strays) never " +

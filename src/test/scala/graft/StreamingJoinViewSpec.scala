@@ -211,38 +211,6 @@ class StreamingJoinViewSpec extends SparkSpec {
     assert(gotRows == Set((1L, "a1", "b1"), (3L, "a3", "b3")))
   }
 
-  test("time travel: every retained epoch's view reconstructs exactly") {
-    val root = Files.createTempDirectory("graft_jv_asof").toString
-    val retain = 4
-    val o = ordersFeed(); val c = customerFeed()
-    val o0 = o.filter(col("o_orderkey") % 3 === 0)
-    val o1 = o.filter(col("o_orderkey") % 3 === 1)
-    val o2 = o.filter(col("o_orderkey") % 3 === 2)
-    val cEven = c.filter(col("c_custkey") % 2 === 0)
-    val cOdd = c.filter(col("c_custkey") % 2 === 1)
-    StreamingJoinView.materializer(spark, root, oKeys, cKeys,
-      StreamingJoinView.DefaultBuckets, retain)(o0, cEven, 0L)
-    StreamingJoinView.materializer(spark, root, oKeys, cKeys,
-      StreamingJoinView.DefaultBuckets, retain)(o1, emptyC(), 1L)
-    StreamingJoinView.materializer(spark, root, oKeys, cKeys,
-      StreamingJoinView.DefaultBuckets, retain)(o2, cOdd, 2L)
-
-    def asOfKeys(e: Long): Set[(Long, Long)] =
-      StreamingJoinView.viewAsOf(spark, root, e, retain)
-        .select(col("o_orderkey"), col("c_custkey")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    def truthKeys(os: DataFrame, cs: DataFrame): Set[(Long, Long)] =
-      os.join(cs, col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("c_custkey")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    assert(asOfKeys(0L) == truthKeys(o0, cEven))
-    assert(asOfKeys(1L) == truthKeys(o0.unionAll(o1), cEven))
-    assert(asOfKeys(2L) == truthKeys(o, c))
-    // and the current read agrees with the newest as-of
-    assert(asOfKeys(2L) == got(root).map(t => (t._1, t._2)))
-  }
-
   test("cascade: a three-way view ((orders x customer) x nation) " +
       "maintained from the increment, retractions rippling through") {
     val r1 = Files.createTempDirectory("graft_jv_c1").toString

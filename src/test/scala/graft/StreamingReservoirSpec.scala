@@ -9,8 +9,8 @@ import graft.streaming.StreamingReservoir
 
 /** Durable stratified reservoir: any epoch split converges to the
   * exact deterministic top-k-per-stratum sample (bit-equal to the
-  * declared batch query for the uniform arm, to the batch A-ES
-  * computation for the weighted arm); re-ingestion is idempotent.
+  * declared batch query for the uniform priority); re-ingestion is
+  * idempotent.
   */
 class StreamingReservoirSpec extends SparkSpec {
 
@@ -23,18 +23,6 @@ class StreamingReservoirSpec extends SparkSpec {
     StreamingReservoir.sample(spark, dir)
       .select(col("lang"), col("doc_id")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
-
-  private def batchTopK(prio: org.apache.spark.sql.Column):
-      Set[(String, Long)] = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("lang"))
-      .orderBy(col("__prio"), col("doc_id"))
-    feed().withColumn("__prio", prio)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select(col("lang"), col("doc_id")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-  }
 
   test("uniform arm: epoch splits fold to the declared batch query's " +
       "exact sample") {
@@ -55,26 +43,6 @@ class StreamingReservoirSpec extends SparkSpec {
     val sizes = StreamingReservoir.sample(spark, dir)
       .groupBy(col("lang")).count().collect().map(_.getLong(1)).toSet
     assert(sizes == Set(K.toLong))
-  }
-
-  test("weighted arm: epoch splits fold to the batch A-ES sample, and " +
-      "heavier rows are favored") {
-    val dir = Files.createTempDirectory("graft_resv_w").toString
-    val prio = StreamingReservoir.weightedPriority(col("doc_id"),
-      col("n_chars"), "wres_")
-    val m = StreamingReservoir.materializer(spark, dir, Seq("lang"),
-      "doc_id", prio, K) _
-    m(feed().filter(col("doc_id") % 2 === 0), 0L)
-    m(feed().filter(col("doc_id") % 2 === 1), 1L)
-    assert(collectSample(dir) == batchTopK(prio))
-    // weighting sanity: the weighted sample's mean n_chars exceeds the
-    // corpus mean (inclusion probability ∝ n_chars)
-    val sampleMean = StreamingReservoir.sample(spark, dir)
-      .agg(avg(col("n_chars"))).head().getDouble(0)
-    val corpusMean = feed().agg(avg(col("n_chars"))).head().getDouble(0)
-    assert(sampleMean > corpusMean,
-      f"weighted sample mean $sampleMean%.1f should exceed corpus " +
-        f"mean $corpusMean%.1f")
   }
 
   test("the partial's rank filter plans as a partial WindowGroupLimit " +

@@ -134,33 +134,6 @@ class StreamingRollupSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
-  test("time travel: the rollup as of each retained epoch is the " +
-      "prefix aggregate") {
-    val stateDir = Files.createTempDirectory("graft_rollup_asof").toString
-    val retain = 4
-    val rows = feed()
-    val chunks = Seq(
-      rows.filter(col("event_id") % 3 === 0),
-      rows.filter(col("event_id") % 3 === 1),
-      rows.filter(col("event_id") % 3 === 2))
-    chunks.zipWithIndex.foreach { case (chunk, e) =>
-      StreamingRollup.materializer(spark, stateDir, keys, sums,
-        StreamingRollup.DefaultBuckets, retain)(chunk, e.toLong)
-    }
-    def prefixTruth(n: Int): Map[String, Long] =
-      chunks.take(n).reduce(_ unionAll _)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    (0 until 3).foreach { e =>
-      val asOf = StreamingRollup.rollupAsOf(spark, stateDir, e.toLong,
-          retain)
-        .collect()
-        .map(r => r.getString(r.fieldIndex("event_type")) ->
-          r.getLong(r.fieldIndex("n"))).toMap
-      assert(asOf == prefixTruth(e + 1), s"as-of epoch $e")
-    }
-  }
-
   test("multi-column group keys fold exactly") {
     val stateDir = Files.createTempDirectory("graft_rollup_mk").toString
     val rows = queries.Tables.events(spark, sf)

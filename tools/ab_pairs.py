@@ -12,6 +12,11 @@ It prints every run's four end-to-end metrics and `failed`, then per metric
 the medians, the parent's IQR, the change's wins (by the metric's `better`
 direction in BENCHMARK.json) and whether the pairs clear the acceptance
 shape: at least 9 wins in 10 and a median gap larger than the parent's IQR.
+Beside it stands the no-regression verdict a change that claims no gain is
+judged by: `ok` when the change median is worse than the parent median by at
+most the metric's BENCHMARK.json `bound` (a fraction of the parent median),
+`worse` when by more, and `unresolved` when the parent's IQR/median exceeds
+that bound, so the runs spread too widely to tell.
 Exits 1 when any run failed or delivered a wrong record.
 """
 import argparse
@@ -41,6 +46,14 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def no_regression(pm, piqr, cm, sign, bound):
+    """`ok`, `worse` or `unresolved`: is the change median `cm` within
+    `bound` (relative) of the parent median `pm` in the bad direction?"""
+    if pm == 0 or piqr / abs(pm) > bound:
+        return "unresolved"
+    return "ok" if -sign * (cm - pm) / abs(pm) <= bound else "worse"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent")
@@ -53,6 +66,7 @@ def main():
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
         spec = json.load(f)
     better = {m["name"]: m["better"] for m in spec["end_to_end"]}
+    bound = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     names = list(better)
     runs = {"parent": [], "change": []}
     failed = 0
@@ -69,7 +83,7 @@ def main():
                   + f"  {r.get('failed') if r else 'run failed'}", flush=True)
 
     print(f"\n{'metric':18s} {'parent p50':>12} {'parent IQR':>12} {'change p50':>12} "
-          f"{'change IQR':>12} {'wins':>7}  clears")
+          f"{'change IQR':>12} {'wins':>7}  clears  no-regression")
     for n in names:
         ps = [r[n] for r in runs["parent"]]
         cs = [r[n] for r in runs["change"]]
@@ -79,7 +93,8 @@ def main():
         wins = sum(1 for p, c in zip(ps, cs) if sign * (c - p) > 0)
         clears = wins * 10 >= 9 * len(ps) and sign * (cm - pm) > p3 - p1
         print(f"{n:18s} {pm:12.3f} {p3 - p1:12.3f} {cm:12.3f} {c3 - c1:12.3f} "
-              f"{wins:3d}/{len(ps):<3d}  {'yes' if clears else 'no'}")
+              f"{wins:3d}/{len(ps):<3d}  {'yes' if clears else 'no':6s}  "
+              f"{no_regression(pm, p3 - p1, cm, sign, bound[n])}")
     if failed:
         print(f"\n{failed} run(s) failed or delivered wrong records", file=sys.stderr)
         sys.exit(1)
