@@ -66,8 +66,8 @@ object GraftFunctions {
   /** Register graft functions on a live session. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    descriptors.foreach { case (id, info, builder) =>
-      reg.registerFunction(id, info, builder)
+    descriptors.foreach { case (id, info, build) =>
+      reg.registerFunction(id, info, build)
     }
   }
 }
