@@ -50,13 +50,14 @@ import org.apache.spark.sql.functions._
 object Scale100 {
 
   def main(args: Array[String]): Unit = {
-    val outPath = args.headOption.getOrElse("SCALE100_r14.json")
-    val injectInto = args.drop(1).headOption
-    HostLoad.awaitQuiet(threshold = 8.0, maxWaitSec = 180, tag = "scale100")
-    val spark = Sessions.local(32, partitions = 64)
+    val in = ScaleHarness.inputs(args)
+    val outPath = in.positional.headOption.getOrElse("SCALE100_r14.json")
+    val injectInto = in.positional.drop(1).headOption
+    HostLoad.awaitQuiet(threshold = in.cores / 4.0, maxWaitSec = 180, tag = "scale100")
+    val spark = Sessions.local(in.cores, partitions = in.partitions)
     spark.conf.set("spark.graft.dedup.derivationCache", "true")
     val dir = "/tmp/graft_scale100"
-    val sf = "/root/testdata/sf0.1"
+    val sf = in.sf
 
     // ---- build the 100x tables ----
     val (nEvents, nDocs, nVecs) =
@@ -427,7 +428,7 @@ object Scale100 {
     val rowsJson = jnum(opRows)
     val total = opSecs.values.sum
     val json =
-      s"""{"metric":"scale_smoke_100x","value":${math.round(total * 100) / 100.0},"unit":"sec","scale":"100x-sf0.1","built":{"events":$nEvents,"documents":$nDocs,"embeddings":$nVecs},"op_sec":${jnum(
+      s"""{"metric":"scale_smoke_100x","value":${math.round(total * 100) / 100.0},"unit":"sec","scale":"100x-${in.sfName}","built":{"events":$nEvents,"documents":$nDocs,"embeddings":$nVecs},"op_sec":${jnum(
           opSecs)},"op_rows":$rowsJson,"gates":{"clone_recall_undercap":${math
           .round(cloneRecall * 10000) / 10000.0},"clone_pairs_undercap":$nUnderPairs,"clone_recall_in_scope":${math
           .round(recallInScope * 10000) / 10000.0},"clone_pairs_in_scope":$scopePairs,"sig_merged_clusters":$sigMerged,"sig_merged_pairs":$sigMergedPairs,"lost_clusters":$nLost,"lost_all_exact_recovered":$lostExactRecovered,"clone_recall_threshold":0.97,"clone_recall_gated_on":"in_scope","clone_pass":$clonePass,"overcap_clusters":$nOverClusters,"overcap_cluster_size_min":$overSizeMin,"overcap_cluster_size_max":$overSizeMax,"overcap_docs":$overMass,"overcap_pairs_excluded":$nOverPairs,"overcap_pass":$overPass,"ann_recall_at5":${math

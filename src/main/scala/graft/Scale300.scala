@@ -30,12 +30,13 @@ import org.apache.spark.sql.functions._
 object Scale300 {
 
   def main(args: Array[String]): Unit = {
-    val outPath = args.headOption.getOrElse("SCALE300_r16.json")
-    val injectInto = args.drop(1).headOption
-    HostLoad.awaitQuiet(threshold = 8.0, maxWaitSec = 180, tag = "scale300")
-    val spark = Sessions.local(32, partitions = 64)
+    val in = ScaleHarness.inputs(args)
+    val outPath = in.positional.headOption.getOrElse("SCALE300_r16.json")
+    val injectInto = in.positional.drop(1).headOption
+    HostLoad.awaitQuiet(threshold = in.cores / 4.0, maxWaitSec = 180, tag = "scale300")
+    val spark = Sessions.local(in.cores, partitions = in.partitions)
     val dir = "/tmp/graft_scale300"
-    val sf = "/root/testdata/sf0.1"
+    val sf = in.sf
 
     // 300x events: same construction as the 100x build, 3x the clones
     val base = graft.queries.Tables.events(spark, sf)
@@ -91,7 +92,7 @@ object Scale300 {
 
     val json =
       s"""{"metric":"scale_smoke_300x","value":${math.round(ivmRes
-          .steadyOverheadSec * 100) / 100.0},"unit":"sec","scale":"300x-sf0.1","built":{"events":$nEvents},"materializers":{"cdc_ivm_e2e":${ScaleHarness
+          .steadyOverheadSec * 100) / 100.0},"unit":"sec","scale":"300x-${in.sfName}","built":{"events":$nEvents},"materializers":{"cdc_ivm_e2e":${ScaleHarness
           .ivmJson(ivmRes, BulkBuckets)}},"bucket_sizing":{"rows_per_bucket_target":35000,"buckets_bulk":$BulkBuckets,"buckets_steady":$IvmBuckets,"replica_rows":${ivmRes.repGot}},"memory":{"heap_max_mb":$heapMaxMb,"old_gen_peak_mb":$oldGenPeakMb,"headroom_mb":${heapMaxMb - oldGenPeakMb}},"failed":${failed
           .map("\"" + _ + "\"").mkString("[", ",", "]")},"methodology":"300x IVM chain through the shared ScaleHarness.runIvmE2E (identical protocol code to the 30x/100x smokes): 4 bulk epochs at 256 buckets (the pre-growth deployment shape), then a 256->768 wave migration at the 27M-row frontier ($MigrationWaves fenced waves, ~3.4M rows each, migration-window old-gen gated <= ${ScaleGates.MigrationWindowOldGenMaxMb}MB), then dim-ripple epochs 4-5 + facts-only steady epochs 6-9 at 768 (~35k replica rows/bucket), parity restated PER BUCKET GROUP (8 groups, count + order-free content hash, live side bucket-pruned) vs from-scratch batch answers, steady gated <= 3.5s (ScaleGates.Ivm100SteadyOverheadMaxSec)"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

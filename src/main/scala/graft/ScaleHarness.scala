@@ -44,6 +44,31 @@ private[graft] object ScaleHarness {
     }
   }
 
+  /** A scale driver's inputs: its positional arguments, and the fixture
+    * dir, core count and shuffle partitions from `-sf`, `-cores` and
+    * `-partitions` (defaults sf0.1, 32 cores, 64 partitions).
+    */
+  final case class Inputs(positional: Seq[String], sf: String, cores: Int,
+      partitions: Int) {
+    /** The fixture dir's last path element, e.g. `sf0.1`. */
+    def sfName: String = java.nio.file.Paths.get(sf).getFileName.toString
+  }
+
+  def inputs(args: Array[String]): Inputs = {
+    val flags = Set("-sf", "-cores", "-partitions")
+    val (kv, rest) = args.indices.foldLeft((Map.empty[String, String],
+        Vector.empty[String])) { case ((m, pos), i) =>
+      if (flags(args(i))) {
+        require(i + 1 < args.length, s"${args(i)} needs a value")
+        (m + (args(i) -> args(i + 1)), pos)
+      } else if (i > 0 && flags(args(i - 1))) (m, pos)
+      else (m, pos :+ args(i))
+    }
+    Inputs(rest, kv.getOrElse("-sf", "/root/testdata/sf0.1"),
+      kv.get("-cores").fold(32)(_.toInt),
+      kv.get("-partitions").fold(64)(_.toInt))
+  }
+
   def hadoopFs(spark: SparkSession): org.apache.hadoop.fs.FileSystem =
     org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)

@@ -58,12 +58,13 @@ object ScaleSmoke {
     "rel_tpch_q5", "rel_tpch_q9", "rel_tpch_q21")
 
   def main(args: Array[String]): Unit = {
-    val outPath = args.headOption.getOrElse("SCALE_r05.json")
+    val in = ScaleHarness.inputs(args)
+    val outPath = in.positional.headOption.getOrElse("SCALE_r05.json")
     // same quiet-window discipline as Bench: a smoke started right
     // after a sweep/test run times contention, not the operators (a
     // hot capture this round showed pagerank +77% on unchanged code)
-    HostLoad.awaitQuiet(threshold = 8.0, maxWaitSec = 180, tag = "scale")
-    val spark = Sessions.local(32, partitions = 64)
+    HostLoad.awaitQuiet(threshold = in.cores / 4.0, maxWaitSec = 180, tag = "scale")
+    val spark = Sessions.local(in.cores, partitions = in.partitions)
     // session derivation cache ON (the long-lived-session deployment
     // shape): the LSH signature/pair derivation — shared verbatim by
     // the whole dedup/graph family — is built ONCE, timed as its own
@@ -74,7 +75,7 @@ object ScaleSmoke {
     val dir = "/tmp/graft_scale"
 
     // ---- build the 30x tables (shifted ids keep keys unique) ----
-    val base = queries.Tables.events(spark, "/root/testdata/sf0.1")
+    val base = queries.Tables.events(spark, in.sf)
     (0 until 30).map(i =>
       base.withColumn("event_id", col("event_id") + lit(i.toLong * 100000)))
       .reduce(_ unionAll _)
@@ -97,7 +98,7 @@ object ScaleSmoke {
     // stays near 1 and 4x4 MinHash-LSH catches the pair w.h.p., giving
     // dedup_quality_report a real, non-empty truth set to measure
     // recall against at 30x.
-    val docs = queries.Tables.documents(spark, "/root/testdata/sf0.1")
+    val docs = queries.Tables.documents(spark, in.sf)
     val saturated = (0 until 30).map(i =>
       docs.filter(col("doc_id") % 10 =!= 0)
         .withColumn("doc_id", col("doc_id") + lit(i.toLong * 1000000)))
@@ -111,7 +112,7 @@ object ScaleSmoke {
       .withColumn("text", concat(col("text"), lit(" graftvariantmark")))
     saturated.unionAll(stratum).unionAll(stratumVariant)
       .repartition(32).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val embs = queries.Tables.embeddings(spark, "/root/testdata/sf0.1")
+    val embs = queries.Tables.embeddings(spark, in.sf)
     (0 until 30).map(i =>
       embs.withColumn("vec_id", col("vec_id") + lit(i.toLong * 1000000)))
       .reduce(_ unionAll _)
@@ -121,18 +122,18 @@ object ScaleSmoke {
     // every customer/supplier/part key now carries 30x the fact mass,
     // a deliberate fan-in stress on the macro joins. Dims copy 1x.
     val OrderShift = 1000000L
-    val ordersBase = queries.Tables.orders(spark, "/root/testdata/sf0.1")
+    val ordersBase = queries.Tables.orders(spark, in.sf)
     (0 until 30).map(i => ordersBase
         .withColumn("o_orderkey", col("o_orderkey") + lit(i * OrderShift)))
       .reduce(_ unionAll _)
       .repartition(32).write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val liBase = queries.Tables.lineitem(spark, "/root/testdata/sf0.1")
+    val liBase = queries.Tables.lineitem(spark, in.sf)
     (0 until 30).map(i => liBase
         .withColumn("l_orderkey", col("l_orderkey") + lit(i * OrderShift)))
       .reduce(_ unionAll _)
       .repartition(32).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     Seq("customer", "supplier", "part", "nation", "region").foreach { t =>
-      spark.read.parquet(s"/root/testdata/sf0.1/$t.parquet")
+      spark.read.parquet(s"${in.sf}/$t.parquet")
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")
     }
     val nEvents = spark.read.parquet(s"$dir/events.parquet").count()
@@ -683,7 +684,7 @@ object ScaleSmoke {
     val rowsJson = jnum(opRows)
     val total = opSecs.values.sum
     val json =
-      s"""{"metric":"scale_smoke_30x","value":${math.round(total * 100) / 100.0},"unit":"sec","scale":"30x-sf0.1","built":{"events":$nEvents,"documents":$nDocs,"embeddings":$nVecs},"op_sec":${jnum(
+      s"""{"metric":"scale_smoke_30x","value":${math.round(total * 100) / 100.0},"unit":"sec","scale":"30x-${in.sfName}","built":{"events":$nEvents,"documents":$nDocs,"embeddings":$nVecs},"op_sec":${jnum(
           opSecs)},"op_rows":$rowsJson,"gates":{"ann_recall_at5":${math.round(
           annRecall * 10000) / 10000.0},"ann_threshold":0.30,"ann_pass":$annPass,"dedup_clone_recall":${math.round(
           cloneRecall * 10000) / 10000.0},"dedup_clone_pairs":$nClonePairs,"dedup_recall_threshold":0.95,"dedup_pass":$dqPass,"jaccard_truth_pairs":$nTrue,"jaccard_truth_precision":${dqInfo._1.map(_.toString)
