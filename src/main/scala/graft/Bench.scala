@@ -174,7 +174,7 @@ object Bench {
       // dedup_minhash_pairs precedes it, the same session-level
       // interaction the r11 tree-anchored A/B chased. Blocking, and
       // BEFORE t0, so the removal never bleeds into the timed window
-      // (the ScaleSmoke timeOp pattern).
+      // (the `graft.Scale` timeOp pattern).
       //
       // INVARIANT (load-bearing): every rep rebuilds its full plan from
       // scratch through `fn` — no DataFrame, cache, or checkpoint is

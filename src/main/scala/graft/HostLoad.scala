@@ -1,7 +1,7 @@
 package graft
 
 /** Host-load capture discipline shared by the timing harnesses (Bench,
-  * ScaleSmoke): poll /proc/loadavg until the 1-minute load drops under
+  * Scale): poll /proc/loadavg until the 1-minute load drops under
   * `threshold`, up to `maxWaitSec` — a capture window that opens while
   * the previous sweep/test run is still draining times contention, not
   * the operators.
@@ -22,11 +22,7 @@ object HostLoad {
     var load = Double.MaxValue
     var waited = false
     while (System.nanoTime() < deadline && {
-      load = try new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/loadavg")),
-          java.nio.charset.StandardCharsets.UTF_8)
-          .split("\\s+")(0).toDouble
-        catch { case _: Throwable => 0.0 }
+      load = current()
       load > threshold
     }) {
       if (!waited) System.err.println(

@@ -31,6 +31,8 @@ import graft.streaming.CdcPipeline
 object MySQLCdcToKafka {
   def main(args: Array[String]): Unit = {
     val params = CdcParams.fromArgs(args)
+    // the only sink here is the at-least-once kafkaSink
+    params.requireAtLeastOnceForKafkaSink()
     val spark = SparkSession.builder()
       .appName("MySQL Snapshot + Binlog + Kafka")
       .config("spark.sql.shuffle.partitions", params.parallel.toString)
@@ -56,6 +58,8 @@ object MySQLCdcToKafka {
 object MongoCdcToKafka {
   def main(args: Array[String]): Unit = {
     val params = CdcParams.fromArgs(args)
+    // the only sink here is the at-least-once kafkaSink
+    params.requireAtLeastOnceForKafkaSink()
     val spark = SparkSession.builder()
       .appName("Mongo ChangeStream + Kafka")
       .config("spark.sql.shuffle.partitions", params.parallel.toString)
@@ -150,11 +154,6 @@ object ReplayMongoCdcApplyLocal {
   }
 }
 
-/** Local/file-replay variant — the whole pipeline against the parquet
-  * fixtures with a console/memory sink; the in-repo runnable mirror of
-  * the reference's commented-out local debug mode
-  * (MySQLCDC2AWSMSK.scala:169).
-  */
 /** Runnable demo of the FULL exactly-once produce path with no broker:
   * replay → enrichment → Kafka projection → `transactionalSink`
   * (per-(epoch, partition) fenced transactional produce, recovery
@@ -291,6 +290,11 @@ object ReplayCdcApplyLocal {
   }
 }
 
+/** Local/file-replay variant — the whole pipeline against the parquet
+  * fixtures with a console/memory sink; the in-repo runnable mirror of
+  * the reference's commented-out local debug mode
+  * (MySQLCDC2AWSMSK.scala:169).
+  */
 object ReplayCdcLocal {
   def main(args: Array[String]): Unit = {
     val params = CdcParams.fromArgs(args)

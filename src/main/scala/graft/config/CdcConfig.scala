@@ -170,9 +170,11 @@ final case class CdcParams(
     checkpointDir: String = "",
     checkpointInterval: Int = 60,
     // reference default (MySQLCDC2AWSMSK.scala:187): exactly_once unless
-    // the flag is the literal "at_least_once". No main code reads it yet:
-    // the cluster apps always use kafkaSink until a transactional
-    // KafkaProducer routes them through CdcPipeline.transactionalSink
+    // the flag is the literal "at_least_once". The cluster apps can only
+    // deliver at_least_once (kafkaSink) until a transactional
+    // KafkaProducer routes them through CdcPipeline.transactionalSink, so
+    // they refuse anything else at submit via
+    // [[requireAtLeastOnceForKafkaSink]]
     deliveryGuarantee: String = "exactly_once",
     parallel: Int = 4,
     disableChaining: Boolean = false,
@@ -221,6 +223,21 @@ final case class CdcParams(
         "change stream ships NO row image on updates and the apply " +
         "path fails at the first update. Pass -full_document " +
         "updateLookup.")
+
+  /** The config-time contract of the cluster apps, whose only sink is
+    * the at-least-once `kafkaSink`: any `-delivery_guarantee` but the
+    * literal `at_least_once` reads as exactly_once (as in the reference),
+    * which they cannot deliver without kafka-clients' transactional
+    * producer, so fail at submit instead of silently delivering
+    * at-least-once.
+    */
+  def requireAtLeastOnceForKafkaSink(): Unit =
+    require(deliveryGuarantee == "at_least_once",
+      s"-delivery_guarantee is '$deliveryGuarantee', which reads as " +
+        "exactly_once, but this app writes through the at-least-once " +
+        "Kafka sink: exactly-once needs a transactional KafkaProducer and " +
+        "kafka-clients is not on the classpath. Pass -delivery_guarantee " +
+        "at_least_once.")
 
   /** Server-id range semantics (reference MySQLCDC2AWSMSK.scala:268-270,
     * README.md:39): `"5400-5412"` or a single `"5400"`; every parallel

@@ -98,21 +98,14 @@ object Ivf {
       .getField("cell_id")
   }
 
-  /** Assign each vector to its nearest-centroid cell (L2 argmin via
-    * -2·v·c + c·c; v·v is constant per vector). Deterministic tie-break
-    * on cell_id. Collects the k-row codebook and assigns PER ROW —
-    * zero exchange (see [[nearestCell]]); eager on `cents` (k rows).
-    */
-  def assign(vecs: DataFrame, cents: DataFrame): DataFrame =
-    vecs.select(col("vec_id"),
-      nearestCell(codebookRows(cents), col("v")).as("cell_id"))
-
-  /** [[assign]] carrying the vector columns through (no aggregate
-    * anymore — the per-row argmin keeps every input column in place;
-    * the name survives for its call sites and the scaladoc history:
-    * the r13 carried-vector aggregate already deleted the corpus
-    * re-join, and the r17 per-row argmin deletes the aggregate's own
-    * hash(vec_id) exchange too).
+  /** Assign each vector (vec_id, v, norm) to its nearest-centroid cell
+    * (L2 argmin via -2·v·c + c·c; v·v is constant per vector),
+    * carrying the vector columns through. Deterministic tie-break on
+    * cell_id. Collects the k-row codebook and assigns PER ROW — zero
+    * exchange (see [[nearestCell]]); eager on `cents` (k rows). (No
+    * aggregate anymore: the r13 carried-vector aggregate deleted the
+    * corpus re-join, and the r17 per-row argmin deleted the aggregate's
+    * own hash(vec_id) exchange too.)
     */
   private[graft] def assignCarrying(vecs: DataFrame, cents: DataFrame): DataFrame =
     vecs.select(col("vec_id"),
@@ -138,7 +131,7 @@ object Ivf {
     * Checkpoint lifecycle: each `search` call localCheckpoints the
     * corpus fresh and does NOT unpersist it — the single-shot-query
     * contract every declared query follows (the harness owns the
-    * session and sweeps storage between operators; ScaleSmoke's
+    * session and sweeps storage between operators; `graft.Scale`'s
     * per-op unpersist already covers the bench path). A long-lived
     * session issuing repeated searches should either sweep
     * `getPersistentRDDs` between calls or build the index ONCE and

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Session-scoped derivation cache — OFF by default
   * (`spark.graft.dedup.derivationCache=true` enables it).
   *
-  * A long-lived analytics session (the ScaleSmoke harness; a real
+  * A long-lived analytics session (the `graft.Scale` driver; a real
   * cluster deployment running the dedup/graph/gram families
   * back-to-back) derives the SAME intermediate frames for every family
   * member: the LSH family shares minhash signatures and candidate
@@ -77,7 +77,7 @@ object DerivationCache {
   }
 
   /** Persisted RDD ids owned by live memo entries of this session —
-    * storage sweeps (ScaleSmoke's per-op unpersist) must skip these.
+    * storage sweeps (`graft.Scale`'s per-op unpersist) must skip these.
     */
   def memoOwnedRddIds(s: SparkSession): Set[Int] = {
     import scala.jdk.CollectionConverters._
@@ -88,7 +88,7 @@ object DerivationCache {
 
   /** Drop this session's memo entries and unpersist their blocks — for
     * harnesses that are done with a family and want the storage back
-    * (ScaleSmoke before its materializer sections: accumulated storage
+    * (`graft.Scale` before its materializer arms: accumulated storage
     * blocks measurably inflate later tiny-stage work).
     */
   def clear(s: SparkSession): Unit = {

@@ -20,11 +20,12 @@ import graft.sources.CdcReplay
   *   - at-least-once (README.md:33 recommends it; Spark's Kafka sink is
   *     at-least-once natively) is [[kafkaSink]]. Exactly-once to Kafka
   *     (the reference's Flink default) is [[transactionalSink]]:
-  *     `foreachBatch` with a fenced transactional producer. No main
-  *     code reads `-delivery_guarantee` yet: the cluster apps always
-  *     use [[kafkaSink]] until a transactional `KafkaProducer` can back
-  *     [[transactionalSink]] there (kafka-clients is not on the
-  *     classpath).
+  *     `foreachBatch` with a fenced transactional producer. The
+  *     cluster apps use [[kafkaSink]] until a transactional
+  *     `KafkaProducer` can back [[transactionalSink]] there
+  *     (kafka-clients is not on the classpath), so they refuse any
+  *     `-delivery_guarantee` but `at_least_once` at submit
+  *     (`CdcParams.requireAtLeastOnceForKafkaSink`).
   *   - restart fixedDelay(3, 10 s) → Spark task retries + the streaming
   *     query restart policy of the hosting application.
   *

@@ -22,19 +22,15 @@ import org.apache.spark.sql.functions._
   *   4. fold the batch's first-seen rows into the index for the next
   *      epoch.
   *
-  * Under a doc_id-ordered feed (each epoch's doc_ids above every
-  * earlier epoch's) the union of every epoch's spans equals the batch query
-  * bit-for-bit — proven in StreamingOpsSpec. Out-of-order feeds get
-  * as-of-ARRIVAL semantics instead (an early doc arriving late cannot
-  * retroactively flag docs already emitted); both are prefix views,
-  * only the prefix differs.
+  * The feed is doc_id-ordered (each epoch's doc_ids above every
+  * earlier epoch's); under it the union of every epoch's spans equals
+  * the batch query bit-for-bit — proven in StreamingOpsSpec.
   *
   * State/scale: the index is O(distinct grams) at 24 bytes/row —
   * inherent to the operator (the batch query's first-seen aggregate
   * materializes the same set per run) — joined on 8-byte hash keys,
-  * never gram strings. Ordered feeds write only an O(batch) append
-  * delta per epoch ([[advanceOrdered]]); the O(history) re-merge is
-  * reserved for the out-of-order mode ([[advance]]). The batch twin
+  * never gram strings. The ordered feed writes only an O(batch)
+  * append delta per epoch ([[advanceOrdered]]). The batch twin
   * string-verifies candidates (collisions can only add candidates that
   * verification rejects); the standing index cannot afford strings, so
   * the stream verifies against the 128-bit double hash — a false span
@@ -84,29 +80,6 @@ object StreamingDupSpans {
       .agg(min(col("pos")).as("span_start"),
         (max(col("pos")) - min(col("pos")) + L).as("span_words"))
       .select(col("doc_id"), col("span_start"), col("span_words"))
-  }
-
-  /** One OUT-OF-ORDER epoch: mine `batch` (whole docs: doc_id, text)
-    * against the standing `index`, returning (spans of this batch,
-    * updated FULL index). A late-arriving early doc can lower an existing
-    * key's dmin, so the index must be re-merged wholesale — per-epoch
-    * write cost O(corpus history). Ordered feeds should use
-    * [[advanceOrdered]], whose per-epoch write is O(batch).
-    * Pure in (index, batch) — replay-idempotent under batch fencing.
-    */
-  def advance(index: DataFrame, batch: DataFrame): (DataFrame, DataFrame) = {
-    val bg = gramRows(batch)
-    val batchMin = bg.groupBy(col("gh1"), col("gh2"))
-      .agg(min(col("doc_id")).as("bmin"))
-    // corpus-so-far first-seen per hash: standing dmin folded with the
-    // batch's own min — an 8-byte-keyed outer merge, never strings
-    val merged = index.join(batchMin, Seq("gh1", "gh2"), "full_outer")
-      .select(col("gh1"), col("gh2"),
-        least(coalesce(col("dmin"), col("bmin")),
-          coalesce(col("bmin"), col("dmin"))).as("dmin"))
-    val spans = toSpans(bg.join(merged, Seq("gh1", "gh2"))
-      .filter(col("doc_id") > col("dmin")))
-    (spans, merged)
   }
 
   /** Distinct gram hashes of `batch` absent from `index` — the expected

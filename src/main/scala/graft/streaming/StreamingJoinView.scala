@@ -160,22 +160,10 @@ object StreamingJoinView {
       .drop("__ml", "__mr")
   }
 
-  /** foreachBatch body, insert-only feeds (every row multiplicity +1).
-    * A streaming caller with one tagged feed splits it:
-    * `materializer(...)(batch.filter($"side"==="l").select(lCols),
-    * batch.filter($"side"==="r").select(rCols), id)`.
-    * Returns this epoch's view increment (see [[materializerSigned]]).
-    */
-  def materializer(spark: SparkSession, root: String,
-      leftKeys: Seq[String], rightKeys: Seq[String],
-      numBuckets: Int = DefaultBuckets, retain: Int = 2)(
-      leftBatch: DataFrame, rightBatch: DataFrame, batchId: Long): DataFrame =
-    materializerSigned(spark, root, leftKeys, rightKeys,
-      None, None, numBuckets, retain)(leftBatch, rightBatch, batchId)
-
-  /** foreachBatch body with retractions: each side may carry a sign
-    * column (±1, the CDC after/before-image shape); `None` means
-    * insert-only for that side.
+  /** foreachBatch body: each side may carry a sign column (±1, the CDC
+    * after/before-image shape); `None` means insert-only for that side
+    * (every row multiplicity +1). A streaming caller with one tagged
+    * feed splits it into the two side batches.
     *
     * Returns this epoch's VIEW INCREMENT (both sides' columns + `__m`
     * multiplicity deltas, negative for retracted join rows) — the
@@ -456,23 +444,5 @@ object StreamingJoinView {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }.drop("__jkey")
-  }
-
-  /** [[view]] exploded to plain bag-semantics rows (each row repeated
-    * `__m` times) — insert-only convenience; errors if any
-    * multiplicity is negative (a retraction still in flight has no
-    * bag representation).
-    */
-  def viewRows(spark: SparkSession, root: String): DataFrame = {
-    val v = view(spark, root)
-    // explicit pre-pass: explode(array_repeat) silently DROPS a
-    // negative-multiplicity row (empty array), so an in-plan guard
-    // could never fire — and viewRows is a convenience reader, not the
-    // per-epoch hot path, so one extra cheap scan is the honest check
-    require(v.filter(col("__m") < 0).limit(1).collect().isEmpty,
-      "negative join-view multiplicity: a retraction is in flight; " +
-        "read view() for the signed form")
-    v.withColumn("__r", explode(array_repeat(lit(1), col("__m").cast("int"))))
-      .drop("__m", "__r")
   }
 }

@@ -36,51 +36,9 @@ object StreamingRollup {
     */
   val DefaultBuckets = 16
 
-  /** One micro-batch's partial: one row per group with `__gkey` (the
-    * packed bucket/join key), the group columns, `n` (count) and one
-    * exact-decimal sum per entry in `sums` (output column -> summed
-    * input expression, cast decimal(18,2) before the partial so the
-    * fold is order-free).
-    */
-  def partials(batch: DataFrame, keyCols: Seq[String],
-      sums: Seq[(String, String)]): DataFrame =
-    batch.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("n"),
-        sums.map { case (out, in) =>
-          sum(expr(in).cast("decimal(18,2)")).as(out) }: _*)
-      .withColumn("__gkey", StateKeys.packKey(keyCols))
-
   private def emptyLike(spark: SparkSession, p: DataFrame): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], p.schema)
-
-  /** foreachBatch body: fold one batch into the rollup at `stateDir`.
-    * `sums` maps output column -> input expression (see [[partials]]).
-    */
-  def materializer(spark: SparkSession, stateDir: String,
-      keyCols: Seq[String], sums: Seq[(String, String)],
-      numBuckets: Int = DefaultBuckets, retain: Int = 2)(
-      batch: DataFrame, batchId: Long): Unit = {
-    ExactlyOnce.ensureLedgerTag(spark, stateDir, StateKeys.CodecTag)
-    val p = partials(batch, keyCols, sums)
-    val sumCols = "n" +: sums.map(_._1)
-    ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, p,
-      "__gkey", numBuckets, retain,
-      advancePre = Some(fusedMerge(p, keyCols, sumCols, numBuckets,
-        signed = false)))(emptyLike(spark, p)) { current =>
-      // merge-of-partials: groups untouched by the batch pass through
-      // (they are in touched buckets only by hash collision), touched
-      // groups fold sum-of-sums / count-of-counts — exact in
-      // long/decimal, so the result is independent of epoch split
-      current.unionByName(p)
-        .groupBy((col("__gkey") +: keyCols.map(col)): _*)
-        .agg(sumCols.map(c => sum(col(c)).as(c)).head,
-          sumCols.map(c => sum(col(c)).as(c)).tail: _*)
-        .select((col("__gkey") +: keyCols.map(col)) ++
-          sumCols.map(col): _*)
-    }
-    ()
-  }
 
   /** Fused advance for the clustering path: the merge-of-partials
     * grouped on (`__bucket`, `__gkey`, keys) over a `__bucket`-
@@ -90,7 +48,7 @@ object StreamingRollup {
     * rows as the generic path.
     */
   private def fusedMerge(p: DataFrame, keyCols: Seq[String],
-      sumCols: Seq[String], numBuckets: Int, signed: Boolean)(
+      sumCols: Seq[String], numBuckets: Int)(
       current: DataFrame, parts: Int): DataFrame = {
     val merged = current.unionByName(p)
       .withColumn("__bucket", ExactlyOnce.bucketOf("__gkey", numBuckets))
@@ -98,7 +56,7 @@ object StreamingRollup {
       .groupBy((col("__bucket") +: col("__gkey") +: keyCols.map(col)): _*)
       .agg(sumCols.map(c => sum(col(c)).as(c)).head,
         sumCols.map(c => sum(col(c)).as(c)).tail: _*)
-    (if (signed) merged.filter(col("n") =!= 0) else merged)
+    merged.filter(col("n") =!= 0)
       .select((col("__gkey") +: keyCols.map(col)) ++
         sumCols.map(col) :+ col("__bucket"): _*)
   }
@@ -118,7 +76,9 @@ object StreamingRollup {
             expr(in).cast("decimal(18,2)")).as(out) }: _*)
       .withColumn("__gkey", StateKeys.packKey(keyCols))
 
-  /** [[materializer]] with retractions: rows where `signCol` = −1
+  /** foreachBatch body: fold one batch into the rollup at `stateDir`.
+    * `sums` maps output column -> summed input expression. Rows where
+    * `signCol` = −1 (an insert-only feed carries +1 throughout)
     * subtract from their group, and a group whose live count reaches
     * zero VANISHES from the rollup (state never accumulates dead
     * groups). Exact for any insert/delete interleaving — a retraction
@@ -138,8 +98,8 @@ object StreamingRollup {
     val sumCols = "n" +: sums.map(_._1)
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, p,
       "__gkey", numBuckets, retain,
-      advancePre = Some(fusedMerge(p, keyCols, sumCols, numBuckets,
-        signed = true)))(emptyLike(spark, p)) { current =>
+      advancePre = Some(fusedMerge(p, keyCols, sumCols, numBuckets)))(
+      emptyLike(spark, p)) { current =>
       current.unionByName(p, allowMissingColumns = false)
         .groupBy((col("__gkey") +: keyCols.map(col)): _*)
         .agg(sumCols.map(c => sum(col(c)).as(c)).head,

@@ -81,8 +81,9 @@ class BucketedGuardsSpec extends SparkSpec {
     val control = Files.createTempDirectory("graft_cb_ctrl").toString
     val kvs = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "a", 30.0))
     def run(d: String): Unit =
-      graft.streaming.StreamingRollup.materializer(spark, d, Seq("g"),
-        Seq("v_sum" -> "v"))(kvs.toDF("id", "g", "v"), 0L)
+      graft.streaming.StreamingRollup.materializerSigned(spark, d, Seq("g"),
+        Seq("v_sum" -> "v"), "s")(kvs.toDF("id", "g", "v").withColumn("s",
+        lit(1)), 0L)
     spark.conf.set(ExactlyOnce.ClusterByBucketConf, "false")
     try run(confed) finally
       spark.conf.unset(ExactlyOnce.ClusterByBucketConf)
@@ -167,7 +168,7 @@ class BucketedGuardsSpec extends SparkSpec {
       "that carries committed epochs without the codec stamp, and " +
       "stamps fresh dirs before the first commit") {
     import spark.implicits._
-    val batch = Seq(("a", 1.0), ("b", 2.0)).toDF("k", "v")
+    val batch = Seq(("a", 1.0, 1), ("b", 2.0, 1)).toDF("k", "v", "s")
 
     // a dir with committed epochs but NO stamp is pre-round-9 content
     // (the concat_ws encoding) — advancing it must fail loudly, never
@@ -179,19 +180,19 @@ class BucketedGuardsSpec extends SparkSpec {
     fs.mkdirs(ledger)
     fs.create(new org.apache.hadoop.fs.Path(ledger, "epoch-0"), true).close()
     val e = intercept[RuntimeException] {
-      graft.streaming.StreamingRollup.materializer(spark, legacy,
-        Seq("k"), Seq("v_sum" -> "v"), Buckets)(batch, 1L)
+      graft.streaming.StreamingRollup.materializerSigned(spark, legacy,
+        Seq("k"), Seq("v_sum" -> "v"), "s", Buckets)(batch, 1L)
     }
     assert(e.getMessage.contains("codec stamp"), e.getMessage)
 
     // a fresh dir stamps itself on first write and resumes cleanly
     val fresh = Files.createTempDirectory("graft_codec_fresh").toString
-    graft.streaming.StreamingRollup.materializer(spark, fresh,
-      Seq("k"), Seq("v_sum" -> "v"), Buckets)(batch, 0L)
+    graft.streaming.StreamingRollup.materializerSigned(spark, fresh,
+      Seq("k"), Seq("v_sum" -> "v"), "s", Buckets)(batch, 0L)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$fresh/_ledger/${graft.streaming.StateKeys.CodecTag}")))
-    graft.streaming.StreamingRollup.materializer(spark, fresh,
-      Seq("k"), Seq("v_sum" -> "v"), Buckets)(batch, 1L)
+    graft.streaming.StreamingRollup.materializerSigned(spark, fresh,
+      Seq("k"), Seq("v_sum" -> "v"), "s", Buckets)(batch, 1L)
     assert(graft.streaming.StreamingRollup.rollup(spark, fresh, Seq("k"))
       .count() == 2)
   }

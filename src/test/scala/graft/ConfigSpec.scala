@@ -166,6 +166,23 @@ class ConfigSpec extends AnyFunSuite {
     assert(bad.getMessage.contains("full_document"), bad.getMessage)
   }
 
+  test("the cluster apps refuse a delivery guarantee their at-least-once " +
+      "Kafka sink cannot deliver") {
+    def refusal(args: String*) = intercept[IllegalArgumentException] {
+      CdcParams.fromArgs(args.toArray).requireAtLeastOnceForKafkaSink()
+    }.getMessage
+    // the default reads as exactly_once (reference MySQLCDC2AWSMSK.scala:187)
+    Seq(refusal("-topic", "t"),
+      refusal("-delivery_guarantee", "exactly_once"),
+      // anything but the literal at_least_once reads as exactly_once
+      refusal("-delivery_guarantee", "at_least_onse")).foreach { m =>
+      assert(m.contains("-delivery_guarantee at_least_once"), m)
+      assert(m.contains("kafka-clients"), m)
+    }
+    CdcParams.fromArgs(Array("-delivery_guarantee", "at_least_once"))
+      .requireAtLeastOnceForKafkaSink() // no throw: deliverable
+  }
+
   test("kafka_broker is the reference's flag name; broker_list stays an alias") {
     // ParameterToolUtils.scala:30 — the reference reads `kafka_broker`
     val ref = CdcParams.fromArgs(Array("-kafka_broker", "b-1:9092"))

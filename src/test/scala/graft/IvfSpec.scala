@@ -14,7 +14,7 @@ class IvfSpec extends SparkSpec {
     val vecs = queries.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
-    val cells = Ivf.assign(
+    val cells = Ivf.assignCarrying(
       vecs.withColumn("norm", graft.functions.VectorOps.l2Norm(col("v"))),
       Ivf.codebook(vecs))
     assert(cells.count() == 500)

@@ -11,8 +11,8 @@ import java.nio.file.Files
   * for the steady/ripple epochs at the new count — and the parity
   * restatements must still be exact against the from-scratch batch
   * answer over everything ingested. This is the sf0.001 twin of the
-  * 100× smoke's gated migration (Scale100), so a protocol regression
-  * fails in the suite, not mid-smoke.
+  * 100× scale run's gated migration (`graft.Scale 100`), so a protocol
+  * regression fails in the suite, not mid-run.
   */
 class IvmMigrationSpec extends SparkSpec {
 
@@ -26,25 +26,24 @@ class IvmMigrationSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val res = ScaleHarness.runIvmE2E(spark, dir, 8, migrateTo = Some(32),
       migrationWaves = 4, parityGroups = 4)
-    assert(res.migrationJson.nonEmpty, "migration was not recorded")
+    val migration = res.section.get("migration").collect {
+      case m: ScaleHarness.Obj @unchecked => m
+    }
+    assert(migration.nonEmpty, "migration was not recorded")
     assert(res.migrationOldGenPeakMb.exists(_ > 0),
       "migration-window old-gen peak was not measured")
-    assert(res.replicaHashMatch,
+    assert(res.section("replica_hash_match") == true,
       "bucket-group content-hash parity broke post-migration")
-    assert(res.migrationJson.get.contains("\"to_buckets\":32"))
-    assert(res.migrationJson.get.contains("\"states_migrated\":8"))
-    assert(res.migrationJson.get.contains("\"waves\":4"))
+    assert(migration.get("to_buckets") == 32)
+    assert(migration.get("states_migrated") == 8)
+    assert(migration.get("waves") == 4)
     assert(res.parityPass,
-      s"post-migration parity broke: replica ${res.repGot}/${res.repWant}, " +
-        s"rollup parity ${res.rollupParity}, cascade " +
-        s"${res.cascadeGot}/${res.cascadeWant}, ripple ${res.rippleNegRows}")
+      s"post-migration parity broke: ${ScaleHarness.json(res.section)}")
     assert(res.steadyOverheadSec > 0, "no steady epochs were measured")
-    // the artifact row carries both bucket shapes
-    val json = ScaleHarness.ivmJson(res, 8)
-    assert(json.contains("\"buckets\":8"))
-    assert(json.contains("\"buckets_steady\":32"))
-    assert(json.contains("\"parity_groups\":4"))
-    assert(json.contains("\"replica_hash_match\":true"))
+    // the artifact section carries both bucket shapes
+    assert(res.section("buckets") == 8)
+    assert(res.section("buckets_steady") == 32)
+    assert(res.section("parity_groups") == 4)
     // the migrated dirs are pinned at the new count: a stale-count
     // advance must trip the pin, not silently mis-bucket
     implicit val ss: org.apache.spark.sql.SparkSession = spark

@@ -11,10 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * named somewhere outside its own declaration (comments stripped) in
   * the main sources, the main resources or the benchmark's sources,
   * defines a `main`, or is allowlisted below with the reason nothing
-  * names it. Every public method of a top-level object is likewise
-  * named outside its own declaration, with string literals blanked and
-  * another object's same-named declaration not counting, or is
-  * allowlisted.
+  * names it. Every public method `m` of a top-level object `Obj` is
+  * likewise named outside its own declaration — as `Obj.m`, or as a
+  * bare `m` in Obj's own file or in a file that imports from Obj — with
+  * string literals blanked, or is allowlisted.
   */
 class ReachabilitySpec extends AnyFunSuite {
 
@@ -137,18 +137,37 @@ class ReachabilitySpec extends AnyFunSuite {
           .map { case (m, end) => (m.group(1), m.group(2), p, m.start, end) }
       }
 
-  /** Whether `name` occurs in `texts` outside the `own` (file, start,
-    * end) spans, not counting occurrences right after `def `: another
-    * object's same-named declaration is not a use.
+  /** `p`'s text without the `own` (file, start, end) spans in it. */
+  private def outside(p: Path, t: String, own: Seq[(Path, Int, Int)]) =
+    own.filter(_._1 == p).sortBy(-_._2).foldLeft(t) {
+      case (acc, (_, s, e)) => acc.substring(0, s) + "\n" + acc.substring(e)
+    }
+
+  /** A use of `name`: not right after `def ` — another object's
+    * same-named declaration is not a use.
     */
+  private def use(name: String) = s"(?<!def )\\b$name\\b".r
+
+  /** Whether `name` occurs in `texts` outside the `own` spans. */
   private def named(texts: Map[Path, String], name: String,
-      own: Seq[(Path, Int, Int)]): Boolean = {
-    val use = s"(?<!def )\\b$name\\b".r
+      own: Seq[(Path, Int, Int)]): Boolean =
     texts.exists { case (p, t) =>
-      val outside = own.filter(_._1 == p).sortBy(-_._2)
-        .foldLeft(t) { case (acc, (_, s, e)) =>
-          acc.substring(0, s) + "\n" + acc.substring(e) }
-      use.findFirstIn(outside).isDefined
+      use(name).findFirstIn(outside(p, t, own)).isDefined }
+
+  /** Whether method `m` of object `obj` is used outside the `own` spans:
+    * as `obj.m` anywhere (whitespace allowed around the dot), or as a
+    * bare `m` in `obj`'s own file or in a file that imports from `obj`.
+    * A bare `m` elsewhere is another object's method of the same name.
+    */
+  private def called(texts: Map[Path, String], obj: String, m: String,
+      own: Seq[(Path, Int, Int)]): Boolean = {
+    val dotted = s"\\b$obj\\s*\\.\\s*$m\\b".r
+    val importsFrom = s"\\bimport\\s+[\\w.]*\\b$obj\\s*\\.".r
+    texts.exists { case (p, t) =>
+      val rest = outside(p, t, own)
+      dotted.findFirstIn(rest).isDefined ||
+        ((own.exists(_._1 == p) || importsFrom.findFirstIn(t).isDefined) &&
+          use(m).findFirstIn(rest).isDefined)
     }
   }
 
@@ -178,6 +197,9 @@ class ReachabilitySpec extends AnyFunSuite {
 
   test("every public method of a top-level main object is named in main " +
       "code outside its own declaration, or on a reasoned allowlist") {
+    // named means `Obj.m`, or a bare `m` in Obj's file or in a file that
+    // imports from Obj: a same-named method of another object does not
+    // count
     // string literals are blanked: "noop-sink" is not a call of `sink`
     val texts = sources(blankLiterals = true)
     val methods = for {
@@ -192,7 +214,8 @@ class ReachabilitySpec extends AnyFunSuite {
     val unreached = methods.groupBy(_._1).collect {
       case (qualified, own) if !qualified.endsWith(".main") &&
           own.exists(d => nonPublic.findFirstIn(d._2).isEmpty) &&
-          !named(texts, qualified.split('.').last,
+          !called(texts, qualified.takeWhile(_ != '.'),
+            qualified.dropWhile(_ != '.').tail,
             own.map(d => (d._3, d._4, d._5))) =>
         qualified -> own.map(_._3).distinct.mkString(", ")
     }

@@ -55,10 +55,11 @@ class StateKeysSpec extends SparkSpec {
       "bit-equal to the batch groupBy truth (null groups retained)") {
     val stateDir = Files.createTempDirectory("graft_sk_rollup").toString
     val rows = feed()
-    val m = StreamingRollup.materializer(spark, stateDir, keys,
-      Seq("value_sum" -> "value")) _
-    m(rows.filter(col("id") < 500), 0L)
-    m(rows.filter(col("id") >= 500), 1L)
+    // insert-only: every row folds with sign +1
+    val m = StreamingRollup.materializerSigned(spark, stateDir, keys,
+      Seq("value_sum" -> "value"), "sign") _
+    m(rows.filter(col("id") < 500).withColumn("sign", lit(1)), 0L)
+    m(rows.filter(col("id") >= 500).withColumn("sign", lit(1)), 1L)
     val got = StreamingRollup.rollup(spark, stateDir, keys)
       .select(col("k1"), col("k2"), col("n"), col("value_sum"))
       .collect()

@@ -44,6 +44,12 @@ class StreamingJoinViewSpec extends SparkSpec {
         r.getAs[Long]("__m")))
       .toSet
 
+  /** Insert-only feeds: neither side carries a sign column. */
+  private def insertOnly(root: String, leftKeys: Seq[String],
+      rightKeys: Seq[String])(l: DataFrame, r: DataFrame, id: Long) =
+    StreamingJoinView.materializerSigned(spark, root, leftKeys, rightKeys,
+      None, None)(l, r, id)
+
   private val oKeys = Seq("o_custkey")
   private val cKeys = Seq("c_custkey")
 
@@ -55,33 +61,25 @@ class StreamingJoinViewSpec extends SparkSpec {
     // epoch 0: a third of the orders, NO customers (view stays empty);
     // epoch 1: half the customers + another third of orders;
     // epoch 2: the rest of both — every Δ×state arm gets exercised
-    StreamingJoinView.materializer(spark, root, oKeys, cKeys)(
+    insertOnly(root, oKeys, cKeys)(
       o.filter(col("o_orderkey") % 3 === 0), emptyC(), 0L)
-    StreamingJoinView.materializer(spark, root, oKeys, cKeys)(
+    insertOnly(root, oKeys, cKeys)(
       o.filter(col("o_orderkey") % 3 === 1),
       c.filter(col("c_custkey") % 2 === 0), 1L)
-    StreamingJoinView.materializer(spark, root, oKeys, cKeys)(
+    insertOnly(root, oKeys, cKeys)(
       o.filter(col("o_orderkey") % 3 === 2),
       c.filter(col("c_custkey") % 2 === 1), 2L)
     assert(got(root) == truth())
-    // insert-only feeds: the exploded reader agrees with the plain join
-    val rows = StreamingJoinView.viewRows(spark, root)
-    val want = ordersFeed().join(customerFeed(),
-      col("o_custkey") === col("c_custkey"))
-    assert(rows.exceptAll(want.select(rows.columns.map(col): _*))
-      .count() == 0)
-    assert(want.select(rows.columns.map(col): _*).exceptAll(rows)
-      .count() == 0)
   }
 
   test("replayed epoch is a fenced no-op on all three states") {
     val root = Files.createTempDirectory("graft_jv_replay").toString
     val o = ordersFeed(); val c = customerFeed()
-    StreamingJoinView.materializer(spark, root, oKeys, cKeys)(o, c, 0L)
+    insertOnly(root, oKeys, cKeys)(o, c, 0L)
     val after0 = got(root)
     // at-least-once re-delivery of epoch 0 (even with identical
     // content, a double-count would double every multiplicity)
-    StreamingJoinView.materializer(spark, root, oKeys, cKeys)(o, c, 0L)
+    insertOnly(root, oKeys, cKeys)(o, c, 0L)
     assert(got(root) == after0)
     assert(after0 == truth())
   }
@@ -89,7 +87,7 @@ class StreamingJoinViewSpec extends SparkSpec {
   test("torn epoch: left side committed, crash, full replay converges") {
     val root = Files.createTempDirectory("graft_jv_torn").toString
     val o = ordersFeed(); val c = customerFeed()
-    StreamingJoinView.materializer(spark, root, oKeys, cKeys)(
+    insertOnly(root, oKeys, cKeys)(
       o.filter(col("o_orderkey") % 2 === 0), c, 0L)
 
     // simulate the crash window: epoch 1's LEFT advance commits (the
@@ -117,7 +115,7 @@ class StreamingJoinViewSpec extends SparkSpec {
           .unionByName(pDelta)
     }
 
-    StreamingJoinView.materializer(spark, root, oKeys, cKeys)(
+    insertOnly(root, oKeys, cKeys)(
       delta, emptyC(), 1L)
     assert(got(root) == truth())
   }
@@ -162,7 +160,7 @@ class StreamingJoinViewSpec extends SparkSpec {
       .toDF("lk", "lval")
     val r = Seq((1L, "x"), (1L, "x"), (1L, "x"), (2L, "y"))
       .toDF("rk", "rval")
-    StreamingJoinView.materializer(spark, root, Seq("lk"), Seq("rk"))(
+    insertOnly(root, Seq("lk"), Seq("rk"))(
       l, r, 0L)
     val m = StreamingJoinView.view(spark, root)
       .collect()
@@ -182,7 +180,7 @@ class StreamingJoinViewSpec extends SparkSpec {
     val q = in.toDS().toDF("side", "k", "v")
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        StreamingJoinView.materializer(spark, root,
+        insertOnly(root,
           Seq("lk"), Seq("rk"))(
           batch.filter(col("side") === "l")
             .select(col("k").as("lk"), col("v").as("lv")),
@@ -204,11 +202,12 @@ class StreamingJoinViewSpec extends SparkSpec {
       in.addData(("r", 1L, "b1"), ("r", 3L, "b3"), ("l", 3L, "a3"))
       q.processAllAvailable()
     } finally q.stop()
-    val gotRows = StreamingJoinView.viewRows(spark, root)
-      .select(col("lk"), col("lv"), col("rv"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+    val gotRows = StreamingJoinView.view(spark, root)
+      .select(col("lk"), col("lv"), col("rv"), col("__m"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
+        r.getLong(3)))
       .toSet
-    assert(gotRows == Set((1L, "a1", "b1"), (3L, "a3", "b3")))
+    assert(gotRows == Set((1L, "a1", "b1", 1L), (3L, "a3", "b3", 1L)))
   }
 
   test("cascade: a three-way view ((orders x customer) x nation) " +
@@ -242,7 +241,11 @@ class StreamingJoinViewSpec extends SparkSpec {
       c.filter(col("c_custkey") === retracted).withColumn("s", lit(-1)),
       n.limit(0), 2L)
 
-    val got3 = StreamingJoinView.viewRows(spark, r2)
+    val view3 = StreamingJoinView.view(spark, r2)
+    // every standing row is a live match: the retraction left no
+    // negative or zero multiplicity behind
+    assert(view3.filter(col("__m") <= 0).count() == 0)
+    val got3 = view3
       .select(col("o_orderkey"), col("c_custkey"), col("n_name"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
       .toSet
@@ -263,7 +266,7 @@ class StreamingJoinViewSpec extends SparkSpec {
     val l = Seq((1L, "a")).toDF("k", "v")
     val r = Seq((1L, "b")).toDF("k2", "v")
     val e = intercept[IllegalArgumentException] {
-      StreamingJoinView.materializer(spark, root, Seq("k"), Seq("k2"))(
+      insertOnly(root, Seq("k"), Seq("k2"))(
         l, r, 0L)
     }
     assert(e.getMessage.contains("rename"))
@@ -281,13 +284,13 @@ class StreamingJoinViewSpec extends SparkSpec {
       .toDF("k1", "k2", "lv")
     val r = Seq(("a", s"b${sep}c", 1.5), (null, "y", 9.9))
       .toDF("rk1", "rk2", "rv")
-    StreamingJoinView.materializer(spark, root,
+    insertOnly(root,
       Seq("k1", "k2"), Seq("rk1", "rk2"))(l, r, 0L)
     assert(StreamingJoinView.view(spark, root).count() == 0)
 
     // the genuinely-equal tuple still joins
     val l1 = Seq(("a", s"b${sep}c", 20L)).toDF("k1", "k2", "lv")
-    StreamingJoinView.materializer(spark, root,
+    insertOnly(root,
       Seq("k1", "k2"), Seq("rk1", "rk2"))(l1, r.limit(0), 1L)
     val got = StreamingJoinView.view(spark, root)
       .select(col("lv"), col("rv"), col("__m")).collect()

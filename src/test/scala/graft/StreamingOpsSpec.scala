@@ -251,28 +251,6 @@ class StreamingOpsSpec extends SparkSpec {
       s"per-epoch delta writes != new-hash counts: $dc")
   }
 
-  test("out-of-order dup-spans epochs re-merge the index so a late early " +
-      "doc lowers dmin for future epochs") {
-    import graft.streaming.StreamingDupSpans
-    import spark.implicits._
-    val words = (1 to StreamingDupSpans.L).map(i => s"w$i").mkString(" ")
-    // doc 5 arrives BEFORE doc 2 (out of order); both carry the same gram
-    val b1 = Seq((5L, words)).toDF("doc_id", "text")
-    val b2 = Seq((2L, words)).toDF("doc_id", "text")
-    val (s1, i1) = StreamingDupSpans.advance(
-      StreamingDupSpans.emptyIndex(spark), b1)
-    assert(s1.count() == 0) // first sighting: nothing to flag
-    // the late early doc is NOT flagged (as-of-arrival semantics)...
-    val (s2, i2) = StreamingDupSpans.advance(i1, b2)
-    assert(s2.count() == 0)
-    // ...but the full-outer re-merge lowered the standing dmin to 2,
-    // so a future doc 3 IS flagged against the earlier doc
-    assert(i2.filter(col("dmin") === 2L).count() > 0)
-    val (s3, _) = StreamingDupSpans.advance(i2, Seq((3L, words)).toDF("doc_id", "text"))
-    assert(s3.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .toSeq == Seq((3L, 0L, StreamingDupSpans.L.toLong)))
-  }
-
   test("arbitrary keyed state: running count per key via mapGroupsWithState") {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     implicit val sc = spark.sqlContext

@@ -14,6 +14,12 @@ class StreamingRollupSpec extends SparkSpec {
   private val keys = Seq("event_type")
   private val sums = Seq("value_sum" -> "value")
 
+  /** An insert-only fold: every row carries sign +1. */
+  private def fold(stateDir: String, keyCols: Seq[String] = keys)(
+      batch: org.apache.spark.sql.DataFrame, batchId: Long): Unit =
+    StreamingRollup.materializerSigned(spark, stateDir, keyCols, sums, "sign")(
+      batch.withColumn("sign", lit(1)), batchId)
+
   private def feed() = queries.Tables.events(spark, sf)
     .select(col("event_id"), col("event_type"), col("value"))
 
@@ -46,8 +52,7 @@ class StreamingRollupSpec extends SparkSpec {
           row_number().over(org.apache.spark.sql.expressions.Window
             .orderBy(col("event_id"))) - 1)
         .filter(col("__rn") >= lo && col("__rn") < hi).drop("__rn")
-      StreamingRollup.materializer(spark, stateDir, keys, sums)(
-        chunk, e.toLong)
+      fold(stateDir)(chunk, e.toLong)
     }
     assert(stateTruth(stateDir) == batchTruth())
   }
@@ -58,12 +63,12 @@ class StreamingRollupSpec extends SparkSpec {
     val rows = feed()
     val half = rows.filter(col("event_id") % 2 === 0)
     val rest = rows.filter(col("event_id") % 2 === 1)
-    StreamingRollup.materializer(spark, stateDir, keys, sums)(half, 0L)
+    fold(stateDir)(half, 0L)
     val after0 = stateTruth(stateDir)
     // at-least-once re-delivery: same epoch id, must not double-count
-    StreamingRollup.materializer(spark, stateDir, keys, sums)(half, 0L)
+    fold(stateDir)(half, 0L)
     assert(stateTruth(stateDir) == after0)
-    StreamingRollup.materializer(spark, stateDir, keys, sums)(rest, 1L)
+    fold(stateDir)(rest, 1L)
     assert(stateTruth(stateDir) == batchTruth())
   }
 
@@ -139,11 +144,9 @@ class StreamingRollupSpec extends SparkSpec {
     val rows = queries.Tables.events(spark, sf)
       .select(col("event_id"), col("event_type"),
         dayofweek(col("ts")).cast("string").as("dow"), col("value"))
-    StreamingRollup.materializer(spark, stateDir,
-      Seq("event_type", "dow"), sums)(
+    fold(stateDir, Seq("event_type", "dow"))(
       rows.filter(col("event_id") < 500), 0L)
-    StreamingRollup.materializer(spark, stateDir,
-      Seq("event_type", "dow"), sums)(
+    fold(stateDir, Seq("event_type", "dow"))(
       rows.filter(col("event_id") >= 500), 1L)
     val got = StreamingRollup.rollup(spark, stateDir, Seq("event_type", "dow"))
       .select(col("event_type"), col("dow"), col("n"),
