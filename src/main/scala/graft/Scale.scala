@@ -806,7 +806,8 @@ object Scale {
     * the steady floor stays scheduler-bound (exchange count, not
     * per-bucket volume) when both the state and the bucket count grow 3×
     * past the 100× shape: bulk at 256 (the shape a deployment is running
-    * when its corpus triples), then a 256→768 8-wave migration at the
+    * when its corpus triples) over 8 epochs (each wave fences one epoch
+    * at or below the frontier), then a 256→768 8-wave migration at the
     * ~27M-row frontier (~3.4M rows/wave) gated at
     * [[ScaleGates.MigrationWindowOldGenMaxMb]], then steady/ripple
     * epochs at 768. Parity restates per 8 bucket groups so the
@@ -827,7 +828,7 @@ object Scale {
         "buckets_bulk" -> bulk, "buckets_steady" -> steady,
         "replica_rows" -> ivm.repGot),
       "memory" -> memory(poolSum = false)),
-      s"300x IVM chain through the shared ScaleHarness.runIvmE2E (identical protocol code to the 30x/100x smokes): 4 bulk epochs at 256 buckets (the pre-growth deployment shape), then a 256->768 wave migration at the 27M-row frontier ($waves fenced waves, ~3.4M rows each, migration-window old-gen gated <= ${ScaleGates.MigrationWindowOldGenMaxMb}MB), then dim-ripple epochs 4-5 + facts-only steady epochs 6-9 at 768 (~35k replica rows/bucket), parity restated PER BUCKET GROUP (8 groups, count + order-free content hash, live side bucket-pruned) vs from-scratch batch answers, steady gated <= 3.5s (ScaleGates.Ivm100SteadyOverheadMaxSec)",
+      s"300x IVM chain through the shared ScaleHarness.runIvmE2E (identical protocol code to the 30x/100x smokes): $waves bulk epochs at 256 buckets (the pre-growth deployment shape; one per wave fence epoch), then a 256->768 wave migration at the 27M-row frontier ($waves fenced waves, ~3.4M rows each, migration-window old-gen gated <= ${ScaleGates.MigrationWindowOldGenMaxMb}MB), then dim-ripple epochs ${waves}-${waves + 1} + facts-only steady epochs ${waves + 2}-${waves + 5} at 768 (~35k replica rows/bucket), parity restated PER BUCKET GROUP (8 groups, count + order-free content hash, live side bucket-pruned) vs from-scratch batch answers, steady gated <= 3.5s (ScaleGates.Ivm100SteadyOverheadMaxSec)",
       value = Some(rounded(ivm.steadyOverheadSec, 2)))
   }
 }

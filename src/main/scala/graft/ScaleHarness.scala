@@ -520,8 +520,9 @@ private[graft] object ScaleHarness {
   /** CDC → IVM end-to-end: ONE real readStream drives replay → enrich
     * → versioned replica → signed retraction deltas → signed rollup
     * AND a 3-way join-view cascade (deltas ⋈ event-type dim ⋈ category
-    * dim), with a dim retraction at epoch 4 rippling through the
-    * cascade and re-inserting at 5; epochs 6-9 are facts-only (8 rows)
+    * dim): `bulk` = max(4, migrationWaves) bulk epochs, then a dim
+    * retraction at epoch `bulk` rippling through the cascade and
+    * re-inserting at `bulk` + 1; the next four are facts-only (8 rows)
     * — their mean is the pipeline's fixed steady overhead. Parity
     * rows: replica vs from-scratch versioned apply, rollup vs
     * from-scratch signed aggregate, cascade mass vs the from-scratch
@@ -554,9 +555,12 @@ private[graft] object ScaleHarness {
     clear(spark, Seq(ivmFeed, ivmCkpt) ++ Seq("replica", "rollup", "view1",
       "view2").flatMap(n => Seq(state(n), s"${state(n)}_rb")): _*)
     val evAll = spark.read.parquet(s"$dir/events.parquet")
-    // 4 bulk part files = 4 bulk epochs (the file replay paces one
-    // file per micro-batch); steady epochs append fresh files below
-    evAll.repartition(4).write.mode("overwrite")
+    // one bulk part file per bulk epoch (the file replay paces one file
+    // per micro-batch); steady epochs append fresh files below. A
+    // migration fences its waves at epochs frontier-waves+1..frontier,
+    // so the frontier must be at least waves - 1
+    val bulk = math.max(4, migrationWaves)
+    evAll.repartition(bulk).write.mode("overwrite")
       .parquet(s"$ivmFeed/events.parquet")
     val maxEvId = evAll.agg(max(col("event_id"))).head().getLong(0)
     def steadyEvents(e: Int) = evAll.orderBy(col("event_id")).limit(8)
@@ -603,8 +607,8 @@ private[graft] object ScaleHarness {
         // fork
         val d1 = id match {
           case 0 => dim1Df(dim1Rows, 1)
-          case 4 | 5 =>
-            dim1Df(dim1Rows.filter(_._2 == retCat), if (id == 4) -1 else 1)
+          case r if r == bulk || r == bulk + 1 => dim1Df(
+            dim1Rows.filter(_._2 == retCat), if (id == bulk) -1 else 1)
           case _ => dim1Df(Nil, 1)
         }
         val d2 = dim2Df(if (id == 0) dim2Rows else Nil, 1)
@@ -627,7 +631,7 @@ private[graft] object ScaleHarness {
               val inc2 = StreamingJoinView.materializerSigned(spark,
                 state("view2"), Seq("category"), Seq("cat2"), Some("__m"),
                 Some("s"), buckets, precomputedLeft = jv2Left)(inc1, d2, id)
-              if (id == 4) // the retraction rippled: negative rows
+              if (id == bulk) // the retraction rippled: negative rows
                 rippleNegRows = inc2.filter(col("__m") < 0).count()
             })
           })
@@ -641,13 +645,13 @@ private[graft] object ScaleHarness {
       .writeStream.option("checkpointLocation", ivmCkpt)
       .foreachBatch(ivmBody).start()
     var ivmQ = startQ()
-    ivmQ.processAllAvailable() // bulk epochs 0..3
+    ivmQ.processAllAvailable() // bulk epochs 0..bulk-1
     // (section, old-gen window peak MB) of the migration, when one runs
     val migration = migrateTo.map { nb =>
       // the bucket-sizing lever END TO END, in the shape a deployment
-      // runs it: STOP the query at its committed frontier (epoch 3),
-      // migrate every standing state 64→nb via rebucketState (one
-      // fenced epoch each at batchId 3, the frontier — so a resumed
+      // runs it: STOP the query at its committed frontier (bulk - 1),
+      // migrate every standing state to nb buckets via rebucketState
+      // (its waves fenced at epochs up to the frontier — so a resumed
       // stream replaying any pre-migration epoch is fenced), repoint
       // the materializers, RESUME from the same checkpoint. The
       // steady/ripple epochs below then measure the migrated shape.
@@ -664,8 +668,8 @@ private[graft] object ScaleHarness {
         Seq("view1", "view2").flatMap(v => Seq("left", "right", "view")
           .map(c => (v, s"/$c", "__jkey")))
       moves.foreach { case (n, sub, key) =>
-        require(ExactlyOnce.rebucketState(spark,
-          state(n) + sub, s"${state(n)}_rb$sub", key, nb, batchId = 3L,
+        require(ExactlyOnce.rebucketState(spark, state(n) + sub,
+          s"${state(n)}_rb$sub", key, nb, batchId = bulk - 1L,
           waves = migrationWaves), s"migration of ${state(n)}$sub fenced")
       }
       val migSec = secs(t0)
@@ -675,18 +679,20 @@ private[graft] object ScaleHarness {
       buckets = nb
       ivmQ = startQ()
       ivmQ.processAllAvailable() // no new data: resume is a no-op
-      (obj("after_epoch" -> 3, "from_buckets" -> numBuckets, "to_buckets" -> nb,
+      (obj("after_epoch" -> (bulk - 1), "from_buckets" -> numBuckets,
+        "to_buckets" -> nb,
         "states_migrated" -> moves.size, "waves" -> migrationWaves,
         "sec" -> rounded(migSec, 3), "old_gen_peak_mb" -> peakMb), peakMb)
     }
-    // epoch 4: steady facts + dim retraction; 5: steady facts + dim
-    // re-insert; 6-9: facts-only (no dim change) — THESE are the
-    // near-empty epochs whose mean is the pipeline's fixed overhead;
-    // 4-5 carry a real dim-retraction ripple (thousands of signed rows
-    // through the cascade) on top of it and are reported separately.
+    // epoch bulk: steady facts + dim retraction; bulk + 1: steady facts
+    // + dim re-insert; then four facts-only (no dim change) — THESE are
+    // the near-empty epochs whose mean is the pipeline's fixed overhead;
+    // the two ripple epochs carry a real dim-retraction ripple
+    // (thousands of signed rows through the cascade) on top of it and
+    // are reported separately.
     // FOUR samples: the steady average is the graded floor metric, and
     // with two samples a single host hiccup swings the mean by 25%+
-    (4 to 9).foreach { e =>
+    (bulk to bulk + 5).foreach { e =>
       steadyEvents(e).write.mode("append").parquet(s"$ivmFeed/events.parquet")
       ivmQ.processAllAvailable()
     }
@@ -767,15 +773,15 @@ private[graft] object ScaleHarness {
     val cascadeGot = StreamingJoinView.view(spark, state("view2"))
       .agg(coalesce(sum(col("__m")), lit(0L))).head().getLong(0)
     clear(spark, enrPath)
-    // fixed overhead = the facts-only near-empty epochs (6-9); the
-    // dim-ripple epochs (4-5) do real incremental work (the cascade
+    // fixed overhead = the facts-only near-empty epochs; the dim-ripple
+    // epochs (bulk, bulk + 1) do real incremental work (the cascade
     // re-derives every standing row of the retracted category) and
     // get their own ceiling so neither number hides in the other
-    val steady = epochSecs.filter(t => t._3 <= 16 && t._1 >= 6)
+    val steady = epochSecs.filter(t => t._3 <= 16 && t._1 >= bulk + 2)
     val steadyOverheadSec =
-      if (steady.isEmpty) -1.0
-      else steady.map(_._2).sum / steady.size
-    val rippleSecMax = epochSecs.filter(t => t._1 == 4 || t._1 == 5).map(_._2)
+      if (steady.isEmpty) -1.0 else steady.map(_._2).sum / steady.size
+    val rippleSecMax = epochSecs
+      .filter(t => t._1 == bulk || t._1 == bulk + 1).map(_._2)
       .maxOption.getOrElse(-1.0)
     val parityPass = repGot == repWant && repHashMatch &&
       rollGot == rollWant && cascadeGot == cascadeWant && rippleNegRows > 0
