@@ -15,12 +15,12 @@ import graft.streaming.{StreamingGroupedKmv, StreamingIvfIndex,
 
 import ScaleHarness._
 
-/** The 30×/100×/300× scale driver: clones the fixture tables with
+/** The 30×/100×/300× scale runs: each clones the fixture tables with
   * shifted ids, times the heavy families through the same noop-sink
   * methodology as Bench (full materialization incl. the total-order
   * sort; count() would let Catalyst drop the sort), runs the quality
   * gates and the durable materializers' O(touched) and parity gates AT
-  * SCALE, and writes ONE JSON artifact per run. Reference anchor: the
+  * SCALE, and writes ONE JSON artifact. Reference anchor: the
   * snapshot-chunking OOM guard the reference ships for exactly this
   * reason (MySQLCDC2AWSMSK.scala:255-258).
   *
@@ -49,8 +49,7 @@ import ScaleHarness._
   * committed artifacts were captured at; a smaller shape runs every
   * arm, and its gate values are recorded, not meaningful). With a
   * third argument the artifact is also spliced into that file (the
-  * round's 30× artifact) under `x100`/`x300`. Not part of the driver
-  * contract; run manually per round:
+  * round's 30× artifact) under `x100`/`x300`. Run manually per round:
   * {{{
   *   sbt "runMain graft.Scale 30 SCALE_r{N}.json"
   *   SPARK_DRIVER_MEM=32g sbt \

@@ -15,15 +15,15 @@ import graft.sources.CdcReplay
 import graft.streaming.{StreamingDupSpans, StreamingJoinView,
   StreamingNovelty, StreamingRollup}
 
-/** The scale driver's building blocks ([[Scale]]): its inputs, the
-  * corpus builder, the artifact writer, and the arms that more than one
-  * multiplier runs, so every scale drives the IDENTICAL protocol code
-  * and differs only in corpus size — "the same gates green at 100×"
-  * only means something if the gates run the same harness.
+/** The building blocks of [[Scale]]: its inputs, the corpus builder,
+  * the artifact writer, and the arms that more than one multiplier
+  * runs, so every scale drives the IDENTICAL protocol code and differs
+  * only in corpus size — "the same gates green at 100×" only means
+  * something if the gates run the same harness.
   */
 private[graft] object ScaleHarness {
 
-  /** A scale driver's inputs: its positional arguments, and the fixture
+  /** The inputs of [[Scale]]: its positional arguments, and the fixture
     * dir, core count and shuffle partitions from `-sf`, `-cores` and
     * `-partitions` (defaults sf0.1, 32 cores, 64 partitions).
     */

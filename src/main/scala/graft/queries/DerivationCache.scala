@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Session-scoped derivation cache — OFF by default
   * (`spark.graft.dedup.derivationCache=true` enables it).
   *
-  * A long-lived analytics session (the `graft.Scale` driver; a real
+  * A long-lived analytics session (the `graft.Scale` runs; a real
   * cluster deployment running the dedup/graph/gram families
   * back-to-back) derives the SAME intermediate frames for every family
   * member: the LSH family shares minhash signatures and candidate

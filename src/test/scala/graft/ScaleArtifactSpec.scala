@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import ScaleHarness.{inputs, json, obj, spliceJsonSection}
 
-/** The scale artifact's writer, its section splice and the driver's
+/** The scale artifact's writer, its section splice and `graft.Scale`'s
   * input parsing. No Spark session.
   */
 class ScaleArtifactSpec extends AnyFunSuite {
@@ -89,10 +89,10 @@ class ScaleArtifactSpec extends AnyFunSuite {
     assert(!Files.exists(missing))
   }
 
-  test("driver inputs: positional arguments around -sf/-cores/-partitions") {
+  test("scale inputs: positional arguments around -sf/-cores/-partitions") {
     val d = inputs(Array("100"))
-    assert(d.positional == Seq("100") && d.sf == "/root/testdata/sf0.1" &&
-      d.cores == 32 && d.partitions == 64 && d.sfName == "sf0.1")
+    assert(d.positional == Seq("100") && d.sfName == "sf0.1" &&
+      d.cores == 32 && d.partitions == 64)
     val i = inputs(Array("30", "-sf", "/data/sf0.001", "out.json",
       "-cores", "4", "into.json", "-partitions", "8"))
     assert(i.positional == Seq("30", "out.json", "into.json"))
