@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
@@ -43,9 +43,9 @@ import ScaleHarness._
   *     bucket, the sizing rule in SCALING.md), parity per 8 groups.
   *
   * Gates that fail are listed in the artifact's `failed` and make the
-  * run exit nonzero; the bounds live in [[ScaleGates]]. `-sf`, `-cores`
-  * and `-partitions` pick the fixture dir, `local[cores]` and the
-  * shuffle partitions (sf0.1, 32, 64 by default — the shape the
+  * run exit nonzero; the bounds live in [[ScaleGates]]. `-sf` and
+  * `-cores` pick the fixture dir and `local[cores]`, with two shuffle
+  * partitions per core (sf0.1 and 32 by default — the shape the
   * committed artifacts were captured at; a smaller shape runs every
   * arm, and its gate values are recorded, not meaningful). With a
   * third argument the artifact is also spliced into that file (the
@@ -112,7 +112,7 @@ object Scale {
     val mult = in.positional.headOption.flatMap(_.toIntOption)
       .filter(plans.contains).getOrElse(sys.error(
         "usage: Scale <30|100|300> [out.json] [splice-into.json] " +
-          "[-sf dir] [-cores n] [-partitions n]"))
+          "[-sf dir] [-cores n]"))
     val plan = plans(mult)
     val outPath = in.positional.lift(1).getOrElse(plan.out)
     // same quiet-window discipline as Bench: a run started right after
@@ -433,7 +433,7 @@ object Scale {
   /** The LSH candidate pairs whose two docs share a text cluster:
     * `docs` (doc_id, th) keyed by text hash; `ha` is the cluster.
     */
-  private def cloneHits(r: Run, docs: org.apache.spark.sql.DataFrame) =
+  private def cloneHits(r: Run, docs: DataFrame) =
     DedupQueries.minhashPairs(r.spark, r.dir)
       .join(docs.withColumnRenamed("doc_id", "doc_a")
         .withColumnRenamed("th", "ha"), Seq("doc_a"))
@@ -441,10 +441,40 @@ object Scale {
         .withColumnRenamed("th", "hb"), Seq("doc_b"))
       .filter(col("ha") === col("hb"))
 
-  /** Durable standing IVF ANN index (round 14) on the bulk + trickle
-    * shape: the bulk epoch trains + freezes the codebook and folds every
-    * vector; steady epochs ingest 8 fresh vectors each (touched-shard
-    * writes only). Gates: (a) searchSelf over the standing index is
+  /** What [[ivfLoad]] leaves: the index root, every vector ingested,
+    * the epochs, the most shards a steady epoch touched, the index rows.
+    */
+  private final case class IvfLoad(root: String, ingested: DataFrame,
+      eps: Seq[Epoch], touchedMax: Long, idxRows: Long)
+
+  /** The standing IVF index under `dir`/ivf_index, bulk + trickle: the
+    * bulk epoch trains + freezes the codebook and folds every vector,
+    * steady epochs 1-2 ingest 8 fresh vectors each (touched-shard writes
+    * only). The epochs record `shards_touched`, after `rows_written`
+    * when `rowsWritten`.
+    */
+  private def ivfLoad(r: Run, shards: Int, rowsWritten: Boolean): IvfLoad = {
+    import r.{dir, spark}
+    val root = s"$dir/ivf_index"
+    clear(spark, root, s"${root}_rt")
+    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id"), col("label"), col("embedding"))
+    val steady = trickle(vecs, "vec_id")
+    val eps = epochs("ivf-index", 0 to 2) { e =>
+      StreamingIvfIndex.materializer(spark, root, shards)(
+        if (e == 0) vecs else steady(e), e.toLong)
+    } { e =>
+      val p = s"$root/state/state-$e"
+      (if (rowsWritten) Seq("rows_written" -> dirRows(spark, p)) else Nil) :+
+        ("shards_touched" -> bucketsTouched(spark, p))
+    }
+    IvfLoad(root, vecs.unionByName(steady(1)).unionByName(steady(2)), eps,
+      eps.drop(1).map(_("shards_touched")).max,
+      StreamingIvfIndex.index(spark, root).count())
+  }
+
+  /** Durable standing IVF ANN index (round 14) on the [[ivfLoad]]
+    * shape. Gates: (a) searchSelf over the standing index is
     * BIT-EQUAL to the frozen-codebook batch scan of everything ingested
     * — the train-then-freeze contract makes the comparison exact; (b)
     * steady epochs touch a strict subset of shards; (c) recall@5 vs
@@ -455,22 +485,9 @@ object Scale {
   private def ivf30(r: Run): Obj = {
     import r.{dir, spark, t}
     val IvfShards = 32
-    val ivfRoot = s"$dir/ivf_index"
-    clear(spark, ivfRoot)
-    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("label"), col("embedding"))
-    val maxVecId = vecs.agg(max(col("vec_id"))).head().getLong(0)
-    def ivfSteady(e: Int) = vecs.orderBy(col("vec_id")).limit(8)
-      .withColumn("vec_id", col("vec_id") + lit(maxVecId + e * 1000L))
-    val eps = epochs("ivf-index", 0 to 2) { e =>
-      StreamingIvfIndex.materializer(spark, ivfRoot, IvfShards)(
-        if (e == 0) vecs else ivfSteady(e), e.toLong)
-    } { e => Seq("rows_written" -> dirRows(spark, s"$ivfRoot/state/state-$e"),
-      "shards_touched" -> bucketsTouched(spark, s"$ivfRoot/state/state-$e")) }
-    val touchedMax = eps.drop(1).map(_("shards_touched")).max
-    val idxRows = StreamingIvfIndex.index(spark, ivfRoot).count()
+    val IvfLoad(ivfRoot, ingested, eps, touchedMax, idxRows) =
+      ivfLoad(r, IvfShards, rowsWritten = true)
     val cents = StreamingIvfIndex.codebook(spark, ivfRoot)
-    val ingested = vecs.unionByName(ivfSteady(1)).unionByName(ivfSteady(2))
     val indexedAll = Ivf.assignCarrying(ingested.select(col("vec_id"),
       col("label"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", graft.functions.VectorOps.l2Norm(col("v"))), cents)
@@ -536,18 +553,15 @@ object Scale {
       }.toDF("vec_id", "label", "embedding")
     }
     StreamingIvfIndex.materializer(spark, ivfRoot, IvfShards)(drift, 3L)
-    // durable-parquet scratch instead of localCheckpoint (the retrain
-    // pattern): the reused probe/truth frames re-read from disk, so the
-    // run pins nothing index-shaped across the retrain measurement
-    StreamingIvfIndex.index(spark, ivfRoot).filter(col("vec_id") >= 900000000L)
+    // durable parquet instead of localCheckpoint: the run pins nothing
+    // index-shaped across the retrain measurement
+    val driftProbes = durable(StreamingIvfIndex.index(spark, ivfRoot)
+      .filter(col("vec_id") >= 900000000L)
       .filter(col("vec_id") % 20 === 0) // bounded probe sample
       .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("norm").as("pnorm"))
-      .write.mode("overwrite").parquet(s"$dir/ivf_drift_probes.parquet")
-    val driftProbes = spark.read.parquet(s"$dir/ivf_drift_probes.parquet")
-    Ivf.bruteTopK(StreamingIvfIndex.index(spark, ivfRoot), driftProbes, 5)
-      .write.mode("overwrite").parquet(s"$dir/ivf_drift_truth.parquet")
-    val driftTruth = spark.read.parquet(s"$dir/ivf_drift_truth.parquet")
+        col("norm").as("pnorm")), s"$dir/ivf_drift_probes.parquet")
+    val driftTruth = durable(Ivf.bruteTopK(StreamingIvfIndex.index(spark,
+      ivfRoot), driftProbes, 5), s"$dir/ivf_drift_truth.parquet")
     def nprobe1Recall(root: String) = Ivf.recallAtK(
       StreamingIvfIndex.search(spark, root,
       driftProbes.select(col("probe_id"), col("pv")), 5, 1, IvfShards),
@@ -555,7 +569,6 @@ object Scale {
     val recallBefore = nprobe1Recall(ivfRoot)
     val rtT0 = System.nanoTime()
     val rtRoot = s"${ivfRoot}_rt"
-    clear(spark, rtRoot)
     StreamingIvfIndex.retrain(spark, ivfRoot, rtRoot, IvfShards, rounds = 3)
     val retrainSec = secs(rtT0)
     val recallAfter = nprobe1Recall(rtRoot)
@@ -742,30 +755,12 @@ object Scale {
   private def ivf100(r: Run): Obj = {
     import r.{dir, spark, t}
     val IvfShards = 64
-    val ivfRoot = s"$dir/ivf_index"
-    val rtRoot = s"${ivfRoot}_rt"
-    clear(spark, ivfRoot, rtRoot)
-    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("label"), col("embedding"))
-    val maxVid = vecs.agg(max(col("vec_id"))).head().getLong(0)
-    val eps = epochs("ivf-index", 0 to 2) { e =>
-      StreamingIvfIndex.materializer(spark, ivfRoot, IvfShards)(
-        if (e == 0) vecs
-        else vecs.orderBy(col("vec_id")).limit(8)
-          .withColumn("vec_id", col("vec_id") + lit(maxVid + e * 1000L)),
-        e.toLong)
-    } { e => Seq("shards_touched" ->
-      bucketsTouched(spark, s"$ivfRoot/state/state-$e")) }
-    val touchedMax = eps.drop(1).map(_("shards_touched")).max
+    val IvfLoad(ivfRoot, ingested, eps, touchedMax, idxRows) =
+      ivfLoad(r, IvfShards, rowsWritten = false)
     val idx = StreamingIvfIndex.index(spark, ivfRoot)
-    val idxRows = idx.count()
-    // durable-parquet scratch instead of localCheckpoint (the retrain
-    // pattern): the reused probe/truth frames re-read from disk
-    idx.filter(SimilarityQueries.probePred(col("vec_id")))
+    val probes = durable(idx.filter(SimilarityQueries.probePred(col("vec_id")))
       .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("norm").as("pnorm"))
-      .write.mode("overwrite").parquet(s"$dir/ivf_probes.parquet")
-    val probes = spark.read.parquet(s"$dir/ivf_probes.parquet")
+        col("norm").as("pnorm")), s"$dir/ivf_probes.parquet")
     // shard-confined search: the candidate read's input files stay
     // inside the probes' routed shard set
     val routed = Ivf.routeProbes(
@@ -778,17 +773,16 @@ object Scale {
     val res = search(ivfRoot)
     val searchConfined = confined(
       res.inputFiles.toSeq.filter(_.contains("__bucket=")), routed)
-    Ivf.bruteTopK(idx, probes, 5)
-      .write.mode("overwrite").parquet(s"$dir/ivf_truth.parquet")
-    val truth = spark.read.parquet(s"$dir/ivf_truth.parquet")
+    val truth = durable(Ivf.bruteTopK(idx, probes, 5),
+      s"$dir/ivf_truth.parquet")
     val recall = Ivf.recallAtK(res, truth, 5)
     val searchSec = secs(searchT0)
     val rtT0 = System.nanoTime()
+    val rtRoot = s"${ivfRoot}_rt"
     StreamingIvfIndex.retrain(spark, ivfRoot, rtRoot, IvfShards, rounds = 2)
     val retrainSec = secs(rtT0)
     val recallRt = Ivf.recallAtK(search(rtRoot), truth, 5)
-    val vectors = spark.read.parquet(s"$dir/embeddings.parquet").count()
-    val pass = t.gate(idxRows == vectors + 16 && touchedMax > 0 &&
+    val pass = t.gate(idxRows == ingested.count() && touchedMax > 0 &&
       touchedMax < IvfShards && searchConfined && recall >= 0.30 &&
       recallRt >= 0.30 && recallRt + 0.05 >= recall, "ivf_index_100x")
     obj("shards" -> IvfShards, "epochs" -> eps.map(_.row),

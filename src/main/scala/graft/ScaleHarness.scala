@@ -24,25 +24,26 @@ import graft.streaming.{StreamingDupSpans, StreamingJoinView,
 private[graft] object ScaleHarness {
 
   /** The inputs of [[Scale]]: its positional arguments, and the fixture
-    * dir, core count and shuffle partitions from `-sf`, `-cores` and
-    * `-partitions` (defaults sf0.1, 32 cores, 64 partitions).
+    * dir and core count from `-sf` and `-cores` (defaults sf0.1, 32
+    * cores). The shuffle partitions follow the cores, two per core (64 at
+    * 32 cores, the shape of every committed artifact).
     */
-  final case class Inputs(positional: Seq[String], sf: String, cores: Int,
-      partitions: Int) {
+  final case class Inputs(positional: Seq[String], sf: String, cores: Int) {
+    def partitions: Int = 2 * cores
+
     /** The fixture dir's last path element, e.g. `sf0.1`. */
     def sfName: String = java.nio.file.Paths.get(sf).getFileName.toString
   }
 
   def inputs(args: Array[String]): Inputs = {
-    val flags = Set("-sf", "-cores", "-partitions")
+    val flags = Set("-sf", "-cores")
     require(!args.lastOption.exists(flags), s"${args.last} needs a value")
     val kv = args.sliding(2).collect { case Array(k, v) if flags(k) => k -> v }
       .toMap
     Inputs(args.indices.filterNot(i => flags(args(i)) ||
         (i > 0 && flags(args(i - 1)))).map(args),
       kv.getOrElse("-sf", "/root/testdata/sf0.1"),
-      kv.get("-cores").fold(32)(_.toInt),
-      kv.get("-partitions").fold(64)(_.toInt))
+      kv.get("-cores").fold(32)(_.toInt))
   }
 
   // ------------------------------------------------------------ artifact
@@ -116,8 +117,17 @@ private[graft] object ScaleHarness {
       new org.apache.hadoop.fs.Path(p)).getLength
     catch { case _: Throwable => 0L }
 
+  /** Rows of the parquet dir `p` (flat or bucketed); 0 when it holds no
+    * data file — an epoch that writes nothing leaves only `_SUCCESS`,
+    * and reading that makes Spark log a schema-inference error.
+    */
   def dirRows(spark: SparkSession, p: String): Long =
-    try spark.read.parquet(p).count() catch { case _: Throwable => 0L }
+    try {
+      val data = Seq(s"$p/*.parquet", s"$p/*/*.parquet").exists(g => Option(
+        hadoopFs(spark).globStatus(new org.apache.hadoop.fs.Path(g)))
+        .exists(_.nonEmpty))
+      if (data) spark.read.parquet(p).count() else 0L
+    } catch { case _: Throwable => 0L }
 
   /** `__bucket=` directories under `p` (0 when `p` does not exist). */
   def bucketsTouched(spark: SparkSession, p: String): Long =
@@ -132,6 +142,24 @@ private[graft] object ScaleHarness {
     val BucketLeaf = ".*/__bucket=(\\d+)/[^/]+$".r
     files.nonEmpty && files.forall(f => BucketLeaf.findFirstMatchIn(f)
       .exists(m => buckets.contains(m.group(1).toInt)))
+  }
+
+  /** The steady-epoch trickle of a bulk + trickle arm: epoch `e`'s batch
+    * is `df`'s first 8 rows by `id`, re-keyed past `df`'s largest id.
+    */
+  def trickle(df: DataFrame, id: String): Int => DataFrame = {
+    val maxId = df.agg(max(col(id))).head().getLong(0)
+    e => df.orderBy(col(id)).limit(8)
+      .withColumn(id, col(id) + lit(maxId + e * 1000L))
+  }
+
+  /** `df` written to `path` and read back: a frame reused across
+    * measurements re-reads durable parquet instead of pinning a
+    * corpus-sized cached copy (the retrain pattern).
+    */
+  def durable(df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    df.sparkSession.read.parquet(path)
   }
 
   // --------------------------------------------------------- timed epochs
@@ -472,9 +500,7 @@ private[graft] object ScaleHarness {
     clear(spark, stateDir)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-    def steady(e: Int) = docs.orderBy(col("doc_id"))
-      .limit(8).withColumn("doc_id", col("doc_id") + lit(maxId + e * 1000L))
+    val steady = trickle(docs, "doc_id")
     val eps = epochs("novelty", 0 to 2) { e =>
       StreamingNovelty.materializer(spark, stateDir,
         numBuckets)(if (e == 0) docs else steady(e), e.toLong)
@@ -545,11 +571,11 @@ private[graft] object ScaleHarness {
     val ivmFeed = s"$dir/ivm_feed"
     val ivmCkpt = s"$dir/ivm_ckpt"
     // with `migrateTo` set, the bulk epochs run at `numBuckets`, the
-    // stream is stopped after epoch 3, every standing state is migrated
-    // to `migrateTo` buckets via ExactlyOnce.rebucketState into its
-    // `_rb` dir (the deployment shape of the bucket-sizing lever: stop,
-    // migrate, repoint, resume from checkpoint), and the steady/ripple
-    // epochs run against the migrated dirs
+    // stream is stopped after the last of them, every standing state is
+    // migrated to `migrateTo` buckets via ExactlyOnce.rebucketState into
+    // its `_rb` dir (the deployment shape of the bucket-sizing lever:
+    // stop, migrate, repoint, resume from checkpoint), and the
+    // steady/ripple epochs run against the migrated dirs
     var rb = ""
     def state(name: String) = s"$dir/ivm_$name$rb"
     clear(spark, Seq(ivmFeed, ivmCkpt) ++ Seq("replica", "rollup", "view1",
@@ -558,13 +584,12 @@ private[graft] object ScaleHarness {
     // one bulk part file per bulk epoch (the file replay paces one file
     // per micro-batch); steady epochs append fresh files below. A
     // migration fences its waves at epochs frontier-waves+1..frontier,
-    // so the frontier must be at least waves - 1
+    // so the frontier must be at least waves - 1. Split on event_id, not
+    // round robin, so each bulk epoch holds the same rows in every run
     val bulk = math.max(4, migrationWaves)
-    evAll.repartition(bulk).write.mode("overwrite")
+    evAll.repartition(bulk, col("event_id")).write.mode("overwrite")
       .parquet(s"$ivmFeed/events.parquet")
-    val maxEvId = evAll.agg(max(col("event_id"))).head().getLong(0)
-    def steadyEvents(e: Int) = evAll.orderBy(col("event_id")).limit(8)
-      .withColumn("event_id", col("event_id") + lit(maxEvId + e * 1000L))
+    val steadyEvents = trickle(evAll, "event_id")
     // dims, pinned to the driver (tiny): event_type (raw AND its
     // truncated form — before-images keep raw, after-images truncate)
     // -> category; category -> boost
@@ -706,13 +731,12 @@ private[graft] object ScaleHarness {
     // old-gen term of the 300× run (26.5 GB of 32, r16 verdict item 2):
     // a verification-harness cost, now bounded like the engine's own.
     val enrPath = s"$dir/parity_enr.parquet"
-    locally {
+    val enrAll = {
       implicit val ss: SparkSession = spark
       import spark.implicits._
-      CdcEnrichment.enrichMySql(CdcReplay.batch(spark, ivmFeed).as[String],
-        CdcQueries.config).toDF().write.mode("overwrite").parquet(enrPath)
+      durable(CdcEnrichment.enrichMySql(CdcReplay.batch(spark, ivmFeed)
+        .as[String], CdcQueries.config).toDF(), enrPath)
     }
-    def enrAll = spark.read.parquet(enrPath)
     // replica parity PER BUCKET GROUP (r16 verdict item 2): the state is
     // already bucketed, so the verifier restates one dst-bucket group at
     // a time — (count, order-free content hash) per group, live side

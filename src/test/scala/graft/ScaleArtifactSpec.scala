@@ -89,12 +89,13 @@ class ScaleArtifactSpec extends AnyFunSuite {
     assert(!Files.exists(missing))
   }
 
-  test("scale inputs: positional arguments around -sf/-cores/-partitions") {
+  test("scale inputs: positional arguments around -sf/-cores, two " +
+      "partitions per core") {
     val d = inputs(Array("100"))
     assert(d.positional == Seq("100") && d.sfName == "sf0.1" &&
       d.cores == 32 && d.partitions == 64)
     val i = inputs(Array("30", "-sf", "/data/sf0.001", "out.json",
-      "-cores", "4", "into.json", "-partitions", "8"))
+      "-cores", "4", "into.json"))
     assert(i.positional == Seq("30", "out.json", "into.json"))
     assert(i.sf == "/data/sf0.001" && i.sfName == "sf0.001" &&
       i.cores == 4 && i.partitions == 8)
