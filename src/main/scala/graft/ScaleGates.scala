@@ -7,7 +7,7 @@ package graft
   * probe confinement, not capture noise:
   *
   *   - IVM steady-epoch overhead ≤ 3.5 s at 30× (won bar 2.45 s,
-  *     r13; losing the fused single-exchange advances re-adds ~1 s+
+  *     r13; losing the one-exchange keyed merges re-adds ~1 s+
   *     of exchanges per epoch — over the ceiling; host noise measured
   *     ±0.5 s — under it).
   *   - PageRank post-derivation ≤ 15 s at 30× (won 10.06 s, r13,
@@ -34,7 +34,7 @@ object ScaleGates {
     * NOT the deployment shape at that state size). The 100× smoke
     * earns this gate by migrating 64→256 mid-run via
     * `ExactlyOnce.rebucketState` and measuring the steady epochs at
-    * 256 — losing either the migration or the fused advances puts the
+    * 256 — losing either the migration or the one-exchange merges puts the
     * number over this ceiling.
     */
   val Ivm100SteadyOverheadMaxSec = 3.5

@@ -58,8 +58,10 @@ object MySQLCdcToKafka {
 object MongoCdcToKafka {
   def main(args: Array[String]): Unit = {
     val params = CdcParams.fromArgs(args)
-    // the only sink here is the at-least-once kafkaSink
+    // the only sink here is the at-least-once kafkaSink, and the
+    // initial load and collection filter belong to the source connector
     params.requireAtLeastOnceForKafkaSink()
+    params.requireMongoConnectorDefaults()
     val spark = SparkSession.builder()
       .appName("Mongo ChangeStream + Kafka")
       .config("spark.sql.shuffle.partitions", params.parallel.toString)

@@ -177,13 +177,11 @@ final case class CdcParams(
     // [[requireAtLeastOnceForKafkaSink]]
     deliveryGuarantee: String = "exactly_once",
     parallel: Int = 4,
-    disableChaining: Boolean = false,
     kafkaProperties: Map[String, String] = Map.empty,
-    // reference env switch (ParameterToolUtils.scala:68 `project_env`):
-    // "prod" = managed-runtime config, anything else = local
-    projectEnv: String = "local",
     // Mongo-app flags (getMongoCDC2MSKParams: `copy_existing`,
-    // `collection_list`) — the initial-load toggle and collection regex
+    // `collection_list`) — the initial-load toggle and collection regex,
+    // both settings of the source connector here: the cluster app
+    // refuses a non-default value via [[requireMongoConnectorDefaults]]
     copyExisting: Boolean = false,
     collectionList: String = ".*",
     // Mongo change-stream image mode (reference MongoCDC2AWSMSK.scala:
@@ -223,6 +221,25 @@ final case class CdcParams(
         "change stream ships NO row image on updates and the apply " +
         "path fails at the first update. Pass -full_document " +
         "updateLookup.")
+
+  /** The config-time contract of the Mongo cluster app, which consumes
+    * a topic its source connector fills: the initial load
+    * (`-copy_existing`, the connector's `copy.existing`) and the
+    * collection filter (`-collection_list`, the connector's collection
+    * include list) happen in the connector, so a non-default value
+    * fails at submit, naming where it belongs, instead of being
+    * accepted and ignored.
+    */
+  def requireMongoConnectorDefaults(): Unit = {
+    require(!copyExisting, "-copy_existing true is the source " +
+      "connector's copy.existing setting: set it on the Mongo connector " +
+      "that fills the source topic — this consumer cannot load existing " +
+      "documents")
+    require(collectionList == ".*", s"-collection_list '$collectionList'" +
+      " is the source connector's collection include list: set it on the" +
+      " Mongo connector — this consumer reads every collection its source" +
+      " topic carries")
+  }
 
   /** The config-time contract of the cluster apps, whose only sink is
     * the at-least-once `kafkaSink`: any `-delivery_guarantee` but the
@@ -297,8 +314,6 @@ object CdcParams {
       checkpointInterval = kv.getOrElse("checkpoint_interval", "60").toInt,
       deliveryGuarantee = kv.getOrElse("delivery_guarantee", "exactly_once"),
       parallel = kv.getOrElse("parallel", "4").toInt,
-      disableChaining = kv.getOrElse("disable_chaining", "false") == "true",
-      projectEnv = kv.getOrElse("project_env", "local"),
       copyExisting = kv.getOrElse("copy_existing", "false") == "true",
       collectionList = kv.getOrElse("collection_list", ".*"),
       fullDocument = kv.getOrElse("full_document", "default") match {

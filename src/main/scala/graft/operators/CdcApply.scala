@@ -178,15 +178,22 @@ object CdcApply {
     val merged = state.unionByName(changes)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
+    dropOldTombstones(merged, batch, tombstoneHorizonMs)
+  }
+
+  /** LAZY tombstone GC, piggybacked on buckets an epoch rewrites anyway
+    * (zero extra writes — untouched buckets keep their tombstones until
+    * next touched, standard LSM practice): drop tombstones older than
+    * the batch's event-time high watermark minus the horizon, read as
+    * a broadcast one-row frame. The horizon IS the lateness contract —
+    * a change arriving later than it may resurrect a GC'd delete,
+    * exactly the bound a lake's VACUUM declares. `Long.MaxValue` keeps
+    * every tombstone.
+    */
+  private def dropOldTombstones(merged: DataFrame, batch: DataFrame,
+      tombstoneHorizonMs: Long): DataFrame =
     if (tombstoneHorizonMs == Long.MaxValue) merged
     else {
-      // LAZY tombstone GC, piggybacked on buckets this epoch rewrites
-      // anyway (zero extra writes — untouched buckets keep their
-      // tombstones until next touched, standard LSM practice): drop
-      // tombstones older than the batch's event-time high watermark
-      // minus the horizon. The horizon IS the lateness contract — a
-      // change arriving later than it may resurrect a GC'd delete,
-      // exactly the bound a lake's VACUUM declares.
       val hwm = batch.agg(
         max(get_json_object(col("value"), "$.source.ts_ms").cast("long"))
           .as("__hwm"))
@@ -195,7 +202,6 @@ object CdcApply {
           col("ts_ms") >= col("__hwm") - tombstoneHorizonMs)
         .drop("__hwm")
     }
-  }
 
   /** The empty versioned-replica frame. */
   def emptyVersioned(spark: SparkSession): DataFrame =
@@ -250,38 +256,31 @@ object CdcApply {
       lastChange: DataFrame => DataFrame): Unit = {
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, batch,
       "partitionKey", numBuckets, retain)(emptyReplica(spark))(
-      current => applyChanges(current, lastChange(batch)))
+      (current, cluster) => cluster(applyChanges(current, lastChange(batch))))
     ()
   }
 
   /** Streaming materializer (out-of-order arm): same fenced bucketed
-    * protocol, each epoch folding through [[applyBatchVersioned]] —
-    * exact under ANY arrival order and at-least-once re-delivery,
-    * holding tombstones against late older upserts. Read the live
-    * rows with [[replicaVersioned]].
+    * protocol, each epoch folding the batch into state with
+    * [[applyBatchVersioned]]'s semantics — exact under ANY arrival
+    * order and at-least-once re-delivery, holding tombstones against
+    * late older upserts, and GC-ing them past `tombstoneHorizonMs`.
+    * The merge is one aggregate: every batch row converts to a
+    * versioned row, and the union with state goes through the
+    * protocol's clustering step and picks each key's (ts_ms, pos)
+    * winner with `max_by` grouped on (`__bucket`, key) — merge and
+    * bucket clustering share ONE exchange. State holds one row per
+    * key, so max over the union equals the window-rank-1 over the
+    * batch-deduped union that [[applyBatchVersioned]] (the batch
+    * reference) computes. Read the live rows with [[replicaVersioned]].
     */
   def materializerVersioned(spark: SparkSession, stateDir: String,
       numBuckets: Int = DefaultBuckets,
       tombstoneHorizonMs: Long = Long.MaxValue, retain: Int = 2)(
       batch: DataFrame, batchId: Long): Unit = {
-    // FUSED advance for the clustering path (no tombstone GC only —
-    // the GC branch filters on a batch watermark the fused aggregate
-    // would have to re-broadcast): one repartition by __bucket, then
-    // the per-key winner via max_by grouped on (__bucket, key) — the
-    // hash partitioning on __bucket alone satisfies the aggregate's
-    // ClusteredDistribution (subset rule), so the versioned merge and
-    // the bucket clustering share ONE exchange. Winner order
-    // (ts_ms, pos) is identical to [[applyBatchVersioned]]'s window;
-    // state holds one row per key, so max over the union of state and
-    // per-row-converted changes equals window-rank-1 over the same.
-    val fused: Option[(DataFrame, Int) => DataFrame] =
-      if (tombstoneHorizonMs != Long.MaxValue) None
-      else Some { (current, parts) =>
-        // NO per-batch window here: the grouped max_by below picks the
-        // (ts_ms, pos) winner over state ∪ ALL batch rows at once, so
-        // [[lastChangePerKey]]'s within-batch dedup (an exchange + sort
-        // stage per state write) is subsumed — max over the union
-        // equals window-rank-1 over the deduped union
+    ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, batch,
+      "partitionKey", numBuckets, retain)(emptyVersioned(spark)) {
+      (current, cluster) =>
         val env = batch.withColumn("env",
           from_json(col("value"), graft.model.CdcEnvelope.mysqlEnvelope))
         val changes = env.select(
@@ -291,10 +290,7 @@ object CdcApply {
           col("env.source.ts_ms").as("ts_ms"),
           col("env.source.pos").as("pos"),
           (col("env.op") === "d").as("deleted"))
-        current.unionByName(changes)
-          .withColumn("__bucket",
-            ExactlyOnce.bucketOf("partitionKey", numBuckets))
-          .repartition(parts, col("__bucket"))
+        val merged = cluster(current.unionByName(changes))
           .groupBy(col("__bucket"), col("partitionKey"))
           .agg(max_by(
             struct(col("after"), col("ts_ms"), col("pos"), col("deleted")),
@@ -302,11 +298,8 @@ object CdcApply {
           .select(col("partitionKey"), col("__w.after").as("after"),
             col("__w.ts_ms").as("ts_ms"), col("__w.pos").as("pos"),
             col("__w.deleted").as("deleted"), col("__bucket"))
-      }
-    ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, batch,
-      "partitionKey", numBuckets, retain, advancePre = fused)(
-      emptyVersioned(spark))(current =>
-      applyBatchVersioned(current, batch, tombstoneHorizonMs))
+        dropOldTombstones(merged, batch, tombstoneHorizonMs)
+    }
     ()
   }
 

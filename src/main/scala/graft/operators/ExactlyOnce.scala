@@ -460,26 +460,58 @@ object ExactlyOnce {
   private val stateSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
+  /** A caller's own touched-bucket probe, handed to
+    * [[advanceStateBucketed]] in place of the protocol's: `buckets` is
+    * a SUPERSET of the batch's actual bucket set, and `narrow` states
+    * whether the batch is small enough to write without the clustering
+    * exchange (the width the protocol's own probe measures).
+    */
+  final case class Touched(buckets: Set[Int], narrow: Boolean)
+
   /** One bucketed epoch: fold `batch` into the keyed state at
     * `stateDir`, writing ONLY the buckets the batch touches — per-epoch
     * write cost O(touched buckets' state + batch), never O(history).
-    * `advance` receives the touched buckets' current rows (or `empty`
-    * before any commit) and must return those buckets' full next
-    * content — true for any per-key merge (its output keys are a subset
-    * of input-state keys ∪ batch keys, all in touched buckets).
     *
-    * The touched-bucket probe collects ≤ `numBuckets` distinct ints to
-    * the driver — iteration control, same class as the k-row KMeans
-    * convergence probe. Returns true when the epoch advanced the state,
-    * false when fenced (already committed — replays are no-ops).
+    * `advance(current, cluster)` receives the touched buckets' current
+    * rows (or `empty` before any commit) and must return those
+    * buckets' full next content — true for any per-key merge (its
+    * output keys are a subset of input-state keys ∪ batch keys, all in
+    * touched buckets) — with a `__bucket` column. `cluster` is the
+    * protocol's clustering step: it tags `__bucket` ([[bucketOf]] on
+    * `keyCol`) and, when the protocol clusters this epoch, hash-
+    * repartitions on it into min(numBuckets, touched) partitions, so
+    * each bucket lands in O(1) files instead of (tasks × buckets)
+    * fragments. A keyed merge applies it to its merge input and groups
+    * on (`__bucket`, key): a hash partitioning on a subset of the
+    * grouping keys satisfies the aggregate's distribution, so merge and
+    * clustering share ONE exchange (the r13 30× IVM profile measured
+    * exchange count, not bucket volume, as the steady-epoch floor). Any
+    * other advance applies it to its output.
+    *
+    * The protocol clusters when `clusterByBucket` (or the session's
+    * [[ClusterByBucketConf]]; default on) holds AND the epoch is not
+    * near-empty: more than 4 touched buckets, or a wide batch. A
+    * near-empty epoch (≤ 4 buckets of a narrow batch) writes at most a
+    * few files per bucket, where an extra exchange would cost a whole
+    * stage + AQE round per state — the dominant share of the chained
+    * pipeline's steady-epoch floor (r10); a wide skewed batch landing
+    * in ≤ 4 buckets still clusters, or it would fan out (write tasks ×
+    * buckets) fragments. Width is measured by the protocol's own probe
+    * (narrow = ≤ 32 partitions) or stated by a caller passing `known`.
+    *
+    * The probe collects ≤ `numBuckets` distinct ints to the driver —
+    * iteration control, same class as the k-row KMeans convergence
+    * probe — and pins `batch` for the epoch. A caller passing `known`
+    * skips both the probe job and the persist and caches the batch
+    * itself. Returns true when the epoch advanced the state, false
+    * when fenced (already committed — replays are no-ops).
     */
   def advanceStateBucketed(spark: SparkSession, stateDir: String,
       batchId: Long, batch: DataFrame, keyCol: String, numBuckets: Int,
       retain: Int = 2, clusterByBucket: Option[Boolean] = None,
-      knownTouched: Option[Set[Int]] = None,
-      knownNarrow: Option[Boolean] = None,
-      advancePre: Option[(DataFrame, Int) => DataFrame] = None)(
-      empty: => DataFrame)(advance: DataFrame => DataFrame): Boolean = {
+      known: Option[Touched] = None)(
+      empty: => DataFrame)(
+      advance: (DataFrame, DataFrame => DataFrame) => DataFrame): Boolean = {
     require(numBuckets > 0, "numBuckets must be positive")
     require(retain >= 2, "retain must keep at least current + one grace" +
       " version (2); larger values enable deeper as-of time travel")
@@ -498,12 +530,8 @@ object ExactlyOnce {
     val bExpr = bucketExpr(keyCol, numBuckets)
     // the epoch evaluates `batch` several times (touched-bucket probe
     // here, plus whatever advance() does) — pin it so a source-backed
-    // micro-batch is scanned once, not once per job. A caller passing
-    // `knownTouched` (a SUPERSET of the batch's actual bucket set it
-    // computed anyway — the join-view materializer shares one probe
-    // across its three states) skips both the probe job and the
-    // persist; it is responsible for caching the batch itself.
-    val ownPersist = knownTouched.isEmpty
+    // micro-batch is scanned once, not once per job
+    val ownPersist = known.isEmpty
     if (ownPersist)
       batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -511,20 +539,19 @@ object ExactlyOnce {
       // collapses to <= numBuckets ints per task with no wide shuffle —
       // a single tiny job instead of a two-stage exchange per advance.
       // The same job also reads max(spark_partition_id()) — the cached
-      // batch's actual partition count, which the narrow-batch write
-      // gate below needs — so the own-probe path never has to finalize
-      // the plan through batch.rdd (which under AQE can execute
-      // upstream shuffle stages outside phase attribution).
-      var probedParts: Option[Int] = None
-      val touched = knownTouched.getOrElse(
+      // batch's actual partition count, the width the clustering
+      // decision needs — so the plan is never finalized through
+      // batch.rdd (which under AQE can execute upstream shuffle stages
+      // outside phase attribution).
+      val Touched(touched, narrow) = known.getOrElse(
         phaseTimed(spark, s"probe $stateDir") {
           // partition id projected BEFORE the agg (a nondeterministic
           // expression may not appear as an aggregate argument)
           val r = batch.select(bExpr.as("__bucket"),
               spark_partition_id().as("__pid"))
             .agg(collect_set(col("__bucket")), max(col("__pid"))).head()
-          probedParts = Some(if (r.isNullAt(1)) 0 else r.getInt(1) + 1)
-          r.getSeq[Int](0).toSet
+          Touched(r.getSeq[Int](0).toSet,
+            r.isNullAt(1) || r.getInt(1) + 1 <= 32)
         })
       val owners = ledger.owners(ledgerSts)
       if (touched.nonEmpty) {
@@ -533,78 +560,19 @@ object ExactlyOnce {
         val current = readVersions(spark,
           newestVersions(fs, stateDir, owners, Some(touched)),
           Option(stateSchemaCache.get(stateDir)))(empty)
-        // cluster-by-bucket (local default ON): one extra exchange so
-        // each bucket lands in O(1) files, not (tasks x buckets)
-        // fragments. At cluster scale turn it OFF and let every task
-        // write its bucket slice in parallel — correctness is
-        // unaffected (readers list all files under a bucket dir), only
-        // the file count per bucket grows. The lever is reachable from
-        // EVERY materializer entry point without a signature: set
-        // `spark.graft.state.clusterByBucket=false` on the session;
-        // the explicit parameter (tests) overrides the conf. The
-        // exchange sizes itself to the TOUCHED bucket count: a
-        // near-empty steady epoch shuffles into |touched| partitions,
-        // not numBuckets mostly-empty tasks (hash partitioning by
-        // __bucket keeps each bucket in one task either way).
-        // near-empty epochs skip the exchange entirely (r10 verdict
-        // item 3): at ≤ 4 touched buckets the batch upstream is a
-        // handful of cached partitions, so writing it directly costs
-        // at most a few files per bucket while the exchange costs a
-        // whole extra stage + AQE round per state per epoch — the
-        // dominant share of the chained pipeline's steady-epoch floor
-        // (six states × ~0.15 s). Larger epochs keep the exchange and
-        // its O(1)-files-per-bucket guarantee. The skip ALSO requires a
-        // narrow batch upstream (r11 advice): a wide skewed batch whose
-        // keys land in ≤ 4 buckets would otherwise fan out
-        // (write tasks × buckets) fragments per epoch — readers
-        // tolerate it, but commit-listing cost balloons. Narrowness
-        // resolves in preference order: the own-probe's measured
-        // partition count (free — read in the same probe job), then
-        // the caller's `knownNarrow` declaration (knownTouched callers
-        // own their batch's cache and shape), then a last-resort
-        // `.rdd` probe — which under AQE finalizes the plan and can
-        // execute upstream stages, so it is phase-attributed, and a
-        // probe FAILURE is logged (distinct from "genuinely wide")
-        // before conservatively keeping the exchange.
-        def narrowBatch: Boolean = probedParts.map(_ <= 32)
-          .orElse(knownNarrow)
-          .getOrElse(phaseTimed(spark, s"narrow-probe $stateDir")(
-            try batch.rdd.getNumPartitions <= 32 catch {
-              case t: Throwable =>
-                println(s"[state] narrow-probe failed at $stateDir " +
-                  s"(${t.getClass.getSimpleName}: ${t.getMessage}); " +
-                  "keeping the bucket-clustering exchange")
-                false
-            }))
-        // a FUSED advance (`advancePre`) folds the bucket-clustering
-        // exchange into its own keyed aggregate: it repartitions the
-        // merge input by __bucket and groups by (__bucket, key) — a
-        // hash partitioning on a subset of the grouping keys satisfies
-        // the aggregate's ClusteredDistribution, so the whole advance +
-        // clustering runs on ONE exchange where the generic path pays
-        // two (the advance's own key exchange + the bucket repartition).
-        // The r13 30× IVM profile measured the two-exchange replica
-        // write at a flat ~2.2 s/steady epoch at BOTH 64 and 256
-        // buckets — exchange count, not bucket volume, set the floor.
-        // Used only on the clustering path; the ≤4-touched skip keeps
-        // the plain advance (no exchange at all beats one).
-        lazy val wantCluster = resolveClusterByBucket(spark, clusterByBucket) &&
-          (touched.size > 4 || !narrowBatch)
-        val clustered =
-          if (advancePre.isDefined && wantCluster)
-            advancePre.get(current, math.min(numBuckets, touched.size))
-          else {
-            val next = advance(current).withColumn("__bucket", bExpr)
-            if (wantCluster)
-              next.repartition(math.min(numBuckets, touched.size),
-                col("__bucket")) else next
-          }
+        val clusters = resolveClusterByBucket(spark, clusterByBucket) &&
+          (touched.size > 4 || !narrow)
+        val parts = math.min(numBuckets, touched.size)
+        def cluster(df: DataFrame): DataFrame = {
+          val tagged = df.withColumn("__bucket", bExpr)
+          if (clusters) tagged.repartition(parts, col("__bucket")) else tagged
+        }
+        val next = advance(current, cluster)
         phaseTimed(spark, s"write $stateDir")(
-          clustered
-            .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
+          next.write.mode(SaveMode.Overwrite).partitionBy("__bucket")
             .parquet(s"$stateDir/state-$batchId"))
         stateSchemaCache.put(stateDir,
-          StructType(clustered.schema.fields.filterNot(_.name == "__bucket")))
+          StructType(next.schema.fields.filterNot(_.name == "__bucket")))
       }
       // the marker carries the touched-bucket list — it is both the
       // atomic commit point (tmp+rename: absent or complete, never
@@ -939,16 +907,16 @@ object ExactlyOnce {
         if (waves == 1) live
         else live.filter(
           bucketExpr(keyCol, newBuckets) % lit(waves) === lit(w))
-      // knownTouched = the wave's whole bucket group (a superset of
-      // the rows' actual buckets, which is the contract): skips both
+      // `known` = the wave's whole bucket group (a superset of the
+      // rows' actual buckets, which is the contract), wide: skips both
       // the touched-bucket probe job AND the batch persist — the rows
       // stream from the src scan straight through the bucket-
       // clustering exchange into the write, so nothing state-sized is
       // ever pinned in memory
       val adv = advanceStateBucketed(spark, dstDir, waveEpoch, waveRows,
-        keyCol, newBuckets, retain, knownTouched = Some(group),
-        knownNarrow = Some(false))(waveRows.limit(0))(
-        _.unionByName(waveRows))
+        keyCol, newBuckets, retain,
+        known = Some(Touched(group, narrow = false)))(waveRows.limit(0))(
+        (current, cluster) => cluster(current.unionByName(waveRows)))
       advancedAny ||= adv
       // test seam: simulate a crash after this wave's commit and
       // before anything later (the next wave, or the hwm fence)

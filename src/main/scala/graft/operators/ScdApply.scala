@@ -112,7 +112,8 @@ object ScdApply {
       batch: DataFrame, batchId: Long): Unit = {
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, batch,
       "user_id", numBuckets)(
-      emptyHistory(spark))(current => advance(current, batch))
+      emptyHistory(spark))(
+      (current, cluster) => cluster(advance(current, batch)))
     ()
   }
 

@@ -75,14 +75,15 @@ object StreamingGroupedKmv {
     ExactlyOnce.ensureLedgerTag(spark, stateDir, StateKeys.CodecTag)
     val p = partials(batch, keyCols, idCol, k, hashSeed)
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, p,
-      "__gkey", numBuckets, retain)(emptyLike(spark, p)) { current =>
+      "__gkey", numBuckets, retain)(emptyLike(spark, p)) {
+      (current, cluster) =>
       // semilattice union: ≤ 2 sketch rows per group after the union
       // (current + delta), folded to the K smallest distinct hashes
-      current.unionByName(p)
+      cluster(current.unionByName(p)
         .groupBy((col("__gkey") +: keyCols.map(col)): _*)
         .agg(slice(array_sort(array_distinct(
           flatten(collect_list(col("ks"))))), 1, k).as("ks"))
-        .select((col("__gkey") +: keyCols.map(col)) :+ col("ks"): _*)
+        .select((col("__gkey") +: keyCols.map(col)) :+ col("ks"): _*))
     }
     ()
   }

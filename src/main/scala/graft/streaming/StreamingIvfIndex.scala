@@ -103,13 +103,13 @@ object StreamingIvfIndex {
       .select(col("vec_id"), col("cell_id"), col("v"), col("norm"))
     ExactlyOnce.advanceStateBucketed(spark, stateDir(root), batchId,
       assigned, "cell_id", numShards, retain)(emptyIndex(spark)) {
-      current =>
+      (current, cluster) =>
         // re-ingested vec_ids replace their rows; `current` holds the
         // touched SHARDS' full content (a superset of the batch's
         // cells), so the anti join resolves without reading cold shards
-        current.join(assigned.select(col("vec_id")), Seq("vec_id"),
+        cluster(current.join(assigned.select(col("vec_id")), Seq("vec_id"),
             "left_anti")
-          .unionByName(assigned)
+          .unionByName(assigned))
     }
   }
 
@@ -223,18 +223,18 @@ object StreamingIvfIndex {
     // file), then the state as one fenced epoch
     spark.read.parquet(roundCb(rounds)).write.mode(SaveMode.Overwrite)
       .parquet(codebookDir(dstRoot))
-    // knownTouched = every shard (the rebuild writes the whole index —
+    // `known` = every shard, wide (the rebuild writes the whole index —
     // the superset contract): skips the touched-probe job AND the
     // advance's batch persist, so the rows stream from the round
     // parquet straight through the clustering exchange into the write
     // with nothing index-sized pinned in storage memory
     val advanced = ExactlyOnce.advanceStateBucketed(spark,
       stateDir(dstRoot), batchId, out, "cell_id", numShards, retain,
-      knownTouched = Some((0 until numShards).toSet),
-      knownNarrow = Some(false))(
-      emptyIndex(spark)) { current =>
-      current.join(out.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        .unionByName(out)
+      known = Some(ExactlyOnce.Touched((0 until numShards).toSet,
+        narrow = false)))(
+      emptyIndex(spark)) { (current, cluster) =>
+      cluster(current.join(out.select(col("vec_id")), Seq("vec_id"),
+        "left_anti").unionByName(out))
     }
     // scratch cleanup only AFTER the advance (out's plan reads the
     // last round's parquet); idempotent, crash leaves only dead files

@@ -109,44 +109,29 @@ object StreamingJoinView {
   /** Fold one side's delta into its multiplicity log: prior rows of
     * the touched buckets compact to one row per value-tuple (tag =
     * their newest epoch, strictly < batchId), the delta appends still
-    * tagged with THIS epoch.
+    * tagged with THIS epoch. The compaction groups on (`__bucket` +:
+    * value columns) over the state passed through the protocol's
+    * clustering step — one exchange for compaction AND clustering; the
+    * epoch's delta (tiny at steady state) appends outside the
+    * aggregate with its bucket column, costing at most a few extra
+    * files per touched bucket. `touched` was probed once by the
+    * materializer (from the side's RAW batch keys, with their row
+    * count as the width) and is shared with the increment read.
     */
   private def advanceSide(spark: SparkSession, dir: String, p: DataFrame,
       batchId: Long, numBuckets: Int, retain: Int,
-      touched: Set[Int], narrow: Option[Boolean]): Unit = {
+      touched: ExactlyOnce.Touched): Unit = {
     val valueCols = p.columns.toSeq.filterNot(Set("__m", "__e"))
-    // `touched` was probed once by the materializer (from the side's
-    // RAW batch keys) and is shared with the increment read — the
-    // advance skips its own probe job and persist; `narrow` carries
-    // the raw batch's measured row bound so the advance never has to
-    // finalize p's plan through .rdd
-    // fused variant for the clustering path: the compaction groups on
-    // (__bucket +: valueCols) over a __bucket-repartitioned input —
-    // one exchange for compaction AND clustering; the epoch's delta
-    // (tiny at steady state) appends outside the agg with its bucket
-    // column, costing at most a few extra files per touched bucket
-    val fused = Some { (current: DataFrame, parts: Int) =>
-      val compacted = current
-        .withColumn("__bucket", ExactlyOnce.bucketOf("__jkey", numBuckets))
-        .repartition(parts, col("__bucket"))
+    ExactlyOnce.advanceStateBucketed(spark, dir, batchId, p,
+      "__jkey", numBuckets, retain, known = Some(touched))(
+      emptyLike(spark, p)) { (current, cluster) =>
+      cluster(current)
         .groupBy((col("__bucket") +: valueCols.map(col)): _*)
         .agg(sum(col("__m")).as("__m"), max(col("__e")).as("__e"))
         .filter(col("__m") =!= 0)
         .select(p.columns.map(col) :+ col("__bucket"): _*)
-      compacted.unionByName(p.withColumn("__bucket",
-        ExactlyOnce.bucketOf("__jkey", numBuckets)))
-    }
-    ExactlyOnce.advanceStateBucketed(spark, dir, batchId, p,
-      "__jkey", numBuckets, retain,
-      knownTouched = Some(touched),
-      knownNarrow = narrow, advancePre = fused)(
-      emptyLike(spark, p)) { current =>
-      current
-        .groupBy(valueCols.map(col): _*)
-        .agg(sum(col("__m")).as("__m"), max(col("__e")).as("__e"))
-        .filter(col("__m") =!= 0)
-        .select(p.columns.map(col): _*)
-        .unionByName(p)
+        .unionByName(p.withColumn("__bucket",
+          ExactlyOnce.bucketOf("__jkey", numBuckets)))
     }
     ()
   }
@@ -297,7 +282,8 @@ object StreamingJoinView {
       // to a handful of partitions — safe to write exchange-free; a
       // larger one keeps the bucket-clustering exchange (it is worth
       // its stage at that size anyway)
-      def narrowOf(n: Long): Option[Boolean] = Some(n <= 4096L)
+      def sideTouched(buckets: Set[Int], n: Long) =
+        ExactlyOnce.Touched(buckets, narrow = n <= 4096L)
 
       // the increment reads PRE-commit state
       // ([[ExactlyOnce.stateBucketsBefore]] — versions strictly below
@@ -376,44 +362,29 @@ object StreamingJoinView {
         try {
           graft.operators.Concurrent.all[Any](spark)(
             () => advanceSide(spark, s"$root/left", pL, batchId,
-              numBuckets, retain, bL, narrowOf(nL)),
+              numBuckets, retain, sideTouched(bL, nL)),
             () => advanceSide(spark, s"$root/right", pR, batchId,
-              numBuckets, retain, bR, narrowOf(nR)),
+              numBuckets, retain, sideTouched(bR, nR)),
+            // the signed view merge: grouped on (__bucket +: value
+            // columns) over the clustered union — merge and bucket
+            // clustering share ONE exchange. Always narrow: unlike the
+            // side advances (whose delta passes through the union
+            // straight to the write), the view merge routes EVERYTHING
+            // through its aggregate exchange, so AQE sizes the write
+            // tasks to the merged data no matter how wide inc's cached
+            // layout is — fragment fan-out is bounded by
+            // (size-coalesced tasks × ≤4 buckets) with or without the
+            // clustering exchange
             () => ExactlyOnce.advanceStateBucketed(spark, s"$root/view",
               batchId, inc, "__jkey", numBuckets, retain,
-              knownTouched = Some(touched),
-              // always narrow: unlike the side advances (whose batch
-              // partitions pass through the union straight to the
-              // write), the view merge below routes EVERYTHING through
-              // its groupBy exchange, so AQE sizes the write tasks to
-              // the merged data no matter how wide inc's cached layout
-              // is — fragment fan-out is bounded by (size-coalesced
-              // tasks × ≤4 buckets) with or without the clustering
-              // exchange, and the .rdd fallback probe would finalize
-              // inc's join plan on the epoch's critical path
-              knownNarrow = Some(true),
-              // fused signed merge: grouped on (__bucket +: value
-              // columns) over a __bucket-repartitioned union — the
-              // view merge and the bucket clustering share ONE
-              // exchange (same rows as the generic path below)
-              advancePre = Some { (current: DataFrame, parts: Int) =>
-                current.unionByName(inc)
-                  .withColumn("__bucket",
-                    ExactlyOnce.bucketOf("__jkey", numBuckets))
-                  .repartition(parts, col("__bucket"))
-                  .groupBy((col("__bucket") +:
-                    inc.columns.filterNot(_ == "__m").map(col).toSeq): _*)
-                  .agg(sum(col("__m")).as("__m"))
-                  .filter(col("__m") =!= 0)
-                  .select(inc.columns.map(col).toSeq :+ col("__bucket"): _*)
-              })(
-              emptyLike(spark, inc)) { current =>
-              current.unionByName(inc)
-                .groupBy(inc.columns.filterNot(_ == "__m").map(col)
-                  .toSeq: _*)
+              known = Some(ExactlyOnce.Touched(touched, narrow = true)))(
+              emptyLike(spark, inc)) { (current, cluster) =>
+              cluster(current.unionByName(inc))
+                .groupBy((col("__bucket") +:
+                  inc.columns.filterNot(_ == "__m").map(col).toSeq): _*)
                 .agg(sum(col("__m")).as("__m"))
                 .filter(col("__m") =!= 0)
-                .select(inc.columns.map(col): _*)
+                .select(inc.columns.map(col).toSeq :+ col("__bucket"): _*)
             })
           ()
         } finally release()

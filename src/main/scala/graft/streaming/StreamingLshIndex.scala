@@ -74,7 +74,8 @@ object StreamingLshIndex {
       batch: DataFrame, batchId: Long): Unit = {
     val keys = bandKeys(batch)
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, keys,
-      "bucket_key", numBuckets, retain)(emptyIndex(spark)) { current =>
+      "bucket_key", numBuckets, retain)(emptyIndex(spark)) {
+      (current, cluster) =>
       // one claimant per bucket this batch (lowest doc_id)
       val claims = keys.groupBy(col("bucket_key"))
         .agg(min(col("doc_id")).as("claimant"))
@@ -96,9 +97,9 @@ object StreamingLshIndex {
         .parquet(s"$eventsDir/epoch=$batchId")
       // next index content for the touched shards: unchanged buckets
       // (same shard, different key) plus the resolved owners
-      current.join(claims.select(col("bucket_key")),
+      cluster(current.join(claims.select(col("bucket_key")),
           Seq("bucket_key"), "left_anti")
-        .unionByName(owners)
+        .unionByName(owners))
     }
     ()
   }

@@ -99,8 +99,11 @@ object StreamingNovelty {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val bexpr = ExactlyOnce.bucketOf("__gkey", numBuckets)
-        val touched = pg.select(bexpr.as("__b"))
-          .agg(collect_set(col("__b"))).head().getSeq[Int](0).toSet
+        // one job: the touched buckets and the gram count, whose bound
+        // states the batch's width to the gram advance
+        val probe = pg.select(bexpr.as("__b"))
+          .agg(collect_set(col("__b")), count(lit(1))).head()
+        val touched = probe.getSeq[Int](0).toSet
 
         val gramSchema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("__gkey",
@@ -148,8 +151,10 @@ object StreamingNovelty {
           graft.operators.Concurrent.both(spark)(
             ExactlyOnce.advanceStateBucketed(spark, gramsDir, batchId,
               pg, "__gkey", numBuckets, retain,
-              knownTouched = Some(touched))(emptyGrams) { current =>
-              current.join(pg, Seq("__gkey"), "full")
+              known = Some(ExactlyOnce.Touched(touched,
+                narrow = probe.getLong(1) <= 4096L)))(emptyGrams) {
+              (current, cluster) =>
+              cluster(current.join(pg, Seq("__gkey"), "full")
                 .select(
                   col("__gkey"),
                   coalesce(current("gh1"), pg("gh1")).as("gh1"),
@@ -158,15 +163,15 @@ object StreamingNovelty {
                   (coalesce(col("dup"), lit(false)) ||
                     (col("bdf").isNotNull &&
                       (col("owner").isNotNull || col("bdf") > 1)))
-                    .as("dup"))
+                    .as("dup")))
             },
             ExactlyOnce.advanceStateBucketed(spark, docsDir, batchId,
               docDeltas, "doc_id", numBuckets, retain)(
-              emptyLike(spark, docDeltas)) { current =>
-              current.unionByName(docDeltas)
+              emptyLike(spark, docDeltas)) { (current, cluster) =>
+              cluster(current.unionByName(docDeltas)
                 .groupBy(col("doc_id"))
                 .agg(sum(col("dn_grams")).as("dn_grams"),
-                  sum(col("dn_novel")).as("dn_novel"))
+                  sum(col("dn_novel")).as("dn_novel")))
             })
           ()
         } finally docDeltas.unpersist()

@@ -89,7 +89,8 @@ object StreamingReservoir {
     val w = Window.partitionBy(col("__gkey"))
       .orderBy(col("__prio"), col(idCol))
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, p,
-      "__gkey", numBuckets, retain)(emptyLike(spark, p)) { current =>
+      "__gkey", numBuckets, retain)(emptyLike(spark, p)) {
+      (current, cluster) =>
       // dedup per (stratum, id) BEFORE the top-k: a re-ingested row is
       // already in `current` with the same deterministic priority, and
       // two copies in the pool would evict a legitimate k-th row —
@@ -99,13 +100,13 @@ object StreamingReservoir {
       // content), full-row hash breaks any remaining tie.
       val dw = Window.partitionBy((keyCols :+ idCol).map(col): _*)
         .orderBy(col("__src"), xxhash64(p.columns.map(col).toSeq: _*))
-      current.withColumn("__src", lit(0))
+      cluster(current.withColumn("__src", lit(0))
         .unionByName(p.withColumn("__src", lit(1)))
         .withColumn("__dn", row_number().over(dw))
         .filter(col("__dn") === 1).drop("__dn", "__src")
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") <= k).drop("__rn")
-        .select(p.columns.map(col): _*)
+        .select(p.columns.map(col): _*))
     }
     ()
   }

@@ -40,27 +40,6 @@ object StreamingRollup {
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], p.schema)
 
-  /** Fused advance for the clustering path: the merge-of-partials
-    * grouped on (`__bucket`, `__gkey`, keys) over a `__bucket`-
-    * repartitioned input — the bucket hash partitioning (a subset of
-    * the grouping keys) satisfies the aggregate's distribution, so
-    * merge and bucket clustering share ONE exchange. Same fold, same
-    * rows as the generic path.
-    */
-  private def fusedMerge(p: DataFrame, keyCols: Seq[String],
-      sumCols: Seq[String], numBuckets: Int)(
-      current: DataFrame, parts: Int): DataFrame = {
-    val merged = current.unionByName(p)
-      .withColumn("__bucket", ExactlyOnce.bucketOf("__gkey", numBuckets))
-      .repartition(parts, col("__bucket"))
-      .groupBy((col("__bucket") +: col("__gkey") +: keyCols.map(col)): _*)
-      .agg(sumCols.map(c => sum(col(c)).as(c)).head,
-        sumCols.map(c => sum(col(c)).as(c)).tail: _*)
-    merged.filter(col("n") =!= 0)
-      .select((col("__gkey") +: keyCols.map(col)) ++
-        sumCols.map(col) :+ col("__bucket"): _*)
-  }
-
   /** Signed partials: each row carries `signCol` ∈ {+1, −1} (insert /
     * retraction — the TPC-H refresh-stream shape, or a CDC feed's
     * after/before images). `n` folds as sum-of-signs and every sum as
@@ -87,7 +66,10 @@ object StreamingRollup {
     * contract, mirrored from every IVM engine, is that retractions
     * match inserts value-for-value, which makes "count 0" imply "all
     * sums 0" so the vanish-at-zero drop can never lose a pending
-    * correction.
+    * correction. The merge-of-partials is one aggregate grouped on
+    * (`__bucket`, `__gkey`, keys) over the state ∪ partials union
+    * passed through the protocol's clustering step, so merge and bucket
+    * clustering share ONE exchange.
     */
   def materializerSigned(spark: SparkSession, stateDir: String,
       keyCols: Seq[String], sums: Seq[(String, String)], signCol: String,
@@ -96,17 +78,16 @@ object StreamingRollup {
     ExactlyOnce.ensureLedgerTag(spark, stateDir, StateKeys.CodecTag)
     val p = signedPartials(batch, keyCols, sums, signCol)
     val sumCols = "n" +: sums.map(_._1)
+    val merges = sumCols.map(c => sum(col(c)).as(c))
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, p,
-      "__gkey", numBuckets, retain,
-      advancePre = Some(fusedMerge(p, keyCols, sumCols, numBuckets)))(
-      emptyLike(spark, p)) { current =>
-      current.unionByName(p, allowMissingColumns = false)
-        .groupBy((col("__gkey") +: keyCols.map(col)): _*)
-        .agg(sumCols.map(c => sum(col(c)).as(c)).head,
-          sumCols.map(c => sum(col(c)).as(c)).tail: _*)
-        .filter(col("n") =!= 0)
-        .select((col("__gkey") +: keyCols.map(col)) ++
-          sumCols.map(col): _*)
+      "__gkey", numBuckets, retain)(emptyLike(spark, p)) {
+      (current, cluster) =>
+        cluster(current.unionByName(p))
+          .groupBy((col("__bucket") +: col("__gkey") +: keyCols.map(col)): _*)
+          .agg(merges.head, merges.tail: _*)
+          .filter(col("n") =!= 0)
+          .select((col("__gkey") +: keyCols.map(col)) ++
+            sumCols.map(col) :+ col("__bucket"): _*)
     }
     ()
   }

@@ -87,7 +87,8 @@ object StreamingSchemaDrift {
     val ec = epochCensus(batch)
     graft.operators.ExactlyOnce.advanceStateBucketed(
       spark, stateDir, batchId, ec, "k", numBuckets)(
-      emptyCensus(spark))(current => merge(current, ec))
+      emptyCensus(spark))(
+      (current, cluster) => cluster(merge(current, ec)))
     ()
   }
 

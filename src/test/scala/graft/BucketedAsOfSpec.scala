@@ -23,7 +23,8 @@ class BucketedAsOfSpec extends SparkSpec {
     import spark.implicits._
     val batch = kv.toDF("k", "n")
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, batch,
-      "k", Buckets, retain)(batch.limit(0))(cur => merge(cur, batch))
+      "k", Buckets, retain)(batch.limit(0))(
+      (cur, cluster) => cluster(merge(cur, batch)))
   }
 
   private def defaultMerge(cur: DataFrame, batch: DataFrame): DataFrame =

@@ -24,9 +24,10 @@ class BucketedGuardsSpec extends SparkSpec {
   }
 
   private def upsert(batch: org.apache.spark.sql.DataFrame)(
-      cur: org.apache.spark.sql.DataFrame) =
-    cur.join(batch.select(col("k")), Seq("k"), "left_anti")
-      .unionByName(batch)
+      cur: org.apache.spark.sql.DataFrame,
+      cluster: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+    cluster(cur.join(batch.select(col("k")), Seq("k"), "left_anti")
+      .unionByName(batch))
 
   test("advanceStateBucketed with clusterByBucket=false (cluster-scale " +
       "parallel write) reads back identically, even interleaved with " +

@@ -56,9 +56,9 @@ class BucketedStateFuzzSpec extends SparkSpec {
       val vals = keys.map(k => k -> (epoch * 1000L + k))
       val batch = vals.toDF("k", "v")
       assert(ExactlyOnce.advanceStateBucketed(spark, stateDir, epoch, batch,
-        "k", Buckets)(emptyKV)(cur =>
-        cur.join(batch.select(col("k")), Seq("k"), "left_anti")
-          .unionByName(batch)),
+        "k", Buckets)(emptyKV)((cur, cluster) =>
+        cluster(cur.join(batch.select(col("k")), Seq("k"), "left_anti")
+          .unionByName(batch))),
         s"epoch $epoch was unexpectedly fenced")
       model = model ++ vals
 
@@ -67,8 +67,8 @@ class BucketedStateFuzzSpec extends SparkSpec {
       if (rnd.nextInt(3) == 0) {
         val replayOf = rnd.nextLong(epoch + 1)
         assert(!ExactlyOnce.advanceStateBucketed(spark, stateDir, replayOf,
-          Seq((666L, -666L)).toDF("k", "v"), "k", Buckets)(emptyKV)(_ =>
-          Seq((666L, -666L)).toDF("k", "v")),
+          Seq((666L, -666L)).toDF("k", "v"), "k", Buckets)(emptyKV)((_, cluster) =>
+          cluster(Seq((666L, -666L)).toDF("k", "v"))),
           s"replay of committed epoch $replayOf was not fenced")
       }
 

@@ -138,6 +138,29 @@ class CdcApplySpec extends SparkSpec {
     val live = CdcApply.replicaVersioned(spark, stateDir)
     assert(live.count() == 1)
     assert(live.head().getAs[String]("partitionKey") == k2)
+
+    // the same GC on epochs touching > 4 buckets (the protocol
+    // clusters those): three keys in each of 6 buckets other than
+    // k2's — olds deleted at ts 20000, youngs at 24000, then fresh
+    // upserts at 26000 put every one of those buckets' watermark at
+    // 26000: only the tombstones older than 26000 - horizon go
+    val six = probed.map(_._2).distinct.filter(_ != bucket).take(6)
+    def inBucket(b: Int, i: Int) = probed.filter(_._2 == b)(i)._1
+    val (olds, youngs, fresh) = (six.map(inBucket(_, 0)),
+      six.map(inBucket(_, 1)), six.map(inBucket(_, 2)))
+    def epoch(keys: Seq[String], op: String, tsMs: Long, e: Long): Unit =
+      CdcApply.materializerVersioned(spark, stateDir, 16, horizon)(
+        keys.zipWithIndex.map { case (k, i) =>
+          (k, env(op, 100L * e + i, tsMs)) }.toDF("partitionKey", "value"), e)
+    def tombstoned = raw.filter(col("deleted"))
+      .collect().map(_.getAs[String]("partitionKey")).toSet
+    epoch(olds, "d", 20000L, 3L)
+    epoch(youngs, "d", 24000L, 4L)
+    // epoch 4's watermark (24000) keeps the 20000 tombstones
+    assert(tombstoned == (olds ++ youngs).toSet)
+    epoch(fresh, "c", 26000L, 5L)
+    assert(tombstoned == youngs.toSet)
+    assert(CdcApply.replicaVersioned(spark, stateDir).count() == 7)
   }
 
   test("streaming materializer converges to the batch replica") {

@@ -104,13 +104,13 @@ class ConfigSpec extends AnyFunSuite {
       "-topic", "cdc", "-topic_prefix", "flink_cdc_",
       "-position", "latest", "-chunk_size", "4000",
       "-delivery_guarantee", "at_least_once",
+      // a Flink-only flag: accepted and ignored
       "-parallel", "6", "-disable_chaining", "true",
       "-kafka_properties", "max.request.size=1073741824,linger.ms=5"))
     assert(p.brokerList == "b-1:9092,b-2:9092")
     assert(p.topicPrefix == "flink_cdc_")
     assert(p.chunkSize == 4000)
     assert(p.parallel == 6)
-    assert(p.disableChaining)
     assert(p.kafkaProperties ==
       Map("max.request.size" -> "1073741824", "linger.ms" -> "5"))
   }
@@ -135,15 +135,30 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("mongo-app flags parse: copy_existing, collection_list, project_env") {
+    // `-project_env` is the reference's KDA switch: accepted and ignored
     val p = CdcParams.fromArgs(Array(
       "-copy_existing", "true", "-collection_list", "events.*",
       "-project_env", "prod"))
-    assert(p.copyExisting)
-    assert(p.collectionList == "events.*")
-    assert(p.projectEnv == "prod")
+    assert(p == CdcParams(copyExisting = true, collectionList = "events.*"))
     // defaults match the reference's local-dev posture
     val d = CdcParams.fromArgs(Array("-topic", "t"))
-    assert(!d.copyExisting && d.collectionList == ".*" && d.projectEnv == "local")
+    assert(!d.copyExisting && d.collectionList == ".*")
+  }
+
+  test("the mongo cluster app refuses -copy_existing and " +
+      "-collection_list, naming the source connector") {
+    def refusal(args: String*) = intercept[IllegalArgumentException] {
+      CdcParams.fromArgs(args.toArray).requireMongoConnectorDefaults()
+    }.getMessage
+    val copy = refusal("-copy_existing", "true")
+    assert(copy.contains("copy.existing") && copy.contains("connector"), copy)
+    val colls = refusal("-collection_list", "events.*")
+    assert(colls.contains("events.*") &&
+      colls.contains("collection include list"), colls)
+    // the defaults (flags omitted or spelled out) pass
+    CdcParams.fromArgs(Array("-topic", "t")).requireMongoConnectorDefaults()
+    CdcParams.fromArgs(Array("-copy_existing", "false",
+      "-collection_list", ".*")).requireMongoConnectorDefaults()
   }
 
   test("full_document parses both modes, rejects anything else, and the " +

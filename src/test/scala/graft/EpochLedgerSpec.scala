@@ -157,8 +157,8 @@ class EpochLedgerSpec extends SparkSpec {
         () => epochsOf(ExactlyOnce.appendedState(spark, append)(empty))),
       Writer("advanceStateBucketed", advance,
         (e, _) => ExactlyOnce.advanceStateBucketed(spark, advance, e, rows(e),
-          "k", 4)(empty)(cur =>
-          cur.unionByName(rows(e)).withColumn("k", tearing(col("k")))),
+          "k", 4)(empty)((cur, cluster) => cluster(
+          cur.unionByName(rows(e)).withColumn("k", tearing(col("k"))))),
         () => epochsOf(ExactlyOnce.currentStateBucketed(spark, advance)(empty))))
   }
 

@@ -1,28 +1,50 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** Randomized equivalence of the FUSED single-exchange advances
-  * (`advancePre`: merge grouped on (__bucket, key) over a
-  * __bucket-repartitioned input) against the generic two-exchange
-  * path. `clusterByBucket = Some(false)` disables the clustering
-  * exchange, which also routes around `advancePre` — so the same
-  * epochs fold through both code paths into two state dirs and the
-  * final states must match row-for-row. Batches include out-of-order
-  * versions, deletes, retractions, and within-batch duplicates.
+import graft.operators.{CdcApply, ExactlyOnce}
+import graft.streaming.{StateKeys, StreamingJoinView, StreamingRollup}
+
+/** Randomized equivalence of the bucketed merges — each one aggregate
+  * grouped on (__bucket, key) over the protocol's clustering step —
+  * against an INDEPENDENT batch reference: the [[CdcApply
+  * .applyBatchVersioned]] fold (with and without a tombstone horizon),
+  * the from-scratch signed aggregate, and the bag join of every
+  * ingested row. The random epochs alternate wide ones (> 4 touched
+  * buckets: the protocol clusters) with near-empty ones (≤ 4 buckets
+  * of a narrow batch: it does not), and every epoch sequence runs
+  * under `spark.graft.state.clusterByBucket` on and off. Batches
+  * include out-of-order versions, deletes, retractions and
+  * within-batch duplicates.
   */
 class FusedAdvanceSpec extends SparkSpec {
 
-  /** Forked session with the clustering exchange disabled — the lever
-    * that routes advances down the generic (non-fused) path.
+  private val Buckets = 16
+
+  /** The two clustering settings: the default session (on) and a fork
+    * with the conf off.
     */
-  private lazy val genericSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.graft.state.clusterByBucket", "false")
-    s
+  private lazy val sessions: Seq[SparkSession] = {
+    val off = spark.newSession()
+    off.conf.set(ExactlyOnce.ClusterByBucketConf, "false")
+    Seq(spark, off)
   }
+
+  /** Asserts that the epochs' state keys (column `__k`) include both
+    * shapes: ≤ 4 and > 4 touched buckets.
+    */
+  private def assertBothShapes(epochs: Seq[DataFrame]): Unit = {
+    val touched = epochs.map(_.select(ExactlyOnce.bucketOf("__k", Buckets))
+      .distinct().count())
+    assert(touched.exists(_ <= 4) && touched.exists(_ > 4),
+      s"touched buckets per epoch: $touched")
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
 
   private def env(key: String, eid: Long, et: String, v: Long,
       tsMs: Long, pos: Long, op: String): (String, String) = {
@@ -37,106 +59,149 @@ class FusedAdvanceSpec extends SparkSpec {
         .stripMargin.replace("\n", ""))
   }
 
-  test("fused versioned-replica advance == generic path over random " +
-      "out-of-order epochs with deletes and ties") {
+  test("versioned-replica merge == the applyBatchVersioned fold, with and " +
+      "without a tombstone horizon, over wide and near-empty epochs") {
     import spark.implicits._
     val rnd = new scala.util.Random(20260816L)
-    val fusedDir = Files.createTempDirectory("graft_fused").toString
-    val genDir = Files.createTempDirectory("graft_gen").toString
-    val Buckets = 8
-    (0L until 6L).foreach { epoch =>
-      val rows = (0 until 40).map { i =>
-        val k = rnd.nextInt(12)
+    val epochs = (0L until 8L).map { epoch =>
+      // even epochs spread over 40 keys, odd ones stay on 2
+      val keys = if (epoch % 2 == 0) 40 else 2
+      (0 until 30).map { i =>
+        val k = rnd.nextInt(keys)
         val op = rnd.nextInt(10) match {
-          case 0 => "d"
+          case n if n < 2 => "d"
           case n if n < 4 => "c"
           case _ => "u"
         }
-        // deliberately coarse ts/pos so cross-epoch out-of-order and
-        // some near-ties occur; pos keeps (ts, pos) unique per key
+        // coarse ts drifting forward so cross-epoch out-of-order,
+        // near-ties and horizon-aged tombstones all occur; pos keeps
+        // (ts, pos) unique per key
         env(s"db.t.$k", 1000L + k, s"et$k", rnd.nextInt(100),
-          1000L + rnd.nextInt(8), epoch * 1000L + i, op)
-      }
-      val batch = rows.toDF("partitionKey", "value")
-      graft.operators.CdcApply.materializerVersioned(
-        spark, fusedDir, Buckets)(batch, epoch)
-      // generic path: the conf disables the clustering exchange, which
-      // also routes around advancePre — the plain window merge runs
-      graft.operators.CdcApply.materializerVersioned(
-        genericSession, genDir, Buckets)(batch, epoch)
+          1000L + epoch + rnd.nextInt(6), epoch * 1000L + i, op)
+      }.toDF("partitionKey", "value")
     }
-    def rowsOf(dir: String) = graft.operators.CdcApply
-      .replicaVersioned(spark, dir)
-      .orderBy(col("partitionKey"))
-      .collect().map(_.toString).toSeq
-    val fused = rowsOf(fusedDir)
-    assert(fused.nonEmpty)
-    assert(fused == rowsOf(genDir),
-      "fused and generic replica states diverged")
+    assertBothShapes(epochs.map(_.withColumn("__k", col("partitionKey"))))
+    val bucket = ExactlyOnce.bucketOf("partitionKey", Buckets)
+    // the reference: per epoch, the touched buckets' state folds
+    // through applyBatchVersioned (GC lands only where an epoch
+    // writes), the others carry over
+    def reference(horizon: Long) =
+      rows(epochs.foldLeft(CdcApply.emptyVersioned(spark)) {
+        (state, batch) =>
+          val touched = batch.select(bucket).distinct().as[Int].collect().toSeq
+          state.filter(!bucket.isin(touched: _*))
+            .unionByName(CdcApply.applyBatchVersioned(
+              state.filter(bucket.isin(touched: _*)), batch, horizon))
+            .localCheckpoint()
+      })
+    val wants = Seq(Long.MaxValue, 3L).map(h => h -> reference(h))
+    def tombstones(rs: Seq[String]) = rs.count(_.endsWith(",true]"))
+    // the horizon really collects some tombstones, and not all
+    assert(tombstones(wants(0)._2) > tombstones(wants(1)._2))
+    assert(tombstones(wants(1)._2) > 0)
+    wants.foreach { case (horizon, want) =>
+      sessions.foreach { s =>
+        val dir = Files.createTempDirectory("graft_fav").toString
+        epochs.zipWithIndex.foreach { case (b, e) =>
+          CdcApply.materializerVersioned(s, dir, Buckets, horizon)(b, e)
+        }
+        val got = rows(ExactlyOnce.currentStateBucketed(spark, dir)(
+          CdcApply.emptyVersioned(spark))
+          .select(CdcApply.emptyVersioned(spark).columns.map(col).toSeq: _*))
+        assert(got == want, s"horizon $horizon, clustering " +
+          s.conf.get(ExactlyOnce.ClusterByBucketConf, "true"))
+      }
+    }
   }
 
-  test("fused signed-rollup advance == generic path over random " +
-      "retraction epochs") {
+  test("signed-rollup merge == the from-scratch signed aggregate over " +
+      "wide and near-empty retraction epochs") {
     import spark.implicits._
     val rnd = new scala.util.Random(20260817L)
-    val fusedDir = Files.createTempDirectory("graft_fusedr").toString
-    val genDir = Files.createTempDirectory("graft_genr").toString
-    (0L until 6L).foreach { epoch =>
-      val rows = (0 until 60).map { _ =>
-        (s"g${rnd.nextInt(6)}", rnd.nextInt(50).toLong,
-          if (rnd.nextInt(4) == 0) -1L else 1L)
+    // retractions take back a row inserted earlier (the rollup's
+    // contract: they match inserts value-for-value)
+    val live = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    val batches = (0L until 8L).map { epoch =>
+      val groups = if (epoch % 2 == 0) 30 else 1
+      (0 until 40).map { _ =>
+        val mine = live.indices.filter(i =>
+          live(i)._1.drop(1).toInt < groups)
+        if (mine.nonEmpty && rnd.nextInt(4) == 0) {
+          val (g, v) = live.remove(mine(rnd.nextInt(mine.size)))
+          (g, v, -1L)
+        } else {
+          val r = (s"g${rnd.nextInt(groups)}", rnd.nextInt(50).toLong)
+          live += r
+          (r._1, r._2, 1L)
+        }
       }
-      val batch = rows.toDF("g", "v", "sign")
-      graft.streaming.StreamingRollup.materializerSigned(
-        spark, fusedDir, Seq("g"), Seq("v_sum" -> "v"), "sign", 8)(
-        batch, epoch)
-      graft.streaming.StreamingRollup.materializerSigned(
-        genericSession, genDir, Seq("g"), Seq("v_sum" -> "v"), "sign", 8)(
-        batch, epoch)
     }
-    def rowsOf(dir: String) = graft.streaming.StreamingRollup
-      .rollup(spark, dir, Seq("g"))
-      .orderBy(col("g")).collect().map(_.toString).toSeq
-    val fused = rowsOf(fusedDir)
-    assert(fused.nonEmpty)
-    assert(fused == rowsOf(genDir),
-      "fused and generic rollup states diverged")
+    val epochs = batches.map(_.toDF("g", "v", "sign"))
+    assertBothShapes(
+      epochs.map(_.withColumn("__k", StateKeys.packKey(Seq("g")))))
+    val want = rows(batches.flatten.toDF("g", "v", "sign")
+      .groupBy(col("g"))
+      .agg(sum(col("sign")).as("n"),
+        sum(col("sign").cast("decimal(18,2)") *
+          col("v").cast("decimal(18,2)")).cast("decimal(38,2)").as("v_sum"))
+      .filter(col("n") =!= 0))
+    assert(want.nonEmpty)
+    sessions.foreach { s =>
+      val dir = Files.createTempDirectory("graft_far").toString
+      epochs.zipWithIndex.foreach { case (b, e) =>
+        StreamingRollup.materializerSigned(
+          s, dir, Seq("g"), Seq("v_sum" -> "v"), "sign", Buckets)(b, e)
+      }
+      val got = rows(StreamingRollup.rollup(spark, dir, Seq("g"))
+        .select(col("g"), col("n"), col("v_sum").cast("decimal(38,2)")))
+      assert(got == want, "clustering " +
+        s.conf.get(ExactlyOnce.ClusterByBucketConf, "true"))
+    }
   }
 
-  test("fused join-view advances (side compaction + signed view merge) " +
-      "== generic path over random signed epochs") {
+  test("join-view merges (side compaction + signed view merge) == the " +
+      "bag join of every ingested row over wide and near-empty epochs") {
     import spark.implicits._
     val rnd = new scala.util.Random(20260818L)
-    val fusedRoot = Files.createTempDirectory("graft_fusedjv").toString
-    val genRoot = Files.createTempDirectory("graft_genjv").toString
-    (0L until 5L).foreach { epoch =>
-      // both feeds signed: ~1/4 retractions, duplicate keys within a
-      // batch, and key ranges that only partially overlap so every
-      // Δ×state arm (match, no-match, retract-to-zero, negative dip)
-      // gets exercised on both sessions
-      val lRows = (0 until 30).map { _ =>
-        (rnd.nextInt(10).toLong, rnd.nextInt(50).toLong,
+    // both feeds signed: ~1/4 retractions (out of order allowed — the
+    // view is bilinear in the multiplicities), duplicate keys within a
+    // batch, and key ranges that only partially overlap so every
+    // Δ×state arm (match, no-match, retract-to-zero, negative dip)
+    // gets exercised
+    def feed(base: Long, epoch: Long) = {
+      val keys = if (epoch % 2 == 0) 20 else 1
+      (0 until 30).map { _ =>
+        (base + rnd.nextInt(keys), rnd.nextInt(6).toLong,
           if (rnd.nextInt(4) == 0) -1L else 1L)
       }
-      val rRows = (0 until 30).map { _ =>
-        (4L + rnd.nextInt(10), rnd.nextInt(50).toLong,
-          if (rnd.nextInt(4) == 0) -1L else 1L)
-      }
-      val lb = lRows.toDF("lk", "lv", "sign")
-      val rb = rRows.toDF("rk", "rv", "sign")
-      graft.streaming.StreamingJoinView.materializerSigned(
-        spark, fusedRoot, Seq("lk"), Seq("rk"),
-        Some("sign"), Some("sign"), 8)(lb, rb, epoch)
-      graft.streaming.StreamingJoinView.materializerSigned(
-        genericSession, genRoot, Seq("lk"), Seq("rk"),
-        Some("sign"), Some("sign"), 8)(lb, rb, epoch)
     }
-    def rowsOf(root: String) = graft.streaming.StreamingJoinView
-      .view(spark, root)
-      .collect().map(_.toString).sorted.toSeq
-    val fused = rowsOf(fusedRoot)
-    assert(fused.nonEmpty)
-    assert(fused == rowsOf(genRoot),
-      "fused and generic join-view states diverged")
+    val batches = (0L until 8L).map(e => (feed(0L, e), feed(4L, e)))
+    val epochs = batches.map { case (l, r) =>
+      (l.toDF("lk", "lv", "sign"), r.toDF("rk", "rv", "sign"))
+    }
+    assertBothShapes(epochs.map { case (l, r) =>
+      l.select(StateKeys.packKey(Seq("lk")).as("__k")).unionByName(
+        r.select(StateKeys.packKey(Seq("rk")).as("__k")))
+    })
+    def net(rs: Seq[(Long, Long, Long)], k: String, v: String, m: String) =
+      rs.toDF(k, v, "sign").groupBy(col(k), col(v))
+        .agg(sum(col("sign")).as(m)).filter(col(m) =!= 0)
+    val want = rows(net(batches.flatMap(_._1), "lk", "lv", "ml")
+      .join(net(batches.flatMap(_._2), "rk", "rv", "mr"),
+        col("lk") === col("rk"))
+      .select(col("lk"), col("lv"), col("rk"), col("rv"),
+        (col("ml") * col("mr")).as("__m")))
+    assert(want.nonEmpty)
+    sessions.foreach { s =>
+      val root = Files.createTempDirectory("graft_fajv").toString
+      epochs.zipWithIndex.foreach { case ((l, r), e) =>
+        StreamingJoinView.materializerSigned(s, root, Seq("lk"), Seq("rk"),
+          Some("sign"), Some("sign"), Buckets)(l, r, e)
+      }
+      val got = rows(StreamingJoinView.view(spark, root)
+        .select(col("lk"), col("lv"), col("rk"), col("rv"), col("__m")))
+      assert(got == want, "clustering " +
+        s.conf.get(ExactlyOnce.ClusterByBucketConf, "true"))
+    }
   }
 }

@@ -31,9 +31,9 @@ class RebucketSpec extends SparkSpec {
     import spark.implicits._
     val batch = vals.toDF("k", "v")
     ExactlyOnce.advanceStateBucketed(spark, dir, epoch, batch,
-      "k", buckets)(emptyKV)(cur =>
-      cur.join(batch.select(col("k")), Seq("k"), "left_anti")
-        .unionByName(batch))
+      "k", buckets)(emptyKV)((cur, cluster) =>
+      cluster(cur.join(batch.select(col("k")), Seq("k"), "left_anti")
+        .unionByName(batch)))
   }
 
   test("rebucket 8 -> 32 preserves live state, re-assigns buckets, and " +

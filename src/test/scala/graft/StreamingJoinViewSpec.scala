@@ -105,14 +105,14 @@ class StreamingJoinViewSpec extends SparkSpec {
       .withColumn("__e", lit(1L))
     ExactlyOnce.advanceStateBucketed(spark, s"$root/left", 1L, pDelta,
       "__jkey", StreamingJoinView.DefaultBuckets)(pDelta.limit(0)) {
-      current =>
-        current
+      (current, cluster) =>
+        cluster(current
           .groupBy(pDelta.columns.filterNot(
             Set("__m", "__e")).map(col).toIndexedSeq: _*)
           .agg(sum(col("__m")).as("__m"), max(col("__e")).as("__e"))
           .filter(col("__m") =!= 0)
           .select(pDelta.columns.map(col).toIndexedSeq: _*)
-          .unionByName(pDelta)
+          .unionByName(pDelta))
     }
 
     insertOnly(root, oKeys, cKeys)(
