@@ -1,7 +1,7 @@
 package graft
 
 /** Regression gates for the won performance bars (round-14, VERDICT
-  * r13 item 2): ScaleSmoke FAILS — exits nonzero, not just records —
+  * r13 item 2): `graft.Scale` FAILS — exits nonzero, not just records —
   * when a structural win silently backslides. Each bound is a
   * GENEROUS structural ceiling, sized to catch a lost fusion / a lost
   * probe confinement, not capture noise:

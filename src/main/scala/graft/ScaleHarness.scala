@@ -585,10 +585,19 @@ private[graft] object ScaleHarness {
     // per micro-batch); steady epochs append fresh files below. A
     // migration fences its waves at epochs frontier-waves+1..frontier,
     // so the frontier must be at least waves - 1. Split on event_id, not
-    // round robin, so each bulk epoch holds the same rows in every run
+    // round robin, so each split holds the same rows in every run; the
+    // replay takes files in modification-time order, so split i (the
+    // part file of hash partition i) is stamped i seconds after split 0
+    // and an hour in the past, and is bulk epoch i in every run
     val bulk = math.max(4, migrationWaves)
     evAll.repartition(bulk, col("event_id")).write.mode("overwrite")
       .parquet(s"$ivmFeed/events.parquet")
+    val splitT0 = System.currentTimeMillis() - 3600000L
+    hadoopFs(spark).listStatus(
+        new org.apache.hadoop.fs.Path(s"$ivmFeed/events.parquet"))
+      .map(_.getPath).filter(_.getName.startsWith("part-"))
+      .foreach(p => hadoopFs(spark).setTimes(p,
+        splitT0 + 1000L * p.getName.substring(5, 10).toInt, -1L))
     val steadyEvents = trickle(evAll, "event_id")
     // dims, pinned to the driver (tiny): event_type (raw AND its
     // truncated form — before-images keep raw, after-images truncate)

@@ -205,16 +205,14 @@ object CdcApply {
 
   /** The empty versioned-replica frame. */
   def emptyVersioned(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    ExactlyOnce.emptyFrame(spark,
       org.apache.spark.sql.types.StructType(replicaSchema.fields :+
         org.apache.spark.sql.types.StructField("deleted",
           org.apache.spark.sql.types.BooleanType, nullable = false)))
 
   /** The empty replica frame. */
   def emptyReplica(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], replicaSchema)
+    ExactlyOnce.emptyFrame(spark, replicaSchema)
 
   /** How many hash buckets the persisted replica is split across. Small
     * here (tests); a 100 TB replica would use thousands — per-epoch
@@ -234,28 +232,27 @@ object CdcApply {
     * each bucket's previous version until the next epoch).
     */
   def materializer(spark: SparkSession, stateDir: String,
-      numBuckets: Int = DefaultBuckets, retain: Int = 2)(
+      numBuckets: Int = DefaultBuckets)(
       batch: DataFrame, batchId: Long): Unit =
-    advance(spark, stateDir, numBuckets, retain, batch, batchId)(
-      lastChangePerKey)
+    advance(spark, stateDir, numBuckets, batch, batchId)(lastChangePerKey)
 
   /** [[materializer]] for MONGO change-stream batches (op from
     * `operationType`, image from `fullDocument`).
     */
   def materializerMongo(spark: SparkSession, stateDir: String,
-      numBuckets: Int = DefaultBuckets, retain: Int = 2)(
+      numBuckets: Int = DefaultBuckets)(
       batch: DataFrame, batchId: Long): Unit =
-    advance(spark, stateDir, numBuckets, retain, batch, batchId)(
+    advance(spark, stateDir, numBuckets, batch, batchId)(
       lastChangePerKeyMongo)
 
   /** The fenced bucketed apply both materializers run; `lastChange`
     * reads the batch's envelope shape.
     */
   private def advance(spark: SparkSession, stateDir: String,
-      numBuckets: Int, retain: Int, batch: DataFrame, batchId: Long)(
+      numBuckets: Int, batch: DataFrame, batchId: Long)(
       lastChange: DataFrame => DataFrame): Unit = {
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, batch,
-      "partitionKey", numBuckets, retain)(emptyReplica(spark))(
+      "partitionKey", numBuckets)(emptyReplica(spark))(
       (current, cluster) => cluster(applyChanges(current, lastChange(batch))))
     ()
   }

@@ -402,6 +402,12 @@ object ExactlyOnce {
   def bucketOf(keyCol: String, numBuckets: Int): Column =
     bucketExpr(keyCol, numBuckets)
 
+  /** An empty frame of `schema`: the `empty` state the materializers
+    * hand the protocol before their first commit.
+    */
+  def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
   private val StateDirRe = "^state-(\\d+)$".r
   private val BucketDirRe = "^__bucket=(\\d+)$".r
 
@@ -417,21 +423,6 @@ object ExactlyOnce {
       catch { case _: java.io.FileNotFoundException if left > 1 => attempt(left - 1) }
     attempt(3)
   }
-
-  /** The cluster-scale write lever: per-epoch bucket-clustering
-    * exchange ON by default (locally: O(1) files per bucket). A
-    * cluster deployment sets `spark.graft.state.clusterByBucket=false`
-    * once on the session and every materializer entry point — CDC
-    * replica, SCD2, rollup, join view, sketches, reservoir, schema
-    * census, dup-spans LSM — inherits it; an explicit parameter at the
-    * protocol layer overrides the conf (specs exercise both).
-    */
-  val ClusterByBucketConf = "spark.graft.state.clusterByBucket"
-
-  private def resolveClusterByBucket(spark: SparkSession,
-      explicit: Option[Boolean]): Boolean =
-    explicit.getOrElse(
-      spark.conf.getOption(ClusterByBucketConf).forall(_.toBoolean))
 
   /** Per-advance phase timing behind `spark.graft.state.timing=true` —
     * the attribution instrument for the chained-materializer fixed
@@ -488,13 +479,12 @@ object ExactlyOnce {
     * exchange count, not bucket volume, as the steady-epoch floor). Any
     * other advance applies it to its output.
     *
-    * The protocol clusters when `clusterByBucket` (or the session's
-    * [[ClusterByBucketConf]]; default on) holds AND the epoch is not
-    * near-empty: more than 4 touched buckets, or a wide batch. A
-    * near-empty epoch (≤ 4 buckets of a narrow batch) writes at most a
-    * few files per bucket, where an extra exchange would cost a whole
-    * stage + AQE round per state — the dominant share of the chained
-    * pipeline's steady-epoch floor (r10); a wide skewed batch landing
+    * The protocol clusters when the epoch is not near-empty: more than
+    * 4 touched buckets, or a wide batch. A near-empty epoch (≤ 4
+    * buckets of a narrow batch) writes at most a few files per bucket,
+    * where an extra exchange would cost a whole stage + AQE round per
+    * state — the dominant share of the chained pipeline's steady-epoch
+    * floor (r10); a wide skewed batch landing
     * in ≤ 4 buckets still clusters, or it would fan out (write tasks ×
     * buckets) fragments. Width is measured by the protocol's own probe
     * (narrow = ≤ 32 partitions) or stated by a caller passing `known`.
@@ -508,8 +498,7 @@ object ExactlyOnce {
     */
   def advanceStateBucketed(spark: SparkSession, stateDir: String,
       batchId: Long, batch: DataFrame, keyCol: String, numBuckets: Int,
-      retain: Int = 2, clusterByBucket: Option[Boolean] = None,
-      known: Option[Touched] = None)(
+      retain: Int = 2, known: Option[Touched] = None)(
       empty: => DataFrame)(
       advance: (DataFrame, DataFrame => DataFrame) => DataFrame): Boolean = {
     require(numBuckets > 0, "numBuckets must be positive")
@@ -560,8 +549,7 @@ object ExactlyOnce {
         val current = readVersions(spark,
           newestVersions(fs, stateDir, owners, Some(touched)),
           Option(stateSchemaCache.get(stateDir)))(empty)
-        val clusters = resolveClusterByBucket(spark, clusterByBucket) &&
-          (touched.size > 4 || !narrow)
+        val clusters = touched.size > 4 || !narrow
         val parts = math.min(numBuckets, touched.size)
         def cluster(df: DataFrame): DataFrame = {
           val tagged = df.withColumn("__bucket", bExpr)
@@ -826,8 +814,7 @@ object ExactlyOnce {
     * not double-applied.
     */
   def rebucketState(spark: SparkSession, srcDir: String, dstDir: String,
-      keyCol: String, newBuckets: Int, batchId: Long = 0L,
-      retain: Int = 2, waves: Int = 1,
+      keyCol: String, newBuckets: Int, batchId: Long = 0L, waves: Int = 1,
       crashAfterWave: Option[Int] = None): Boolean = {
     require(srcDir != dstDir,
       "rebucket migrates into a NEW state dir; in-place would destroy" +
@@ -914,8 +901,8 @@ object ExactlyOnce {
       // clustering exchange into the write, so nothing state-sized is
       // ever pinned in memory
       val adv = advanceStateBucketed(spark, dstDir, waveEpoch, waveRows,
-        keyCol, newBuckets, retain,
-        known = Some(Touched(group, narrow = false)))(waveRows.limit(0))(
+        keyCol, newBuckets, known = Some(Touched(group, narrow = false)))(
+        waveRows.limit(0))(
         (current, cluster) => cluster(current.unionByName(waveRows)))
       advancedAny ||= adv
       // test seam: simulate a crash after this wave's commit and
@@ -1010,13 +997,14 @@ object ExactlyOnce {
   }
 
   /** The bucketed state STRICTLY BEFORE epoch `batchId`, restricted to
-    * a bucket subset — the read the changelog-lookup producer needs:
-    * "what did this epoch's touched buckets hold before it committed",
-    * answered identically whether the epoch's own advance has already
-    * committed or not (its versions carry epoch ≥ `batchId` and are
-    * skipped), which is what makes a lookup-derived changelog
-    * replay-stable across the torn-epoch window. Resolvable as long as
-    * the pre-epoch versions sit inside the retirement grace: with the
+    * a bucket subset — the pre-commit read of the join view's
+    * increment and the novelty census's doc deltas: "what did this
+    * epoch's touched buckets hold before it committed", answered
+    * identically whether the epoch's own advance has already committed
+    * or not (its versions carry epoch ≥ `batchId` and are skipped),
+    * which is what makes a derived delta replay-stable across the
+    * torn-epoch window. Resolvable as long as the pre-epoch versions
+    * sit inside the retirement grace: with the
     * default retain=2 that is exactly until the NEXT epoch commits —
     * the same window foreachBatch replays are confined to. Same
     * retired-vs-written-empty disambiguation as
@@ -1035,8 +1023,8 @@ object ExactlyOnce {
   /** The versioned twin of the appended-state fan-out guard: a caller
     * that computed its touched-bucket set mod N must probe a state
     * pinned N ways — a mismatch silently reads the wrong buckets
-    * (for the changelog-lookup producer that means missed retractions,
-    * a correctness bug, not a perf one), so it fails loudly instead.
+    * (for a pre-commit read that means a wrong increment, a
+    * correctness bug, not a perf one), so it fails loudly instead.
     */
   private def validateProbeFanout(spark: SparkSession, stateDir: String,
       expected: Option[Int]): Unit =
@@ -1076,8 +1064,7 @@ object ExactlyOnce {
     * key's bucket is structural.
     */
   def appendDeltaBucketed(spark: SparkSession, stateDir: String,
-      batchId: Long, keyCol: String, numBuckets: Int,
-      clusterByBucket: Option[Boolean] = None)(
+      batchId: Long, keyCol: String, numBuckets: Int)(
       delta: => DataFrame): Boolean = {
     require(numBuckets > 0, "numBuckets must be positive")
     val ledger = Ledger(spark, stateDir)
@@ -1086,12 +1073,9 @@ object ExactlyOnce {
     if (Ledger.fenced(names, batchId)) false
     else {
       ledger.pin(names, numBuckets)
-      val tagged = delta.withColumn("__bucket", bucketExpr(keyCol, numBuckets))
-      // cluster by bucket: O(1) files per touched bucket (same trade
-      // and same conf-driven lever as advanceStateBucketed)
-      val clustered = if (resolveClusterByBucket(spark, clusterByBucket))
-        tagged.repartition(numBuckets, col("__bucket")) else tagged
-      clustered
+      // cluster by bucket: O(1) files per touched bucket
+      delta.withColumn("__bucket", bucketExpr(keyCol, numBuckets))
+        .repartition(numBuckets, col("__bucket"))
         .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
         .parquet(s"$stateDir/delta-$batchId")
       ledger.commit(Ledger.epoch(batchId))

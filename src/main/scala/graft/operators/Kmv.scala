@@ -22,6 +22,11 @@ object Kmv {
   val P: Long = 2305843009213693951L
   /** Random odd multiplier < P (shared with the oracle SQL). */
   val A: Long = 999999999999999989L
+  /** The additive term of `rel_kmv_groups` and its durable twin
+    * ([[graft.streaming.StreamingGroupedKmv]]); the oracle SQL spells
+    * it out.
+    */
+  val GroupsSeed: Long = 987654321L
 
   /** The portable hash as a Column over a non-negative integral id. */
   def hashCol(c: Column, b: Long): Column =

@@ -84,15 +84,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object PageRank {
 
-  /** Sentinel default for `broadcastNodeLimit`: "no explicit limit —
-    * resolve from `spark.graft.graph.broadcastNodeLimit`, falling back
-    * to [[ConnectedComponents.BroadcastNodeLimit]]". Negative so that
-    * EVERY real value a caller can pass — including passing the
-    * library default explicitly (a test pinning a regime) — is
-    * distinguishable from "unset" and wins over the session conf.
-    */
-  val UseSessionLimit: Long = -1L
-
   /** The iteration-invariant inputs, exposed so plan specs can assert
     * one round's physical shape: the cached edge table (hash(dst)
     * under the gate, co-partitioned+sorted on `src` past it — always
@@ -106,7 +97,7 @@ object PageRank {
     * the final result).
     */
   def prepare(nodes: DataFrame, edges: DataFrame,
-      broadcastNodeLimit: Long = UseSessionLimit,
+      broadcastNodeLimit: Long = ConnectedComponents.BroadcastNodeLimit,
       symmetric: Boolean = false, edgesTruncated: Boolean = false)
       : (DataFrame, DataFrame, DataFrame => DataFrame, Boolean,
         Option[DataFrame], DataFrame) = {
@@ -119,17 +110,6 @@ object PageRank {
         f"[pagerank] prepare $tag ${(System.nanoTime() - s0) / 1e9}%.2f s")
       r
     }
-    // session-conf override for the regime gate (A/B harness + cluster
-    // lever); an EXPLICIT limit argument — tests pinning a regime,
-    // INCLUDING one that explicitly passes the library default — wins
-    // over the conf (the sentinel, not a value comparison, encodes
-    // "unset")
-    val gateLimit =
-      if (broadcastNodeLimit >= 0L) broadcastNodeLimit
-      else nodes.sparkSession.conf
-        .getOption("spark.graft.graph.broadcastNodeLimit")
-        .map(_.toLong)
-        .getOrElse(ConnectedComponents.BroadcastNodeLimit)
     // the two prepare actions (object doc): materialize + truncate the
     // edge pipeline, then the node-sized degree table whose count is
     // the gate quantity — the rank-vector row count itself.
@@ -148,12 +128,12 @@ object PageRank {
     // broadcasts) and |E| = Σ dg (sizes the under-gate edge layout)
     val stats = t("gate-count")(
       deg.agg(count(lit(1)), sum(col("dg"))).head())
-    val underGate = stats.getLong(0) <= gateLimit
+    val underGate = stats.getLong(0) <= broadcastNodeLimit
     // the under-gate cached layout fixes the per-round task count for
     // the whole run, and AQE cannot re-plan an explicit cached
     // partitioning — so size it from the MEASURED edge count, capped
-    // at min(shuffle parallelism, scheduler core count). The
-    // rows-per-partition default is a TASK-GRANULARITY floor, not a
+    // at min(shuffle parallelism, scheduler core count). The 65,536
+    // rows per partition are a TASK-GRANULARITY floor, not a
     // storage target: it only governs how large |E| must be before
     // another task is worth launching, so a tiny graph runs each round
     // as a couple of tasks instead of a shuffle-partitions-wide stage
@@ -166,14 +146,11 @@ object PageRank {
     // cache pays TWO scheduling waves per round for zero parallelism
     // gain; one wave of core-count tasks scans the same bytes.
     val edgeParts = {
-      val rowsPerPart = nodes.sparkSession.conf
-        .getOption("spark.graft.graph.edgeRowsPerPartition")
-        .map(_.toLong).getOrElse(65536L)
       val e = if (stats.isNullAt(1)) 0L else stats.getLong(1)
       val cap = math.min(
         nodes.sparkSession.sessionState.conf.numShufflePartitions,
         nodes.sparkSession.sparkContext.defaultParallelism)
-      math.max(1L, math.min(cap.toLong, e / rowsPerPart + 1)).toInt
+      math.max(1L, math.min(cap.toLong, e / 65536L + 1)).toInt
     }
     // the static split (shared by all regimes): source-only nodes
     // (∉ dst) freeze at 150000 after round 1 but keep contributing;
@@ -205,7 +182,7 @@ object PageRank {
         // its own count — one cheap job over a just-checkpointed
         // node-sized leaf, non-symmetric path only.
         val bhDst = ConnectedComponents.hintIf(
-          underGate && dstIds.count() <= gateLimit)
+          underGate && dstIds.count() <= broadcastNodeLimit)
         val so = deg.select(col("src").as("id"))
           .join(bhDst(dstIds), Seq("id"), "left_anti")
           .withColumn("rank", lit(150000L))
@@ -285,7 +262,7 @@ object PageRank {
     * Returns (`id`, `rank`) in rank-micros for every node.
     */
   def run(nodes: DataFrame, edges: DataFrame, rounds: Int = 10,
-      broadcastNodeLimit: Long = UseSessionLimit,
+      broadcastNodeLimit: Long = ConnectedComponents.BroadcastNodeLimit,
       symmetric: Boolean = false,
       edgesTruncated: Boolean = false): DataFrame = {
     require(rounds >= 1, "pagerank needs at least one round")

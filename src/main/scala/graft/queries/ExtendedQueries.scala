@@ -300,7 +300,7 @@ object ExtendedQueries {
         import graft.operators.Kmv
         val K = 128
         val l = Tables.lineitem(s, dir)
-        val h = Kmv.hashCol(col("l_partkey"), 987654321L)
+        val h = Kmv.hashCol(col("l_partkey"), Kmv.GroupsSeed)
         val wk = Window.partitionBy(col("l_returnflag")).orderBy(col("h"))
         val kmv = l.select(col("l_returnflag"), h.as("h")).distinct()
           .withColumn("rn", row_number().over(wk))

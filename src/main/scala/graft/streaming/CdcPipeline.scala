@@ -37,11 +37,9 @@ import graft.sources.CdcReplay
 object CdcPipeline {
 
   /** Configure the session the way the reference's EMR main does. */
-  def configure(spark: SparkSession, rocksdb: Boolean = true): Unit = {
-    if (rocksdb)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-  }
+  def configure(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   /** The full streaming DataFrame: file-replayed CDC events → enriched →
     * Kafka projection (key/value/topic[/partition]).

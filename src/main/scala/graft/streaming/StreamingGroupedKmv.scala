@@ -44,19 +44,15 @@ object StreamingGroupedKmv {
 
   val DefaultBuckets = 16
 
-  private def emptyLike(spark: SparkSession, p: DataFrame): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], p.schema)
-
   /** One batch's partial sketches: per group, its ≤ K smallest
     * distinct hashes as a sorted array.
     */
   def partials(batch: DataFrame, keyCols: Seq[String], idCol: String,
-      k: Int, hashSeed: Long): DataFrame = {
+      k: Int): DataFrame = {
     val wk = Window.partitionBy(keyCols.map(col): _*).orderBy(col("__h"))
     batch
       .select(keyCols.map(col) :+
-        Kmv.hashCol(col(idCol), hashSeed).as("__h"): _*)
+        Kmv.hashCol(col(idCol), Kmv.GroupsSeed).as("__h"): _*)
       .distinct()
       .withColumn("__rn", row_number().over(wk))
       .filter(col("__rn") <= k)
@@ -70,12 +66,12 @@ object StreamingGroupedKmv {
     */
   def materializer(spark: SparkSession, stateDir: String,
       keyCols: Seq[String], idCol: String, k: Int = 128,
-      hashSeed: Long = 987654321L, numBuckets: Int = DefaultBuckets,
-      retain: Int = 2)(batch: DataFrame, batchId: Long): Unit = {
+      numBuckets: Int = DefaultBuckets)(
+      batch: DataFrame, batchId: Long): Unit = {
     ExactlyOnce.ensureLedgerTag(spark, stateDir, StateKeys.CodecTag)
-    val p = partials(batch, keyCols, idCol, k, hashSeed)
+    val p = partials(batch, keyCols, idCol, k)
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, p,
-      "__gkey", numBuckets, retain)(emptyLike(spark, p)) {
+      "__gkey", numBuckets)(ExactlyOnce.emptyFrame(spark, p.schema)) {
       (current, cluster) =>
       // semilattice union: ≤ 2 sketch rows per group after the union
       // (current + delta), folded to the K smallest distinct hashes

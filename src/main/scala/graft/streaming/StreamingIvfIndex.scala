@@ -54,8 +54,7 @@ object StreamingIvfIndex {
     StructField("norm", DoubleType)))
 
   private def emptyIndex(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], indexSchema)
+    ExactlyOnce.emptyFrame(spark, indexSchema)
 
   private def stateDir(root: String) = s"$root/state"
   private def codebookDir(root: String) = s"$root/codebook"
@@ -81,7 +80,7 @@ object StreamingIvfIndex {
     * advanceStateBucketed's advanced/fenced flag.
     */
   def materializer(spark: SparkSession, root: String,
-      numShards: Int = DefaultShards, retain: Int = 2)(
+      numShards: Int = DefaultShards)(
       batch: DataFrame, batchId: Long): Boolean = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
@@ -102,7 +101,7 @@ object StreamingIvfIndex {
     val assigned = Ivf.assignCarrying(ns, cents)
       .select(col("vec_id"), col("cell_id"), col("v"), col("norm"))
     ExactlyOnce.advanceStateBucketed(spark, stateDir(root), batchId,
-      assigned, "cell_id", numShards, retain)(emptyIndex(spark)) {
+      assigned, "cell_id", numShards)(emptyIndex(spark)) {
       (current, cluster) =>
         // re-ingested vec_ids replace their rows; `current` holds the
         // touched SHARDS' full content (a superset of the batch's
@@ -178,7 +177,7 @@ object StreamingIvfIndex {
     * touching the frozen codebook).
     */
   def retrain(spark: SparkSession, srcRoot: String, dstRoot: String,
-      numShards: Int = DefaultShards, rounds: Int = 2, retain: Int = 2,
+      numShards: Int = DefaultShards, rounds: Int = 2,
       batchId: Long = 0L): Boolean = {
     require(srcRoot != dstRoot,
       "retrain rebuilds into a NEW root; in-place would tear the live" +
@@ -229,7 +228,7 @@ object StreamingIvfIndex {
     // parquet straight through the clustering exchange into the write
     // with nothing index-sized pinned in storage memory
     val advanced = ExactlyOnce.advanceStateBucketed(spark,
-      stateDir(dstRoot), batchId, out, "cell_id", numShards, retain,
+      stateDir(dstRoot), batchId, out, "cell_id", numShards,
       known = Some(ExactlyOnce.Touched((0 until numShards).toSet,
         narrow = false)))(
       emptyIndex(spark)) { (current, cluster) =>

@@ -75,10 +75,6 @@ object StreamingJoinView {
     */
   val DefaultBuckets = 16
 
-  private def emptyLike(spark: SparkSession, p: DataFrame): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], p.schema)
-
   /** The packed join key — the shared [[StateKeys.packKey]]
     * length-prefixed encoding, so no key value — whatever bytes it
     * contains — can collide with a different key tuple. Null-keyed
@@ -119,12 +115,11 @@ object StreamingJoinView {
     * count as the width) and is shared with the increment read.
     */
   private def advanceSide(spark: SparkSession, dir: String, p: DataFrame,
-      batchId: Long, numBuckets: Int, retain: Int,
-      touched: ExactlyOnce.Touched): Unit = {
+      batchId: Long, numBuckets: Int, touched: ExactlyOnce.Touched): Unit = {
     val valueCols = p.columns.toSeq.filterNot(Set("__m", "__e"))
     ExactlyOnce.advanceStateBucketed(spark, dir, batchId, p,
-      "__jkey", numBuckets, retain, known = Some(touched))(
-      emptyLike(spark, p)) { (current, cluster) =>
+      "__jkey", numBuckets, known = Some(touched))(
+      ExactlyOnce.emptyFrame(spark, p.schema)) { (current, cluster) =>
       cluster(current)
         .groupBy((col("__bucket") +: valueCols.map(col)): _*)
         .agg(sum(col("__m")).as("__m"), max(col("__e")).as("__e"))
@@ -163,11 +158,11 @@ object StreamingJoinView {
   def materializerSigned(spark: SparkSession, root: String,
       leftKeys: Seq[String], rightKeys: Seq[String],
       leftSign: Option[String], rightSign: Option[String],
-      numBuckets: Int = DefaultBuckets, retain: Int = 2,
+      numBuckets: Int = DefaultBuckets,
       precomputedLeft: Option[(Set[Int], Long)] = None)(
       leftBatch: DataFrame, rightBatch: DataFrame, batchId: Long): DataFrame = {
     val (inc, _, commit) = materializerSignedCascade(spark, root, leftKeys,
-      rightKeys, leftSign, rightSign, numBuckets, retain,
+      rightKeys, leftSign, rightSign, numBuckets,
       precomputedLeft = precomputedLeft)(leftBatch, rightBatch, batchId)
     commit()
     inc
@@ -217,7 +212,7 @@ object StreamingJoinView {
   def materializerSignedCascade(spark: SparkSession, root: String,
       leftKeys: Seq[String], rightKeys: Seq[String],
       leftSign: Option[String], rightSign: Option[String],
-      numBuckets: Int = DefaultBuckets, retain: Int = 2,
+      numBuckets: Int = DefaultBuckets,
       downstream: Option[(Seq[String], Int)] = None,
       precomputedLeft: Option[(Set[Int], Long)] = None)(
       leftBatch: DataFrame, rightBatch: DataFrame,
@@ -300,11 +295,11 @@ object StreamingJoinView {
       // writes (advanceSide output == partials shape, types exact:
       // sum over long stays long) and skip footer inference.
       val ltOld = ExactlyOnce.stateBucketsBefore(spark, s"$root/left",
-        batchId, touched, retain, Some(numBuckets), Some(pL.schema))(
-        emptyLike(spark, pL))
+        batchId, touched, expectedBuckets = Some(numBuckets),
+        schema = Some(pL.schema))(ExactlyOnce.emptyFrame(spark, pL.schema))
       val rtOld = ExactlyOnce.stateBucketsBefore(spark, s"$root/right",
-        batchId, touched, retain, Some(numBuckets), Some(pR.schema))(
-        emptyLike(spark, pR))
+        batchId, touched, expectedBuckets = Some(numBuckets),
+        schema = Some(pR.schema))(ExactlyOnce.emptyFrame(spark, pR.schema))
 
       //   Δ(L⋈R)  =  ΔL ⋈ (R_old ⊎ ΔR)  +  L_old ⋈ ΔR
       //           =  ΔL ⋈ R_old  +  ΔL ⋈ ΔR  +  L_old ⋈ ΔR
@@ -362,9 +357,9 @@ object StreamingJoinView {
         try {
           graft.operators.Concurrent.all[Any](spark)(
             () => advanceSide(spark, s"$root/left", pL, batchId,
-              numBuckets, retain, sideTouched(bL, nL)),
+              numBuckets, sideTouched(bL, nL)),
             () => advanceSide(spark, s"$root/right", pR, batchId,
-              numBuckets, retain, sideTouched(bR, nR)),
+              numBuckets, sideTouched(bR, nR)),
             // the signed view merge: grouped on (__bucket +: value
             // columns) over the clustered union — merge and bucket
             // clustering share ONE exchange. Always narrow: unlike the
@@ -376,9 +371,9 @@ object StreamingJoinView {
             // (size-coalesced tasks × ≤4 buckets) with or without the
             // clustering exchange
             () => ExactlyOnce.advanceStateBucketed(spark, s"$root/view",
-              batchId, inc, "__jkey", numBuckets, retain,
+              batchId, inc, "__jkey", numBuckets,
               known = Some(ExactlyOnce.Touched(touched, narrow = true)))(
-              emptyLike(spark, inc)) { (current, cluster) =>
+              ExactlyOnce.emptyFrame(spark, inc.schema)) { (current, cluster) =>
               cluster(current.unionByName(inc))
                 .groupBy((col("__bucket") +:
                   inc.columns.filterNot(_ == "__m").map(col).toSeq): _*)
@@ -412,8 +407,7 @@ object StreamingJoinView {
         l.schema.fields ++ r.schema.fields :+
           org.apache.spark.sql.types.StructField("__m",
             org.apache.spark.sql.types.LongType))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      ExactlyOnce.emptyFrame(spark, schema)
     }.drop("__jkey")
   }
 }

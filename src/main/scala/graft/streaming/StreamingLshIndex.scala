@@ -48,8 +48,7 @@ object StreamingLshIndex {
     StructField("owner", LongType)))
 
   private def emptyIndex(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], indexSchema)
+    ExactlyOnce.emptyFrame(spark, indexSchema)
 
   /** Exploded (bucket_key, doc_id) band rows for a (doc_id, text)
     * batch — [[StreamingDedup.bandRows]]'s fused codegen signatures,
@@ -70,11 +69,11 @@ object StreamingLshIndex {
     * `eventsDir/epoch=<batchId>` under the same epoch marker.
     */
   def materializer(spark: SparkSession, stateDir: String, eventsDir: String,
-      numBuckets: Int = DefaultBuckets, retain: Int = 2)(
+      numBuckets: Int = DefaultBuckets)(
       batch: DataFrame, batchId: Long): Unit = {
     val keys = bandKeys(batch)
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, keys,
-      "bucket_key", numBuckets, retain)(emptyIndex(spark)) {
+      "bucket_key", numBuckets)(emptyIndex(spark)) {
       (current, cluster) =>
       // one claimant per bucket this batch (lowest doc_id)
       val claims = keys.groupBy(col("bucket_key"))
@@ -132,9 +131,7 @@ object StreamingLshIndex {
         .filter(ExactlyOnce.isEpochCommitted(spark, stateDir, _))
         .sorted
     if (committed.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
+      ExactlyOnce.emptyFrame(spark, StructType(Seq(
           StructField("doc_id", LongType),
           StructField("dup_of", LongType),
           StructField("band", IntegerType))))

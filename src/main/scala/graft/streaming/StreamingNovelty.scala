@@ -65,17 +65,13 @@ object StreamingNovelty {
       .withColumn("__gkey",
         StateKeys.packKeyCols(Seq(col("gh1"), col("gh2"))))
 
-  private def emptyLike(spark: SparkSession, p: DataFrame): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], p.schema)
-
   /** foreachBatch body: fold one micro-batch of (doc_id, text) rows
     * into the standing novelty census. Each document must appear in
     * the whole feed exactly once (the CDC-replay/document-feed
     * contract of every census materializer here).
     */
   def materializer(spark: SparkSession, root: String,
-      numBuckets: Int = DefaultBuckets, retain: Int = 2)(
+      numBuckets: Int = DefaultBuckets)(
       batch: DataFrame, batchId: Long): Unit = {
     val gramsDir = s"$root/grams"
     val docsDir = s"$root/docs"
@@ -116,15 +112,13 @@ object StreamingNovelty {
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("dup",
             org.apache.spark.sql.types.BooleanType)))
-        def emptyGrams = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          gramSchema)
+        def emptyGrams = ExactlyOnce.emptyFrame(spark, gramSchema)
 
         // PRE-commit census of the touched buckets: the replay-stable
         // base for this epoch's doc-counter deltas
         val before = ExactlyOnce.stateBucketsBefore(spark, gramsDir,
-          batchId, touched, retain, Some(numBuckets), Some(gramSchema))(
-          emptyGrams)
+          batchId, touched, expectedBuckets = Some(numBuckets),
+          schema = Some(gramSchema))(emptyGrams)
           .select(col("__gkey"), col("owner"), col("dup"))
 
         //  - a batch gram absent from the census and carried by ONE
@@ -150,7 +144,7 @@ object StreamingNovelty {
           // join-view commit)
           graft.operators.Concurrent.both(spark)(
             ExactlyOnce.advanceStateBucketed(spark, gramsDir, batchId,
-              pg, "__gkey", numBuckets, retain,
+              pg, "__gkey", numBuckets,
               known = Some(ExactlyOnce.Touched(touched,
                 narrow = probe.getLong(1) <= 4096L)))(emptyGrams) {
               (current, cluster) =>
@@ -166,8 +160,9 @@ object StreamingNovelty {
                     .as("dup")))
             },
             ExactlyOnce.advanceStateBucketed(spark, docsDir, batchId,
-              docDeltas, "doc_id", numBuckets, retain)(
-              emptyLike(spark, docDeltas)) { (current, cluster) =>
+              docDeltas, "doc_id", numBuckets)(
+              ExactlyOnce.emptyFrame(spark, docDeltas.schema)) {
+              (current, cluster) =>
               cluster(current.unionByName(docDeltas)
                 .groupBy(col("doc_id"))
                 .agg(sum(col("dn_grams")).as("dn_grams"),

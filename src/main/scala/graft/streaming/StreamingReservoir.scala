@@ -43,10 +43,6 @@ object StreamingReservoir {
     graft.queries.QueryDef.uhash(concat(lit(seed), idCol.cast("string")))
       .cast("double")
 
-  private def emptyLike(spark: SparkSession, p: DataFrame): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], p.schema)
-
   /** One batch's partial: per stratum its k best (smallest-priority)
     * rows, every original column retained plus `__prio`. Rows are
     * deduplicated per (stratum, id) first — id re-occurrence inside a
@@ -82,14 +78,14 @@ object StreamingReservoir {
     */
   def materializer(spark: SparkSession, stateDir: String,
       keyCols: Seq[String], idCol: String, priority: Column, k: Int,
-      numBuckets: Int = DefaultBuckets, retain: Int = 2)(
+      numBuckets: Int = DefaultBuckets)(
       batch: DataFrame, batchId: Long): Unit = {
     ExactlyOnce.ensureLedgerTag(spark, stateDir, StateKeys.CodecTag)
     val p = partials(batch, keyCols, idCol, priority, k)
     val w = Window.partitionBy(col("__gkey"))
       .orderBy(col("__prio"), col(idCol))
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, p,
-      "__gkey", numBuckets, retain)(emptyLike(spark, p)) {
+      "__gkey", numBuckets)(ExactlyOnce.emptyFrame(spark, p.schema)) {
       (current, cluster) =>
       // dedup per (stratum, id) BEFORE the top-k: a re-ingested row is
       // already in `current` with the same deterministic priority, and

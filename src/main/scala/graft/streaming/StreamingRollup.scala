@@ -36,10 +36,6 @@ object StreamingRollup {
     */
   val DefaultBuckets = 16
 
-  private def emptyLike(spark: SparkSession, p: DataFrame): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], p.schema)
-
   /** Signed partials: each row carries `signCol` ∈ {+1, −1} (insert /
     * retraction — the TPC-H refresh-stream shape, or a CDC feed's
     * after/before images). `n` folds as sum-of-signs and every sum as
@@ -73,14 +69,14 @@ object StreamingRollup {
     */
   def materializerSigned(spark: SparkSession, stateDir: String,
       keyCols: Seq[String], sums: Seq[(String, String)], signCol: String,
-      numBuckets: Int = DefaultBuckets, retain: Int = 2)(
+      numBuckets: Int = DefaultBuckets)(
       batch: DataFrame, batchId: Long): Unit = {
     ExactlyOnce.ensureLedgerTag(spark, stateDir, StateKeys.CodecTag)
     val p = signedPartials(batch, keyCols, sums, signCol)
     val sumCols = "n" +: sums.map(_._1)
     val merges = sumCols.map(c => sum(col(c)).as(c))
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, p,
-      "__gkey", numBuckets, retain)(emptyLike(spark, p)) {
+      "__gkey", numBuckets)(ExactlyOnce.emptyFrame(spark, p.schema)) {
       (current, cluster) =>
         cluster(current.unionByName(p))
           .groupBy((col("__bucket") +: col("__gkey") +: keyCols.map(col)): _*)

@@ -119,15 +119,14 @@ class BucketedAsOfSpec extends SparkSpec {
     def batch(rows: Seq[(String, String)]) =
       rows.toDF("partitionKey", "value")
 
-    val m = graft.operators.CdcApply.materializer(spark, dir,
-      graft.operators.CdcApply.DefaultBuckets, retain) _
+    val m = graft.operators.CdcApply.materializerVersioned(spark, dir,
+      retain = retain) _
     m(batch(Seq(envelope("u1", "c", 1), envelope("u2", "c", 2))), 0L)
     m(batch(Seq(envelope("u1", "u", 3), envelope("u3", "c", 4))), 1L)
     m(batch(Seq(envelope("u2", "d", 5))), 2L)
 
     def replicaAsOf(e: Long) =
-      graft.operators.ExactlyOnce.currentStateBucketedAsOf(spark, dir, e,
-        retain)(graft.operators.CdcApply.emptyReplica(spark))
+      graft.operators.CdcApply.replicaVersionedAsOf(spark, dir, e, retain)
     def keysAsOf(e: Long) =
       replicaAsOf(e)
         .select(col("partitionKey")).as[String].collect().toSet

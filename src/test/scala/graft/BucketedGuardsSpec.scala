@@ -6,11 +6,11 @@ import java.nio.file.Files
 
 import graft.operators.ExactlyOnce
 
-/** The round-9 protocol guards: the `clusterByBucket` knob (the
-  * cluster-scale path that skips the per-epoch bucket-clustering
-  * exchange) must not change any read-back state, and the
-  * silent-data-loss window on the pruned probe — a mismatched probe
-  * fan-out — must fail loudly instead of returning a wrong slice.
+/** The round-9 protocol guards: the silent-data-loss window on the
+  * pruned probe — a mismatched probe fan-out — must fail loudly
+  * instead of returning a wrong slice; the state report names every
+  * live slice; and a packKey-keyed materializer refuses state written
+  * in another key encoding.
   */
 class BucketedGuardsSpec extends SparkSpec {
 
@@ -28,75 +28,6 @@ class BucketedGuardsSpec extends SparkSpec {
       cluster: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
     cluster(cur.join(batch.select(col("k")), Seq("k"), "left_anti")
       .unionByName(batch))
-
-  test("advanceStateBucketed with clusterByBucket=false (cluster-scale " +
-      "parallel write) reads back identically, even interleaved with " +
-      "clustered epochs") {
-    import spark.implicits._
-    val a = Files.createTempDirectory("graft_cb_on").toString
-    val b = Files.createTempDirectory("graft_cb_off").toString
-    val epochs = Seq(
-      (0L, Seq(1L -> 10L, 2L -> 20L, 40L -> 400L)),
-      (1L, Seq(2L -> 21L, 3L -> 30L)),
-      (2L, Seq(1L -> 12L, 41L -> 410L, 7L -> 70L)))
-    epochs.foreach { case (e, kvs) =>
-      val batch = kvs.toDF("k", "v")
-      ExactlyOnce.advanceStateBucketed(spark, a, e, batch, "k", Buckets)(
-        emptyKV)(upsert(batch))
-      // alternate the knob on the second dir — mixed layouts per epoch
-      ExactlyOnce.advanceStateBucketed(spark, b, e, batch, "k", Buckets,
-        clusterByBucket = Some(e % 2 == 0))(emptyKV)(upsert(batch))
-    }
-    def read(d: String) = ExactlyOnce.currentStateBucketed(spark, d)(emptyKV)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(read(a) == read(b))
-    assert(read(b) == Map(1L -> 12L, 2L -> 21L, 3L -> 30L, 7L -> 70L,
-      40L -> 400L, 41L -> 410L))
-  }
-
-  test("appendDeltaBucketed with clusterByBucket=false yields the same " +
-      "pruned-probe content") {
-    import spark.implicits._
-    val a = Files.createTempDirectory("graft_ad_on").toString
-    val b = Files.createTempDirectory("graft_ad_off").toString
-    Seq(a -> true, b -> false).foreach { case (d, knob) =>
-      Seq((0L, Seq(1L -> 10L, 9L -> 90L)), (1L, Seq(2L -> 20L, 1L -> 11L)))
-        .foreach { case (e, kvs) =>
-          ExactlyOnce.appendDeltaBucketed(spark, d, e, "k", Buckets,
-            clusterByBucket = Some(knob))(kvs.toDF("k", "v"))
-        }
-    }
-    val all = (0 until Buckets).toSet
-    def read(d: String) = ExactlyOnce.appendedStateBuckets(
-      spark, d, all, Some(Buckets))(emptyKV)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(read(a) == read(b))
-    assert(read(a) == Set((1L, 10L), (9L, 90L), (2L, 20L), (1L, 11L)))
-  }
-
-  test("the session conf spark.graft.state.clusterByBucket=false reaches " +
-      "a materializer entry point that never exposes the parameter, and " +
-      "the state reads back identically") {
-    import spark.implicits._
-    val confed = Files.createTempDirectory("graft_cb_conf").toString
-    val control = Files.createTempDirectory("graft_cb_ctrl").toString
-    val kvs = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "a", 30.0))
-    def run(d: String): Unit =
-      graft.streaming.StreamingRollup.materializerSigned(spark, d, Seq("g"),
-        Seq("v_sum" -> "v"), "s")(kvs.toDF("id", "g", "v").withColumn("s",
-        lit(1)), 0L)
-    spark.conf.set(ExactlyOnce.ClusterByBucketConf, "false")
-    try run(confed) finally
-      spark.conf.unset(ExactlyOnce.ClusterByBucketConf)
-    run(control)
-    def read(d: String) = graft.streaming.StreamingRollup
-      .rollup(spark, d, Seq("g"))
-      .select(col("g"), col("n"), col("v_sum").cast("double"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    assert(read(confed) == read(control))
-    assert(read(confed) == Set(("a", 2L, 40.0), ("b", 1L, 20.0)))
-  }
 
   test("stateReport: one live slice per owned bucket, retiring " +
       "versions flagged dead, LSM deltas live, flat components named") {

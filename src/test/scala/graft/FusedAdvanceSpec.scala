@@ -1,7 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.nio.file.Files
 
@@ -15,32 +21,68 @@ import graft.streaming.{StateKeys, StreamingJoinView, StreamingRollup}
   * the from-scratch signed aggregate, and the bag join of every
   * ingested row. The random epochs alternate wide ones (> 4 touched
   * buckets: the protocol clusters) with near-empty ones (≤ 4 buckets
-  * of a narrow batch: it does not), and every epoch sequence runs
-  * under `spark.graft.state.clusterByBucket` on and off. Batches
-  * include out-of-order versions, deletes, retractions and
-  * within-batch duplicates.
+  * of a narrow batch: it does not), so every state mixes clustered and
+  * unclustered versions; each case also reads the write plans and
+  * asserts that exactly the wide epochs clustered. Batches include
+  * out-of-order versions, deletes, retractions and within-batch
+  * duplicates.
   */
 class FusedAdvanceSpec extends SparkSpec {
 
   private val Buckets = 16
 
-  /** The two clustering settings: the default session (on) and a fork
-    * with the conf off.
-    */
-  private lazy val sessions: Seq[SparkSession] = {
-    val off = spark.newSession()
-    off.conf.set(ExactlyOnce.ClusterByBucketConf, "false")
-    Seq(spark, off)
-  }
+  /** Every node of `p`, through AQE's final plan and its query stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case other => other.children ++ other.innerChildren.collect {
+      case c: SparkPlan => c }
+  }).flatMap(nodes)
 
-  /** Asserts that the epochs' state keys (column `__k`) include both
-    * shapes: ≤ 4 and > 4 touched buckets.
+  /** Output path of each file write -> whether its plan holds the
+    * protocol's clustering `repartition` (a REPARTITION_BY_NUM exchange).
     */
-  private def assertBothShapes(epochs: Seq[DataFrame]): Unit = {
+  private val clustered =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private lazy val listening = spark.listenerManager.register(
+    new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val all = nodes(qe.executedPlan)
+        val byNum = all.exists {
+          case s: ShuffleExchangeExec => s.shuffleOrigin == REPARTITION_BY_NUM
+          case _ => false
+        }
+        all.collect { case d: DataWritingCommandExec => d.cmd }.collect {
+          case i: InsertIntoHadoopFsRelationCommand => i.outputPath.toString
+        }.foreach(clustered.put(_, byNum))
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+
+  /** Asserts that the write of `stateDir`'s epoch e clustered exactly
+    * when `touched(e)` > 4 (listener events arrive asynchronously —
+    * poll for each path).
+    */
+  private def assertClustering(stateDir: String, touched: Seq[Long]): Unit =
+    touched.zipWithIndex.foreach { case (n, e) =>
+      val path = s"$stateDir/state-$e"
+      val deadline = System.nanoTime() + 30e9.toLong
+      def find = scala.jdk.CollectionConverters.MapHasAsScala(clustered)
+        .asScala.collectFirst { case (p, c) if p.endsWith(path) => c }
+      while (find.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(find.contains(n > 4),
+        s"$path: $n touched buckets, clustered ${find.getOrElse("?")}")
+    }
+
+  /** Touched buckets per epoch of the epochs' state keys (column
+    * `__k`), asserting that both shapes occur: ≤ 4 and > 4.
+    */
+  private def assertBothShapes(epochs: Seq[DataFrame]): Seq[Long] = {
     val touched = epochs.map(_.select(ExactlyOnce.bucketOf("__k", Buckets))
       .distinct().count())
     assert(touched.exists(_ <= 4) && touched.exists(_ > 4),
       s"touched buckets per epoch: $touched")
+    touched
   }
 
   private def rows(df: DataFrame): Seq[String] =
@@ -80,7 +122,8 @@ class FusedAdvanceSpec extends SparkSpec {
           1000L + epoch + rnd.nextInt(6), epoch * 1000L + i, op)
       }.toDF("partitionKey", "value")
     }
-    assertBothShapes(epochs.map(_.withColumn("__k", col("partitionKey"))))
+    val touched =
+      assertBothShapes(epochs.map(_.withColumn("__k", col("partitionKey"))))
     val bucket = ExactlyOnce.bucketOf("partitionKey", Buckets)
     // the reference: per epoch, the touched buckets' state folds
     // through applyBatchVersioned (GC lands only where an epoch
@@ -99,18 +142,17 @@ class FusedAdvanceSpec extends SparkSpec {
     // the horizon really collects some tombstones, and not all
     assert(tombstones(wants(0)._2) > tombstones(wants(1)._2))
     assert(tombstones(wants(1)._2) > 0)
+    listening
     wants.foreach { case (horizon, want) =>
-      sessions.foreach { s =>
-        val dir = Files.createTempDirectory("graft_fav").toString
-        epochs.zipWithIndex.foreach { case (b, e) =>
-          CdcApply.materializerVersioned(s, dir, Buckets, horizon)(b, e)
-        }
-        val got = rows(ExactlyOnce.currentStateBucketed(spark, dir)(
-          CdcApply.emptyVersioned(spark))
-          .select(CdcApply.emptyVersioned(spark).columns.map(col).toSeq: _*))
-        assert(got == want, s"horizon $horizon, clustering " +
-          s.conf.get(ExactlyOnce.ClusterByBucketConf, "true"))
+      val dir = Files.createTempDirectory("graft_fav").toString
+      epochs.zipWithIndex.foreach { case (b, e) =>
+        CdcApply.materializerVersioned(spark, dir, Buckets, horizon)(b, e)
       }
+      val got = rows(ExactlyOnce.currentStateBucketed(spark, dir)(
+        CdcApply.emptyVersioned(spark))
+        .select(CdcApply.emptyVersioned(spark).columns.map(col).toSeq: _*))
+      assert(got == want, s"horizon $horizon")
+      assertClustering(dir, touched)
     }
   }
 
@@ -137,7 +179,7 @@ class FusedAdvanceSpec extends SparkSpec {
       }
     }
     val epochs = batches.map(_.toDF("g", "v", "sign"))
-    assertBothShapes(
+    val touched = assertBothShapes(
       epochs.map(_.withColumn("__k", StateKeys.packKey(Seq("g")))))
     val want = rows(batches.flatten.toDF("g", "v", "sign")
       .groupBy(col("g"))
@@ -146,17 +188,16 @@ class FusedAdvanceSpec extends SparkSpec {
           col("v").cast("decimal(18,2)")).cast("decimal(38,2)").as("v_sum"))
       .filter(col("n") =!= 0))
     assert(want.nonEmpty)
-    sessions.foreach { s =>
-      val dir = Files.createTempDirectory("graft_far").toString
-      epochs.zipWithIndex.foreach { case (b, e) =>
-        StreamingRollup.materializerSigned(
-          s, dir, Seq("g"), Seq("v_sum" -> "v"), "sign", Buckets)(b, e)
-      }
-      val got = rows(StreamingRollup.rollup(spark, dir, Seq("g"))
-        .select(col("g"), col("n"), col("v_sum").cast("decimal(38,2)")))
-      assert(got == want, "clustering " +
-        s.conf.get(ExactlyOnce.ClusterByBucketConf, "true"))
+    listening
+    val dir = Files.createTempDirectory("graft_far").toString
+    epochs.zipWithIndex.foreach { case (b, e) =>
+      StreamingRollup.materializerSigned(
+        spark, dir, Seq("g"), Seq("v_sum" -> "v"), "sign", Buckets)(b, e)
     }
+    val got = rows(StreamingRollup.rollup(spark, dir, Seq("g"))
+      .select(col("g"), col("n"), col("v_sum").cast("decimal(38,2)")))
+    assert(got == want)
+    assertClustering(dir, touched)
   }
 
   test("join-view merges (side compaction + signed view merge) == the " +
@@ -179,7 +220,9 @@ class FusedAdvanceSpec extends SparkSpec {
     val epochs = batches.map { case (l, r) =>
       (l.toDF("lk", "lv", "sign"), r.toDF("rk", "rv", "sign"))
     }
-    assertBothShapes(epochs.map { case (l, r) =>
+    // the view advance is always narrow: it clusters when the two
+    // sides touch more than 4 buckets together
+    val touched = assertBothShapes(epochs.map { case (l, r) =>
       l.select(StateKeys.packKey(Seq("lk")).as("__k")).unionByName(
         r.select(StateKeys.packKey(Seq("rk")).as("__k")))
     })
@@ -192,16 +235,15 @@ class FusedAdvanceSpec extends SparkSpec {
       .select(col("lk"), col("lv"), col("rk"), col("rv"),
         (col("ml") * col("mr")).as("__m")))
     assert(want.nonEmpty)
-    sessions.foreach { s =>
-      val root = Files.createTempDirectory("graft_fajv").toString
-      epochs.zipWithIndex.foreach { case ((l, r), e) =>
-        StreamingJoinView.materializerSigned(s, root, Seq("lk"), Seq("rk"),
-          Some("sign"), Some("sign"), Buckets)(l, r, e)
-      }
-      val got = rows(StreamingJoinView.view(spark, root)
-        .select(col("lk"), col("lv"), col("rk"), col("rv"), col("__m")))
-      assert(got == want, "clustering " +
-        s.conf.get(ExactlyOnce.ClusterByBucketConf, "true"))
+    listening
+    val root = Files.createTempDirectory("graft_fajv").toString
+    epochs.zipWithIndex.foreach { case ((l, r), e) =>
+      StreamingJoinView.materializerSigned(spark, root, Seq("lk"), Seq("rk"),
+        Some("sign"), Some("sign"), Buckets)(l, r, e)
     }
+    val got = rows(StreamingJoinView.view(spark, root)
+      .select(col("lk"), col("lv"), col("rk"), col("rv"), col("__m")))
+    assert(got == want)
+    assertClustering(s"$root/view", touched)
   }
 }

@@ -53,6 +53,14 @@ class IvmMigrationSpec extends SparkSpec {
         case e: ScaleHarness.Obj @unchecked => e("epoch")
       }.toSeq
       assert(epochIds == (0L until bulk + 6L), s"epochs ran: $epochIds")
+      // bulk epoch i replays split i of the event_id hash split
+      val rows = res.section("epochs").asInstanceOf[Iterable[_]].map {
+        case e: ScaleHarness.Obj @unchecked => e("rows")
+      }.toSeq.take(bulk)
+      val events = spark.read.parquet(s"$dir/events.parquet")
+      val splits = (0 until bulk).map(i => events.filter(
+        pmod(hash(col("event_id")), lit(bulk)) === i).count())
+      assert(rows == splits, s"bulk epoch rows $rows, splits $splits")
       // the artifact section carries both bucket shapes
       assert(res.section("buckets") == 8)
       assert(res.section("buckets_steady") == 32)

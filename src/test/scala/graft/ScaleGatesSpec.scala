@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Forced-failure proof for the ScaleSmoke regression gates: each won
+/** Forced-failure proof for the `graft.Scale` regression gates: each won
   * bar must TRIP when exceeded (a regression exits the smoke nonzero)
   * and hold at the r13 measured values (the smoke stays green on the
   * current tree). Pure predicates — no Spark session.

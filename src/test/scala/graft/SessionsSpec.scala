@@ -5,8 +5,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The local-session factory's conf, and a guard that keeps it the only
-  * session builder outside the two cluster entry points.
+/** The local-session factory's conf, a guard that keeps it the only
+  * session builder outside the two cluster entry points, and a guard on
+  * the `spark.graft.*` session keys main code reads.
   */
 class SessionsSpec extends AnyFunSuite {
 
@@ -51,18 +52,35 @@ class SessionsSpec extends AnyFunSuite {
     }
   }
 
-  test("SparkSession.builder appears only in Sessions and the two cluster apps") {
+  /** Every `.scala` file under `src/main/scala`: its path relative to
+    * that root -> its text.
+    */
+  private def mainSources(): Map[String, String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
-    val builder = "SparkSession.builder"
-    val builderRe = java.util.regex.Pattern.quote(builder).r
-    val uses = scala.util.Using.resource(java.nio.file.Files.walk(root)) {
+    scala.util.Using.resource(java.nio.file.Files.walk(root)) {
       _.iterator().asScala
         .filter(_.toString.endsWith(".scala"))
         .map(p => root.relativize(p).toString ->
           java.nio.file.Files.readString(p))
-        .filter(_._2.contains(builder))
         .toMap
     }
+  }
+
+  test("the spark.graft.* keys main code reads are the derivation cache " +
+      "and the two timing flags") {
+    val keys = mainSources().values.flatMap(
+      "\"(spark\\.graft\\.[^\"]*)\"".r.findAllMatchIn(_).map(_.group(1)))
+      .toSet
+    val expected = Set("spark.graft.dedup.derivationCache",
+      "spark.graft.state.timing", "spark.graft.graph.timing")
+    assert(keys == expected, s"unexpected ${keys -- expected}, " +
+      s"missing ${expected -- keys}")
+  }
+
+  test("SparkSession.builder appears only in Sessions and the two cluster apps") {
+    val builder = "SparkSession.builder"
+    val builderRe = java.util.regex.Pattern.quote(builder).r
+    val uses = mainSources().filter(_._2.contains(builder))
     assert(uses.keySet == Set("graft/Sessions.scala", "graft/apps/CdcApps.scala"),
       uses.keySet)
     assert(builderRe.findAllIn(uses("graft/Sessions.scala")).size == 1)

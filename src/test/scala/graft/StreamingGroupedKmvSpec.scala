@@ -14,7 +14,6 @@ import graft.streaming.StreamingGroupedKmv
 class StreamingGroupedKmvSpec extends SparkSpec {
 
   private val K = 128
-  private val Seed = 987654321L
 
   private def feed() = queries.Tables.lineitem(spark, sf)
     .select(col("l_returnflag"), col("l_partkey"), col("l_orderkey"))
@@ -23,7 +22,7 @@ class StreamingGroupedKmvSpec extends SparkSpec {
   private def batchTruth(): Map[String, (Long, Long, Double)] = {
     import org.apache.spark.sql.expressions.Window
     import graft.operators.Kmv
-    val h = Kmv.hashCol(col("l_partkey"), Seed)
+    val h = Kmv.hashCol(col("l_partkey"), Kmv.GroupsSeed)
     val wk = Window.partitionBy(col("l_returnflag")).orderBy(col("__h"))
     feed().select(col("l_returnflag"), h.as("__h")).distinct()
       .withColumn("rn", row_number().over(wk))
@@ -51,7 +50,7 @@ class StreamingGroupedKmvSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_gkmv").toString
     val rows = feed()
     val m = StreamingGroupedKmv.materializer(spark, dir,
-      Seq("l_returnflag"), "l_partkey", K, Seed) _
+      Seq("l_returnflag"), "l_partkey", K) _
     m(rows.filter(col("l_orderkey") % 7 === 0), 0L)
     m(rows.filter(col("l_orderkey") % 7 < 3 &&
       col("l_orderkey") % 7 > 0), 1L)
@@ -62,7 +61,7 @@ class StreamingGroupedKmvSpec extends SparkSpec {
   test("the partial's rank filter plans as a partial WindowGroupLimit " +
       "below the exchange") {
     val plan = StreamingGroupedKmv.partials(feed(), Seq("l_returnflag"),
-      "l_partkey", K, Seed).queryExecution.executedPlan.toString
+      "l_partkey", K).queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"),
       s"expected a WindowGroupLimit pushdown in:\n$plan")
   }
@@ -72,7 +71,7 @@ class StreamingGroupedKmvSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_gkmv_idem").toString
     val rows = feed()
     val m = StreamingGroupedKmv.materializer(spark, dir,
-      Seq("l_returnflag"), "l_partkey", K, Seed) _
+      Seq("l_returnflag"), "l_partkey", K) _
     m(rows, 0L)
     val after0 = stateTruth(dir)
     assert(after0 == batchTruth())

@@ -1,17 +1,19 @@
 #!/usr/bin/env python3
-"""Key-path and non-timing value diff of two scale artifacts.
+"""Key-path and non-reading value diff of two scale artifacts.
 
 Usage:
     python3 tools/scale_keys.py A.json B.json [--ignore PATH ...]
 
 Key paths recurse into objects; an array contributes the union of its
 elements' key paths under `name[]`. Values are compared at every leaf
-except the timing ones: a key named `value` or `op_sec`, a key ending in
-`sec`, and anything under a `memory` key. Array elements are compared by
-position, so a leaf path prints as `epochs[2].rows_written`; an
-`--ignore` path names a leaf or a subtree with `[]` for any index
-(`materializers.cdc_ivm_e2e.epochs[].rows`), for fields that differ
-between two runs of the same commit.
+except the readings, which differ between two runs of the same commit:
+the timings (a key named `value` or `op_sec`, a key ending in `sec` or
+holding `_sec_`, such as `steady_epoch_sec_max`) and the heap peaks
+(`old_gen_peak_mb`, and anything under a `memory` key). Array elements
+are compared by position, so a leaf path prints as
+`epochs[2].rows_written`; an `--ignore` path names a leaf or a subtree
+with `[]` for any index (`materializers.cdc_ivm_e2e.epochs[].rows`), for
+other fields that differ between two runs of the same commit.
 Prints one line per difference and exits 1 when there is any.
 """
 import argparse
@@ -33,15 +35,17 @@ def key_paths(node, prefix=""):
     return out
 
 
-def timing(key):
-    return key in ("value", "op_sec", "memory") or key.endswith("sec")
+def reading(key):
+    """Whether `key` holds a timing or a heap peak (see the usage text)."""
+    return (key in ("value", "op_sec", "memory", "old_gen_peak_mb")
+            or key.endswith("sec") or "_sec_" in key)
 
 
 def leaves(node, prefix=""):
-    """(path, value) of every non-timing leaf; arrays indexed."""
+    """(path, value) of every non-reading leaf; arrays indexed."""
     if isinstance(node, dict):
         for k, v in node.items():
-            if not timing(k):
+            if not reading(k):
                 yield from leaves(v, f"{prefix}.{k}" if prefix else k)
     elif isinstance(node, list):
         if node and all(not isinstance(v, (dict, list)) for v in node):
