@@ -593,10 +593,10 @@ private[graft] object ScaleHarness {
     evAll.repartition(bulk, col("event_id")).write.mode("overwrite")
       .parquet(s"$ivmFeed/events.parquet")
     val splitT0 = System.currentTimeMillis() - 3600000L
-    hadoopFs(spark).listStatus(
-        new org.apache.hadoop.fs.Path(s"$ivmFeed/events.parquet"))
+    val fs = hadoopFs(spark)
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$ivmFeed/events.parquet"))
       .map(_.getPath).filter(_.getName.startsWith("part-"))
-      .foreach(p => hadoopFs(spark).setTimes(p,
+      .foreach(p => fs.setTimes(p,
         splitT0 + 1000L * p.getName.substring(5, 10).toInt, -1L))
     val steadyEvents = trickle(evAll, "event_id")
     // dims, pinned to the driver (tiny): event_type (raw AND its

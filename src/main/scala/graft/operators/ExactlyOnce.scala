@@ -402,8 +402,9 @@ object ExactlyOnce {
   def bucketOf(keyCol: String, numBuckets: Int): Column =
     bucketExpr(keyCol, numBuckets)
 
-  /** An empty frame of `schema`: the `empty` state the materializers
-    * hand the protocol before their first commit.
+  /** An empty frame of `schema`: what a materializer hands the
+    * protocol as its `empty` state, and what a reader returns before
+    * anything committed.
     */
   def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
