@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** CDC apply — materializes the enriched change stream into a replica
   * table, the job the reference's downstream consumers perform (its
@@ -18,11 +19,15 @@ import org.apache.spark.sql.functions._
   * at-least-once case) or re-running a batch is idempotent — this is
   * where the per-key ordering guarantee pays off.
   *
-  * Scale notes: one shuffle on partitionKey for the last-change window;
-  * the merge with existing state is a full-outer-style anti+union over
-  * the key — on a real lake this is a MERGE INTO (Delta/Iceberg/Hudi);
-  * the parquet swap here keeps the same logical shape with
-  * penalty-free testability.
+  * Scale notes: every streaming arm runs ONE keyed merge — the touched
+  * buckets' state and the batch's changes go through the bucketed
+  * protocol's clustering step together, and each (bucket, key) keeps
+  * its greatest row under the arm's order with `max_by`, so the merge
+  * and the bucket clustering share one exchange. On a real lake this
+  * is a MERGE INTO (Delta/Iceberg/Hudi); the parquet swap here keeps
+  * the same logical shape with penalty-free testability. The batch
+  * apply ([[applyBatch]]: last-change window, anti-join, union) stays
+  * as the definition the streaming arms are checked against.
   */
 object CdcApply {
 
@@ -97,8 +102,7 @@ object CdcApply {
         lit("' — only insert/replace/update/delete carry row images"))))
     // regexp_extract yields "" on no-match — nullif before the cast so
     // ANSI mode maps "no match" to null rather than CAST_INVALID_INPUT
-    def digitsToLong(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      nullif(c, lit("")).cast("long")
+    def digitsToLong(c: Column): Column = nullif(c, lit("")).cast("long")
     val pos = digitsToLong(regexp_extract(col("env._id"), "^evt_(\\d+)$", 1))
     // numeric (t, i) of clusterTime — keyed extended-JSON forms parse
     // by KEY (JSON key order is serializer-dependent; positional digit
@@ -118,10 +122,8 @@ object CdcApply {
     val w = Window.partitionBy(col("partitionKey"))
       .orderBy(col("env.ts_ms").desc, ctT.desc, ctI.desc,
         col("env.clusterTime").desc, pos.desc, col("value").desc)
-    val afterParsed = from_json(col("env.fullDocument"),
-      org.apache.spark.sql.types.MapType(
-        org.apache.spark.sql.types.StringType,
-        org.apache.spark.sql.types.StringType))
+    val afterParsed =
+      from_json(col("env.fullDocument"), MapType(StringType, StringType))
     val after = when(op === "d", afterParsed)
       .otherwise(coalesce(afterParsed, raise_error(concat(
         lit("mongo non-delete change for key "), col("partitionKey"),
@@ -205,10 +207,8 @@ object CdcApply {
 
   /** The empty versioned-replica frame. */
   def emptyVersioned(spark: SparkSession): DataFrame =
-    ExactlyOnce.emptyFrame(spark,
-      org.apache.spark.sql.types.StructType(replicaSchema.fields :+
-        org.apache.spark.sql.types.StructField("deleted",
-          org.apache.spark.sql.types.BooleanType, nullable = false)))
+    ExactlyOnce.emptyFrame(spark, StructType(replicaSchema.fields :+
+      StructField("deleted", BooleanType, nullable = false)))
 
   /** The empty replica frame. */
   def emptyReplica(spark: SparkSession): DataFrame =
@@ -229,47 +229,86 @@ object CdcApply {
     * pruning on a real table format, kept testable as versioned
     * parquet. Read the replica with [[replica]]; reads resolving while
     * an epoch commits get a one-epoch grace window (retirement keeps
-    * each bucket's previous version until the next epoch).
+    * each bucket's previous version until the next epoch). Same result
+    * as [[applyBatch]]: any change in the batch beats the state, and
+    * the batch's latest change per key wins.
     */
   def materializer(spark: SparkSession, stateDir: String,
       numBuckets: Int = DefaultBuckets)(
       batch: DataFrame, batchId: Long): Unit =
-    advance(spark, stateDir, numBuckets, batch, batchId)(lastChangePerKey)
+    advance(spark, stateDir, numBuckets, batch, batchId)(changeRows)
 
   /** [[materializer]] for MONGO change-stream batches (op from
-    * `operationType`, image from `fullDocument`).
+    * `operationType`, image from `fullDocument`): the merge takes
+    * [[lastChangePerKeyMongo]]'s winners, so its checks fire only on
+    * the change a key keeps.
     */
   def materializerMongo(spark: SparkSession, stateDir: String,
       numBuckets: Int = DefaultBuckets)(
       batch: DataFrame, batchId: Long): Unit =
     advance(spark, stateDir, numBuckets, batch, batchId)(
-      lastChangePerKeyMongo)
+      b => versioned(lastChangePerKeyMongo(b)))
 
-  /** The fenced bucketed apply both materializers run; `lastChange`
-    * reads the batch's envelope shape.
+  /** The fenced bucketed apply both plain materializers run: the state
+    * ranks 0 and the batch's `changes` rank 1, so the keyed merge on
+    * (rank, ts_ms, pos) lets any change beat the state and the latest
+    * change win among the batch's; a winning delete removes the key.
     */
   private def advance(spark: SparkSession, stateDir: String,
       numBuckets: Int, batch: DataFrame, batchId: Long)(
-      lastChange: DataFrame => DataFrame): Unit = {
+      changes: DataFrame => DataFrame): Unit = {
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, batch,
-      "partitionKey", numBuckets)(emptyReplica(spark))(
-      (current, cluster) => cluster(applyChanges(current, lastChange(batch))))
+      "partitionKey", numBuckets)(emptyReplica(spark)) { (current, cluster) =>
+      val ranked = current
+        .select(col("*"), lit(false).as("deleted"), lit(0).as("__rank"))
+        .unionByName(changes(batch).withColumn("__rank", lit(1)))
+      keyedMerge(ranked, cluster, "__rank", "ts_ms", "pos")
+        .filter(!col("deleted")).drop("deleted")
+    }
     ()
   }
+
+  /** Every change of a MySQL-envelope batch as a [[versioned]] row. */
+  private def changeRows(batch: DataFrame): DataFrame = versioned(
+    batch.withColumn("env",
+        from_json(col("value"), graft.model.CdcEnvelope.mysqlEnvelope))
+      .select(col("partitionKey"), col("env.op").as("op"),
+        col("env.after").as("after"), col("env.source.ts_ms").as("ts_ms"),
+        col("env.source.pos").as("pos")))
+
+  /** Changes as versioned rows: the after-image (null for a delete),
+    * the change position and whether it deletes.
+    */
+  private def versioned(changes: DataFrame): DataFrame = changes.select(
+    col("partitionKey"),
+    when(col("op") === "d", lit(null)).otherwise(col("after")).as("after"),
+    col("ts_ms"), col("pos"), (col("op") === "d").as("deleted"))
+
+  /** The one merge every streaming arm runs: `rows` go through the
+    * protocol's clustering step and each key keeps its greatest row in
+    * `order` with `max_by` grouped on (`__bucket`, key) — merge and
+    * bucket clustering share ONE exchange.
+    */
+  private def keyedMerge(rows: DataFrame, cluster: DataFrame => DataFrame,
+      order: String*): DataFrame =
+    cluster(rows)
+      .groupBy(col("__bucket"), col("partitionKey"))
+      .agg(max_by(
+        struct(col("after"), col("ts_ms"), col("pos"), col("deleted")),
+        struct(order.map(col): _*)).as("__w"))
+      .select(col("partitionKey"), col("__w.*"), col("__bucket"))
 
   /** Streaming materializer (out-of-order arm): same fenced bucketed
     * protocol, each epoch folding the batch into state with
     * [[applyBatchVersioned]]'s semantics — exact under ANY arrival
     * order and at-least-once re-delivery, holding tombstones against
     * late older upserts, and GC-ing them past `tombstoneHorizonMs`.
-    * The merge is one aggregate: every batch row converts to a
-    * versioned row, and the union with state goes through the
-    * protocol's clustering step and picks each key's (ts_ms, pos)
-    * winner with `max_by` grouped on (`__bucket`, key) — merge and
-    * bucket clustering share ONE exchange. State holds one row per
-    * key, so max over the union equals the window-rank-1 over the
-    * batch-deduped union that [[applyBatchVersioned]] (the batch
-    * reference) computes. Read the live rows with [[replicaVersioned]].
+    * Every batch row converts to a versioned row, and the keyed merge
+    * of the union with state keeps each key's (ts_ms, pos) winner.
+    * State holds one row per key, so max over the union equals the
+    * window-rank-1 over the batch-deduped union that
+    * [[applyBatchVersioned]] (the batch reference) computes. Read the
+    * live rows with [[replicaVersioned]].
     */
   def materializerVersioned(spark: SparkSession, stateDir: String,
       numBuckets: Int = DefaultBuckets,
@@ -278,24 +317,8 @@ object CdcApply {
     ExactlyOnce.advanceStateBucketed(spark, stateDir, batchId, batch,
       "partitionKey", numBuckets, retain)(emptyVersioned(spark)) {
       (current, cluster) =>
-        val env = batch.withColumn("env",
-          from_json(col("value"), graft.model.CdcEnvelope.mysqlEnvelope))
-        val changes = env.select(
-          col("partitionKey"),
-          when(col("env.op") === "d", lit(null)).otherwise(col("env.after"))
-            .as("after"),
-          col("env.source.ts_ms").as("ts_ms"),
-          col("env.source.pos").as("pos"),
-          (col("env.op") === "d").as("deleted"))
-        val merged = cluster(current.unionByName(changes))
-          .groupBy(col("__bucket"), col("partitionKey"))
-          .agg(max_by(
-            struct(col("after"), col("ts_ms"), col("pos"), col("deleted")),
-            struct(col("ts_ms"), col("pos"))).as("__w"))
-          .select(col("partitionKey"), col("__w.after").as("after"),
-            col("__w.ts_ms").as("ts_ms"), col("__w.pos").as("pos"),
-            col("__w.deleted").as("deleted"), col("__bucket"))
-        dropOldTombstones(merged, batch, tombstoneHorizonMs)
+        dropOldTombstones(keyedMerge(current.unionByName(changeRows(batch)),
+          cluster, "ts_ms", "pos"), batch, tombstoneHorizonMs)
     }
     ()
   }
@@ -313,14 +336,11 @@ object CdcApply {
   /** The replica's fixed schema: partitionKey + the dynamic after-image
     * map + the change position that produced it.
     */
-  val replicaSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("partitionKey", StringType),
-      StructField("after", MapType(StringType, StringType)),
-      StructField("ts_ms", LongType),
-      StructField("pos", LongType)))
-  }
+  val replicaSchema: StructType = StructType(Seq(
+    StructField("partitionKey", StringType),
+    StructField("after", MapType(StringType, StringType)),
+    StructField("ts_ms", LongType),
+    StructField("pos", LongType)))
 
   /** The newest committed replica state at `stateDir` (per bucket, the
     * newest committed epoch's version).

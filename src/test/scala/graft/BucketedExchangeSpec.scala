@@ -19,11 +19,11 @@ import graft.streaming.{StreamingJoinView, StreamingRollup}
   * its own exchanges ran before the epoch). Each epoch is measured on a
   * 3-partition input over 16 buckets, twice: a 200-key epoch (every
   * bucket touched, the protocol clusters) and a 1-key epoch (one
-  * bucket of a narrow batch, it does not). The keyed merges run ONE
-  * shuffle either way — their aggregate's exchange is also the
-  * clustering exchange; the plain replica (`applyChanges ∘
-  * lastChangePerKey`) keeps its window and anti-join exchanges plus
-  * the clustering one.
+  * bucket of a narrow batch, it does not). Every merge is one keyed
+  * aggregate, so it runs ONE shuffle either way — the aggregate's
+  * exchange is also the clustering exchange. The Mongo replica adds
+  * one: the window of `lastChangePerKeyMongo`, which picks each key's
+  * change before the merge.
   */
 class BucketedExchangeSpec extends SparkSpec {
 
@@ -101,14 +101,29 @@ class BucketedExchangeSpec extends SparkSpec {
     assert(got == Seq((1, 1)))
   }
 
-  test("plain replica keeps its plan: 3 shuffles on a 200-key epoch, " +
-      "2 on a 1-key epoch") {
+  test("plain replica: one shuffle on a 200-key and on a 1-key epoch") {
     val dir = Files.createTempDirectory("graft_xp").toString
     val got = measure(Seq(dir)) { (keys, e) =>
       CdcApply.materializer(spark, dir, Buckets)(
         threeParts(keys.map(env(_, e))), e)
     }
-    assert(got == Seq((3, 2)))
+    assert(got == Seq((1, 1)))
+  }
+
+  test("Mongo replica: its window plus the merge, two shuffles on a " +
+      "200-key and on a 1-key epoch") {
+    def mongoEnv(k: Int, epoch: Long): (String, String) = {
+      val doc = s"""{"event_id":"$k","value":"$epoch"}"""
+        .replace("\"", "\\\"")
+      (s"db.t.$k", s"""{"_id":"evt_$k","operationType":"update",""" +
+        s""""fullDocument":"$doc","ts_ms":${1000L + epoch}}""")
+    }
+    val dir = Files.createTempDirectory("graft_xm").toString
+    val got = measure(Seq(dir)) { (keys, e) =>
+      CdcApply.materializerMongo(spark, dir, Buckets)(
+        threeParts(keys.map(mongoEnv(_, e))), e)
+    }
+    assert(got == Seq((2, 2)))
   }
 
   test("signed rollup: one shuffle on a 200-group and on a 1-group " +

@@ -18,10 +18,12 @@ import graft.streaming.{StateKeys, StreamingJoinView, StreamingRollup}
   * grouped on (__bucket, key) over the protocol's clustering step —
   * against an INDEPENDENT batch reference: the [[CdcApply
   * .applyBatchVersioned]] fold (with and without a tombstone horizon),
-  * the from-scratch signed aggregate, and the bag join of every
-  * ingested row. The random epochs alternate wide ones (> 4 touched
-  * buckets: the protocol clusters) with near-empty ones (≤ 4 buckets
-  * of a narrow batch: it does not), so every state mixes clustered and
+  * the [[CdcApply.applyBatch]] fold for the plain MySQL replica, the
+  * `applyChanges ∘ lastChangePerKeyMongo` fold for the Mongo one, the
+  * from-scratch signed aggregate, and the bag join of every ingested
+  * row. The random epochs alternate wide ones (> 4 touched buckets:
+  * the protocol clusters) with near-empty ones (≤ 4 buckets of a
+  * narrow batch: it does not), so every state mixes clustered and
   * unclustered versions; each case also reads the write plans and
   * asserts that exactly the wide epochs clustered. Batches include
   * out-of-order versions, deletes, retractions and within-batch
@@ -153,6 +155,125 @@ class FusedAdvanceSpec extends SparkSpec {
         .select(CdcApply.emptyVersioned(spark).columns.map(col).toSeq: _*))
       assert(got == want, s"horizon $horizon")
       assertClustering(dir, touched)
+    }
+  }
+
+  private def mongoEnv(key: String, v: Long, tsMs: Long, pos: Long,
+      op: String, image: Boolean = true): (String, String) = {
+    val opType = op match {
+      case "d" => "delete"
+      case "u" => "update"
+      case _ => if (pos % 2 == 0) "insert" else "replace"
+    }
+    val doc = if (op == "d" || !image) "" else {
+      val esc = s"""{"key":"$key","value":"$v"}""".replace("\"", "\\\"")
+      s""""fullDocument":"$esc","""
+    }
+    (key, s"""{"_id":"evt_$pos","operationType":"$opType",$doc"ts_ms":$tsMs}""")
+  }
+
+  /** Changes (key, ts_ms, pos, op, value) of 8 epochs for the plain
+    * replicas. Even epochs spread over 40 keys, odd ones stay on keys
+    * 0 and 1; epochs 4 and 5 are mostly deletes; ts_ms is drawn at
+    * random, so a batch change is often older than the state's
+    * version. Each batch also redelivers 5 of its changes and arrives
+    * shuffled. Epoch 6 adds an update to key 5 newer than any other
+    * change, and epoch 7 one older than any (`OldTs`).
+    */
+  private val OldTs = 1L
+  private def plainEpochs(seed: Long): Seq[Seq[(Int, Long, Long, String, Int)]] = {
+    val rnd = new scala.util.Random(seed)
+    (0L until 8L).map { epoch =>
+      val keys = if (epoch % 2 == 0) 40 else 2
+      val deletes = if (epoch == 4 || epoch == 5) 7 else 2
+      val fresh = (0 until 30).map { i =>
+        val op = rnd.nextInt(10) match {
+          case n if n < deletes => "d"
+          case n if n < deletes + 1 => "c"
+          case _ => "u"
+        }
+        (rnd.nextInt(keys), 1000L + rnd.nextInt(20), epoch * 1000L + i, op,
+          rnd.nextInt(100))
+      }
+      val pinned = epoch match {
+        case 6 => Seq((5, 2000L, 6999L, "u", 99))
+        case 7 => Seq((5, OldTs, 7999L, "u", 100))
+        case _ => Nil
+      }
+      rnd.shuffle(fresh ++ Seq.fill(5)(fresh(rnd.nextInt(fresh.size))) ++ pinned)
+    }
+  }
+
+  /** Runs `materialize` over `epochs` and compares the replica with
+    * the per-epoch `fold` of the same batches; also asserts that the
+    * reference lets epoch 7's older change to key 5 beat the state.
+    */
+  private def plainCase(epochs: Seq[DataFrame], prefix: String)(
+      materialize: String => (DataFrame, Long) => Unit)(
+      fold: (DataFrame, DataFrame) => DataFrame): Unit = {
+    import spark.implicits._
+    val touched =
+      assertBothShapes(epochs.map(_.withColumn("__k", col("partitionKey"))))
+    val states = epochs.scanLeft(CdcApply.emptyReplica(spark))(
+      (state, batch) => fold(state, batch).localCheckpoint())
+    def oldKeyTs(state: DataFrame) = state
+      .filter(col("partitionKey") === s"$prefix.5")
+      .select(col("ts_ms")).as[Long].collect().toSeq
+    assert(oldKeyTs(states(7)) == Seq(2000L))
+    assert(oldKeyTs(states(8)) == Seq(OldTs))
+    listening
+    val dir = Files.createTempDirectory("graft_fap").toString
+    epochs.zipWithIndex.foreach { case (b, e) => materialize(dir)(b, e) }
+    val cols = CdcApply.replicaSchema.fieldNames.toSeq.map(col)
+    assert(rows(CdcApply.replica(spark, dir).select(cols: _*)) ==
+      rows(states.last.select(cols: _*)))
+    assertClustering(dir, touched)
+  }
+
+  test("plain MySQL replica merge == the applyBatch fold: any batch " +
+      "change beats the state, the batch's latest change wins") {
+    import spark.implicits._
+    val epochs = plainEpochs(20260819L).map(_.map { case (k, ts, pos, op, v) =>
+      env(s"db.t.$k", 1000L + k, s"et$k", v, ts, pos, op)
+    }.toDF("partitionKey", "value"))
+    plainCase(epochs, "db.t")(dir => CdcApply.materializer(spark, dir, Buckets))(
+      CdcApply.applyBatch)
+  }
+
+  test("Mongo replica merge == the applyChanges(lastChangePerKeyMongo) " +
+      "fold: any batch change beats the state, the batch's latest " +
+      "change wins") {
+    import spark.implicits._
+    val epochs = plainEpochs(20260820L).map(_.map { case (k, ts, pos, op, v) =>
+      mongoEnv(s"m.$k", v, ts, pos, op)
+    }.toDF("partitionKey", "value"))
+    plainCase(epochs, "m")(dir => CdcApply.materializerMongo(spark, dir, Buckets))(
+      (state, batch) => CdcApply.applyChanges(state,
+        CdcApply.lastChangePerKeyMongo(batch)))
+  }
+
+  test("Mongo replica merge checks only the change a key keeps: a losing " +
+      "imageless update or drop passes, a winning one fails") {
+    import spark.implicits._
+    def run(changes: (String, String)*): Seq[String] = {
+      val dir = Files.createTempDirectory("graft_fam").toString
+      CdcApply.materializerMongo(spark, dir, Buckets)(
+        changes.toDF("partitionKey", "value"), 0L)
+      rows(CdcApply.replica(spark, dir)
+        .select(CdcApply.replicaSchema.fieldNames.toSeq.map(col): _*))
+    }
+    def drop(tsMs: Long, pos: Long) = ("k", s"""{"_id":"evt_$pos",""" +
+      s""""operationType":"drop","ts_ms":$tsMs}""")
+    val kept = mongoEnv("k", 7, 20L, 4L, "c")
+    assert(run(mongoEnv("k", 1, 10L, 1L, "u", image = false), drop(10L, 3L),
+      kept) == Seq("[k,Map(key -> k, value -> 7),20,4]"))
+    Seq(mongoEnv("k", 1, 30L, 5L, "u", image = false) -> "fullDocument",
+        drop(30L, 7L) -> "unsupported mongo operationType").foreach {
+      case (bad, why) =>
+        val e = intercept[Throwable](run(kept, bad))
+        val sw = new java.io.StringWriter
+        e.printStackTrace(new java.io.PrintWriter(sw))
+        assert(sw.toString.contains(why), sw.toString.take(500))
     }
   }
 

@@ -11,7 +11,10 @@ alternates from pair to pair.
 It prints every run's four end-to-end metrics and `failed`, then per metric
 the medians, the parent's IQR, the change's wins (by the metric's `better`
 direction in BENCHMARK.json) and whether the pairs clear the acceptance
-shape: at least 9 wins in 10 and a median gap larger than the parent's IQR.
+shape: at least 10 pairs, at least 9 wins in 10 and a median gap larger than
+the parent's IQR. A run that failed or delivered a wrong record is named and
+left out of the medians, the IQRs and the pairs; only pairs whose two runs
+both delivered count.
 Beside it stands the no-regression verdict a change that claims no gain is
 judged by: `ok` when the change median is worse than the parent median by at
 most the metric's BENCHMARK.json `bound` (a fraction of the parent median),
@@ -69,34 +72,45 @@ def main():
     bound = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     names = list(better)
     runs = {"parent": [], "change": []}
-    failed = 0
+    failed = []
     print("seed  side    " + "  ".join(f"{n:>16}" for n in names) + "  failed")
     for i, seed in enumerate(a.seeds):
         sides = [("parent", a.parent), ("change", a.change)]
         for side, checkout in (sides if i % 2 == 0 else sides[::-1]):
             r = run(checkout, a.workload, seed, a.seconds)
-            bad = r is None or r.get("failed", 1) != 0 or not r.get("correct", False)
-            failed += bad
-            values = {n: (r["metrics"][n]["value"] if r else float("nan")) for n in names}
-            runs[side].append(values)
-            print(f"{seed:4d}  {side:6s}  " + "  ".join(f"{values[n]:16.3f}" for n in names)
-                  + f"  {r.get('failed') if r else 'run failed'}", flush=True)
+            if r is None:
+                print(f"{seed:4d}  {side:6s}  run failed", flush=True)
+            else:
+                values = {n: r["metrics"][n]["value"] for n in names}
+                print(f"{seed:4d}  {side:6s}  " + "  ".join(f"{values[n]:16.3f}" for n in names)
+                      + f"  {r.get('failed')}", flush=True)
+            if r is None or r.get("failed", 1) != 0 or not r.get("correct", False):
+                failed.append(f"seed {seed} {side}")
+                runs[side].append(None)
+            else:
+                runs[side].append(values)
 
     print(f"\n{'metric':18s} {'parent p50':>12} {'parent IQR':>12} {'change p50':>12} "
           f"{'change IQR':>12} {'wins':>7}  clears  no-regression")
-    for n in names:
-        ps = [r[n] for r in runs["parent"]]
-        cs = [r[n] for r in runs["change"]]
+    pairs = [(p, c) for p, c in zip(runs["parent"], runs["change"]) if p and c]
+    medians = any(runs["parent"]) and any(runs["change"])
+    if not medians:
+        print("(every run of one side failed: no medians)")
+    for n in names if medians else []:
+        ps = [r[n] for r in runs["parent"] if r]
+        cs = [r[n] for r in runs["change"] if r]
         pm, cm = statistics.median(ps), statistics.median(cs)
         (p1, p3), (c1, c3) = quartiles(ps), quartiles(cs)
         sign = 1 if better[n] == "higher" else -1
-        wins = sum(1 for p, c in zip(ps, cs) if sign * (c - p) > 0)
-        clears = wins * 10 >= 9 * len(ps) and sign * (cm - pm) > p3 - p1
+        wins = sum(1 for p, c in pairs if sign * (c[n] - p[n]) > 0)
+        clears = (len(pairs) >= 10 and wins * 10 >= 9 * len(pairs)
+                  and sign * (cm - pm) > p3 - p1)
         print(f"{n:18s} {pm:12.3f} {p3 - p1:12.3f} {cm:12.3f} {c3 - c1:12.3f} "
-              f"{wins:3d}/{len(ps):<3d}  {'yes' if clears else 'no':6s}  "
+              f"{wins:3d}/{len(pairs):<3d}  {'yes' if clears else 'no':6s}  "
               f"{no_regression(pm, p3 - p1, cm, sign, bound[n])}")
     if failed:
-        print(f"\n{failed} run(s) failed or delivered wrong records", file=sys.stderr)
+        print(f"\n{len(failed)} run(s) failed or delivered wrong records: "
+              + ", ".join(failed), file=sys.stderr)
         sys.exit(1)
 
 
