@@ -158,6 +158,9 @@ class FusedAdvanceSpec extends SparkSpec {
     }
   }
 
+  /** A Mongo change-stream envelope; `image = false` leaves out the
+    * `fullDocument` a non-delete needs.
+    */
   private def mongoEnv(key: String, v: Long, tsMs: Long, pos: Long,
       op: String, image: Boolean = true): (String, String) = {
     val opType = op match {
@@ -172,6 +175,8 @@ class FusedAdvanceSpec extends SparkSpec {
     (key, s"""{"_id":"evt_$pos","operationType":"$opType",$doc"ts_ms":$tsMs}""")
   }
 
+  private val OldTs = 1L
+
   /** Changes (key, ts_ms, pos, op, value) of 8 epochs for the plain
     * replicas. Even epochs spread over 40 keys, odd ones stay on keys
     * 0 and 1; epochs 4 and 5 are mostly deletes; ts_ms is drawn at
@@ -180,7 +185,6 @@ class FusedAdvanceSpec extends SparkSpec {
     * shuffled. Epoch 6 adds an update to key 5 newer than any other
     * change, and epoch 7 one older than any (`OldTs`).
     */
-  private val OldTs = 1L
   private def plainEpochs(seed: Long): Seq[Seq[(Int, Long, Long, String, Int)]] = {
     val rnd = new scala.util.Random(seed)
     (0L until 8L).map { epoch =>
